@@ -147,19 +147,12 @@ def shingle_hash_table(
     )
 
 
-def char_shingles(df: DataFrame, id_cols: List[str], text_col: str, n: int = 3) -> DataFrame:
-    """Distinct char n-gram shingles per id (for short surface forms).
-
-    Texts shorter than n yield the whole text as its single shingle, so
-    every id gets at least one shingle.
-    """
-    padded = df.select(*id_cols, F.col(text_col).alias("t"))
-    idx = F.sequence(F.lit(1), F.greatest(F.length("t") - (n - 1), F.lit(1)))
-    return (
-        padded.select(*id_cols, F.col("t"), F.explode(idx).alias("i"))
-        .select(*id_cols, F.substring(F.col("t"), F.col("i"), n).alias("shingle"))
-        .distinct()
-    )
+def char_grams(text: Column, n: int = 3) -> Column:
+    """Distinct char n-grams of ``text`` as an array (for short surface
+    forms).  A text shorter than n is its own single gram, so every row
+    gets at least one."""
+    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(1)))
+    return F.array_distinct(F.transform(idx, lambda i: text.substr(i, F.lit(n))))
 
 
 # MinHash rehash family: ONE strong base hash per shingle (md5, kept
@@ -234,6 +227,25 @@ def minhash_signatures(
     return shingles.groupBy(*id_cols).agg(*aggs)
 
 
+def _affine(a: int, b: int):
+    return lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_P)
+
+
+def minhash_columns(df: DataFrame, grams_col: str, n_hashes: int = 16) -> DataFrame:
+    """``df`` plus h0..h{n-1} BIGINT minhash columns over the array
+    column ``grams_col``: the per-row twin of minhash_signatures (same
+    md5 base, same affine family) for rows that already carry their
+    distinct grams, so it needs no explode and no aggregation.  The md5
+    base array is its own projection, computed once per row rather than
+    once per hash."""
+    based = df.withColumn("_mh_base", F.transform(grams_col, minhash_base))
+    mins = [
+        F.array_min(F.transform("_mh_base", _affine(a, b))).alias(f"h{s}")
+        for s, (a, b) in enumerate(minhash_affine_consts(n_hashes))
+    ]
+    return based.select(*df.columns, *mins)
+
+
 def lsh_bands(
     signatures: DataFrame,
     id_cols: List[str],
@@ -256,33 +268,17 @@ def lsh_bands(
 def lsh_candidate_pairs(
     bands_df: DataFrame,
     id_col: str,
-    materialize: bool = True,
     width: int | None = None,
-    dedupe: bool = True,
-    key_cols: List[str] | None = None,
 ) -> DataFrame:
     """Self-join on (band, sig): distinct (a, b) with a < b.
 
-    ``dedupe=False`` skips the final distinct and returns the raw pair
-    stream (one row per SHARED BAND, so a pair colliding in several
-    bands appears several times).  Callers that verify candidates with
-    a cheap per-pair predicate and keep only a tiny survivor set can
-    dedupe AFTER verification instead — the distinct then shuffles the
-    survivors, not the O(candidate) pair stream (r7, guide section
-    2.3: shuffle decisions' inputs, not the full pair table, when the
-    verifier is cheaper than the exchange).
-
-    ``key_cols`` overrides the join key (default ["band", "sig"]) —
-    e.g. a caller that packs band+sig into one integer column joins on
-    a single 8-byte key instead of an (int, string) composite.
-
     The shuffle key (band, sig) is high-cardinality; genuinely hot
     buckets (many near-identical texts) are exactly the pairs we want,
-    and AQE skew-join splitting handles pathological buckets.
-    ``materialize`` checkpoints the band table first: both join sides
-    reference the same upstream (shingle -> minhash) pipeline, and
-    without materialization Spark executes it twice (exchange reuse
-    dies as soon as AQE broadcasts one side).
+    and AQE skew-join splitting handles pathological buckets.  The band
+    table is checkpointed first: both join sides reference the same
+    upstream (shingle -> minhash) pipeline, and without materialization
+    Spark executes it twice (exchange reuse dies as soon as AQE
+    broadcasts one side).
 
     ``width``: explicit partition count for the pair join + distinct.
     The band table is BYTES-small (AQE coalesces its exchange to ~1
@@ -291,19 +287,13 @@ def lsh_candidate_pairs(
     bands, all on one thread.  Same starvation mode as the shingle
     stage (PLANS.md): pin the width when candidates >> bands.
     """
-    keys = key_cols if key_cols is not None else ["band", "sig"]
-    if materialize:
-        bands_df = bands_df.localCheckpoint(eager=True)
+    keys = ["band", "sig"]
+    bands_df = bands_df.localCheckpoint(eager=True)
     if width:
         bands_df = bands_df.repartition(width, *[F.col(c) for c in keys])
     a = bands_df.select(F.col(id_col).alias("a"), *keys)
     b = bands_df.select(F.col(id_col).alias("b"), *keys)
-    out = (
-        a.join(b, keys)
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-    )
-    return out.distinct() if dedupe else out
+    return a.join(b, keys).where(F.col("a") < F.col("b")).select("a", "b").distinct()
 
 
 def rademacher_matrix(n_hyperplanes: int, dim: int):

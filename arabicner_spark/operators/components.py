@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arabicner_spark.sources.io import local_table
+
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Undirected canonical form: (u < v), deduped, no self-loops."""
@@ -80,10 +82,12 @@ def connected_components_adaptive(
     large-star/small-star path.  Both produce component = min node id,
     so results are interchangeable (asserted in tests)."""
     e = _canon(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
-    e = e.localCheckpoint(eager=True)
-    n = e.count()
-    if n > driver_threshold:
-        return connected_components(e)
+    # one bounded collect is both the size gate and the driver input;
+    # past the gate the distributed path recomputes the edge set, which
+    # costs less than checkpointing every small one
+    rows = e.limit(driver_threshold + 1).collect()
+    if len(rows) > driver_threshold:
+        return connected_components(edges, src, dst)
     parent: dict = {}
 
     def find(x):
@@ -94,7 +98,6 @@ def connected_components_adaptive(
             parent[x], x = root, parent[x]
         return root
 
-    rows = e.collect()
     for r in rows:
         ra, rb = find(r["a"]), find(r["b"])
         if ra != rb:
@@ -102,14 +105,7 @@ def connected_components_adaptive(
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
     out = sorted({(x, find(x)) for r in rows for x in (r["a"], r["b"])})
-    # single-slice materialization (the graph.py _one_slice_df
-    # rationale): createDataFrame(list) spreads a dimension-sized
-    # result over defaultParallelism slices — ~cores empty scheduler
-    # tasks per call
-    return edges.sparkSession.createDataFrame(
-        edges.sparkSession.sparkContext.parallelize(out or [("", "")], 1),
-        "node string, component string",
-    ).where(F.col("node") != "")
+    return local_table(edges.sparkSession, out, "node string, component string")
 
 
 def connected_components(

@@ -37,6 +37,9 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from arabicner_spark.sources.io import local_table
 
 
 def pagerank(
@@ -111,6 +114,7 @@ def pagerank_exact(
     ``damping_pct`` is the damping factor in percent (85 = 0.85) so the
     damping multiply stays integral: inflow*85 div 100.
     """
+    _check_damping_pct(damping_pct)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
     nodes = (
@@ -148,6 +152,13 @@ def pagerank_exact(
     return ranks
 
 
+def _check_damping_pct(damping_pct: int) -> None:
+    """Outside [0, 100] ranks go negative, and Python's floor division
+    and SQL ``div`` (truncation) then disagree."""
+    if not 0 <= damping_pct <= 100:
+        raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
+
+
 def pagerank_personalized_exact(
     edges: DataFrame,
     seeds: DataFrame,
@@ -165,6 +176,7 @@ def pagerank_personalized_exact(
     mass and the per-step (1-d) teleport both split integrally over
     the seed count.  Same per-round shape: one join + one
     map-side-combinable sum + localCheckpoint."""
+    _check_damping_pct(damping_pct)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
     # r7: adaptive local branch (the kcore/LPA pattern).  The whole
@@ -175,41 +187,18 @@ def pagerank_personalized_exact(
     # rounds; on the dimension-sized KG (13 entities) the round
     # latency IS the wall.  Node ids are only ever KEYS here (rank_i
     # carries the numbers), so string ids — the KG's entity ids —
-    # take the local branch too (object arrays, the kcore-local
-    # fallback convention); mixed-kind src/dst/seed columns or a
-    # graph past the collect limit take the distributed loop.
-    if e.count() <= KCORE_LOCAL_EDGE_LIMIT:
-        tbl = e.toArrow()
-        sd_tbl = seeds.select("node").distinct().toArrow()
-        try:
-            # NULL keys take the distributed loop (SQL null-join
-            # semantics; Python-object sorting would raise on None)
-            if any(
-                c.null_count
-                for c in (tbl.column("src"), tbl.column("dst"), sd_tbl.column("node"))
-            ):
-                raise ValueError("null keys")
-            s_arr = _np_col(tbl.column("src"))
-            d_arr = _np_col(tbl.column("dst"))
-            seed_arr = _np_col(sd_tbl.column("node"))
-        except Exception:
-            s_arr = d_arr = seed_arr = None
+    # take the local branch too (object arrays); mixed-kind
+    # src/dst/seed columns take the distributed loop.
+    cols = _local_arrays(e, seeds.select("node").distinct())
+    if cols is not None:
+        s_arr, d_arr, seed_arr = cols
         if (
-            s_arr is not None
-            and s_arr.dtype.kind in "iuOU"
+            s_arr.dtype.kind in "iuOU"
             and d_arr.dtype.kind == s_arr.dtype.kind
             and (seed_arr.dtype.kind == s_arr.dtype.kind or seed_arr.size == 0)
         ):
             rows = _ppr_local_sim(s_arr, d_arr, seed_arr, iterations, damping_pct)
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            node_type = edges.schema[src].dataType
-            schema = StructType(
-                [StructField("node", node_type), StructField("rank_i", LongType())]
-            )
-            return _one_slice_df(edges.sparkSession, rows, schema).select(
-                "node", F.col("rank_i").cast("long").alias("rank_i")
-            )
+            return _local_result(edges, src, rows, "rank_i", LongType())
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -272,25 +261,42 @@ def pagerank_personalized_exact(
     return ranks
 
 
-def _one_slice_df(session, rows, schema):
-    """Materialize a small local result as a DataFrame via a
-    SINGLE-slice RDD: the default createDataFrame path parallelizes
-    the list over defaultParallelism slices, paying ~cores empty
-    scheduler tasks for a dimension-sized result (measured
-    0.34 -> 0.21 s per materialization at local[32])."""
-    return session.createDataFrame(session.sparkContext.parallelize(rows, 1), schema)
+def _local_arrays(*frames: DataFrame):
+    """Numpy columns of small frames for a local replay, or None (take
+    the distributed loop).
+
+    One bounded ``limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()`` per
+    frame is both the size gate and the driver input.  A frame past
+    the limit, or holding a NULL (SQL null-join semantics; the
+    object-array replay would raise on None), gives None."""
+    out = []
+    for df in frames:
+        tbl = df.limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()
+        if tbl.num_rows > KCORE_LOCAL_EDGE_LIMIT or any(c.null_count for c in tbl.columns):
+            return None
+        out.extend(_np_col(c) for c in tbl.columns)
+    return out
 
 
 def _np_col(col):
     """Arrow column -> numpy array; non-numeric columns land as object
-    arrays (the kcore-local fallback convention) so string node ids
-    can be np.unique-factorized like integer ones."""
+    arrays so string node ids can be np.unique-factorized like integer
+    ones."""
     import numpy as np
 
     try:
         return col.to_numpy(zero_copy_only=False)
     except Exception:
         return np.asarray(col.to_pylist(), dtype=object)
+
+
+def _local_result(edges: DataFrame, src: str, rows: list, name: str, dtype) -> DataFrame:
+    """(node, ``name``) rows of a local replay, typed like the
+    distributed loop's output: node keeps the edge column's type."""
+    schema = StructType(
+        [StructField("node", edges.schema[src].dataType), StructField(name, dtype)]
+    )
+    return local_table(edges.sparkSession, rows, schema)
 
 
 def _ppr_local_sim(s_arr, d_arr, seed_arr, iterations: int, damping_pct: int) -> list:
@@ -363,49 +369,21 @@ def temporal_reach(
     # order-independent — so the in-memory frontier simulation of the
     # same ``rounds`` returns the identical arrival table without
     # 3x (join + min agg + localCheckpoint) scheduler rounds.
-    if e.count() <= KCORE_LOCAL_EDGE_LIMIT:
-        tbl = e.toArrow()
-        sd_tbl = seeds.select("node").distinct().toArrow()
-        try:
-            # NULL keys/timestamps take the distributed loop (SQL
-            # null-join/comparison semantics; object sorting and the
-            # int64 cast would raise on None)
-            if any(
-                c.null_count
-                for c in (
-                    tbl.column("src"),
-                    tbl.column("dst"),
-                    tbl.column("t"),
-                    sd_tbl.column("node"),
-                )
-            ):
-                raise ValueError("null keys")
-            s_arr = _np_col(tbl.column("src"))
-            d_arr = _np_col(tbl.column("dst"))
-            t_arr = _np_col(tbl.column("t"))
-            seed_arr = _np_col(sd_tbl.column("node"))
-        except Exception:
-            s_arr = d_arr = t_arr = seed_arr = None
+    cols = _local_arrays(e, seeds.select("node").distinct())
+    if cols is not None:
+        import numpy as np
+
+        s_arr, d_arr, t_arr, seed_arr = cols
         if (
-            s_arr is not None
-            and s_arr.dtype.kind in "iuOU"
+            s_arr.dtype.kind in "iuOU"
             and d_arr.dtype.kind == s_arr.dtype.kind
             and t_arr.dtype.kind in "iu"
+            # int64.max is the local replay's "unreached" sentinel
+            and not (t_arr == np.iinfo(np.int64).max).any()
             and (seed_arr.dtype.kind == s_arr.dtype.kind or seed_arr.size == 0)
         ):
             rows = _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds)
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            node_type = edges.schema[src].dataType
-            schema = StructType(
-                [
-                    StructField("node", node_type),
-                    StructField("first_reach", LongType()),
-                ]
-            )
-            return _one_slice_df(edges.sparkSession, rows, schema).select(
-                "node", F.col("first_reach").cast("long").alias("first_reach")
-            )
+            return _local_result(edges, src, rows, "first_reach", LongType())
     arr = seeds.select("node").distinct().select(
         "node", F.lit(0).cast("long").alias("first_reach")
     )
@@ -591,16 +569,14 @@ def bfs_depths(
     reached node — never collected to the driver.  Depth is bounded,
     so the unrolled-CTE SQL oracle stays exact.
     """
-    spark = edges.sparkSession
-    node_type = edges.schema[src].dataType
     und = undirected_edges(edges, src, dst)
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("peer")).unionByName(
         und.select(F.col("b").alias("node"), F.col("a").alias("peer"))
     ).localCheckpoint(eager=True)
-    from pyspark.sql.types import StructField, StructType
-
-    seed_df = spark.createDataFrame(
-        [(s,) for s in sources], StructType([StructField("node", node_type)])
+    seed_df = local_table(
+        edges.sparkSession,
+        [(s,) for s in sources],
+        StructType([StructField("node", edges.schema[src].dataType)]),
     ).distinct()
     visited = seed_df.withColumn("depth", F.lit(0).cast("int")).localCheckpoint(
         eager=True
@@ -652,30 +628,9 @@ def label_propagation(
     # identical label table without 3x (join + two aggs +
     # localCheckpoint) scheduler rounds.  Integer node ids only (label
     # = node id cast long); anything else takes the distributed loop.
-    if und.count() <= KCORE_LOCAL_EDGE_LIMIT:
-        import numpy as np
-
-        tbl = und.toArrow()
-        try:
-            a_arr = tbl.column("a").to_numpy(zero_copy_only=False)
-            b_arr = tbl.column("b").to_numpy(zero_copy_only=False)
-        except Exception:
-            a_arr = b_arr = None
-        if (
-            a_arr is not None
-            and a_arr.dtype.kind in "iu"
-            and b_arr.dtype.kind in "iu"
-        ):
-            out_rows = _lpa_local(a_arr, b_arr, rounds)
-            from pyspark.sql.types import LongType, StructField, StructType
-
-            node_type = edges.schema[src].dataType
-            schema = StructType(
-                [StructField("node", node_type), StructField("label", LongType())]
-            )
-            return _one_slice_df(edges.sparkSession, out_rows, schema).select(
-                "node", F.col("label").cast("long").alias("label")
-            )
+    cols = _local_arrays(und)
+    if cols is not None and all(c.dtype.kind in "iu" for c in cols):
+        return _local_result(edges, src, _lpa_local(*cols, rounds), "label", LongType())
     adj = (
         und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
         .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
@@ -765,27 +720,10 @@ def kcore(
     # past stabilization are no-ops, so early-stop == fixed-depth), so
     # the vectorized simulation returns the identical survivor set and
     # degrees without 3 full-graph join+agg rounds.
-    if und.count() <= KCORE_LOCAL_EDGE_LIMIT:
-        tbl = und.toArrow()
-        import numpy as np
-
-        def _col(name):
-            col = tbl.column(name)
-            try:
-                return col.to_numpy(zero_copy_only=False)
-            except Exception:
-                return np.asarray(col.to_pylist(), dtype=object)
-
-        surv, _w = _kcore_peel_local(_col("a"), _col("b"), k, rounds)
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        node_type = edges.schema[src].dataType
-        schema = StructType(
-            [StructField("node", node_type), StructField("deg", IntegerType())]
-        )
-        return _one_slice_df(
-            edges.sparkSession, [(n, int(d)) for n, d in surv], schema
-        ).select("node", F.col("deg").cast("int").alias("deg"))
+    cols = _local_arrays(und)
+    if cols is not None:
+        surv, _w = _kcore_peel_local(*cols, k, rounds)
+        return _local_result(edges, src, surv, "deg", IntegerType())
     adj = (
         und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
         .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
@@ -897,28 +835,10 @@ def kcore_fixpoint(
     if max_rounds < 1:
         raise ValueError(f"kcore_fixpoint needs max_rounds >= 1, got {max_rounds}")
     und = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
-    n_edges = und.count()
-    node_type = edges.schema[src].dataType
-    spark = edges.sparkSession
-    if n_edges <= KCORE_LOCAL_EDGE_LIMIT:
-        tbl = und.toArrow()
-        import numpy as np
-
-        def _col(name):
-            col = tbl.column(name)
-            try:
-                return col.to_numpy(zero_copy_only=False)
-            except Exception:
-                return np.asarray(col.to_pylist(), dtype=object)
-
-        surv, rounds_run = _kcore_peel_local(_col("a"), _col("b"), k, max_rounds)
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        schema = StructType(
-            [StructField("node", node_type), StructField("deg", IntegerType())]
-        )
-        out = _one_slice_df(spark, [(n, int(d)) for n, d in surv], schema)
-        return out.select("node", F.col("deg").cast("int").alias("deg")), rounds_run
+    cols = _local_arrays(und)
+    if cols is not None:
+        surv, rounds_run = _kcore_peel_local(*cols, k, max_rounds)
+        return _local_result(edges, src, surv, "deg", IntegerType()), rounds_run
 
     adj = (
         und.select(F.col("a").alias("node"), F.col("b").alias("peer"))

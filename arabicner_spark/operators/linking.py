@@ -1,23 +1,26 @@
 """Entity linking + canonicalization (north-rule operators; the
 reference has no linking stage — SURVEY.md section 2.B).
 
-Pipeline:
-  1. DIRECT: normalized mention surface -> alias dictionary via
-     broadcast hash join (dimension is small; zero shuffle).  Ties on a
-     shared alias break by (weight desc, entity_id asc) — one window
-     over the TINY alias dict, not over mentions.
-  2. LSH: surfaces that miss the dictionary are blocked against it (and
-     against each other) with char-3gram MinHash-LSH; candidate pairs
-     are verified with exact shingle Jaccard >= threshold.
-  3. CC: verified similarity edges -> connected components
-     (large-star/small-star); the canonical id of a component is the
-     best entity among its alias members, else "S:" + min surface.
+Dataflow, all on DISTINCT surfaces:
+  1. DIRECT: one left join of the distinct normalized surfaces against
+     the checkpointed best-alias table (ties on a shared alias break by
+     weight desc, entity_id asc).  AQE picks broadcast or shuffle from
+     the checkpoint's size.  Hits are 'alias' links; misses go on.
+  2. LSH: one narrow array pass over the nodes (``S:`` unlinked
+     surfaces and ``A:`` aliases) computes each node's distinct
+     char-3gram array, its 16 minhashes and its 8 bands; one self-join
+     on (band, sig) gives the candidate pairs, which carry both gram
+     arrays, so exact Jaccard >= threshold is one
+     ``size(array_intersect(..))`` per pair.
+  3. CC: verified pairs -> connected components (driver union-find
+     below its edge limit); the canonical id of a component is the best
+     entity among its alias members, else "S:" + min surface.
 
-All of it runs on DISTINCT surfaces, not raw mentions: at 10^12 turns
-the mention table is enormous but the distinct-surface table is
-vocabulary-sized, so every expensive step downstream of the first
-``.distinct()`` touches the small table.  The final surface->canonical
-map joins back to mentions/triples as a broadcast (or salted) join.
+At 10^12 turns the mention table is enormous but the distinct-surface
+table is vocabulary-sized, so every step after the first
+``.distinct()`` touches the small table and the cost is per-job
+overhead, not data.  The final surface->canonical map joins back to
+mentions/triples as a broadcast join.
 """
 
 from __future__ import annotations
@@ -52,98 +55,61 @@ def link_surfaces(
     jaccard_threshold: float = DEFAULT_JACCARD,
     n_hashes: int = 16,
     bands: int = 8,
-    broadcast_alias_limit: int = 5_000_000,
 ) -> DataFrame:
     """mentions -> (surface, canonical_id, link_kind) map.
 
     link_kind: 'alias' (direct dictionary hit), 'lsh' (reached via
-    MinHash-LSH + components), 'self' (novel surface, canonical is
-    itself).
-
-    The dictionary join broadcasts while the alias table is below
-    ``broadcast_alias_limit`` rows; above it, the join switches to the
-    deterministic salted shuffle join (functions/joins.py) — hot
-    aliases (one surface matched by millions of mentions upstream
-    collapses here to ONE distinct surface, so the dictionary side is
-    the only realistic skew carrier at this stage).
+    MinHash-LSH + components to a component with an alias member),
+    'lsh_cluster' (LSH component without one), 'self' (novel surface,
+    canonical is itself).
     """
-    # vocabulary-sized and reused by every branch below -> checkpoint
-    # once; without this the whole upstream plan (incl. the NER stage)
-    # re-executes per branch of the final union.
-    surfaces = (
+    # both are vocabulary-sized and read by every branch below ->
+    # checkpoint once; without this the whole upstream plan (incl. the
+    # NER stage) re-executes per branch of the final union, and the
+    # checkpoint's size is what lets AQE pick broadcast or shuffle for
+    # the dictionary join
+    dict_best = best_alias(alias_df).localCheckpoint(eager=True)
+    joined = (
         mentions.select(normalize_col(F.col("text")).alias("surface"))
         .where(F.length("surface") > 0)
         .distinct()
+        .join(dict_best.withColumnRenamed("alias", "surface"), "surface", "left")
         .localCheckpoint(eager=True)
     )
-    dict_best = best_alias(alias_df)
-    use_broadcast = alias_df.count() <= broadcast_alias_limit
-
-    if use_broadcast:
-        direct = surfaces.join(
-            F.broadcast(dict_best), surfaces["surface"] == dict_best["alias"], "inner"
-        ).select("surface", F.col("entity_id").alias("canonical_id"))
-        unlinked = surfaces.join(
-            F.broadcast(dict_best.select("alias")),
-            surfaces["surface"] == F.col("alias"),
-            "left_anti",
-        ).localCheckpoint(eager=True)
-    else:
-        # surfaces is DISTINCT — every join key appears exactly once on
-        # the fact side, so no key can be hot and salting would only pay
-        # S-fold dict replication for nothing (a salt derived from the
-        # lone key column would be a pure function of it anyway).  A
-        # plain shuffle join is the right plan; AQE splits any residual
-        # partition imbalance.  salted_join remains the tool for joins
-        # whose FACT side repeats hot keys (e.g. raw mentions -> dict).
-        joined = (
-            surfaces.withColumnRenamed("surface", "alias")
-            .join(dict_best, "alias", "left")
-            .withColumnRenamed("alias", "surface")
-            .localCheckpoint(eager=True)
-        )
-        direct = joined.where(F.col("entity_id").isNotNull()).select(
-            "surface", F.col("entity_id").alias("canonical_id")
-        )
-        unlinked = joined.where(F.col("entity_id").isNull()).select("surface")
-
+    direct = joined.where(F.col("entity_id").isNotNull()).select(
+        "surface", F.col("entity_id").alias("canonical_id")
+    )
+    unlinked = joined.where(F.col("entity_id").isNull()).select("surface")
     if unlinked.isEmpty():
         # nothing to block — LSH exists to rescue dictionary misses
         return direct.withColumn("link_kind", F.lit("alias"))
 
     # --- LSH blocking over unlinked surfaces + dictionary aliases
-    s_nodes = unlinked.select(
+    nodes = unlinked.select(
         F.concat(F.lit("S:"), "surface").alias("id"), F.col("surface").alias("t")
+    ).union(
+        dict_best.select(F.concat(F.lit("A:"), "alias").alias("id"), F.col("alias").alias("t"))
     )
-    a_nodes = dict_best.select(
-        F.concat(F.lit("A:"), "alias").alias("id"), F.col("alias").alias("t")
-    ).distinct()
-    nodes = s_nodes.union(a_nodes)
-    # reused 3x (signatures, pair verification x2, sizes)
-    shingles = hashing.char_shingles(nodes, ["id"], "t", n=3).localCheckpoint(eager=True)
-    sigs = hashing.minhash_signatures(shingles, ["id"], n_hashes=n_hashes)
+    sigs = hashing.minhash_columns(
+        nodes.select("id", hashing.char_grams(F.col("t"), 3).alias("g")), "g", n_hashes
+    )
+    # the node key carries its gram array through the pair self-join,
+    # so verification needs no join back; ids are unique, so struct
+    # order is id order
+    sigs = sigs.withColumn("node", F.struct("id", "g"))
     pairs = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sigs, ["id"], bands=bands, rows_per_band=n_hashes // bands),
-        "id",
+        hashing.lsh_bands(sigs, ["node"], bands=bands, rows_per_band=n_hashes // bands),
+        "node",
     )
-    # exact Jaccard verification on candidate pairs only
-    sh_a = shingles.select(F.col("id").alias("a"), "shingle")
-    sh_b = shingles.select(F.col("id").alias("b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "a").join(sh_b, ["b", "shingle"]).groupBy("a", "b").count()
-    )
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
-    verified = (
-        inter.join(sizes.withColumnRenamed("id", "a").withColumnRenamed("sz", "sza"), "a")
-        .join(sizes.withColumnRenamed("id", "b").withColumnRenamed("sz", "szb"), "b")
-        .where(
-            F.col("count")
-            >= F.lit(jaccard_threshold) * (F.col("sza") + F.col("szb") - F.col("count"))
-        )
-        .select("a", "b")
-    )
+    # exact Jaccard on candidate pairs only; a pair sharing no gram
+    # never verifies, whatever the threshold
+    inter = F.size(F.array_intersect("a.g", "b.g"))
+    verified = pairs.where(
+        (inter > 0)
+        & (inter >= F.lit(jaccard_threshold) * (F.size("a.g") + F.size("b.g") - inter))
+    ).select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
 
-    comp = connected_components_adaptive(verified).localCheckpoint(eager=True)
+    comp = connected_components_adaptive(verified)
 
     # canonical per component: best entity among alias members, else
     # "S:" + min surface member.

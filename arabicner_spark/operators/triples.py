@@ -28,6 +28,8 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arabicner_spark.sources.io import local_table
+
 # (subj_type, pred, obj_type) for the synthetic/Wojood-typed corpus
 DEFAULT_PREDICATES: List[Tuple[str, str, str]] = [
     ("PERS", "works_for", "ORG"),
@@ -67,9 +69,7 @@ def extract_triples(
     At production scale the exchange is wide anyway and this is a no-op.
     """
     spark = mentions.sparkSession
-    pred_df = spark.createDataFrame(
-        predicates, "subj_type string, pred string, obj_type string"
-    )
+    pred_df = local_table(spark, predicates, "subj_type string, pred string, obj_type string")
     type_pairs = F.array(
         *[F.lit(f"{st}|{ot}") for st, ot in sorted({(s, o) for s, _p, o in predicates})]
     )

@@ -93,6 +93,83 @@ def oracle_link(
     return out
 
 
+def oracle_lsh_link(
+    mentions: Sequence[Mention],
+    alias_rows: Sequence[Tuple[str, str, str, float]],
+    jaccard_threshold: float = 0.5,
+    n_hashes: int = 16,
+    bands: int = 8,
+) -> Dict[str, Tuple[str, str]]:
+    """normalized surface -> (canonical_id, link_kind): the whole
+    surface map of operators/linking.link_surfaces.
+
+    Dictionary hits first; the misses (``S:`` nodes) and every alias
+    (``A:`` nodes) are blocked by char-3gram MinHash-LSH (md5 base +
+    affine family, ``bands`` bands of n_hashes/bands rows), candidate
+    pairs are kept at exact gram Jaccard >= threshold with at least one
+    shared gram, and union-find groups them under the min node id.  A
+    component's canonical id is its min alias entity, else "S:" + its
+    min surface.
+    """
+    import hashlib
+
+    from arabicner_spark.functions.hashing import MINHASH_P, minhash_affine_consts
+
+    alias_map: Dict[str, List[Tuple[float, str]]] = {}
+    for alias, eid, _typ, w in alias_rows:
+        alias_map.setdefault(alias, []).append((-w, eid))
+    best = {a: min(c)[1] for a, c in alias_map.items()}
+    surfaces = {normalize_py(m[6]) for m in mentions} - {""}
+    out: Dict[str, Tuple[str, str]] = {s: (best[s], "alias") for s in surfaces if s in best}
+    unlinked = sorted(surfaces - set(best))
+    if not unlinked:
+        return out
+
+    def grams(t: str) -> Set[str]:
+        return {t[i : i + 3] for i in range(max(len(t) - 2, 1))}
+
+    nodes = {f"S:{s}": grams(s) for s in unlinked}
+    nodes.update({f"A:{a}": grams(a) for a in best})
+    consts = minhash_affine_consts(n_hashes)
+    rows = n_hashes // bands
+    buckets: Dict[Tuple, List[str]] = {}
+    for node, gs in nodes.items():
+        base = [int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in gs]
+        sig = [min((h * a + b) % MINHASH_P for h in base) for a, b in consts]
+        for band in range(bands):
+            buckets.setdefault((band, tuple(sig[band * rows : (band + 1) * rows])), []).append(node)
+    parent: Dict[str, str] = {}
+
+    def find(x: str) -> str:
+        while parent.get(x, x) != x:
+            x = parent[x]
+        return x
+
+    for members in buckets.values():
+        for x in members:
+            for y in members:
+                if x >= y:
+                    continue
+                inter = len(nodes[x] & nodes[y])
+                union = len(nodes[x]) + len(nodes[y]) - inter
+                if inter > 0 and inter >= jaccard_threshold * union:
+                    rx, ry = find(x), find(y)
+                    parent.setdefault(x, x)
+                    parent.setdefault(y, y)
+                    parent[max(rx, ry)] = min(rx, ry)
+    comps: Dict[str, List[str]] = {}
+    for node in parent:
+        comps.setdefault(find(node), []).append(node)
+    for members in comps.values():
+        ents = [best[m[2:]] for m in members if m.startswith("A:")]
+        surfs = [m[2:] for m in members if m.startswith("S:")]
+        for s in surfs:
+            out[s] = (min(ents), "lsh") if ents else ("S:" + min(surfs), "lsh_cluster")
+    for s in unlinked:
+        out.setdefault(s, ("S:" + s, "self"))
+    return out
+
+
 def precision_recall(
     got: Sequence[Tuple], want: Sequence[Tuple]
 ) -> Tuple[float, float]:

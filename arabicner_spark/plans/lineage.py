@@ -8,8 +8,13 @@ table plus
   * a ``_metrics`` row set — (stage, partition_id, rows_in, rows_out,
     triples, wall_ms, run_id), where partition counts come from one
     ``groupBy(spark_partition_id())`` over the written table (columnar
-    count, no second pass over the compute graph);
-  * a manifest — (stage, input_snapshot, complete, run_id) JSON.
+    count, no second pass over the compute graph) and ``rows_in`` is
+    the recorded rows_out total of the stage's primary input;
+  * a manifest — (stage, input_snapshot, complete, run_id, rows_out)
+    JSON.
+
+Row totals are recorded by an ``observe`` on the frame being written,
+so the write job itself counts them: recording adds no Spark job.
 
 Resume rule: a stage is skipped iff its manifest is complete AND its
 recorded input snapshot equals the current one.  Outputs are written
@@ -24,10 +29,10 @@ import json
 import os
 import sys
 import time
-from dataclasses import dataclass
-from typing import Callable, List, Optional
+from dataclasses import dataclass, field
+from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from arabicner_spark.sources.io import TableIO
@@ -38,23 +43,43 @@ class StageRunner:
     io: TableIO
     run_id: str
     input_snapshot: str
+    _rows: Dict[str, int] = field(default_factory=dict)
+    _observed: Dict[str, Observation] = field(default_factory=dict)
 
     def _manifest_path(self, stage: str) -> str:
         d = os.path.join(self.io.root, "_manifests")
         os.makedirs(d, exist_ok=True)
         return os.path.join(d, f"{stage}.json")
 
-    def is_complete(self, stage: str) -> bool:
-        p = self._manifest_path(stage)
-        if not os.path.exists(p):
-            return False
+    def _manifest(self, stage: str) -> dict:
         try:
-            m = json.load(open(p))
-        except Exception:
-            return False
+            with open(self._manifest_path(stage)) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return {}
+
+    def is_complete(self, stage: str) -> bool:
+        m = self._manifest(stage)
         return bool(m.get("complete")) and m.get("input_snapshot") == self.input_snapshot
 
-    def _write_manifest(self, stage: str) -> None:
+    def observe(self, df: DataFrame, name: str) -> DataFrame:
+        """``df`` with its row count recorded under ``name`` by the first
+        action that runs it (no extra job)."""
+        obs = Observation(name)
+        self._observed[name] = obs
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
+
+    def rows(self, name: str) -> int:
+        """Recorded row total of ``name``: an observed frame, a table an
+        earlier stage of this run wrote, or the rows_out of a skipped
+        stage's manifest; counted (one job) only when none exists."""
+        if name in self._observed:
+            self._rows[name] = int(self._observed.pop(name).get["rows"])
+        if name not in self._rows:
+            self._rows[name] = self.io.read(name).count()
+        return self._rows[name]
+
+    def _write_manifest(self, stage: str, rows_out: int) -> None:
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
@@ -63,6 +88,7 @@ class StageRunner:
                     "input_snapshot": self.input_snapshot,
                     "complete": True,
                     "run_id": self.run_id,
+                    "rows_out": rows_out,
                 },
                 f,
             )
@@ -93,13 +119,16 @@ class StageRunner:
     ) -> DataFrame:
         """Execute (or skip) one stage; returns the stage output table."""
         if self.is_complete(stage):
+            m = self._manifest(stage)
+            if "rows_out" in m:
+                self._rows[out_table] = m["rows_out"]
             return self.io.read(out_table)
         t0 = time.time()
-        self.io.write(compute(), out_table, partition_by)
+        self.io.write(self.observe(compute(), out_table), out_table, partition_by)
         wall_ms = int((time.time() - t0) * 1000)
         print(f"[stage {stage}] {wall_ms} ms", file=sys.stderr)
         written = self.io.read(out_table)
-        rows_in = self.io.read(rows_in_of).count() if rows_in_of else 0
+        rows_in = self.rows(rows_in_of) if rows_in_of else 0
         per_part = written.groupBy(
             F.spark_partition_id().cast("int").alias("partition_id")
         ).agg(F.count("*").alias("rows_out"))
@@ -113,5 +142,5 @@ class StageRunner:
             F.lit(self.run_id).alias("run_id"),
         )
         self._write_metrics(stage, metrics)
-        self._write_manifest(stage)
+        self._write_manifest(stage, self.rows(out_table))
         return written

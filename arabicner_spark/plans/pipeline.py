@@ -29,7 +29,7 @@ from arabicner_spark.operators.triples import (
     extract_triples,
 )
 from arabicner_spark.plans.lineage import StageRunner
-from arabicner_spark.sources.io import TableIO
+from arabicner_spark.sources.io import TableIO, local_table
 
 
 @dataclass
@@ -72,15 +72,19 @@ def run_pipeline(
     runner = StageRunner(io, run_id, cfg.snapshot(input_snapshot))
     from arabicner_spark import schemas
 
-    alias_df = spark.createDataFrame(cfg.alias_rows, schemas.ALIAS_DICT)
+    alias_df = local_table(spark, cfg.alias_rows, schemas.ALIAS_DICT)
 
     mentions = runner.run(
         "mentions",
         "mentions",
         lambda: ner.extract_mentions(
-            transcripts, cfg.gazetteer, cfg.max_seq_len, cfg.salt_partitions
+            runner.observe(transcripts, "transcripts"),
+            cfg.gazetteer,
+            cfg.max_seq_len,
+            cfg.salt_partitions,
         ),
         partition_by=["type"],
+        rows_in_of="transcripts",
     )
     # explicit width pin: keeps the pair-combinatorics stage parallel
     # when the mentions exchange is bytes-small (AQE coalescing is
@@ -102,18 +106,21 @@ def run_pipeline(
             cfg.window,
             width=pin_width,
         ),
+        rows_in_of="mentions",
         count_as_triples=True,
     )
     surface_map = runner.run(
         "linking",
         "surface_map",
         lambda: link_surfaces(mentions, alias_df, cfg.jaccard_threshold),
+        rows_in_of="mentions",
     )
     edges = runner.run(
         "edges",
         "edges",
         lambda: _edges(triples, surface_map, transcripts),
         partition_by=["pred"],
+        rows_in_of="triples",
         count_as_triples=True,
     )
     nodes = runner.run(
@@ -121,6 +128,7 @@ def run_pipeline(
         "nodes",
         lambda: _nodes(mentions, surface_map, transcripts),
         partition_by=["type"],
+        rows_in_of="mentions",
     )
     return {
         "mentions": mentions,

@@ -41,6 +41,7 @@ from arabicner_spark.functions import hashing
 from arabicner_spark.operators import ner, triples as triples_op
 from arabicner_spark.operators.components import connected_components_adaptive
 from arabicner_spark.operators.linking import best_alias
+from arabicner_spark.sources.io import local_table
 
 # ------------------------------------------------------------------ fixtures
 
@@ -166,12 +167,12 @@ def gazetteer_dict_td() -> Dict[str, set]:
 
 def gaz_df(spark: SparkSession) -> DataFrame:
     rows = [(p, t, TYPES.index(t), n) for p, t, n in GAZ]
-    return spark.createDataFrame(rows, "phrase string, type string, level int, len int")
+    return local_table(spark, rows, "phrase string, type string, level int, len int")
 
 
 def alias_df_td(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        ALIAS_TD, "alias string, entity_id string, entity_type string, weight double"
+    return local_table(
+        spark, ALIAS_TD, "alias string, entity_id string, entity_type string, weight double"
     )
 
 
@@ -302,7 +303,8 @@ def _mentions_ngram(spark, sf_dir, gaz_rows=None):
     if gaz_rows is None:
         g = gaz_df(spark)
     else:
-        g = spark.createDataFrame(
+        g = local_table(
+            spark,
             [(p, t_, TYPES.index(t_), n) for p, t_, n in gaz_rows],
             "phrase string, type string, level int, len int",
         )

@@ -67,14 +67,6 @@ ALIAS_DICT = StructType(
     ]
 )
 
-GAZETTEER = StructType(
-    [
-        StructField("phrase", StringType(), False),
-        StructField("type", StringType(), False),
-        StructField("level_hint", IntegerType(), True),
-    ]
-)
-
 NODES = StructType(
     [
         StructField("node_id", StringType(), False),

@@ -64,7 +64,10 @@ def read_conll(spark: SparkSession, path: str) -> DataFrame:
             F.col("seg_raw"),
             F.col("line_no"),
             F.col("parts")[0].alias("token"),
-            F.slice("parts", 2, 1000).alias("tags"),
+            # an untagged token reads as "O", as in conll.parse_conll
+            F.when(F.size("parts") > 1, F.slice("parts", 2, 1000))
+            .otherwise(F.array(F.lit("O")))
+            .alias("tags"),
         )
         .localCheckpoint(eager=True)  # reused by stats agg + final plan
     )

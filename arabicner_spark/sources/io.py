@@ -41,6 +41,31 @@ def iceberg_available(spark: SparkSession) -> bool:
     return False
 
 
+def local_table(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side rows as a DataFrame over a ``LocalTableScan``.
+
+    ``createDataFrame(list)`` scans a PythonRDD spread over
+    defaultParallelism slices: every action on a dictionary-sized table
+    pays ~cores Python-worker tasks.  An Arrow table with an explicit
+    schema (``schema``: a StructType or DDL string) becomes a local
+    relation instead, which the planner inlines, sizes for broadcast,
+    and never ships to a Python worker.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def parquet_fingerprint(path: str) -> str:
     """md5 over the sorted (relative path, size) listing of a parquet
     directory — the parquet facade's snapshot id.  Part files carry

@@ -24,6 +24,7 @@ from datetime import datetime, timedelta, timezone
 from typing import Dict, List, Tuple
 
 from arabicner_spark.functions.normalize import normalize_py
+from arabicner_spark.sources.io import local_table
 
 # ---------------------------------------------------------------- gazetteer
 
@@ -58,16 +59,6 @@ ROLES = ["user", "assistant", "tool"]
 TOOLS = ["search", "retrieve", "calc", "translate"]
 
 _EPOCH = datetime(2026, 1, 1, tzinfo=timezone.utc)
-
-
-def make_gazetteer_rows() -> List[Tuple[str, str, int]]:
-    """(phrase, type, level_hint) rows — level = index in sorted types."""
-    types = sorted(GAZETTEER)
-    return [
-        (phrase, typ, types.index(typ))
-        for typ in types
-        for phrase in GAZETTEER[typ]
-    ]
 
 
 def make_alias_rows() -> List[Tuple[str, str, str, float]]:
@@ -154,16 +145,10 @@ def transcripts_df(spark, n_convs: int = 40, seed: int = 42):
     )
 
 
-def gazetteer_df(spark):
-    from arabicner_spark import schemas
-
-    return spark.createDataFrame(make_gazetteer_rows(), schemas.GAZETTEER)
-
-
 def alias_df(spark):
     from arabicner_spark import schemas
 
-    return spark.createDataFrame(make_alias_rows(), schemas.ALIAS_DICT)
+    return local_table(spark, make_alias_rows(), schemas.ALIAS_DICT)
 
 
 def gazetteer_dict() -> Dict[str, set]:

@@ -54,3 +54,27 @@ def test_adaptive_empty_edges(spark):
 
     df = spark.createDataFrame([], "a string, b string")
     assert connected_components_adaptive(df).count() == 0
+
+
+def test_adaptive_gate_both_sides(spark, monkeypatch):
+    """The gate counts CANONICAL edges (dups and self-loops dropped):
+    n == driver_threshold stays on the driver, n == driver_threshold + 1
+    goes distributed, and both sides give the same components from the
+    caller's edge columns."""
+    from arabicner_spark.operators import components
+
+    calls = []
+    real = components.connected_components
+    monkeypatch.setattr(
+        components, "connected_components", lambda *a: calls.append(1) or real(*a)
+    )
+    edges = [("b", "a"), ("a", "b"), ("b", "c"), ("x", "y"), ("z", "z")]  # 3 canonical
+    df = spark.createDataFrame(edges, "u string, v string")
+    want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+
+    def comps(threshold):
+        got = components.connected_components_adaptive(df, "u", "v", driver_threshold=threshold)
+        return {(r.node, r.component) for r in got.collect()}
+
+    assert comps(3) == want and calls == []
+    assert comps(2) == want and calls == [1]

@@ -478,3 +478,47 @@ def test_lpa_local_simulation_matches_distributed(spark, monkeypatch):
     monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
     dist = {(r.node, r.label) for r in graph.label_propagation(edges, rounds=3).collect()}
     assert local == dist
+
+
+def test_ppr_damping_validated_and_boundaries_match_distributed(spark, monkeypatch):
+    """damping_pct outside [0, 100] is rejected on both paths (Python
+    floor division and SQL ``div`` disagree once ranks go negative);
+    the boundary values give identical local and distributed ranks."""
+    from arabicner_spark.operators import graph
+
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint")
+    seeds = spark.createDataFrame([(1,)], "node bigint")
+
+    def ranks(d):
+        got = graph.pagerank_personalized_exact(e, seeds, iterations=3, damping_pct=d)
+        return {(r.node, r.rank_i) for r in got.collect()}
+
+    local = {d: ranks(d) for d in (0, 100)}
+    monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
+    assert {d: ranks(d) for d in (0, 100)} == local
+    for limit in (0, 10**6):
+        monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", limit)
+        for bad in (-1, 101):
+            with pytest.raises(ValueError, match="damping_pct"):
+                graph.pagerank_personalized_exact(e, seeds, damping_pct=bad)
+            with pytest.raises(ValueError, match="damping_pct"):
+                graph.pagerank_exact(e, damping_pct=bad)
+
+
+def test_temporal_reach_int64_max_time_matches_distributed(spark, monkeypatch):
+    """An edge at t == int64.max collides with the local replay's
+    "unreached" sentinel, so such edge sets take the distributed loop;
+    the node reached at that time must stay in the output."""
+    from arabicner_spark.operators import graph
+
+    big = 2**63 - 1
+    e = spark.createDataFrame(
+        [(1, 2, 5), (2, 3, big), (3, 4, big), (1, 5, 7)],
+        "src bigint, dst bigint, ts_epoch bigint",
+    )
+    seeds = spark.createDataFrame([(1,)], "node bigint")
+    want = {(1, 0), (2, 5), (3, big), (4, big), (5, 7)}
+    got = {(r.node, r.first_reach) for r in graph.temporal_reach(e, seeds, rounds=3).collect()}
+    monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
+    dist = {(r.node, r.first_reach) for r in graph.temporal_reach(e, seeds, rounds=3).collect()}
+    assert got == dist == want

@@ -1,5 +1,6 @@
-"""Entity linking: broadcast alias join, weight tie-break, LSH
-reachability of edit-variant aliases, canonicalization map."""
+"""Entity linking: alias join, weight tie-break, LSH reachability of
+edit-variant aliases, parity with the serial LSH oracle,
+canonicalization map."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -96,17 +97,62 @@ def test_salted_join_matches_plain_join(spark):
     assert plain == salted and len(plain) == 1000
 
 
-def test_salted_alias_path_matches_broadcast(spark):
-    """Forcing the salted shuffle join (broadcast_alias_limit=0) must
-    produce the identical surface map."""
-    df = synth.transcripts_df(spark, n_convs=10, seed=5)
-    m = ner.extract_mentions(df, synth.gazetteer_dict())
-    a = synth.alias_df(spark)
-    bc = {(r.surface, r.canonical_id, r.link_kind)
-          for r in linking.link_surfaces(m, a).collect()}
-    salted = {(r.surface, r.canonical_id, r.link_kind)
-              for r in linking.link_surfaces(m, a, broadcast_alias_limit=0).collect()}
-    assert bc == salted and bc
+def _mention_tuples(m):
+    return [
+        (r.conv_id, r.turn_idx, r.level, r.type, r.start_tok, r.end_tok, r.text)
+        for r in m.collect()
+    ]
+
+
+def test_link_surfaces_matches_lsh_oracle_on_synth(spark, linked):
+    """The whole surface map (alias hits, LSH links, clusters, singles)
+    equals the pure-Python MinHash-LSH + union-find reference."""
+    m, rows = linked
+    want = oracle.oracle_lsh_link(_mention_tuples(m), synth.make_alias_rows())
+    got = {r.surface: (r.canonical_id, r.link_kind) for r in rows}
+    assert got == want
+    assert "lsh" in {k for _c, k in want.values()}
+
+
+def _one_edit_variants(rng, word, letters):
+    i = rng.randrange(len(word))
+    return {
+        word[:i] + rng.choice(letters) + word[i:],  # insert
+        word[:i] + rng.choice(letters.replace(word[i], "")) + word[i + 1 :],  # substitute
+        word[:i] + word[i + 1 :],  # delete
+    }
+
+
+def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark):
+    """Planted one-edit variants of dictionary aliases and of novel
+    names: every link kind appears, and the map equals the oracle."""
+    import random
+    from datetime import datetime, timezone
+
+    from arabicner_spark.functions.normalize import normalize_py
+
+    rng = random.Random(11)
+    letters = "بتثجدرزسشصطعفقكلمن"
+    alias_rows = synth.make_alias_rows()
+    aliases = {a for a, *_ in alias_rows}
+    novel = ["".join(rng.choice(letters) for _ in range(rng.randint(5, 8))) for _ in range(12)]
+    phrases = set(novel)
+    for base in sorted(aliases)[:20] + novel:
+        for v in _one_edit_variants(rng, base, letters):
+            if " " not in v and normalize_py(v) == v and v not in aliases:
+                phrases.add(v)
+    phrases |= set(sorted(aliases)[20:30])
+    ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    rows = [(f"c{k // 4}", k % 4, "user", p, None, ts) for k, p in enumerate(sorted(phrases))]
+    df = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
+    m = ner.extract_mentions(df, {"PERS": {(p,) for p in phrases}})
+    got = {
+        r.surface: (r.canonical_id, r.link_kind)
+        for r in linking.link_surfaces(m, synth.alias_df(spark)).collect()
+    }
+    want = oracle.oracle_lsh_link(_mention_tuples(m), alias_rows)
+    assert got == want
+    assert {k for _c, k in want.values()} == {"alias", "lsh", "lsh_cluster", "self"}
 
 
 def test_custom_score_fn_injection(spark):

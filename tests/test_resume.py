@@ -24,6 +24,24 @@ def _edge_set(tables):
     }
 
 
+# stage -> the stage whose output is its primary input
+PRIMARY_INPUT = {"triples": "mentions", "linking": "mentions", "edges": "triples", "nodes": "mentions"}
+
+
+def _rows_in(metrics):
+    """stage -> its rows_in (one value per stage, on every partition row)."""
+    got = {}
+    for r in metrics.select("stage", "rows_in").distinct().collect():
+        assert r.stage not in got
+        got[r.stage] = r.rows_in
+    return got
+
+
+def _rows_in_want(metrics, n_transcripts):
+    out = {r.stage: r.n for r in metrics.groupBy("stage").agg({"rows_out": "sum"}).toDF("stage", "n").collect()}
+    return {"mentions": n_transcripts, **{s: out[i] for s, i in PRIMARY_INPUT.items()}}
+
+
 def test_full_run_then_resume_noop(spark, tmp_path, cfg):
     t = synth.transcripts_df(spark, n_convs=12, seed=42)
     root = str(tmp_path / "kg")
@@ -34,6 +52,7 @@ def test_full_run_then_resume_noop(spark, tmp_path, cfg):
     stages1 = {r.stage for r in metrics1.select("stage").distinct().collect()}
     assert stages1 == {"mentions", "triples", "linking", "edges", "nodes"}
     n_metrics1 = metrics1.count()
+    assert _rows_in(metrics1) == _rows_in_want(metrics1, t.count())
 
     # resume with same snapshot: all stages skip, outputs identical,
     # no duplicate lineage/metrics rows
@@ -69,6 +88,8 @@ def test_partial_failure_then_resume(spark, tmp_path, cfg):
     assert dup == 0
     edge_runs = {r.run_id for r in metrics.where("stage = 'edges'").collect()}
     assert edge_runs == {"r2"}
+    # the rerun stages take rows_in from the skipped stages' manifests
+    assert _rows_in(metrics) == _rows_in_want(metrics, t.count())
 
 
 def test_input_change_invalidates_resume(spark, tmp_path, cfg):
