@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from arabicner_spark.functions.hashing import seeded_md5
+from arabicner_spark.sources.io import local_table
 
 _NIBBLES = 15  # 60 bits: exact in a double, same rule as sketches._frac
 
@@ -95,7 +96,8 @@ def mixture_sample(
     """
     sizes = df.groupBy(source_col).agg(F.count("*").alias("_size"))
     spark = df.sparkSession
-    desired = spark.createDataFrame(
+    desired = local_table(
+        spark,
         [(s, float(share * k)) for s, share in targets.items()],
         f"{source_col} string, _desired double",
     )

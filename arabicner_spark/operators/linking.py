@@ -1,11 +1,14 @@
 """Entity linking + canonicalization (north-rule operators; the
 reference has no linking stage — SURVEY.md section 2.B).
 
+The alias dictionary is a driver list, so ``best_alias`` resolves it to
+one entity per alias on the driver (weight desc as Spark orders it,
+NaN first, then entity_id asc) and hands it to Spark as a local table.
+
 Dataflow, all on DISTINCT surfaces:
   1. DIRECT: one left join of the distinct normalized surfaces against
-     the checkpointed best-alias table (ties on a shared alias break by
-     weight desc, entity_id asc).  AQE picks broadcast or shuffle from
-     the checkpoint's size.  Hits are 'alias' links; misses go on.
+     the best-alias table, checkpointed once (steps 2 and 4 both read
+     it).  Hits are 'alias' links; misses go on.
   2. LSH: one narrow array pass over the nodes (``S:`` unlinked
      surfaces and ``A:`` aliases) computes each node's distinct
      char-3gram array, its 16 minhashes and its 8 bands; one self-join
@@ -13,8 +16,14 @@ Dataflow, all on DISTINCT surfaces:
      arrays, so exact Jaccard >= threshold is one
      ``size(array_intersect(..))`` per pair.
   3. CC: verified pairs -> connected components (driver union-find
-     below its edge limit); the canonical id of a component is the best
-     entity among its alias members, else "S:" + min surface.
+     below its edge limit), each keyed by its min node id.  An alias
+     node's id is "A:" + entity_id + NUL + alias, and "A:" sorts
+     before "S:", so a component's key already names its canonical
+     id: "A:" + the min entity among its alias members when it has
+     one, else "S:" + its min surface.  No aggregate is needed.
+  4. MAP: the step-1 table LEFT JOIN the step-3 surface links (a
+     broadcast, vocabulary-sized): alias hit, else LSH link, else the
+     surface itself ('self').
 
 At 10^12 turns the mention table is enormous but the distinct-surface
 table is vocabulary-sized, so every step after the first
@@ -25,70 +34,86 @@ mentions/triples as a broadcast join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+import math
+from typing import Iterable, Tuple
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from arabicner_spark import schemas
 from arabicner_spark.functions import hashing
 from arabicner_spark.functions.normalize import normalize_col
 from arabicner_spark.operators.components import connected_components_adaptive
+from arabicner_spark.sources.io import local_table
 
 DEFAULT_JACCARD = 0.5
+# ends the entity id in an alias node's id; sorts before every
+# character an entity id may hold (best_alias rejects ids holding it)
+SEP = "\x00"
+
+AliasRow = Tuple[str, str, str, float]
 
 
-def best_alias(alias_df: DataFrame) -> DataFrame:
-    """One row per alias: highest weight wins, then lexicographic
-    entity_id (deterministic tie-break, mirrored in oracle + SQL)."""
-    w = Window.partitionBy("alias").orderBy(
-        F.col("weight").desc(), F.col("entity_id").asc()
-    )
-    return (
-        alias_df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+def _best_key(row: AliasRow) -> tuple:
+    """Sort key of ``ORDER BY weight DESC, entity_id ASC`` in Spark:
+    NaN is the largest double, so it sorts first descending; NULL sorts
+    last descending and first ascending."""
+    _alias, eid, _typ, w = row
+    if w is None:
+        wk = (2, 0.0)
+    elif math.isnan(w):
+        wk = (0, 0.0)
+    else:
+        wk = (1, -w)
+    return wk, eid is not None, eid or ""
+
+
+def best_alias(spark: SparkSession, alias_rows: Iterable[AliasRow]) -> DataFrame:
+    """The alias dictionary with one row per alias (schemas.ALIAS_DICT):
+    highest weight wins, then lexicographic entity_id (deterministic
+    tie-break, mirrored in oracle + SQL)."""
+    best = {}
+    for row in alias_rows:
+        if SEP in (row[1] or ""):
+            raise ValueError(f"entity id {row[1]!r} contains NUL, which keys LSH alias nodes")
+        if row[0] not in best or _best_key(row) < _best_key(best[row[0]]):
+            best[row[0]] = row
+    return local_table(spark, list(best.values()), schemas.ALIAS_DICT)
 
 
 def link_surfaces(
     mentions: DataFrame,
-    alias_df: DataFrame,
+    alias_best: DataFrame,
     jaccard_threshold: float = DEFAULT_JACCARD,
     n_hashes: int = 16,
     bands: int = 8,
 ) -> DataFrame:
     """mentions -> (surface, canonical_id, link_kind) map.
 
+    ``alias_best``: one row per alias, as ``best_alias`` returns it.
     link_kind: 'alias' (direct dictionary hit), 'lsh' (reached via
     MinHash-LSH + components to a component with an alias member),
     'lsh_cluster' (LSH component without one), 'self' (novel surface,
     canonical is itself).
     """
-    # both are vocabulary-sized and read by every branch below ->
-    # checkpoint once; without this the whole upstream plan (incl. the
-    # NER stage) re-executes per branch of the final union, and the
-    # checkpoint's size is what lets AQE pick broadcast or shuffle for
-    # the dictionary join
-    dict_best = best_alias(alias_df).localCheckpoint(eager=True)
+    # read by the LSH nodes and by the final map: checkpoint once, or
+    # the mention scan and its distinct run for each
     joined = (
         mentions.select(normalize_col(F.col("text")).alias("surface"))
         .where(F.length("surface") > 0)
         .distinct()
-        .join(dict_best.withColumnRenamed("alias", "surface"), "surface", "left")
+        .join(alias_best.select(F.col("alias").alias("surface"), "entity_id"), "surface", "left")
         .localCheckpoint(eager=True)
     )
-    direct = joined.where(F.col("entity_id").isNotNull()).select(
-        "surface", F.col("entity_id").alias("canonical_id")
-    )
-    unlinked = joined.where(F.col("entity_id").isNull()).select("surface")
-    if unlinked.isEmpty():
-        # nothing to block — LSH exists to rescue dictionary misses
-        return direct.withColumn("link_kind", F.lit("alias"))
 
     # --- LSH blocking over unlinked surfaces + dictionary aliases
-    nodes = unlinked.select(
+    nodes = joined.where(F.col("entity_id").isNull()).select(
         F.concat(F.lit("S:"), "surface").alias("id"), F.col("surface").alias("t")
     ).union(
-        dict_best.select(F.concat(F.lit("A:"), "alias").alias("id"), F.col("alias").alias("t"))
+        alias_best.select(
+            F.concat(F.lit("A:"), "entity_id", F.lit(SEP), "alias").alias("id"),
+            F.col("alias").alias("t"),
+        )
     )
     sigs = hashing.minhash_columns(
         nodes.select("id", hashing.char_grams(F.col("t"), 3).alias("g")), "g", n_hashes
@@ -110,56 +135,23 @@ def link_surfaces(
     ).select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
 
     comp = connected_components_adaptive(verified)
-
-    # canonical per component: best entity among alias members, else
-    # "S:" + min surface member.
-    members = comp.withColumn(
-        "kind", F.substring("node", 1, 2)
-    ).withColumn("t", F.expr("substring(node, 3)"))
-    alias_members = (
-        members.where(F.col("kind") == "A:")
-        .join(F.broadcast(dict_best), F.col("t") == dict_best["alias"])
-        .groupBy("component")
-        .agg(F.min("entity_id").alias("ent"))
+    key = F.col("component")
+    lsh = comp.where(F.col("node").startswith("S:")).select(
+        F.expr("substring(node, 3)").alias("surface"),
+        F.when(key.startswith("A:"), F.substring_index(F.expr("substring(component, 3)"), SEP, 1))
+        .otherwise(key)
+        .alias("lsh_id"),
+        F.when(key.startswith("A:"), F.lit("lsh")).otherwise(F.lit("lsh_cluster")).alias("lsh_kind"),
     )
-    surf_min = (
-        members.where(F.col("kind") == "S:")
-        .groupBy("component")
-        .agg(F.min("t").alias("min_surface"))
-    )
-    comp_canon = surf_min.join(alias_members, "component", "left").select(
-        "component",
-        F.coalesce(F.col("ent"), F.concat(F.lit("S:"), "min_surface")).alias(
-            "canonical_id"
-        ),
-        F.col("ent").isNotNull().alias("via_alias"),
-    )
-    lsh_linked = (
-        members.where(F.col("kind") == "S:")
-        .join(comp_canon, "component")
-        .select(
-            F.col("t").alias("surface"),
-            "canonical_id",
-            F.when(F.col("via_alias"), F.lit("lsh")).otherwise(F.lit("lsh_cluster")).alias(
-                "link_kind"
-            ),
-        )
-    )
-
-    singles = (
-        unlinked.join(
-            lsh_linked.select("surface").distinct(), "surface", "left_anti"
-        ).select(
-            "surface",
-            F.concat(F.lit("S:"), "surface").alias("canonical_id"),
-            F.lit("self").alias("link_kind"),
-        )
-    )
-
-    return (
-        direct.withColumn("link_kind", F.lit("alias"))
-        .unionByName(lsh_linked)
-        .unionByName(singles)
+    # vocabulary-sized like the map itself, which every consumer
+    # broadcasts too
+    return joined.join(F.broadcast(lsh), "surface", "left").select(
+        "surface",
+        F.coalesce("entity_id", "lsh_id", F.concat(F.lit("S:"), "surface")).alias("canonical_id"),
+        F.when(F.col("entity_id").isNotNull(), F.lit("alias"))
+        .when(F.col("lsh_id").isNotNull(), F.col("lsh_kind"))
+        .otherwise(F.lit("self"))
+        .alias("link_kind"),
     )
 
 

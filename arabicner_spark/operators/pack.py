@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from arabicner_spark.sources.io import local_table
+
 
 def pack_sequences(
     df: DataFrame,
@@ -69,7 +71,7 @@ def pack_sequences(
     for pid in sorted(totals):
         base.append((pid, acc))
         acc += totals[pid]
-    base_df = df.sparkSession.createDataFrame(base or [(0, 0)], "pid int, base long")
+    base_df = local_table(df.sparkSession, base or [(0, 0)], "pid int, base long")
 
     g = local.join(F.broadcast(base_df), "pid").select(
         F.col("id").alias(id_col),

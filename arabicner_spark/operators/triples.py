@@ -17,18 +17,16 @@ oracle — one definition, three renderings):
 Scale notes: the self-join key is (conv_id, turn_idx) — high
 cardinality, low per-key fan-out (mentions per turn is small and
 bounded by turn length), so a shuffled sort-merge/hash join partitions
-evenly; the predicate table is a handful of rows and is broadcast.  No
-window functions, no per-row Python.
+evenly; the predicate table is a handful of rows and becomes a literal
+map.  No window functions, no per-row Python.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import Dict, List, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from arabicner_spark.sources.io import local_table
 
 # (subj_type, pred, obj_type) for the synthetic/Wojood-typed corpus
 DEFAULT_PREDICATES: List[Tuple[str, str, str]] = [
@@ -52,9 +50,10 @@ def extract_triples(
 ) -> DataFrame:
     """mentions -> triples (schemas.TRIPLES).
 
-    Physical shape: ONE shuffle (groupBy the turn key), pair generation
-    as array combinatorics inside whole-stage codegen, then a broadcast
-    join against the tiny predicate table.  A naive self-join instead
+    Physical shape: ONE shuffle (groupBy the turn key), then pair
+    generation and the predicate lookup as array combinatorics: the
+    predicate table is a handful of rows, so it is a literal
+    ``type|type -> [pred]`` map, not a join.  A naive self-join instead
     (a) executes the upstream plan twice — fatal when upstream is the
     Python NER stage — and (b) tempts AQE into broadcasting a mentions
     table that is unbounded at production scale.  Mentions-per-turn is
@@ -68,17 +67,23 @@ def extract_triples(
     explode (PLANS.md: compute-bound stages starved by byte coalescing).
     At production scale the exchange is wide anyway and this is a no-op.
     """
-    spark = mentions.sparkSession
-    pred_df = local_table(spark, predicates, "subj_type string, pred string, obj_type string")
-    type_pairs = F.array(
-        *[F.lit(f"{st}|{ot}") for st, ot in sorted({(s, o) for s, _p, o in predicates})]
-    )
+    by_pair: Dict[str, List[str]] = {}
+    for st, pred, ot in predicates:
+        preds = by_pair.setdefault(f"{st}|{ot}", [])
+        if pred not in preds:
+            preds.append(pred)
+    preds_of = F.create_map(
+        *[x for k, ps in sorted(by_pair.items()) for x in (F.lit(k), F.array(*map(F.lit, ps)))]
+    ).cast("map<string,array<string>>")
     m = F.struct("level", "start_tok", "end_tok", "type", "text")
     if width:
         mentions = mentions.repartition(width, F.col("conv_id"), F.col("turn_idx"))
     per_turn = mentions.groupBy("conv_id", "turn_idx").agg(
         F.collect_list(m).alias("ms")
     )
+
+    def type_pair(p):
+        return F.concat(p["a"]["type"], F.lit("|"), p["b"]["type"])
 
     def keep(p):
         a, b = p["a"], p["b"]
@@ -93,44 +98,37 @@ def extract_triples(
             )
             <= F.lit(window)
         )
-        typed = F.array_contains(
-            type_pairs, F.concat(a["type"], F.lit("|"), b["type"])
-        )
-        return not_same & gap_ok & typed
+        return not_same & gap_ok & F.map_contains_key(preds_of, type_pair(p))
 
-    pairs = per_turn.select(
-        "conv_id",
-        "turn_idx",
-        F.explode(
-            F.filter(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda a: F.transform(
-                            "ms", lambda b: F.struct(a.alias("a"), b.alias("b"))
-                        ),
-                    )
-                ),
-                keep,
+    pairs = F.filter(
+        F.flatten(
+            F.transform(
+                "ms",
+                lambda a: F.transform("ms", lambda b: F.struct(a.alias("a"), b.alias("b"))),
             )
-        ).alias("p"),
+        ),
+        keep,
+    )
+    # one (pair, predicate) element per predicate of the pair's types
+    facts = F.flatten(
+        F.transform(
+            pairs,
+            lambda p: F.transform(
+                preds_of[type_pair(p)],
+                lambda pred: F.struct(p["a"].alias("a"), p["b"].alias("b"), pred.alias("pred")),
+            ),
+        )
     )
     return (
-        pairs.join(
-            F.broadcast(pred_df),
-            on=[
-                F.col("p.a.type") == F.col("subj_type"),
-                F.col("p.b.type") == F.col("obj_type"),
-            ],
-        )
+        per_turn.select("conv_id", "turn_idx", F.explode(facts).alias("f"))
         .select(
-            F.col("p.a.text").alias("subj"),
-            F.col("pred"),
-            F.col("p.b.text").alias("obj"),
+            F.col("f.a.text").alias("subj"),
+            F.col("f.pred").alias("pred"),
+            F.col("f.b.text").alias("obj"),
             F.col("conv_id"),
             F.col("turn_idx"),
-            F.col("subj_type"),
-            F.col("obj_type"),
+            F.col("f.a.type").alias("subj_type"),
+            F.col("f.b.type").alias("obj_type"),
         )
         .distinct()
     )

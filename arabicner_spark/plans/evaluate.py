@@ -27,6 +27,7 @@ from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.operators import metrics, ner
 from arabicner_spark.sources import conll, predictions
+from arabicner_spark.sources.io import local_table
 
 
 def evaluate_file(
@@ -41,7 +42,7 @@ def evaluate_file(
     types = tagcore.gazetteer_types(gaz)
 
     rows = conll.segments_to_transcript_rows(segments)
-    df = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
+    df = local_table(spark, rows, schemas.TRANSCRIPTS)
     # reused by three metric joins and the prediction sink — materialize
     # the Python stage once; NO driver-side collect of mentions
     pred_df = ner.extract_mentions(df, gaz).localCheckpoint(eager=True)
@@ -59,7 +60,7 @@ def evaluate_file(
         gold.append(
             (f"wojood_{si // 50:05d}", si % 50, types.index(typ), typ, s, e)
         )
-    gold_df = spark.createDataFrame(gold, span_schema)
+    gold_df = local_table(spark, gold, span_schema)
     micro = metrics.span_prf(gold_df, pred_df)
     report = metrics.per_type_report(gold_df, pred_df).orderBy("type")
 
@@ -71,7 +72,8 @@ def evaluate_file(
             base_rows.append(
                 (f"wojood_{si // 50:05d}", si % 50, si, pos, tok, gold_tags)
             )
-    base = spark.createDataFrame(
+    base = local_table(
+        spark,
         base_rows,
         "conv_id string, turn_idx int, seg_id long, pos int, "
         "token string, gold_tags array<string>",

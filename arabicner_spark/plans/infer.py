@@ -21,6 +21,7 @@ from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.operators import ner
 from arabicner_spark.sources import synth
+from arabicner_spark.sources.io import local_table
 
 
 def tag_text(
@@ -38,7 +39,7 @@ def tag_text(
     """
     types = tagcore.gazetteer_types(gazetteer)
     rows = [("infer", 0, "user", text, None, datetime(2026, 1, 1, tzinfo=timezone.utc))]
-    df = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
+    df = local_table(spark, rows, schemas.TRANSCRIPTS)
     encoder = score_fn = None
     if model_path:
         from arabicner_spark.functions import bert_scorer

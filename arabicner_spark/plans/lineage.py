@@ -6,15 +6,23 @@ DATA checkpointing per the north rule: every stage writes its output
 table plus
 
   * a ``_metrics`` row set — (stage, partition_id, rows_in, rows_out,
-    triples, wall_ms, run_id), where partition counts come from one
-    ``groupBy(spark_partition_id())`` over the written table (columnar
-    count, no second pass over the compute graph) and ``rows_in`` is
-    the recorded rows_out total of the stage's primary input;
-  * a manifest — (stage, input_snapshot, complete, run_id, rows_out)
-    JSON.
+    triples, wall_ms, run_id), one row per data file the stage wrote
+    (``partition_id`` is the file's index in path order).  The rows
+    are built on the driver: ``rows_out`` comes from each file's row
+    count in the table's own metadata (parquet footers, or Iceberg's
+    ``files`` table), ``rows_in`` is the recorded rows_out total of
+    the stage's primary input, and pyarrow writes them.  Metrics cost
+    no Spark job and no generated code;
+  * a manifest — (stage, input_snapshot, complete, run_id, rows_out,
+    schema) JSON.
 
-Row totals are recorded by an ``observe`` on the frame being written,
-so the write job itself counts them: recording adds no Spark job.
+A stage's row total is the sum of its files' row counts.  An input the
+run did not write (the transcripts) is counted by an ``observe`` on the
+frame, so the job that reads it counts it: no extra Spark job.  The
+stage output is read back with the schema it was written with (data
+columns, then partition columns), so the read-back infers nothing: no
+schema-inference job, and a string partition column whose values look
+like numbers stays a string.
 
 Resume rule: a stage is skipped iff its manifest is complete AND its
 recorded input snapshot equals the current one.  Outputs are written
@@ -27,15 +35,24 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from arabicner_spark import schemas
 from arabicner_spark.sources.io import TableIO
+
+# a _metrics data file: schemas.METRICS without its partition column
+METRICS_FILE = to_arrow_schema(StructType([f for f in schemas.METRICS if f.name != "stage"]))
 
 
 @dataclass
@@ -70,16 +87,16 @@ class StageRunner:
         return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     def rows(self, name: str) -> int:
-        """Recorded row total of ``name``: an observed frame, a table an
-        earlier stage of this run wrote, or the rows_out of a skipped
-        stage's manifest; counted (one job) only when none exists."""
+        """Recorded row total of ``name``: an observed frame, a table a
+        stage of this run wrote, or the rows_out of a skipped stage's
+        manifest; counted (one job) only when none exists."""
         if name in self._observed:
             self._rows[name] = int(self._observed.pop(name).get["rows"])
         if name not in self._rows:
             self._rows[name] = self.io.read(name).count()
         return self._rows[name]
 
-    def _write_manifest(self, stage: str, rows_out: int) -> None:
+    def _write_manifest(self, stage: str, rows_out: int, schema: StructType) -> None:
         tmp = self._manifest_path(stage) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
@@ -89,12 +106,13 @@ class StageRunner:
                     "complete": True,
                     "run_id": self.run_id,
                     "rows_out": rows_out,
+                    "schema": schema.jsonValue(),
                 },
                 f,
             )
         os.replace(tmp, self._manifest_path(stage))  # atomic
 
-    def _write_metrics(self, stage: str, rows: DataFrame) -> None:
+    def _write_metrics(self, stage: str, rows: List[tuple]) -> None:
         """Overwrite THIS stage's metrics partition (stage=<name> dir).
 
         An append here would duplicate rows if a run died in the window
@@ -105,8 +123,11 @@ class StageRunner:
         Readers load the _metrics root and get ``stage`` back as the
         partition column.
         """
+        table = pa.Table.from_pylist([dict(zip(METRICS_FILE.names, r)) for r in rows], schema=METRICS_FILE)
         path = os.path.join(self.io.root, "_metrics", f"stage={stage}")
-        rows.drop("stage").write.mode("overwrite").parquet(path)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
     def run(
         self,
@@ -122,25 +143,26 @@ class StageRunner:
             m = self._manifest(stage)
             if "rows_out" in m:
                 self._rows[out_table] = m["rows_out"]
-            return self.io.read(out_table)
+            schema = StructType.fromJson(m["schema"]) if "schema" in m else None
+            return self.io.read(out_table, schema)
         t0 = time.time()
-        self.io.write(self.observe(compute(), out_table), out_table, partition_by)
+        df = compute()
+        self.io.write(df, out_table, partition_by)
         wall_ms = int((time.time() - t0) * 1000)
         print(f"[stage {stage}] {wall_ms} ms", file=sys.stderr)
-        written = self.io.read(out_table)
-        rows_in = self.rows(rows_in_of) if rows_in_of else 0
-        per_part = written.groupBy(
-            F.spark_partition_id().cast("int").alias("partition_id")
-        ).agg(F.count("*").alias("rows_out"))
-        metrics = per_part.select(
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            F.lit(rows_in).cast("bigint").alias("rows_in"),
-            F.col("rows_out").cast("bigint"),
-            (F.col("rows_out") if count_as_triples else F.lit(0)).cast("bigint").alias("triples"),
-            F.lit(wall_ms).cast("bigint").alias("wall_ms"),
-            F.lit(self.run_id).alias("run_id"),
+        parts = partition_by or []
+        schema = StructType(
+            [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
         )
-        self._write_metrics(stage, metrics)
-        self._write_manifest(stage, self.rows(out_table))
-        return written
+        files = self.io.data_files(out_table)
+        self._rows[out_table] = sum(n for _path, n in files)
+        rows_in = self.rows(rows_in_of) if rows_in_of else 0
+        self._write_metrics(
+            stage,
+            [
+                (i, rows_in, n, n if count_as_triples else 0, wall_ms, self.run_id)
+                for i, (_path, n) in enumerate(files)
+            ],
+        )
+        self._write_manifest(stage, self._rows[out_table], schema)
+        return self.io.read(out_table, schema)

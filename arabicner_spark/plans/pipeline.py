@@ -8,6 +8,11 @@
 Every stage runs through StageRunner: checkpointed output table,
 ``_metrics`` rows, manifest, resume-skip.  The whole pipeline is a
 deterministic function of (input table, gazetteer, alias dict, config).
+
+A pass costs per-job overhead and generated code, not data: the tables
+after NER are vocabulary-sized.  So the plans stay small enough that a
+warm pass finds its generated classes in Spark's codegen cache
+(``tools/pass_profile.py`` prints both per stage).
 """
 
 from __future__ import annotations
@@ -22,14 +27,14 @@ from pyspark.sql import functions as F
 
 from arabicner_spark.functions.normalize import normalize_col
 from arabicner_spark.operators import ner
-from arabicner_spark.operators.linking import canonicalize_triples, link_surfaces
+from arabicner_spark.operators.linking import best_alias, canonicalize_triples, link_surfaces
 from arabicner_spark.operators.triples import (
     DEFAULT_PREDICATES,
     DEFAULT_WINDOW,
     extract_triples,
 )
 from arabicner_spark.plans.lineage import StageRunner
-from arabicner_spark.sources.io import TableIO, local_table
+from arabicner_spark.sources.io import TableIO
 
 
 @dataclass
@@ -70,9 +75,7 @@ def run_pipeline(
     """Run (or resume) the full pipeline; returns the output tables."""
     io = TableIO.auto(spark, out_root)
     runner = StageRunner(io, run_id, cfg.snapshot(input_snapshot))
-    from arabicner_spark import schemas
-
-    alias_df = local_table(spark, cfg.alias_rows, schemas.ALIAS_DICT)
+    alias_best = best_alias(spark, cfg.alias_rows)
 
     mentions = runner.run(
         "mentions",
@@ -112,7 +115,7 @@ def run_pipeline(
     surface_map = runner.run(
         "linking",
         "surface_map",
-        lambda: link_surfaces(mentions, alias_df, cfg.jaccard_threshold),
+        lambda: link_surfaces(mentions, alias_best, cfg.jaccard_threshold),
         rows_in_of="mentions",
     )
     edges = runner.run(
@@ -155,8 +158,17 @@ def _nodes(mentions: DataFrame, surface_map: DataFrame, transcripts: DataFrame) 
     )
     ts = transcripts.select("conv_id", "turn_idx", "ts")
     m = m.join(ts, ["conv_id", "turn_idx"], "left")
-    return m.groupBy("node_id", "type").agg(
-        F.min("surface").alias("canonical_text"),
-        F.count("*").alias("n_mentions"),
-        F.min("ts").alias("first_ts"),
+    # mentions -> distinct (node, type, surface) first, in a hash
+    # aggregate; the second level then collects a node's distinct
+    # surfaces, never its mentions.  A string min cannot run in a hash
+    # aggregate (it plans as sort + sort aggregate), and making every
+    # second-level aggregate a bounded list collect keeps that level one
+    # object-hash aggregate with the least generated code
+    per_surface = m.groupBy("node_id", "type", "surface").agg(
+        F.count("*").alias("n"), F.min("ts").alias("ts")
+    )
+    return per_surface.groupBy("node_id", "type").agg(
+        F.array_min(F.collect_list("surface")).alias("canonical_text"),
+        F.aggregate(F.collect_list("n"), F.lit(0).cast("long"), lambda acc, n: acc + n).alias("n_mentions"),
+        F.array_min(F.collect_list("ts")).alias("first_ts"),
     ).select("node_id", "canonical_text", "type", "n_mentions", "first_ts")

@@ -492,7 +492,7 @@ def q_stream_kg_triples(spark, sf_dir):
 
 def q_kg_linked(spark, sf_dir):
     m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    ab = best_alias(alias_df_td(spark))
+    ab = best_alias(spark, ALIAS_TD)
     return (
         m.join(F.broadcast(ab), m["text"] == ab["alias"], "left")
         .groupBy(
@@ -517,7 +517,7 @@ GROUP BY 1, 2"""
 
 def q_kg_nodes(spark, sf_dir):
     m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    ab = best_alias(alias_df_td(spark))
+    ab = best_alias(spark, ALIAS_TD)
     return (
         m.join(F.broadcast(ab), m["text"] == ab["alias"])
         .groupBy(F.col("entity_id").alias("node_id"), F.col("type"))
@@ -536,7 +536,7 @@ def q_kg_edges(spark, sf_dir):
     t = triples_op.extract_triples(
         m, PREDS_TD, WINDOW_TD, width=pin_width(spark)
     )
-    ab = F.broadcast(best_alias(alias_df_td(spark)))
+    ab = F.broadcast(best_alias(spark, ALIAS_TD))
     t = t.join(
         ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj"
     ).join(
@@ -2726,7 +2726,7 @@ def q_contamination(spark, sf_dir):
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    probes = spark.createDataFrame([(p,) for p in CONTAM_PROBES], "probe string")
+    probes = local_table(spark, [(p,) for p in CONTAM_PROBES], "probe string")
     hits = (
         d.select("doc_id", F.explode(bigrams).alias("ng"))
         .join(F.broadcast(probes), F.col("ng") == F.col("probe"))
@@ -3959,7 +3959,7 @@ def q_sketch_hist_quantile(spark, sf_dir):
     wcum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     cum = hist.withColumn("cum", F.sum("n_bucket").over(wcum))
     total = o.agg(F.count("*").alias("n_total"))
-    qs = o.sparkSession.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+    qs = local_table(o.sparkSession, [(0.5,), (0.9,), (0.99,)], "q double")
     cand = (
         cum.crossJoin(F.broadcast(qs))
         .crossJoin(F.broadcast(total))
@@ -5159,7 +5159,7 @@ def q_kg_temporal_reach(spark, sf_dir):
 
     m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
     t = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
-    ab = F.broadcast(best_alias(alias_df_td(spark)))
+    ab = F.broadcast(best_alias(spark, ALIAS_TD))
     ts = transcripts(spark, sf_dir).select(
         "conv_id", "turn_idx", F.unix_timestamp("ts").cast("long").alias("ts_epoch")
     )
@@ -5220,7 +5220,7 @@ def _kg_edge_occurrences(spark, sf_dir):
     without the final distinct — occurrences are fusion's votes)."""
     m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
     t = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
-    ab = F.broadcast(best_alias(alias_df_td(spark)))
+    ab = F.broadcast(best_alias(spark, ALIAS_TD))
     t = t.join(
         ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj"
     ).join(

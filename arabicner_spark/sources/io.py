@@ -25,9 +25,10 @@ from __future__ import annotations
 import hashlib
 import os
 from dataclasses import dataclass
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -98,10 +99,36 @@ class TableIO:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: Optional[StructType] = None) -> DataFrame:
+        """The table ``name``.  A parquet table read with the ``schema``
+        it was written with (data columns, then partition columns) needs
+        no schema-inference job, and its partition columns keep their
+        written types instead of types guessed from directory names;
+        Iceberg tables carry their own schema."""
         if self.mode == "iceberg":
             return self.spark.read.table(f"{self.root}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(name))
+
+    def data_files(self, name: str) -> List[Tuple[str, int]]:
+        """(path, rows) of each data file of ``name``, in path order, from
+        table metadata alone: Iceberg's ``files`` metadata table, or each
+        parquet file's footer."""
+        if self.mode == "iceberg":
+            rows = self.spark.sql(
+                f"SELECT file_path, record_count FROM {self.root}.{name}.files"
+            ).collect()
+            return sorted((r.file_path, int(r.record_count)) for r in rows)
+        import pyarrow.parquet as pq
+
+        out = []
+        for dirpath, dirs, files in os.walk(self._path(name)):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for f in files:
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    p = os.path.join(dirpath, f)
+                    out.append((p, pq.read_metadata(p).num_rows))
+        return sorted(out)
 
     def exists(self, name: str) -> bool:
         if self.mode == "iceberg":
@@ -147,6 +174,12 @@ class TableIO:
                 w = w.partitionedBy(*[F.col(c) for c in partition_by])
             w.createOrReplace()
             return
+        if partition_by:
+            # the files hold only the data columns; leading with the
+            # partition columns lets every table partitioned by one
+            # string column share the write's sort and partition-path
+            # generated code
+            df = df.select(*partition_by, *[c for c in df.columns if c not in partition_by])
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)

@@ -140,15 +140,7 @@ def make_transcript_rows(
 def transcripts_df(spark, n_convs: int = 40, seed: int = 42):
     from arabicner_spark import schemas
 
-    return spark.createDataFrame(
-        make_transcript_rows(n_convs=n_convs, seed=seed), schemas.TRANSCRIPTS
-    )
-
-
-def alias_df(spark):
-    from arabicner_spark import schemas
-
-    return local_table(spark, make_alias_rows(), schemas.ALIAS_DICT)
+    return local_table(spark, make_transcript_rows(n_convs=n_convs, seed=seed), schemas.TRANSCRIPTS)
 
 
 def gazetteer_dict() -> Dict[str, set]:

@@ -60,6 +60,70 @@ def test_iceberg_read_and_exists_identifiers():
     sp.catalog.tableExists.assert_called_once_with("kg.prod.mentions")
 
 
+def _file_rows(*pairs):
+    rows = []
+    for path, n in pairs:
+        r = MagicMock()
+        r.file_path, r.record_count = path, n
+        rows.append(r)
+    return rows
+
+
+def test_iceberg_data_files_from_files_metadata_table():
+    """Per-file row counts come from the table's ``files`` metadata
+    table, in path order; the parquet-mode schema never reaches the
+    Iceberg read."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    sp = MagicMock()
+    sp.sql.return_value.collect.return_value = _file_rows(("s3://w/b.parquet", 4), ("s3://w/a.parquet", 3))
+    io = TableIO(spark=sp, root="kg.prod", mode="iceberg")
+    assert io.data_files("edges") == [("s3://w/a.parquet", 3), ("s3://w/b.parquet", 4)]
+    (sql_arg,), _ = sp.sql.call_args
+    assert "FROM kg.prod.edges.files" in sql_arg
+    assert "record_count" in sql_arg
+    io.read("edges", StructType([StructField("src", StringType())]))
+    sp.read.table.assert_called_once_with("kg.prod.edges")
+    sp.read.schema.assert_not_called()
+
+
+def test_iceberg_stage_metrics_from_files_metadata_table(spark, tmp_path):
+    """StageRunner on the Iceberg facade: one ``_metrics`` row per data
+    file with the file's record_count, and the manifest's rows_out is
+    their sum; no Spark job builds the metrics."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from arabicner_spark.plans.lineage import StageRunner
+
+    sp = MagicMock()
+    sp.sql.return_value.collect.return_value = _file_rows(("w/p=x/1.parquet", 5), ("w/p=y/2.parquet", 2))
+    root = str(tmp_path / "kg")
+    df = MagicMock()
+    df.schema = StructType([StructField("p", StringType()), StructField("v", StringType())])
+    w = _fluent_writer()
+    df.writeTo.return_value = w
+    runner = StageRunner(TableIO(spark=sp, root=root, mode="iceberg"), "r1", "s1")
+
+    runner.run("edges", "edges", lambda: df, partition_by=["p"], count_as_triples=True)
+
+    df.writeTo.assert_called_once_with(f"{root}.edges")
+    w.createOrReplace.assert_called_once_with()
+    sp.read.table.assert_called_once_with(f"{root}.edges")
+    got = pq.read_table(os.path.join(root, "_metrics", "stage=edges")).to_pylist()
+    assert [(r["partition_id"], r["rows_out"], r["triples"], r["run_id"]) for r in got] == [
+        (0, 5, 5, "r1"),
+        (1, 2, 2, "r1"),
+    ]
+    manifest = json.load(open(os.path.join(root, "_manifests", "edges.json")))
+    assert manifest["rows_out"] == 7
+    # data columns, then partition columns
+    assert [f["name"] for f in manifest["schema"]["fields"]] == ["v", "p"]
+
+
 def test_iceberg_snapshot_id_queries_snapshots_table():
     """The resume rule's snapshot identity on the iceberg branch: the
     latest snapshot_id from the table's .snapshots metadata table."""

@@ -15,7 +15,7 @@ from arabicner_spark.sources import synth
 def linked(spark):
     df = synth.transcripts_df(spark, n_convs=20, seed=42)
     m = ner.extract_mentions(df, synth.gazetteer_dict())
-    smap = linking.link_surfaces(m, synth.alias_df(spark))
+    smap = linking.link_surfaces(m, linking.best_alias(spark, synth.make_alias_rows()))
     return m, smap.collect()
 
 
@@ -58,7 +58,7 @@ def test_lsh_reaches_edit_variant(spark):
     gaz = {"GPE": {("القاهر",)}}  # make NER detect the variant surface
     m = ner.extract_mentions(df, gaz)
     smap = {r.surface: (r.canonical_id, r.link_kind) for r in
-            linking.link_surfaces(m, synth.alias_df(spark)).collect()}
+            linking.link_surfaces(m, linking.best_alias(spark, synth.make_alias_rows())).collect()}
     canon, kind = smap["القاهر"]
     # القاهر is itself an alias row (edit variant planted by
     # make_alias_rows with weight 0.5) OR reachable via LSH; either way
@@ -73,7 +73,7 @@ def test_canonicalize_triples_rewrites_ids(spark, linked):
     df = synth.transcripts_df(spark, n_convs=20, seed=42)
     m = ner.extract_mentions(df, synth.gazetteer_dict())
     t = triples.extract_triples(m)
-    smap = linking.link_surfaces(m, synth.alias_df(spark))
+    smap = linking.link_surfaces(m, linking.best_alias(spark, synth.make_alias_rows()))
     edges = linking.canonicalize_triples(t, smap)
     assert edges.count() == t.count()
     # every src/dst resolved to an entity id or S: surface
@@ -148,7 +148,7 @@ def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark):
     m = ner.extract_mentions(df, {"PERS": {(p,) for p in phrases}})
     got = {
         r.surface: (r.canonical_id, r.link_kind)
-        for r in linking.link_surfaces(m, synth.alias_df(spark)).collect()
+        for r in linking.link_surfaces(m, linking.best_alias(spark, synth.make_alias_rows())).collect()
     }
     want = oracle.oracle_lsh_link(_mention_tuples(m), alias_rows)
     assert got == want
@@ -191,3 +191,70 @@ def test_salted_join_rejects_key_only_salt(spark):
         salted_join(
             fact.withColumn("v", F.lit(1)), dim, "k", salt_by=["k"]
         )
+
+
+def _window_best_alias(alias_df):
+    """The window-based best alias the pipeline used before resolving it
+    on the driver: the reference for ``linking.best_alias``."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("alias").orderBy(F.col("weight").desc(), F.col("entity_id").asc())
+    return alias_df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+
+
+def _duckdb_best_alias(rows):
+    """The registry's DuckDB ``alias_best`` SQL over ``rows``."""
+    import duckdb
+
+    from arabicner_spark.plans.testdata_queries import _SQL_ALIAS
+
+    body = _SQL_ALIAS.split("alias_best AS (", 1)[1].rsplit(")", 1)[0]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE alias_raw (alias VARCHAR, entity_id VARCHAR, entity_type VARCHAR, weight DOUBLE)")
+        con.executemany("INSERT INTO alias_raw VALUES (?, ?, ?, ?)", rows)
+        return set(con.execute(body).fetchall())
+    finally:
+        con.close()
+
+
+def test_best_alias_parity_with_window_and_duckdb(spark):
+    """Driver-side best alias == the window expression == the DuckDB
+    gate's alias_best, on weight ties, NaN weights (NaN sorts first
+    descending) and duplicate rows."""
+    import random
+
+    from arabicner_spark.sources.io import local_table
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        ("tie", "E2", "PERS", 1.0), ("tie", "E1", "ORG", 1.0), ("tie", "E3", "PERS", 0.5),
+        ("nan", "E1", "PERS", 5.0), ("nan", "E9", "ORG", nan), ("nan", "E8", "ORG", nan),
+        ("dup", "E4", "LOC", 0.2), ("dup", "E4", "LOC", 0.2), ("dup", "E5", "LOC", 0.1),
+        ("inf", "E6", "GPE", inf), ("inf", "E7", "GPE", nan), ("neg", "E1", "GPE", -inf),
+        ("solo", "E0", "OCC", 0.0),
+    ]
+    rng = random.Random(7)
+    for _ in range(300):
+        # the type follows the entity, so rows tied on (weight,
+        # entity_id) are duplicates and every engine keeps the same row
+        e = rng.randrange(6)
+        rows.append((f"a{rng.randrange(40)}", f"E{e}", ["PERS", "ORG"][e % 2], rng.choice([0.0, 0.5, 1.0, nan, -1.0])))
+    rows += rows[:50]  # exact duplicates
+
+    def triples_of(df):
+        return {(r.alias, r.entity_id, r.entity_type) for r in df.collect()}
+
+    got = triples_of(linking.best_alias(spark, rows))
+    assert got == triples_of(_window_best_alias(local_table(spark, rows, schemas.ALIAS_DICT)))
+    assert got == _duckdb_best_alias(rows)
+    by_alias = {a: e for a, e, _t in got}
+    assert len(by_alias) == len(got)
+    assert (by_alias["tie"], by_alias["nan"], by_alias["dup"], by_alias["inf"]) == ("E1", "E8", "E4", "E7")
+
+
+def test_best_alias_rejects_nul_in_entity_id(spark):
+    """Alias LSH nodes end the entity id with NUL; an id holding one
+    would corrupt the component key, so it is refused up front."""
+    with pytest.raises(ValueError):
+        linking.best_alias(spark, [("a", "E\x001", "PERS", 1.0)])

@@ -101,3 +101,50 @@ def test_input_change_invalidates_resume(spark, tmp_path, cfg):
     m = json.load(open(os.path.join(root, "_manifests", "mentions.json")))
     assert m["run_id"] == "r2"  # stage re-ran, not skipped
     assert tables["edges"].count() > 0
+
+
+def test_digit_string_partition_reads_back_as_string(spark, tmp_path):
+    """A stage partitioned by a string column whose values are all
+    digits reads back as a string, on the run and on the resume skip;
+    its ``_metrics`` rows are one per data file and add up to the
+    table."""
+    from pyspark.sql.types import StringType
+
+    from arabicner_spark.plans.lineage import StageRunner
+    from arabicner_spark.sources.io import TableIO, local_table
+
+    root = str(tmp_path / "kg")
+    rows = [("a", "2024"), ("b", "2024"), ("c", "0042")]
+    df = local_table(spark, rows, "k string, type string")
+    for run_id in ("r1", "r2"):  # r2 skips the stage and reads it back
+        runner = StageRunner(TableIO(spark, root), run_id, "s1")
+        out = runner.run("stage", "t", lambda: df, partition_by=["type"])
+        assert out.columns == ["k", "type"]
+        assert out.schema["type"].dataType == StringType()
+        assert sorted((r.k, r.type) for r in out.collect()) == sorted(rows)
+    metrics = spark.read.parquet(os.path.join(root, "_metrics"))
+    files = TableIO(spark, root).data_files("t")
+    assert len(files) >= 2  # one directory per type value
+    assert metrics.count() == len(files)
+    assert sorted(r.partition_id for r in metrics.collect()) == list(range(len(files)))
+    assert sum(r.rows_out for r in metrics.collect()) == len(rows)
+    assert {r.run_id for r in metrics.collect()} == {"r1"}
+
+
+# Spark jobs one pipeline run over this input may take: 21 since the
+# metrics, read-back, linking and triples plans were trimmed (47 before)
+PIPELINE_JOB_BUDGET = 21
+
+
+def test_pipeline_job_budget(spark, tmp_path, cfg):
+    """A later change cannot add Spark jobs to a pipeline run unnoticed."""
+    t = synth.transcripts_df(spark, n_convs=12, seed=42)
+    sc = spark.sparkContext
+    group = f"job-budget-{tmp_path.name}"
+    sc.setJobGroup(group, "pipeline job budget")
+    try:
+        run_pipeline(spark, t, cfg, str(tmp_path / "kg"), run_id="r1", input_snapshot="s1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= PIPELINE_JOB_BUDGET
