@@ -5,37 +5,45 @@ The alias dictionary is a driver list, so ``best_alias`` resolves it to
 one entity per alias on the driver (weight desc as Spark orders it,
 NaN first, then entity_id asc) and hands it to Spark as a local table.
 
-Dataflow, all on DISTINCT surfaces:
-  1. DIRECT: one left join of the distinct normalized surfaces against
-     the best-alias table, checkpointed once (steps 2 and 4 both read
-     it).  Hits are 'alias' links; misses go on.
-  2. LSH: one narrow array pass over the nodes (``S:`` unlinked
-     surfaces and ``A:`` aliases) computes each node's distinct
-     char-3gram array, its 16 minhashes and its 8 bands; one self-join
-     on (band, sig) gives the candidate pairs, which carry both gram
-     arrays, so exact Jaccard >= threshold is one
+``link_surfaces`` works on DISTINCT surfaces.  It first left-joins the
+distinct normalized surfaces against the best-alias table and
+checkpoints the result: hits are 'alias' links, misses go on to LSH.
+The LSH nodes are the ``S:`` misses and every ``A:`` alias; an alias
+node's id is "A:" + entity_id + NUL + alias, and "A:" sorts before
+"S:", so the min node id of a component already names its canonical
+id: "A:" + the min entity among its alias members when it has one,
+else "S:" + its min surface.
+
+GATE: one bounded ``limit(DRIVER_LIMIT + 1).toArrow()`` of the
+checkpointed table is both the size gate and the driver input.  The
+distinct surfaces are vocabulary-sized, so below the gate the whole map
+is computed on the driver (``_local_pairs``, ``_local_map``: the same
+grams, minhashes, bands, exact verify and union-find as the steps
+below, vectorized over nodes) and returned as a local table.  Past the
+gate the distributed steps run:
+  1. LSH: one narrow array pass over the nodes computes each node's
+     distinct char-3gram array, its 16 minhashes and its 8 bands; one
+     self-join on (band, sig) gives the candidate pairs, which carry
+     both gram arrays, so exact Jaccard >= threshold is one
      ``size(array_intersect(..))`` per pair.
-  3. CC: verified pairs -> connected components (driver union-find
-     below its edge limit), each keyed by its min node id.  An alias
-     node's id is "A:" + entity_id + NUL + alias, and "A:" sorts
-     before "S:", so a component's key already names its canonical
-     id: "A:" + the min entity among its alias members when it has
-     one, else "S:" + its min surface.  No aggregate is needed.
-  4. MAP: the step-1 table LEFT JOIN the step-3 surface links (a
+  2. CC: verified pairs -> connected components (driver union-find
+     below its edge limit), each keyed by its min node id.
+  3. LINKS: the components' ``S:`` members with their canonical ids.
+  4. MAP: the checkpointed table LEFT JOIN the step-3 links (a
      broadcast, vocabulary-sized): alias hit, else LSH link, else the
      surface itself ('self').
 
-At 10^12 turns the mention table is enormous but the distinct-surface
-table is vocabulary-sized, so every step after the first
-``.distinct()`` touches the small table and the cost is per-job
-overhead, not data.  The final surface->canonical map joins back to
-mentions/triples as a broadcast join.
+The final surface->canonical map joins back to mentions/triples as a
+broadcast join.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
-from typing import Iterable, Tuple
+from typing import Iterable, List, Sequence, Tuple
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,6 +51,7 @@ from pyspark.sql import functions as F
 from arabicner_spark import schemas
 from arabicner_spark.functions import hashing
 from arabicner_spark.functions.normalize import normalize_col
+from arabicner_spark.operators import components
 from arabicner_spark.operators.components import connected_components_adaptive
 from arabicner_spark.sources.io import local_table
 
@@ -52,6 +61,7 @@ DEFAULT_JACCARD = 0.5
 SEP = "\x00"
 
 AliasRow = Tuple[str, str, str, float]
+MAP_SCHEMA = "surface string, canonical_id string, link_kind string"
 
 
 def _best_key(row: AliasRow) -> tuple:
@@ -105,6 +115,20 @@ def link_surfaces(
         .join(alias_best.select(F.col("alias").alias("surface"), "entity_id"), "surface", "left")
         .localCheckpoint(eager=True)
     )
+    # gate: a distinct-surface table up to the driver limit is linked on
+    # the driver; the alias table is a local relation, so its collect
+    # runs no job
+    head = joined.limit(components.DRIVER_LIMIT + 1).toArrow()
+    if head.num_rows <= components.DRIVER_LIMIT:
+        rows = _local_map(
+            head.column("surface").to_pylist(),
+            head.column("entity_id").to_pylist(),
+            alias_best.select("alias", "entity_id").collect(),
+            jaccard_threshold,
+            n_hashes,
+            bands,
+        )
+        return local_table(mentions.sparkSession, rows, MAP_SCHEMA)
 
     # --- LSH blocking over unlinked surfaces + dictionary aliases
     nodes = joined.where(F.col("entity_id").isNull()).select(
@@ -153,6 +177,107 @@ def link_surfaces(
         .otherwise(F.lit("self"))
         .alias("link_kind"),
     )
+
+
+def _ragged(counts: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """(owner, rank) of every slot when owner k holds ``counts[k]``
+    consecutive slots."""
+    owner = np.repeat(np.arange(len(counts)), counts)
+    rank = np.arange(len(owner)) - np.repeat(np.cumsum(counts) - counts, counts)
+    return owner, rank
+
+
+def _local_pairs(
+    texts: Sequence[str], jaccard_threshold: float, n_hashes: int, bands: int
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """MinHash-LSH over the node texts ``texts`` (listed in node id
+    order) on the driver: (a, b, verified), the candidate pairs as node
+    indices with a < b and the mask of those whose exact gram Jaccard
+    reaches ``jaccard_threshold``.  The distributed steps' semantics:
+    distinct char-3grams by code point (a text shorter than 3 is its own
+    gram), md5 base + affine minhash family, ``bands`` bands of
+    ``n_hashes // bands`` rows, pairs sharing a bucket, verified at
+    ``inter > 0`` and ``inter >= threshold * union``."""
+    n = len(texts)
+    vocab: dict = {}
+    sizes = np.empty(n, dtype=np.int64)
+    codes: List[int] = []
+    for k, t in enumerate(texts):
+        grams = {t[i : i + 3] for i in range(max(len(t) - 2, 1))}
+        sizes[k] = len(grams)
+        codes.extend(vocab.setdefault(g, len(vocab)) for g in grams)
+    codes = np.asarray(codes, dtype=np.int64)
+    # one md5 per distinct gram; dicts keep insertion (= code) order
+    base = np.fromiter(
+        (int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in vocab),
+        dtype=np.int64,
+        count=len(vocab),
+    )[codes]
+    starts = np.cumsum(sizes) - sizes
+    # base < 2^32, A < 2^30, B < 2^32: A*h + B stays below 2^63
+    sig = np.stack(
+        [
+            np.minimum.reduceat((base * a + b) % hashing.MINHASH_P, starts)
+            for a, b in hashing.minhash_affine_consts(n_hashes)
+        ],
+        axis=1,
+    )
+    rows = n_hashes // bands
+    keys = []
+    for band in range(bands):
+        bucket = np.unique(sig[:, band * rows : (band + 1) * rows], axis=0, return_inverse=True)[1].ravel()
+        order = np.argsort(bucket, kind="stable")
+        sorted_bucket = bucket[order]
+        # each member pairs with the later members of its bucket
+        later = np.searchsorted(sorted_bucket, sorted_bucket, side="right") - np.arange(n) - 1
+        left, rank = _ragged(later)
+        x, y = order[left], order[left + rank + 1]
+        keys.append(np.minimum(x, y) * n + np.maximum(x, y))
+    pairs = np.unique(np.concatenate(keys))
+    a, b = pairs // n, pairs % n
+    # exact intersection: look each of a's grams up among b's
+    # (node, gram) keys, sorted and unique
+    width = len(vocab)
+    held = np.sort(np.repeat(np.arange(n), sizes) * width + codes)
+    pair, rank = _ragged(sizes[a])
+    probe = b[pair] * width + codes[starts[a][pair] + rank]
+    found = held[np.minimum(np.searchsorted(held, probe), len(held) - 1)] == probe
+    inter = np.bincount(pair[found], minlength=len(a))
+    verified = (inter > 0) & (inter >= jaccard_threshold * (sizes[a] + sizes[b] - inter))
+    return a, b, verified
+
+
+def _local_map(
+    surfaces: Sequence[str],
+    entity_ids: Sequence[str],
+    aliases: Sequence[Tuple[str, str]],
+    jaccard_threshold: float,
+    n_hashes: int,
+    bands: int,
+) -> List[Tuple[str, str, str]]:
+    """(surface, canonical_id, link_kind) rows of ``link_surfaces`` from
+    the distinct surfaces with their alias hits (``entity_ids``, None
+    for a miss) and the (alias, entity_id) rows of the alias table."""
+    # a NULL alias or entity id gives a NULL node id on the distributed
+    # side, which no component keeps
+    nodes = sorted(
+        [("S:" + s, s) for s, e in zip(surfaces, entity_ids) if e is None]
+        + [("A:" + e + SEP + a, a) for a, e in aliases if a is not None and e is not None]
+    )
+    links: dict = {}
+    if nodes:
+        a, b, verified = _local_pairs([t for _id, t in nodes], jaccard_threshold, n_hashes, bands)
+        comp = components.union_find(zip(a[verified].tolist(), b[verified].tolist()))
+        for node, root in comp.items():
+            node_id, key = nodes[node][0], nodes[root][0]
+            if node_id.startswith("S:"):
+                links[node_id[2:]] = (
+                    (key[2:].split(SEP, 1)[0], "lsh") if key.startswith("A:") else (key, "lsh_cluster")
+                )
+    return [
+        (s, e, "alias") if e is not None else (s, *links.get(s, ("S:" + s, "self")))
+        for s, e in zip(surfaces, entity_ids)
+    ]
 
 
 def canonicalize_triples(triples: DataFrame, surface_map: DataFrame) -> DataFrame:

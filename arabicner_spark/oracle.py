@@ -20,6 +20,7 @@ from typing import Dict, Iterable, List, Sequence, Set, Tuple
 
 from arabicner_spark.functions import tagcore
 from arabicner_spark.functions.normalize import normalize_py
+from arabicner_spark.operators.linking import _best_key
 from arabicner_spark.operators.triples import DEFAULT_PREDICATES, DEFAULT_WINDOW
 
 Mention = Tuple[str, int, int, str, int, int, str]  # conv, turn, level, type, s, e, text
@@ -70,26 +71,27 @@ def oracle_triples(
     return sorted(out)
 
 
+def _best_entities(alias_rows: Iterable[Tuple[str, str, str, float]]) -> Dict[str, str]:
+    """alias -> entity_id of its best row under ``linking._best_key``
+    (weight desc with NaN first, then entity_id asc)."""
+    by_alias: Dict[str, list] = {}
+    for row in alias_rows:
+        by_alias.setdefault(row[0], []).append(row)
+    return {a: min(rows, key=_best_key)[1] for a, rows in by_alias.items()}
+
+
 def oracle_link(
     mentions: Sequence[Mention],
     alias_rows: Sequence[Tuple[str, str, str, float]],
 ) -> Dict[str, str]:
-    """normalized surface -> entity_id, best (weight desc, entity_id asc).
-
-    Mirrors the Spark broadcast-join + row_number tie-break in
-    operators/linking.py.
-    """
-    best: Dict[str, Tuple[float, str]] = {}
-    alias_map: Dict[str, List[Tuple[float, str]]] = {}
-    for alias, eid, _typ, w in alias_rows:
-        alias_map.setdefault(alias, []).append((-w, eid))
-    for cands in alias_map.values():
-        cands.sort()
+    """normalized surface -> entity_id of its best alias row, as
+    ``linking.best_alias`` resolves it."""
+    best = _best_entities(alias_rows)
     out: Dict[str, str] = {}
     for m in mentions:
         surface = normalize_py(m[6])
-        if surface in alias_map:
-            out[surface] = alias_map[surface][0][1]
+        if surface in best:
+            out[surface] = best[surface]
     return out
 
 
@@ -115,10 +117,7 @@ def oracle_lsh_link(
 
     from arabicner_spark.functions.hashing import MINHASH_P, minhash_affine_consts
 
-    alias_map: Dict[str, List[Tuple[float, str]]] = {}
-    for alias, eid, _typ, w in alias_rows:
-        alias_map.setdefault(alias, []).append((-w, eid))
-    best = {a: min(c)[1] for a, c in alias_map.items()}
+    best = _best_entities(alias_rows)
     surfaces = {normalize_py(m[6]) for m in mentions} - {""}
     out: Dict[str, Tuple[str, str]] = {s: (best[s], "alias") for s in surfaces if s in best}
     unlinked = sorted(surfaces - set(best))

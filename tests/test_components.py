@@ -34,18 +34,17 @@ def test_cycle(spark):
     assert got == {("a", "a"), ("b", "a"), ("c", "a")}
 
 
-def test_adaptive_matches_distributed(spark):
-    from arabicner_spark.operators.components import connected_components_adaptive
+def test_adaptive_matches_distributed(spark, monkeypatch):
+    from arabicner_spark.operators import components
 
     edges = [("b", "a"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "p")]
     df = spark.createDataFrame(edges, "a string, b string")
     dist = {(r.node, r.component) for r in connected_components(df).collect()}
-    # driver path (threshold above edge count) and forced distributed
-    # path (threshold 0) must agree exactly
-    drv = {(r.node, r.component)
-           for r in connected_components_adaptive(df, driver_threshold=10**6).collect()}
-    forced = {(r.node, r.component)
-              for r in connected_components_adaptive(df, driver_threshold=0).collect()}
+    # driver path (limit above edge count) and forced distributed path
+    # (limit 0) must agree exactly
+    drv = {(r.node, r.component) for r in components.connected_components_adaptive(df).collect()}
+    monkeypatch.setattr(components, "DRIVER_LIMIT", 0)
+    forced = {(r.node, r.component) for r in components.connected_components_adaptive(df).collect()}
     assert drv == dist == forced
 
 
@@ -58,8 +57,8 @@ def test_adaptive_empty_edges(spark):
 
 def test_adaptive_gate_both_sides(spark, monkeypatch):
     """The gate counts CANONICAL edges (dups and self-loops dropped):
-    n == driver_threshold stays on the driver, n == driver_threshold + 1
-    goes distributed, and both sides give the same components from the
+    n == DRIVER_LIMIT stays on the driver, n == DRIVER_LIMIT + 1 goes
+    distributed, and both sides give the same components from the
     caller's edge columns."""
     from arabicner_spark.operators import components
 
@@ -72,8 +71,9 @@ def test_adaptive_gate_both_sides(spark, monkeypatch):
     df = spark.createDataFrame(edges, "u string, v string")
     want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
 
-    def comps(threshold):
-        got = components.connected_components_adaptive(df, "u", "v", driver_threshold=threshold)
+    def comps(limit):
+        monkeypatch.setattr(components, "DRIVER_LIMIT", limit)
+        got = components.connected_components_adaptive(df, "u", "v")
         return {(r.node, r.component) for r in got.collect()}
 
     assert comps(3) == want and calls == []

@@ -123,9 +123,10 @@ def _one_edit_variants(rng, word, letters):
     }
 
 
-def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark):
-    """Planted one-edit variants of dictionary aliases and of novel
-    names: every link kind appears, and the map equals the oracle."""
+@pytest.fixture(scope="module")
+def planted(spark):
+    """Mentions of planted one-edit variants of dictionary aliases and
+    of novel names."""
     import random
     from datetime import datetime, timezone
 
@@ -133,8 +134,7 @@ def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark):
 
     rng = random.Random(11)
     letters = "بتثجدرزسشصطعفقكلمن"
-    alias_rows = synth.make_alias_rows()
-    aliases = {a for a, *_ in alias_rows}
+    aliases = {a for a, *_ in synth.make_alias_rows()}
     novel = ["".join(rng.choice(letters) for _ in range(rng.randint(5, 8))) for _ in range(12)]
     phrases = set(novel)
     for base in sorted(aliases)[:20] + novel:
@@ -145,14 +145,131 @@ def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark):
     ts = datetime(2026, 1, 1, tzinfo=timezone.utc)
     rows = [(f"c{k // 4}", k % 4, "user", p, None, ts) for k, p in enumerate(sorted(phrases))]
     df = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
-    m = ner.extract_mentions(df, {"PERS": {(p,) for p in phrases}})
+    return ner.extract_mentions(df, {"PERS": {(p,) for p in phrases}}).localCheckpoint()
+
+
+def test_link_surfaces_matches_lsh_oracle_on_planted_variants(spark, planted):
+    """Planted one-edit variants of dictionary aliases and of novel
+    names: every link kind appears, and the map equals the oracle."""
+    alias_rows = synth.make_alias_rows()
     got = {
         r.surface: (r.canonical_id, r.link_kind)
-        for r in linking.link_surfaces(m, linking.best_alias(spark, synth.make_alias_rows())).collect()
+        for r in linking.link_surfaces(planted, linking.best_alias(spark, alias_rows)).collect()
     }
-    want = oracle.oracle_lsh_link(_mention_tuples(m), alias_rows)
+    want = oracle.oracle_lsh_link(_mention_tuples(planted), alias_rows)
     assert got == want
     assert {k for _c, k in want.values()} == {"alias", "lsh", "lsh_cluster", "self"}
+
+
+def _text_mentions(spark, texts):
+    """A frame of the one column ``link_surfaces`` reads, with the
+    oracle's mention tuples for it."""
+    from arabicner_spark.sources.io import local_table
+
+    return local_table(spark, [(t,) for t in texts], "text string"), [(None,) * 6 + (t,) for t in texts]
+
+
+def _assert_parity(spark, monkeypatch, m, tuples, alias_rows, **kw):
+    """``link_surfaces`` with the driver limit at n, the distinct
+    surface count (the driver map), equals it at n - 1 (the distributed
+    steps) and the serial oracle, with the same candidate and verified
+    pair counts: read where perfbench reads them on the distributed
+    side, from ``_local_pairs`` on the driver.  Returns the map and the
+    counts."""
+    from arabicner_spark.functions import hashing
+    from arabicner_spark.functions.normalize import normalize_col
+    from arabicner_spark.operators import components
+
+    n = m.select(normalize_col(F.col("text")).alias("s")).where(F.length("s") > 0).distinct().count()
+    alias_best = linking.best_alias(spark, alias_rows)
+    driver, cand, ver = [], [], []
+    real_local, real_cand = linking._local_pairs, hashing.lsh_candidate_pairs
+    real_cc = linking.connected_components_adaptive
+
+    def local_pairs(*a):
+        got = real_local(*a)
+        driver.append((len(got[0]), int(got[2].sum())))
+        return got
+
+    monkeypatch.setattr(linking, "_local_pairs", local_pairs)
+    monkeypatch.setattr(hashing, "lsh_candidate_pairs", lambda *a, **k: cand.append(real_cand(*a, **k)) or cand[-1])
+    monkeypatch.setattr(linking, "connected_components_adaptive", lambda e, *a, **k: ver.append(e) or real_cc(e, *a, **k))
+
+    def link(limit):
+        monkeypatch.setattr(components, "DRIVER_LIMIT", limit)
+        got = linking.link_surfaces(m, alias_best, **kw).collect()
+        return {r.surface: (r.canonical_id, r.link_kind) for r in got}
+
+    drv = link(n)
+    assert len(drv) == n and len(driver) == 1 and not cand, "n == limit takes the driver map"
+    dist = link(n - 1)
+    assert len(driver) == 1 and len(cand) == len(ver) == 1, "n == limit + 1 goes distributed"
+    assert drv == dist == oracle.oracle_lsh_link(tuples, alias_rows, **kw)
+    assert driver[0] == (cand[0].count(), ver[0].count())
+    return drv, driver[0]
+
+
+def test_driver_map_equals_distributed_on_synth(spark, monkeypatch, linked):
+    m, _rows = linked
+    smap, (n_cand, n_ver) = _assert_parity(spark, monkeypatch, m, _mention_tuples(m), synth.make_alias_rows())
+    assert "lsh" in {k for _c, k in smap.values()} and 0 < n_ver < n_cand
+
+
+def test_driver_map_equals_distributed_on_planted_variants(spark, monkeypatch, planted):
+    smap, (n_cand, n_ver) = _assert_parity(
+        spark, monkeypatch, planted, _mention_tuples(planted), synth.make_alias_rows()
+    )
+    assert {k for _c, k in smap.values()} == {"alias", "lsh", "lsh_cluster", "self"}
+    assert 0 < n_ver < n_cand
+
+
+def test_driver_map_equals_distributed_on_empty_mentions(spark, monkeypatch):
+    """No surfaces: an empty map on both sides, though the alias nodes
+    are still blocked and verified among themselves."""
+    m, tuples = _text_mentions(spark, [])
+    smap, (n_cand, _n_ver) = _assert_parity(spark, monkeypatch, m, tuples, synth.make_alias_rows())
+    assert smap == {} and n_cand > 0
+
+
+def test_driver_map_equals_distributed_when_every_surface_is_an_alias(spark, monkeypatch):
+    alias_rows = synth.make_alias_rows()
+    m, tuples = _text_mentions(spark, sorted({a for a, *_ in alias_rows})[:40])
+    smap, _counts = _assert_parity(spark, monkeypatch, m, tuples, alias_rows)
+    assert {k for _c, k in smap.values()} == {"alias"}
+
+
+def test_driver_map_equals_distributed_on_edge_texts(spark, monkeypatch):
+    """Texts shorter than 3 characters are their own gram; grams of
+    non-BMP characters count code points on both sides (Spark ``substr``
+    vs Python slicing); سندعل/سندعث share 2 of 4 grams, exactly the
+    0.5 threshold, and ققجتتفطن/ققجتتشمست 3 of 10 at 0.3."""
+    alias_rows = synth.make_alias_rows() + [("ab", "E_AB", "ORG", 1.0), ("ك😀بتن", "E_EMOJI", "ORG", 1.0)]
+    texts = ["a", "ab", "xy", "😀", "😀😀", "😀😀ب", "😀😀ت", "ك😀بت", "😀شمس", "😀شمسي", "سندعل", "سندعث",
+             "ققجتتفطن", "ققجتتشمست"]
+    m, tuples = _text_mentions(spark, texts)
+    smap, _counts = _assert_parity(spark, monkeypatch, m, tuples, alias_rows)
+    assert smap["ab"] == ("E_AB", "alias") and smap["a"] == ("S:a", "self")
+    assert smap["ك😀بت"] == ("E_EMOJI", "lsh")
+    # no shared gram by code point; sliced by UTF-16 unit, 😀😀ب and
+    # 😀😀ت would share two grams of four and link
+    assert smap["😀😀ب"] == ("S:😀😀ب", "self")
+    assert smap["😀شمسي"] == ("S:😀شمس", "lsh_cluster")
+    assert smap["سندعث"] == smap["سندعل"] == ("S:سندعث", "lsh_cluster")
+    smap, _counts = _assert_parity(spark, monkeypatch, m, tuples, alias_rows, jaccard_threshold=0.3)
+    assert smap["ققجتتشمست"] == smap["ققجتتفطن"] == ("S:ققجتتشمست", "lsh_cluster")
+
+
+def test_oracle_link_nan_weight_matches_best_alias(spark):
+    """A NaN weight sorts first descending, whatever the row order:
+    both oracles resolve an alias as ``best_alias`` does."""
+    nan = float("nan")
+    mentions = [(None,) * 6 + ("x",)]
+    for rows in ([("x", "E2", "PERS", 1.0), ("x", "E1", "PERS", nan)],
+                 [("x", "E1", "PERS", nan), ("x", "E2", "PERS", 1.0)]):
+        want = {r.alias: r.entity_id for r in linking.best_alias(spark, rows).collect()}
+        assert want == {"x": "E1"}
+        assert oracle.oracle_link(mentions, rows) == want
+        assert oracle.oracle_lsh_link(mentions, rows) == {"x": ("E1", "alias")}
 
 
 def test_custom_score_fn_injection(spark):

@@ -9,10 +9,15 @@ pass, then ``--passes`` warm passes.  Each pipeline stage
 per stage the tool prints the Spark jobs of the group
 (``statusTracker().getJobIdsForGroup``) and the codegen compilations
 it caused (the count delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``,
-which moves only on a codegen cache miss).  The last warm pass is the
-steady state: what it still compiles is what the cache cannot hold.
-Jobs and wall seconds are the last pass's; the warm-up's compilations
-count every distinct class the pass generates.
+which moves only on a codegen cache miss), plus its CPU seconds: the
+process tree's (this process, the JVM, the Python workers; the
+``perfbench.benv.tree_cpu_s`` delta) and the JVM's JIT compiler
+threads' (``C1/C2 CompilerThre`` tasks under ``/proc/<jvm>/task``).
+The JIT figure is a lower bound: HotSpot retires idle compiler
+threads, and a retired thread's CPU is no longer readable.  The last
+warm pass is the steady state: what it still compiles is what the
+cache cannot hold.  Jobs, seconds and CPU are the last pass's; the
+warm-up's compilations count every distinct class the pass generates.
 """
 
 from __future__ import annotations
@@ -23,31 +28,62 @@ import sys
 import time
 from typing import Dict, List, Tuple
 
+JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")  # comm is cut to 15 chars
+
 CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def jit_ticks(jvm_pid: int) -> Dict[int, int]:
+    """utime + stime in clock ticks of each live JIT compiler thread."""
+    out = {}
+    task_dir = f"/proc/{jvm_pid}/task"
+    for tid in os.listdir(task_dir):
+        try:
+            with open(f"{task_dir}/{tid}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue  # the thread exited
+        comm, rest = stat.split("(", 1)[1].rsplit(")", 1)
+        if comm in JIT_THREADS:
+            fields = rest.split()
+            out[int(tid)] = int(fields[11]) + int(fields[12])
+    return out
+
+
 class Profiler:
-    """Per (pass, stage): jobs, compilations, wall seconds."""
+    """Per (pass, stage): jobs, compilations, wall seconds, tree CPU
+    seconds, JIT CPU seconds."""
 
     def __init__(self, spark):
+        from perfbench import benv
+
         self.sc = spark.sparkContext
         self.codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self.jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
+        self.tree_cpu_s = benv.tree_cpu_s
         self.pass_id = ""
-        self.rows: Dict[str, List[Tuple[str, int, int, float]]] = {}
+        self.rows: Dict[str, List[Tuple[str, int, int, float, float, float]]] = {}
 
     def compilations(self) -> int:
         return int(self.codegen.METRIC_COMPILATION_TIME().getCount())
 
+    def jit_s(self, before: Dict[int, int]) -> float:
+        """JIT CPU since ``before`` of the compiler threads alive now."""
+        now = jit_ticks(self.jvm_pid)
+        return sum(t - before.get(tid, 0) for tid, t in now.items()) / os.sysconf("SC_CLK_TCK")
+
     def stage(self, name: str, fn):
         group = f"{self.pass_id}:{name}"
         self.sc.setJobGroup(group, group)
-        c0, t0 = self.compilations(), time.perf_counter()
+        c0, j0, cpu0, t0 = self.compilations(), jit_ticks(self.jvm_pid), self.tree_cpu_s(), time.perf_counter()
         try:
             return fn()
         finally:
-            wall = time.perf_counter() - t0
+            wall, cpu, jit = time.perf_counter() - t0, self.tree_cpu_s() - cpu0, self.jit_s(j0)
             jobs = len(self.sc.statusTracker().getJobIdsForGroup(group))
-            self.rows.setdefault(self.pass_id, []).append((name, jobs, self.compilations() - c0, wall))
+            self.rows.setdefault(self.pass_id, []).append(
+                (name, jobs, self.compilations() - c0, wall, cpu, jit)
+            )
             self.sc.setJobGroup(f"{self.pass_id}:-", "")
 
     def run_pass(self, wl, pass_id: str) -> List[str]:
@@ -100,16 +136,18 @@ def main() -> int:
         print(f"{args.workload} seed={args.seed} cores={benv.cores()}")
         passes = list(prof.rows)
         last = passes[-1]
+        secs = ("wall_s", "cpu_s", "jit_cpu_s>=")
         print(f"{'stage':<28}{'jobs':>6}" + "".join(f"{'compiled:' + p:>18}" for p in passes)
-              + f"{'wall_s':>9}")
-        totals = [0] * (len(passes) + 2)
-        for k, (name, jobs, _c, wall) in enumerate(prof.rows[last]):
+              + "".join(f"{h:>12}" for h in secs))
+        totals = [0] * (len(passes) + 1 + len(secs))
+        for k, (name, jobs, _c, *sec) in enumerate(prof.rows[last]):
             comps = [prof.rows[p][k][2] if k < len(prof.rows[p]) else 0 for p in passes]
-            cells = [jobs, *comps, wall]
-            totals = [t + c for t, c in zip(totals, cells)]
-            print(f"{name:<28}{jobs:>6}" + "".join(f"{c:>18}" for c in comps) + f"{wall:>9.2f}")
-        print(f"{'total':<28}{totals[0]:>6}" + "".join(f"{c:>18}" for c in totals[1:-1])
-              + f"{totals[-1]:>9.2f}")
+            totals = [t + c for t, c in zip(totals, [jobs, *comps, *sec])]
+            print(f"{name:<28}{jobs:>6}" + "".join(f"{c:>18}" for c in comps)
+                  + "".join(f"{x:>12.2f}" for x in sec))
+        n = len(passes) + 1
+        print(f"{'total':<28}{totals[0]:>6}" + "".join(f"{c:>18}" for c in totals[1:n])
+              + "".join(f"{x:>12.2f}" for x in totals[n:]))
         print("correct" if not problems else "INCORRECT:\n" + "\n".join(problems))
         return 0 if not problems else 1
     finally:
