@@ -15,8 +15,9 @@ xxhash64/crc32 are deliberately avoided in anything oracle-checked
 from __future__ import annotations
 
 import hashlib
-from typing import List
+from typing import List, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -294,6 +295,86 @@ def lsh_candidate_pairs(
     a = bands_df.select(F.col(id_col).alias("a"), *keys)
     b = bands_df.select(F.col(id_col).alias("b"), *keys)
     return a.join(b, keys).where(F.col("a") < F.col("b")).select("a", "b").distinct()
+
+
+# Driver twins of char_grams, minhash_columns, lsh_bands and
+# lsh_candidate_pairs: the same grams, hash family, bands and pairs
+# over texts held in a driver list, vectorized with numpy.
+
+
+def ragged_slots(counts: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """(owner, rank) of every slot when owner k holds ``counts[k]``
+    consecutive slots."""
+    owner = np.repeat(np.arange(len(counts)), counts)
+    rank = np.arange(len(owner)) - np.repeat(np.cumsum(counts) - counts, counts)
+    return owner, rank
+
+
+def local_char_grams(texts: Sequence[str], n: int = 3) -> Tuple[np.ndarray, np.ndarray, List[str]]:
+    """(codes, sizes, grams): text k's distinct char n-grams by code
+    point, as ``char_grams`` cuts them (a text shorter than n is its own
+    gram), are ``sizes[k]`` consecutive entries of ``codes``, each an
+    index into ``grams``."""
+    vocab: dict = {}
+    sizes = np.empty(len(texts), dtype=np.int64)
+    codes: List[int] = []
+    for k, t in enumerate(texts):
+        own = {t[i : i + n] for i in range(max(len(t) - (n - 1), 1))}
+        sizes[k] = len(own)
+        codes.extend(vocab.setdefault(g, len(vocab)) for g in own)
+    # dicts keep insertion order, which is code order
+    return np.asarray(codes, dtype=np.int64), sizes, list(vocab)
+
+
+def local_minhash(codes: np.ndarray, sizes: np.ndarray, grams: Sequence[str], n_hashes: int = 16) -> np.ndarray:
+    """(texts, n_hashes) minhashes of ``local_char_grams`` output, as
+    ``minhash_columns`` computes them; one md5 per distinct gram."""
+    base = np.fromiter(
+        (int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in grams),
+        dtype=np.int64,
+        count=len(grams),
+    )[codes]
+    starts = np.cumsum(sizes) - sizes
+    # base < 2^32, A < 2^30, B < 2^32: A*h + B stays below 2^63
+    return np.stack(
+        [np.minimum.reduceat((base * a + b) % MINHASH_P, starts) for a, b in minhash_affine_consts(n_hashes)],
+        axis=1,
+    )
+
+
+def local_lsh_buckets(sig: np.ndarray, bands: int = 8, rows_per_band: int = 2) -> np.ndarray:
+    """(texts, bands) bucket ids of minhash rows ``sig``: two texts share
+    band b's bucket iff they share its ``lsh_bands`` sig."""
+    return np.stack(
+        [
+            np.unique(sig[:, b * rows_per_band : (b + 1) * rows_per_band], axis=0, return_inverse=True)[1].ravel()
+            for b in range(bands)
+        ],
+        axis=1,
+    )
+
+
+def local_bucket_pairs(buckets: np.ndarray) -> int:
+    """Pairs ``local_candidate_pairs`` builds from ``buckets`` before it
+    drops the ones found in more than one band: its memory bound."""
+    return sum(int((c * (c - 1) // 2).sum()) for c in (np.bincount(b) for b in buckets.T))
+
+
+def local_candidate_pairs(buckets: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """(a, b): the distinct text index pairs, a < b, sharing a bucket of
+    ``local_lsh_buckets`` in some band, sorted."""
+    n = len(buckets)
+    keys = []
+    for bucket in buckets.T:
+        order = np.argsort(bucket, kind="stable")
+        sorted_bucket = bucket[order]
+        # each member pairs with the later members of its bucket
+        later = np.searchsorted(sorted_bucket, sorted_bucket, side="right") - np.arange(n) - 1
+        left, rank = ragged_slots(later)
+        x, y = order[left], order[left + rank + 1]
+        keys.append(np.minimum(x, y) * n + np.maximum(x, y))
+    pairs = np.unique(np.concatenate(keys))
+    return pairs // max(n, 1), pairs % max(n, 1)
 
 
 def rademacher_matrix(n_hyperplanes: int, dim: int):

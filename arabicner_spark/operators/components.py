@@ -69,12 +69,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return nbr_edges.union(self_edges)
 
 
-# rows a driver-side path takes: edges for the union-find gate below,
-# distinct surfaces for linking's driver map (linking.link_surfaces).
-# At 200k distinct surfaces (random 5-10 letter words over 18 letters,
-# 7.7M candidate pairs) link_surfaces took 17.6 s on the driver map
-# against 41.6 s through the distributed steps (medians of 3, 4-vCPU
-# VM, local[4]), so the driver side is the faster one at the limit.
+# canonical edges the driver union-find takes
 DRIVER_LIMIT = 200_000
 
 

@@ -14,13 +14,16 @@ node's id is "A:" + entity_id + NUL + alias, and "A:" sorts before
 id: "A:" + the min entity among its alias members when it has one,
 else "S:" + its min surface.
 
-GATE: one bounded ``limit(DRIVER_LIMIT + 1).toArrow()`` of the
+GATE: one bounded ``limit(DRIVER_SURFACES + 1).toArrow()`` of the
 checkpointed table is both the size gate and the driver input.  The
-distinct surfaces are vocabulary-sized, so below the gate the whole map
-is computed on the driver (``_local_pairs``, ``_local_map``: the same
-grams, minhashes, bands, exact verify and union-find as the steps
-below, vectorized over nodes) and returned as a local table.  Past the
-gate the distributed steps run:
+distinct surfaces are vocabulary-sized, so within the driver limits
+the whole map is computed on the driver (``_local_pairs``,
+``_local_map``: the driver twins of the grams, minhashes, bands and
+pairs in ``hashing``, then the same exact verify and union-find as the
+steps below) and returned as a local table.  The driver's memory grows
+with the candidate pairs, so their count, known from the bucket sizes
+before any pair is built, is the second limit.  Past either limit the
+distributed steps run:
   1. LSH: one narrow array pass over the nodes computes each node's
      distinct char-3gram array, its 16 minhashes and its 8 bands; one
      self-join on (band, sig) gives the candidate pairs, which carry
@@ -39,9 +42,8 @@ broadcast join.
 
 from __future__ import annotations
 
-import hashlib
 import math
-from typing import Iterable, List, Sequence, Tuple
+from typing import Iterable, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -59,6 +61,19 @@ DEFAULT_JACCARD = 0.5
 # ends the entity id in an alias node's id; sorts before every
 # character an entity id may hold (best_alias rejects ids holding it)
 SEP = "\x00"
+
+# the driver map's limits: up to DRIVER_SURFACES distinct surfaces
+# whose LSH buckets hold up to DRIVER_PAIRS candidate pairs (counted
+# per band, before the bands' shared pairs are dropped); past either,
+# the distributed steps.  Set where the driver map stops winning on
+# tools/link_gate.py's dense vocabulary (medians of 2, 4-vCPU VM,
+# local[4]): driver against distributed, wall s and process-tree peak
+# RSS MB, at 300k words (20.6M bucket pairs) 25.3 vs 61.1 s and 2645
+# vs 2854 MB, at 350k (27.9M) 32.6 vs 87.4 s but 2954 vs 2920 MB.
+# The driver stays faster; its memory, linear in the pairs, is what
+# crosses.
+DRIVER_SURFACES = 300_000
+DRIVER_PAIRS = 21_000_000
 
 AliasRow = Tuple[str, str, str, float]
 MAP_SCHEMA = "surface string, canonical_id string, link_kind string"
@@ -115,11 +130,11 @@ def link_surfaces(
         .join(alias_best.select(F.col("alias").alias("surface"), "entity_id"), "surface", "left")
         .localCheckpoint(eager=True)
     )
-    # gate: a distinct-surface table up to the driver limit is linked on
-    # the driver; the alias table is a local relation, so its collect
+    # gate: a distinct-surface table within the driver limits is linked
+    # on the driver; the alias table is a local relation, so its collect
     # runs no job
-    head = joined.limit(components.DRIVER_LIMIT + 1).toArrow()
-    if head.num_rows <= components.DRIVER_LIMIT:
+    head = joined.limit(DRIVER_SURFACES + 1).toArrow()
+    if head.num_rows <= DRIVER_SURFACES:
         rows = _local_map(
             head.column("surface").to_pylist(),
             head.column("entity_id").to_pylist(),
@@ -128,7 +143,8 @@ def link_surfaces(
             n_hashes,
             bands,
         )
-        return local_table(mentions.sparkSession, rows, MAP_SCHEMA)
+        if rows is not None:
+            return local_table(mentions.sparkSession, rows, MAP_SCHEMA)
 
     # --- LSH blocking over unlinked surfaces + dictionary aliases
     nodes = joined.where(F.col("entity_id").isNull()).select(
@@ -179,70 +195,41 @@ def link_surfaces(
     )
 
 
-def _ragged(counts: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
-    """(owner, rank) of every slot when owner k holds ``counts[k]``
-    consecutive slots."""
-    owner = np.repeat(np.arange(len(counts)), counts)
-    rank = np.arange(len(owner)) - np.repeat(np.cumsum(counts) - counts, counts)
-    return owner, rank
+# gram slots one verify chunk probes: each of its int64 temporaries
+# stays near 32 MB however many candidate pairs there are
+VERIFY_SLOTS = 1 << 22
 
 
 def _local_pairs(
     texts: Sequence[str], jaccard_threshold: float, n_hashes: int, bands: int
-) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
+) -> Optional[Tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """MinHash-LSH over the node texts ``texts`` (listed in node id
     order) on the driver: (a, b, verified), the candidate pairs as node
     indices with a < b and the mask of those whose exact gram Jaccard
-    reaches ``jaccard_threshold``.  The distributed steps' semantics:
-    distinct char-3grams by code point (a text shorter than 3 is its own
-    gram), md5 base + affine minhash family, ``bands`` bands of
-    ``n_hashes // bands`` rows, pairs sharing a bucket, verified at
-    ``inter > 0`` and ``inter >= threshold * union``."""
-    n = len(texts)
-    vocab: dict = {}
-    sizes = np.empty(n, dtype=np.int64)
-    codes: List[int] = []
-    for k, t in enumerate(texts):
-        grams = {t[i : i + 3] for i in range(max(len(t) - 2, 1))}
-        sizes[k] = len(grams)
-        codes.extend(vocab.setdefault(g, len(vocab)) for g in grams)
-    codes = np.asarray(codes, dtype=np.int64)
-    # one md5 per distinct gram; dicts keep insertion (= code) order
-    base = np.fromiter(
-        (int(hashlib.md5(g.encode("utf-8")).hexdigest()[:8], 16) for g in vocab),
-        dtype=np.int64,
-        count=len(vocab),
-    )[codes]
+    reaches ``jaccard_threshold``; None past ``DRIVER_PAIRS``.  Blocking
+    is the driver twin of the distributed step 1 (``hashing.local_*``);
+    verification keeps its ``inter > 0`` and ``inter >= threshold *
+    union``."""
+    codes, sizes, grams = hashing.local_char_grams(texts, 3)
+    sig = hashing.local_minhash(codes, sizes, grams, n_hashes)
+    buckets = hashing.local_lsh_buckets(sig, bands, n_hashes // bands)
+    if hashing.local_bucket_pairs(buckets) > DRIVER_PAIRS:
+        return None
+    a, b = hashing.local_candidate_pairs(buckets)
+    # exact intersection: look each of a's grams up among the sorted,
+    # unique (node, gram) keys, a chunk of pairs at a time
+    width = len(grams)
+    held = np.sort(np.repeat(np.arange(len(texts)), sizes) * width + codes)
     starts = np.cumsum(sizes) - sizes
-    # base < 2^32, A < 2^30, B < 2^32: A*h + B stays below 2^63
-    sig = np.stack(
-        [
-            np.minimum.reduceat((base * a + b) % hashing.MINHASH_P, starts)
-            for a, b in hashing.minhash_affine_consts(n_hashes)
-        ],
-        axis=1,
-    )
-    rows = n_hashes // bands
-    keys = []
-    for band in range(bands):
-        bucket = np.unique(sig[:, band * rows : (band + 1) * rows], axis=0, return_inverse=True)[1].ravel()
-        order = np.argsort(bucket, kind="stable")
-        sorted_bucket = bucket[order]
-        # each member pairs with the later members of its bucket
-        later = np.searchsorted(sorted_bucket, sorted_bucket, side="right") - np.arange(n) - 1
-        left, rank = _ragged(later)
-        x, y = order[left], order[left + rank + 1]
-        keys.append(np.minimum(x, y) * n + np.maximum(x, y))
-    pairs = np.unique(np.concatenate(keys))
-    a, b = pairs // n, pairs % n
-    # exact intersection: look each of a's grams up among b's
-    # (node, gram) keys, sorted and unique
-    width = len(vocab)
-    held = np.sort(np.repeat(np.arange(n), sizes) * width + codes)
-    pair, rank = _ragged(sizes[a])
-    probe = b[pair] * width + codes[starts[a][pair] + rank]
-    found = held[np.minimum(np.searchsorted(held, probe), len(held) - 1)] == probe
-    inter = np.bincount(pair[found], minlength=len(a))
+    ends = np.cumsum(sizes[a])
+    cuts = np.searchsorted(ends, np.arange(VERIFY_SLOTS, ends[-1] if len(ends) else 0, VERIFY_SLOTS))
+    inter = np.empty(len(a), dtype=np.int64)
+    for lo, hi in zip([0, *cuts], [*cuts, len(a)]):
+        ca, cb = a[lo:hi], b[lo:hi]
+        pair, rank = hashing.ragged_slots(sizes[ca])
+        probe = cb[pair] * width + codes[starts[ca][pair] + rank]
+        found = held[np.minimum(np.searchsorted(held, probe), len(held) - 1)] == probe
+        inter[lo:hi] = np.bincount(pair[found], minlength=hi - lo)
     verified = (inter > 0) & (inter >= jaccard_threshold * (sizes[a] + sizes[b] - inter))
     return a, b, verified
 
@@ -254,26 +241,26 @@ def _local_map(
     jaccard_threshold: float,
     n_hashes: int,
     bands: int,
-) -> List[Tuple[str, str, str]]:
+) -> Optional[List[Tuple[str, str, str]]]:
     """(surface, canonical_id, link_kind) rows of ``link_surfaces`` from
     the distinct surfaces with their alias hits (``entity_ids``, None
-    for a miss) and the (alias, entity_id) rows of the alias table."""
+    for a miss) and the (alias, entity_id) rows of the alias table;
+    None when the LSH nodes pass ``DRIVER_PAIRS``."""
     # a NULL alias or entity id gives a NULL node id on the distributed
     # side, which no component keeps
     nodes = sorted(
         [("S:" + s, s) for s, e in zip(surfaces, entity_ids) if e is None]
         + [("A:" + e + SEP + a, a) for a, e in aliases if a is not None and e is not None]
     )
+    pairs = _local_pairs([t for _id, t in nodes], jaccard_threshold, n_hashes, bands)
+    if pairs is None:
+        return None
+    a, b, verified = pairs
     links: dict = {}
-    if nodes:
-        a, b, verified = _local_pairs([t for _id, t in nodes], jaccard_threshold, n_hashes, bands)
-        comp = components.union_find(zip(a[verified].tolist(), b[verified].tolist()))
-        for node, root in comp.items():
-            node_id, key = nodes[node][0], nodes[root][0]
-            if node_id.startswith("S:"):
-                links[node_id[2:]] = (
-                    (key[2:].split(SEP, 1)[0], "lsh") if key.startswith("A:") else (key, "lsh_cluster")
-                )
+    for node, root in components.union_find(zip(a[verified].tolist(), b[verified].tolist())).items():
+        node_id, key = nodes[node][0], nodes[root][0]
+        if node_id.startswith("S:"):
+            links[node_id[2:]] = (key[2:].split(SEP, 1)[0], "lsh") if key.startswith("A:") else (key, "lsh_cluster")
     return [
         (s, e, "alias") if e is not None else (s, *links.get(s, ("S:" + s, "self")))
         for s, e in zip(surfaces, entity_ids)

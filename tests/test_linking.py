@@ -170,47 +170,57 @@ def _text_mentions(spark, texts):
 
 
 def _assert_parity(spark, monkeypatch, m, tuples, alias_rows, **kw):
-    """``link_surfaces`` with the driver limit at n, the distinct
-    surface count (the driver map), equals it at n - 1 (the distributed
-    steps) and the serial oracle, with the same candidate and verified
-    pair counts: read where perfbench reads them on the distributed
-    side, from ``_local_pairs`` on the driver.  Returns the map and the
-    counts."""
+    """``link_surfaces`` at the driver limits (``DRIVER_SURFACES`` = n,
+    the distinct surface count, ``DRIVER_PAIRS`` = the pairs its LSH
+    buckets hold) takes the driver map, and equals itself one past
+    either limit (the distributed steps) and the serial oracle, with
+    the same candidate and verified pair counts: read where perfbench
+    reads them on the distributed side, from ``_local_pairs`` on the
+    driver.  Returns the map and the counts."""
     from arabicner_spark.functions import hashing
     from arabicner_spark.functions.normalize import normalize_col
-    from arabicner_spark.operators import components
 
     n = m.select(normalize_col(F.col("text")).alias("s")).where(F.length("s") > 0).distinct().count()
     alias_best = linking.best_alias(spark, alias_rows)
-    driver, cand, ver = [], [], []
-    real_local, real_cand = linking._local_pairs, hashing.lsh_candidate_pairs
-    real_cc = linking.connected_components_adaptive
+    driver, bucket_pairs, cand, ver = [], [], [], []
+    real_local, real_bucket_pairs = linking._local_pairs, hashing.local_bucket_pairs
+    real_cand, real_cc = hashing.lsh_candidate_pairs, linking.connected_components_adaptive
 
     def local_pairs(*a):
         got = real_local(*a)
-        driver.append((len(got[0]), int(got[2].sum())))
+        if got is not None:
+            driver.append((len(got[0]), int(got[2].sum())))
         return got
 
     monkeypatch.setattr(linking, "_local_pairs", local_pairs)
+    monkeypatch.setattr(hashing, "local_bucket_pairs", lambda b: bucket_pairs.append(real_bucket_pairs(b)) or bucket_pairs[-1])
     monkeypatch.setattr(hashing, "lsh_candidate_pairs", lambda *a, **k: cand.append(real_cand(*a, **k)) or cand[-1])
     monkeypatch.setattr(linking, "connected_components_adaptive", lambda e, *a, **k: ver.append(e) or real_cc(e, *a, **k))
 
-    def link(limit):
-        monkeypatch.setattr(components, "DRIVER_LIMIT", limit)
+    def link(surfaces, pairs=10**12):
+        monkeypatch.setattr(linking, "DRIVER_SURFACES", surfaces)
+        monkeypatch.setattr(linking, "DRIVER_PAIRS", pairs)
         got = linking.link_surfaces(m, alias_best, **kw).collect()
         return {r.surface: (r.canonical_id, r.link_kind) for r in got}
 
-    drv = link(n)
-    assert len(drv) == n and len(driver) == 1 and not cand, "n == limit takes the driver map"
+    link(n)
+    drv = link(n, bucket_pairs[0])
+    assert len(drv) == n and len(driver) == 2 and not cand, "at both limits: the driver map"
     dist = link(n - 1)
-    assert len(driver) == 1 and len(cand) == len(ver) == 1, "n == limit + 1 goes distributed"
+    assert len(driver) == 2 and len(cand) == len(ver) == 1, "n == DRIVER_SURFACES + 1 goes distributed"
     assert drv == dist == oracle.oracle_lsh_link(tuples, alias_rows, **kw)
-    assert driver[0] == (cand[0].count(), ver[0].count())
+    assert driver[0] == driver[1] == (cand[0].count(), ver[0].count())
+    if bucket_pairs[0]:
+        dist = link(n, bucket_pairs[0] - 1)
+        assert len(driver) == 2 and len(cand) == 2, "one pair past DRIVER_PAIRS goes distributed"
+        assert dist == drv
     return drv, driver[0]
 
 
 def test_driver_map_equals_distributed_on_synth(spark, monkeypatch, linked):
     m, _rows = linked
+    # the driver verifies its pairs in many chunks
+    monkeypatch.setattr(linking, "VERIFY_SLOTS", 64)
     smap, (n_cand, n_ver) = _assert_parity(spark, monkeypatch, m, _mention_tuples(m), synth.make_alias_rows())
     assert "lsh" in {k for _c, k in smap.values()} and 0 < n_ver < n_cand
 
