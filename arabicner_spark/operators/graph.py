@@ -1,30 +1,35 @@
-"""Graph analytics over the materialized KG — PageRank, triangles,
-neighborhood similarity, bounded BFS.
+"""Graph analytics over the materialized KG.
 
 The reference has no graph algorithms (it is an NER trainer); the
-north-star KG (nodes/edges tables) naturally wants them, and PageRank
-is the canonical representative of the ITERATIVE dataflow class the
-connected-components operator (operators/components.py) also belongs
-to: a driver loop of joins/aggregations with ``localCheckpoint`` per
-round to cut lineage (SURVEY.md section 4: iterative fixpoints are
-orchestration, not planning — no custom Catalyst rule needed).
+north-star KG (nodes/edges tables) naturally wants them.  Two families:
 
-``triangle_count`` / ``neighbor_jaccard`` / ``bfs_depths`` are the
-non-iterative (or depth-bounded) join-dataflow complements: triangle
-enumeration via degree-ordered edge orientation (the standard trick
-that bounds wedge fan-out by arboricity instead of max degree — a hub
-of degree D contributes O(D) oriented out-edges only if D is on the
-low side of its neighbors, so the wedge self-join never explodes on
-skewed degree distributions), Jaccard link prediction via one
-adjacency self-join + one aggregate, and BFS as a frontier loop with
-anti-join dedup.
+* Iterative operators, the ITERATIVE dataflow class the
+  connected-components operator (operators/components.py) also
+  belongs to: a driver loop of joins/aggregations with
+  ``localCheckpoint`` per round to cut lineage (SURVEY.md section 4:
+  iterative fixpoints are orchestration, not planning — no custom
+  Catalyst rule needed).  ``pagerank`` (float), ``pagerank_exact`` and
+  ``pagerank_personalized_exact`` (fixed-point integer),
+  ``temporal_reach``, ``label_propagation``, ``kcore`` /
+  ``kcore_fixpoint`` and the BFS frontier loop ``bfs_depths``.
+* Join dataflows: ``triangle_count`` via degree-ordered edge
+  orientation (the standard trick that bounds wedge fan-out by
+  arboricity instead of max degree, so the wedge self-join never
+  explodes on skewed degree distributions) and ``neighbor_jaccard``
+  link prediction via one adjacency self-join + one aggregate.
 
-Scale shape per iteration: one join (ranks x edges, both keyed on the
-node id — at scale both sides shuffle on src once and AQE handles the
-rest) + one groupBy(dst) aggregation.  State is one (node, rank) row
-per node — never collected to the driver.
+Local replay.  The fixed-point PageRanks, temporal reach, LPA and the
+k-core peel are pure integer functions of the edge set — integer sums,
+min-folds and vote counts are order-independent — so a vectorized
+numpy simulation of the same rounds returns the identical table.  When
+every input fits under ``KCORE_LOCAL_EDGE_LIMIT`` rows, :func:`_replay`
+(the one gate) collects it to the driver once and replays it there,
+trading O(rounds) scheduler round-trips for one Arrow collect.  Past
+the limit, or on NULLs or keys that are not all integers or all
+strings, the distributed loop runs and its state stays in Spark (one
+row per node).  Each operator pins local == distributed in the tests.
 
-Semantics (classic power iteration):
+PageRank semantics (classic power iteration):
   pr_0(v)   = 1/N
   pr_t+1(v) = (1-d)/N + d * sum_{(u,v) in E} pr_t(u) / out_degree(u)
 over the DISTINCT edge set; dangling mass (nodes with no out-edges) is
@@ -33,13 +38,81 @@ dropped, matching the unrolled SQL oracle exactly.
 
 from __future__ import annotations
 
-import os
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from arabicner_spark.sources.io import local_table
+
+# Rows per input up to which the iterative operators replay on the
+# driver: 8M edges ~ 128 MB of Arrow, the class of components.py's
+# driver union-find.
+KCORE_LOCAL_EDGE_LIMIT = 8_000_000
+
+PR_SCALE = 10**9  # fixed-point unit of the exact PageRanks: 1 rank = 1e9
+
+
+def _replay(edges: DataFrame, src: str, name: str, dtype, sim, *frames: DataFrame):
+    """The one local-replay gate: -> (node, ``name``) rows of
+    ``sim(*columns)`` over the collected ``frames``, typed like the
+    distributed loop's output (node keeps ``edges[src]``'s type), or
+    None: run the distributed loop.
+
+    One bounded ``limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()`` per
+    frame is both the size gate and the driver input.  The loop runs
+    when a frame passes the limit, holds a NULL (SQL null-join
+    semantics), or when the key columns (all but a time column ``t``)
+    are not all Arrow integers or all Arrow strings — the types
+    ``np.unique`` orders like Spark.  ``sim`` returns None to refuse
+    an input by its own operator's rule."""
+    cols, kinds = [], set()
+    for df in frames:
+        tbl = df.limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()
+        kinds |= {
+            "int" if pa.types.is_integer(f.type)
+            else "str" if pa.types.is_string(f.type) or pa.types.is_large_string(f.type)
+            else None
+            for f in tbl.schema
+            if f.name != "t"
+        }
+        if (
+            tbl.num_rows > KCORE_LOCAL_EDGE_LIMIT
+            or kinds not in ({"int"}, {"str"})
+            or any(c.null_count for c in tbl.columns)
+        ):
+            return None
+        cols.extend(c.to_numpy() for c in tbl.columns)
+    rows = sim(*cols)
+    if rows is None:
+        return None
+    schema = StructType(
+        [StructField("node", edges.schema[src].dataType), StructField(name, dtype)]
+    )
+    return local_table(edges.sparkSession, rows, schema)
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct endpoints of an (src, dst) edge set as ``node``,
+    materialized once: the PageRank loops read it every round."""
+    return (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """Both directions of an undirected (a, b) edge set as (node,
+    peer), materialized once: every caller reads it more than once, and
+    DataFrame DAGs have no common-subexpression reuse."""
+    return (
+        und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
+        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
+        .localCheckpoint(eager=True)
+    )
 
 
 def pagerank(
@@ -56,12 +129,7 @@ def pagerank(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)  # reused every iteration
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _node_set(e)
     n = nodes.count()
     out_deg = e.groupBy("src").agg(F.count("*").alias("out"))
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
@@ -87,9 +155,6 @@ def pagerank(
     return ranks
 
 
-PR_SCALE = 10**9  # fixed-point unit for pagerank_exact: 1 rank = 1e9
-
-
 def pagerank_exact(
     edges: DataFrame,
     iterations: int = 5,
@@ -112,51 +177,10 @@ def pagerank_exact(
     ``pagerank`` above.
 
     ``damping_pct`` is the damping factor in percent (85 = 0.85) so the
-    damping multiply stays integral: inflow*85 div 100.
+    damping multiply stays integral: inflow*85 div 100.  This is
+    :func:`pagerank_personalized_exact` with every node a seed.
     """
-    _check_damping_pct(damping_pct)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out"))
-    ranks = nodes.select("node", F.lit(PR_SCALE // n).cast("long").alias("rank_i"))
-    base = (PR_SCALE * (100 - damping_pct)) // (100 * n)
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_i div out").cast("long").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").cast("long").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"(coalesce(inflow, 0) * {damping_pct}) div 100")
-                ).cast("long").alias("rank_i"),
-            )
-            .localCheckpoint(eager=True)  # cut lineage per round
-        )
-    return ranks
-
-
-def _check_damping_pct(damping_pct: int) -> None:
-    """Outside [0, 100] ranks go negative, and Python's floor division
-    and SQL ``div`` (truncation) then disagree."""
-    if not 0 <= damping_pct <= 100:
-        raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
+    return _pagerank_fixed(edges, None, iterations, damping_pct, src, dst)
 
 
 def pagerank_personalized_exact(
@@ -176,65 +200,53 @@ def pagerank_personalized_exact(
     mass and the per-step (1-d) teleport both split integrally over
     the seed count.  Same per-round shape: one join + one
     map-side-combinable sum + localCheckpoint."""
-    _check_damping_pct(damping_pct)
+    return _pagerank_fixed(edges, seeds, iterations, damping_pct, src, dst)
+
+
+def _pagerank_fixed(edges, seeds, iterations, damping_pct, src, dst) -> DataFrame:
+    """The fixed-point loop of both exact PageRanks over a (node,
+    base_i, init_i) table; ``seeds`` None makes every node a seed."""
+    if not 0 <= damping_pct <= 100:
+        # ranks would go negative, where Python's floor division and
+        # SQL ``div`` (truncation) disagree
+        raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     e = e.localCheckpoint(eager=True)
-    # r7: adaptive local branch (the kcore/LPA pattern).  The whole
-    # loop is FIXED-POINT INTEGER algebra — div/floor over BIGINTs,
-    # order-independent sums — so a vectorized in-memory simulation of
-    # the same ``iterations`` rounds returns the bit-identical rank
-    # table without 5x (two joins + agg + localCheckpoint) scheduler
-    # rounds; on the dimension-sized KG (13 entities) the round
-    # latency IS the wall.  Node ids are only ever KEYS here (rank_i
-    # carries the numbers), so string ids — the KG's entity ids —
-    # take the local branch too (object arrays); mixed-kind
-    # src/dst/seed columns take the distributed loop.
-    cols = _local_arrays(e, seeds.select("node").distinct())
-    if cols is not None:
-        s_arr, d_arr, seed_arr = cols
-        if (
-            s_arr.dtype.kind in "iuOU"
-            and d_arr.dtype.kind == s_arr.dtype.kind
-            and (seed_arr.dtype.kind == s_arr.dtype.kind or seed_arr.size == 0)
-        ):
-            rows = _ppr_local_sim(s_arr, d_arr, seed_arr, iterations, damping_pct)
-            return _local_result(edges, src, rows, "rank_i", LongType())
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    frames = [e] if seeds is None else [e, seeds.select("node").distinct()]
+    local = _replay(
+        edges, src, "rank_i", LongType(),
+        lambda s, d, sd=None: _ppr_local_sim(
+            s, d, np.concatenate([s, d]) if sd is None else sd, iterations, damping_pct
+        ),
+        *frames,
     )
-    # seeds absent from the edge set would silently leak their share
-    # of teleport/initial mass (mass splits over the seed COUNT but
-    # only in-graph seeds receive it) — intersect first (ADVICE r6)
-    sd = (
-        seeds.select("node")
-        .distinct()
-        .join(nodes, "node", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    n_seeds = sd.count()
+    if local is not None:
+        return local
+    nodes = _node_set(e)
+    if seeds is None:
+        n_seeds, marked = nodes.count(), nodes.withColumn("seed", F.lit(True))
+    else:
+        # seeds absent from the edge set would silently leak their share
+        # of teleport/initial mass (mass splits over the seed COUNT but
+        # only in-graph seeds receive it) — intersect first
+        sd = frames[1].join(nodes, "node", "left_semi").localCheckpoint(eager=True)
+        n_seeds = sd.count()
+        marked = nodes.join(sd.withColumn("seed", F.lit(True)), "node", "left")
     if n_seeds < 1:
-        raise ValueError(
-            "personalized pagerank needs a non-empty seed set intersecting the graph"
-        )
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out"))
-    base_s = (PR_SCALE * (100 - damping_pct)) // (100 * n_seeds)
-    # fold the per-node teleport base into the (checkpointed) node
-    # table ONCE — the loop then pays the same single join+agg per
-    # round as the uniform variant
-    nodes_b = nodes.join(sd.withColumn("is_seed", F.lit(1)), "node", "left").select(
+        raise ValueError("pagerank needs a seed set intersecting a non-empty graph")
+    nodes_b = marked.select(
         "node",
-        F.when(F.col("is_seed") == 1, F.lit(base_s))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("base_i"),
-        F.when(F.col("is_seed") == 1, F.lit(PR_SCALE // n_seeds))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("init_i"),
-    ).localCheckpoint(eager=True)
+        *(
+            F.when(F.col("seed"), F.lit(v)).otherwise(F.lit(0)).cast("long").alias(c)
+            for c, v in (
+                ("base_i", (PR_SCALE * (100 - damping_pct)) // (100 * n_seeds)),
+                ("init_i", PR_SCALE // n_seeds),
+            )
+        ),
+    )
+    if seeds is not None:
+        nodes_b = nodes_b.localCheckpoint(eager=True)  # joined every round
+    out_deg = e.groupBy("src").agg(F.count("*").alias("out"))
     ranks = nodes_b.select("node", F.col("init_i").alias("rank_i"))
     for _ in range(iterations):
         contribs = (
@@ -256,61 +268,20 @@ def pagerank_personalized_exact(
                     + F.expr(f"(coalesce(inflow, 0) * {damping_pct}) div 100")
                 ).cast("long").alias("rank_i"),
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)  # cut lineage per round
         )
     return ranks
 
 
-def _local_arrays(*frames: DataFrame):
-    """Numpy columns of small frames for a local replay, or None (take
-    the distributed loop).
-
-    One bounded ``limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()`` per
-    frame is both the size gate and the driver input.  A frame past
-    the limit, or holding a NULL (SQL null-join semantics; the
-    object-array replay would raise on None), gives None."""
-    out = []
-    for df in frames:
-        tbl = df.limit(KCORE_LOCAL_EDGE_LIMIT + 1).toArrow()
-        if tbl.num_rows > KCORE_LOCAL_EDGE_LIMIT or any(c.null_count for c in tbl.columns):
-            return None
-        out.extend(_np_col(c) for c in tbl.columns)
-    return out
-
-
-def _np_col(col):
-    """Arrow column -> numpy array; non-numeric columns land as object
-    arrays so string node ids can be np.unique-factorized like integer
-    ones."""
-    import numpy as np
-
-    try:
-        return col.to_numpy(zero_copy_only=False)
-    except Exception:
-        return np.asarray(col.to_pylist(), dtype=object)
-
-
-def _local_result(edges: DataFrame, src: str, rows: list, name: str, dtype) -> DataFrame:
-    """(node, ``name``) rows of a local replay, typed like the
-    distributed loop's output: node keeps the edge column's type."""
-    schema = StructType(
-        [StructField("node", edges.schema[src].dataType), StructField(name, dtype)]
-    )
-    return local_table(edges.sparkSession, rows, schema)
-
-
 def _ppr_local_sim(s_arr, d_arr, seed_arr, iterations: int, damping_pct: int) -> list:
-    """In-memory replay of pagerank_personalized_exact's fixed-point
-    loop over a collected DISTINCT edge list: same integer init/base
-    per seed, same per-edge ``rank_i div out``, same
-    ``(inflow * d) div 100`` — every quantity an int64 and every
-    division a floor over non-negative values, so the result is
-    bit-identical to the distributed loop by construction (integer
-    sums are order-independent).  Returns [(node, rank_i)] for every
-    node of the edge set; raises like the distributed path when no
-    seed intersects the graph."""
-    import numpy as np
-
+    """In-memory replay of the fixed-point PageRank loop over a
+    collected DISTINCT edge list: same integer init/base per seed, same
+    per-edge ``rank_i div out``, same ``(inflow * d) div 100`` — every
+    quantity an int64 and every division a floor over non-negative
+    values, so the result is bit-identical to the distributed loop
+    (integer sums are order-independent).  Returns [(node, rank_i)]
+    for every node of the edge set; raises like the distributed path
+    when no seed intersects the graph."""
     nodes, inv = np.unique(np.concatenate([s_arr, d_arr]), return_inverse=True)
     m = len(s_arr)
     si, di = inv[:m], inv[m:]
@@ -322,21 +293,17 @@ def _ppr_local_sim(s_arr, d_arr, seed_arr, iterations: int, damping_pct: int) ->
     seed_idx = pos[nodes[pos] == seed_vals[in_range]]
     n_seeds = int(seed_idx.size)
     if n_seeds < 1:
-        raise ValueError(
-            "personalized pagerank needs a non-empty seed set intersecting the graph"
-        )
-    base_s = (PR_SCALE * (100 - damping_pct)) // (100 * n_seeds)
+        raise ValueError("pagerank needs a seed set intersecting a non-empty graph")
     base_i = np.zeros(n, dtype=np.int64)
-    base_i[seed_idx] = base_s
+    base_i[seed_idx] = (PR_SCALE * (100 - damping_pct)) // (100 * n_seeds)
     out = np.bincount(si, minlength=n).astype(np.int64)
     rank = np.zeros(n, dtype=np.int64)
     rank[seed_idx] = PR_SCALE // n_seeds
-    dp = int(damping_pct)
     for _ in range(iterations):
         c = rank[si] // out[si]  # out[si] >= 1: si indexes edge sources
         inflow = np.zeros(n, dtype=np.int64)
         np.add.at(inflow, di, c)
-        rank = base_i + (inflow * dp) // 100
+        rank = base_i + (inflow * int(damping_pct)) // 100
     return list(zip(nodes.tolist(), rank.tolist()))
 
 
@@ -364,29 +331,15 @@ def temporal_reach(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(ts).alias("t")
     ).distinct().localCheckpoint(eager=True)
-    # r7: adaptive local branch (the kcore/LPA pattern).  Each round
-    # is a pure min-fold over BIGINTs — deterministic and
-    # order-independent — so the in-memory frontier simulation of the
-    # same ``rounds`` returns the identical arrival table without
-    # 3x (join + min agg + localCheckpoint) scheduler rounds.
-    cols = _local_arrays(e, seeds.select("node").distinct())
-    if cols is not None:
-        import numpy as np
-
-        s_arr, d_arr, t_arr, seed_arr = cols
-        if (
-            s_arr.dtype.kind in "iuOU"
-            and d_arr.dtype.kind == s_arr.dtype.kind
-            and t_arr.dtype.kind in "iu"
-            # int64.max is the local replay's "unreached" sentinel
-            and not (t_arr == np.iinfo(np.int64).max).any()
-            and (seed_arr.dtype.kind == s_arr.dtype.kind or seed_arr.size == 0)
-        ):
-            rows = _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds)
-            return _local_result(edges, src, rows, "first_reach", LongType())
-    arr = seeds.select("node").distinct().select(
-        "node", F.lit(0).cast("long").alias("first_reach")
+    sd = seeds.select("node").distinct()
+    local = _replay(
+        edges, src, "first_reach", LongType(),
+        lambda s, d, t, seed: _treach_local_sim(s, d, t, seed, rounds),
+        e, sd,
     )
+    if local is not None:
+        return local
+    arr = sd.select("node", F.lit(0).cast("long").alias("first_reach"))
     for _ in range(rounds):
         step = (
             arr.join(e, arr["node"] == e["src"])
@@ -402,7 +355,7 @@ def temporal_reach(
     return arr
 
 
-def _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds: int) -> list:
+def _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds: int) -> list | None:
     """In-memory replay of temporal_reach's frontier loop over a
     collected DISTINCT (src, dst, t) edge list: per round every edge
     whose source is reached and whose t >= the source's arrival
@@ -410,18 +363,19 @@ def _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds: int) -> list:
     distributed groupBy, so results are identical (min over int64 is
     order-independent).  Seeds start at 0 and stay in the output even
     when absent from the edge set (the distributed union semantics).
-    Returns [(node, first_reach)] for every reached node."""
-    import numpy as np
-
+    Returns [(node, first_reach)] for every reached node, or None for
+    non-integer times or a time equal to int64.max, the replay's
+    "unreached" sentinel."""
+    inf = np.iinfo(np.int64).max
+    if t_arr.dtype.kind not in "iu" or (t_arr == inf).any():
+        return None
     seed_vals = np.unique(seed_arr)
     nodes, inv = np.unique(
         np.concatenate([s_arr, d_arr, seed_vals]), return_inverse=True
     )
     m = len(s_arr)
     si, di, sdi = inv[:m], inv[m : 2 * m], inv[2 * m :]
-    n = len(nodes)
-    inf = np.iinfo(np.int64).max
-    fr = np.full(n, inf, dtype=np.int64)
+    fr = np.full(len(nodes), inf, dtype=np.int64)
     fr[sdi] = 0
     t64 = t_arr.astype(np.int64)
     for _ in range(rounds):
@@ -429,9 +383,7 @@ def _treach_local_sim(s_arr, d_arr, t_arr, seed_arr, rounds: int) -> list:
         valid = (reach != inf) & (t64 >= reach)
         if not valid.any():
             break  # empty frontier step: further rounds are no-ops
-        upd = fr.copy()
-        np.minimum.at(upd, di[valid], t64[valid])
-        fr = upd
+        np.minimum.at(fr, di[valid], t64[valid])  # reach holds the old values
     reached = np.flatnonzero(fr != inf)
     return list(zip(nodes[reached].tolist(), fr[reached].tolist()))
 
@@ -519,13 +471,8 @@ def neighbor_jaccard(
     handles hub centers) + one aggregate + a vocabulary-sized degree
     join.  Single IEEE divide per row — deterministic across engines.
     """
-    und = undirected_edges(edges, src, dst)
-    # adj feeds the degree agg and BOTH self-join arms — materialize so
-    # the undirected-edge build (often itself a self-join upstream) runs
-    # once, not once per reference.
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("peer")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("peer"))
-    ).localCheckpoint(eager=True)
+    # adj feeds the degree agg and BOTH self-join arms
+    adj = _adjacency(undirected_edges(edges, src, dst))
     deg = adj.groupBy("node").agg(F.count("*").alias("deg"))  # adj is distinct
     x = adj.select(F.col("node").alias("node_a"), "peer")
     y = adj.select(F.col("node").alias("node_b"), "peer")
@@ -569,10 +516,7 @@ def bfs_depths(
     reached node — never collected to the driver.  Depth is bounded,
     so the unrolled-CTE SQL oracle stays exact.
     """
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("node"), F.col("b").alias("peer")).unionByName(
-        und.select(F.col("b").alias("node"), F.col("a").alias("peer"))
-    ).localCheckpoint(eager=True)
+    adj = _adjacency(undirected_edges(edges, src, dst))
     seed_df = local_table(
         edges.sparkSession,
         [(s,) for s in sources],
@@ -621,21 +565,12 @@ def label_propagation(
     like pagerank/components.
     """
     und = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
-    # r7: adaptive local branch (the kcore/components pattern).  The
-    # synchronous LPA round is a pure integer function of the edge set
-    # — vote counts + (max count, min label) arg-max — so a vectorized
-    # in-memory simulation of the SAME fixed rounds returns the
-    # identical label table without 3x (join + two aggs +
-    # localCheckpoint) scheduler rounds.  Integer node ids only (label
-    # = node id cast long); anything else takes the distributed loop.
-    cols = _local_arrays(und)
-    if cols is not None and all(c.dtype.kind in "iu" for c in cols):
-        return _local_result(edges, src, _lpa_local(*cols, rounds), "label", LongType())
-    adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
-        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
-        .localCheckpoint(eager=True)
+    local = _replay(
+        edges, src, "label", LongType(), lambda a, b: _lpa_local(a, b, rounds), und
     )
+    if local is not None:
+        return local
+    adj = _adjacency(und)
     labels = adj.select("node").distinct().select(
         "node", F.col("node").cast("long").alias("label")
     )
@@ -644,21 +579,20 @@ def label_propagation(
     return labels.select("node", F.col("label").cast("long").alias("label"))
 
 
-def _lpa_local(a_arr, b_arr, rounds: int) -> list:
+def _lpa_local(a_arr, b_arr, rounds: int) -> list | None:
     """Vectorized synchronous LPA over an in-memory undirected edge
     list: per round each node adopts the most frequent neighbor label,
     ties to the SMALLEST label — exactly _lpa_round's
     max_by(label, (n, -label)) arg-max.  Labels are node ids; nodes
     are compacted to sorted indices, so index order == label order and
-    the tie-break carries over.  Returns [(node, label_long)]."""
-    import numpy as np
-
+    the tie-break carries over.  Returns [(node, label_long)], or None
+    for non-integer ids (a label is the node id cast to long)."""
+    if a_arr.dtype.kind not in "iu":
+        return None
     nodes, inv = np.unique(np.concatenate([a_arr, b_arr]), return_inverse=True)
     m = len(a_arr)
     ai, bi = inv[:m], inv[m:]
     n = len(nodes)
-    if n >= (1 << 31):
-        raise ValueError("graph too large for local LPA simulation")
     node_side = np.concatenate([ai, bi]).astype(np.int64)
     peer_side = np.concatenate([bi, ai]).astype(np.int64)
     label = np.arange(n, dtype=np.int64)  # index == sorted-id order
@@ -666,14 +600,11 @@ def _lpa_local(a_arr, b_arr, rounds: int) -> list:
         pl = label[peer_side]
         key = node_side * n + pl
         uk, cnt = np.unique(key, return_counts=True)
-        un = uk // n
-        ul = uk % n
+        un, ul = np.divmod(uk, n)
         order = np.lexsort((ul, -cnt, un))
         _, first = np.unique(un[order], return_index=True)
         chosen = order[first]
-        new_label = label.copy()
-        new_label[un[chosen]] = ul[chosen]
-        label = new_label
+        label[un[chosen]] = ul[chosen]  # pl holds the old labels
     return list(zip(nodes.tolist(), nodes[label].astype(np.int64).tolist()))
 
 
@@ -706,56 +637,23 @@ def kcore(
     survivors with their final-round degree.  The full k-core is the
     fixpoint of this peel; a fixed round count keeps the run
     deterministic and the unrolled SQL oracle exact (the same
-    bounded-iteration convention as bfs_depths).
-
-    Scale shape per round: two semi-joins of the adjacency against the
-    survivor set (both keyed on a node id) + one count agg — map-side
-    combinable, state one row per surviving node, localCheckpoint per
-    round."""
+    bounded-iteration convention as bfs_depths).  This is
+    :func:`kcore_fixpoint` capped at ``rounds`` waves: waves past
+    stabilization are no-ops, so stopping early equals running all
+    ``rounds``."""
     if rounds < 1:
         raise ValueError(f"kcore needs rounds >= 1, got {rounds}")
-    und = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
-    # r7: same adaptive local branch as kcore_fixpoint — the bounded
-    # peel is the identical wave process capped at ``rounds`` (waves
-    # past stabilization are no-ops, so early-stop == fixed-depth), so
-    # the vectorized simulation returns the identical survivor set and
-    # degrees without 3 full-graph join+agg rounds.
-    cols = _local_arrays(und)
-    if cols is not None:
-        surv, _w = _kcore_peel_local(*cols, k, rounds)
-        return _local_result(edges, src, surv, "deg", IntegerType())
-    adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
-        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = adj.select("node").distinct()
-    surv = None
-    for _ in range(rounds):
-        e = adj.join(nodes, "node").join(
-            nodes.select(F.col("node").alias("peer")), "peer"
-        )
-        deg = e.groupBy("node").agg(F.count("*").alias("deg"))
-        surv = deg.where(F.col("deg") >= k).localCheckpoint(eager=True)
-        nodes = surv.select("node")
-    return surv.select("node", F.col("deg").cast("int").alias("deg"))
+    return kcore_fixpoint(edges, k, max_rounds=rounds, src=src, dst=dst)[0]
 
 
-KCORE_LOCAL_EDGE_LIMIT = int(
-    os.environ.get("ARABICNER_KCORE_LOCAL_EDGE_LIMIT", "8000000")
-)
-
-
-def _kcore_peel_local(a_arr, b_arr, k: int, max_rounds: int) -> tuple[list, int]:
+def _kcore_peel_local(a_arr, b_arr, k: int, max_rounds: int, waves: list) -> list:
     """Exact wave-by-wave peel over an in-memory undirected distinct
     edge list, fully vectorized (numpy CSR) — the same waves the
     distributed loop would run (wave w removes every node whose degree
     induced by wave w-1's survivors is < k; decrements from wave w's
     removals land at the START of wave w+1, so a max_rounds cap leaves
     degrees exactly where the distributed peel would).
-    Returns ([(node, deg)], rounds_run)."""
-    import numpy as np
-
+    Returns [(node, deg)] and appends the waves run to ``waves``."""
     nodes, inv = np.unique(np.concatenate([a_arr, b_arr]), return_inverse=True)
     m = len(a_arr)
     ai, bi = inv[:m], inv[m:]
@@ -769,10 +667,8 @@ def _kcore_peel_local(a_arr, b_arr, k: int, max_rounds: int) -> tuple[list, int]
     np.cumsum(counts, out=indptr[1:])
     deg = counts.copy()
     alive = np.ones(n, dtype=bool)
-    rounds_run = 0
     pending = None
-    for _ in range(max_rounds):
-        rounds_run += 1
+    for rounds_run in range(1, max_rounds + 1):
         if pending is not None and pending.size:
             cnt = indptr[pending + 1] - indptr[pending]
             total = int(cnt.sum())
@@ -789,10 +685,9 @@ def _kcore_peel_local(a_arr, b_arr, k: int, max_rounds: int) -> tuple[list, int]
             break
         alive[removed] = False
         pending = removed
+    waves.append(rounds_run)
     surv = np.flatnonzero(alive)
-    node_list = nodes[surv].tolist()
-    deg_list = deg[surv].tolist()
-    return list(zip(node_list, deg_list)), rounds_run
+    return list(zip(nodes[surv].tolist(), deg[surv].tolist()))
 
 
 def kcore_fixpoint(
@@ -809,53 +704,39 @@ def kcore_fixpoint(
 
     -> (survivors (node, deg int), rounds_run).  The k-core fixpoint
     is peel-order independent, so any correct peel yields the same
-    survivor set and induced degrees; rounds_run keeps the wave
-    semantics of the original loop (waves executed including the
-    empty confirming wave, capped by ``max_rounds``).
+    survivor set and induced degrees; rounds_run counts the waves
+    executed including the empty confirming wave, capped by
+    ``max_rounds``.
 
-    r7 restructure (guide sections 1.2/2.4 — the round COUNT was the
-    wall clock: ~21 sequential full-graph rounds on the deep-peel
-    fixture):
-
-      * DELTA peeling: degrees are computed over the full adjacency
-        ONCE; each wave subtracts only the edges incident to the
-        just-removed nodes (adjacency joined against the wave's small
-        removal set) instead of re-aggregating the whole induced
-        subgraph.  Per-wave shuffle bytes are proportional to the
-        removal wave, not the graph.
-      * ADAPTIVE LOCAL FINISH (the components.py
-        connected_components_adaptive pattern): below
-        ``KCORE_LOCAL_EDGE_LIMIT`` distinct undirected edges
-        (env-overridable; 8M edges ~ 128 MB Arrow — driver-trivial,
-        same class as components.py's adaptive union-find) the peel
-        runs as a vectorized in-memory wave simulation, replacing
-        O(rounds) scheduler latency with one Arrow collect.  At 100-TB
-        scale the distributed delta branch carries the load.
+    DELTA peeling: degrees are computed over the full adjacency ONCE;
+    each wave subtracts only the edges incident to the just-removed
+    nodes (adjacency joined against the wave's small removal set)
+    instead of re-aggregating the whole induced subgraph, so per-wave
+    shuffle bytes are proportional to the removal wave, not the graph.
+    Below ``KCORE_LOCAL_EDGE_LIMIT`` distinct undirected edges the same
+    waves replay on the driver (:func:`_replay`).
     """
     if max_rounds < 1:
         raise ValueError(f"kcore_fixpoint needs max_rounds >= 1, got {max_rounds}")
     und = undirected_edges(edges, src, dst).localCheckpoint(eager=True)
-    cols = _local_arrays(und)
-    if cols is not None:
-        surv, rounds_run = _kcore_peel_local(*cols, k, max_rounds)
-        return _local_result(edges, src, surv, "deg", IntegerType()), rounds_run
-
-    adj = (
-        und.select(F.col("a").alias("node"), F.col("b").alias("peer"))
-        .unionByName(und.select(F.col("b").alias("node"), F.col("a").alias("peer")))
-        .localCheckpoint(eager=True)
+    waves: list = []
+    local = _replay(
+        edges, src, "deg", IntegerType(),
+        lambda a, b: _kcore_peel_local(a, b, k, max_rounds, waves),
+        und,
     )
+    if local is not None:
+        return local, waves[0]
+    adj = _adjacency(und)
     # full degrees once; every later wave only applies decrements from
     # the previous wave's removals (landing at the START of the next
     # wave, so wave w's degrees are exactly those induced by wave
-    # w-1's survivors — the original loop's semantics, cap included)
+    # w-1's survivors — the bounded peel's semantics, cap included)
     state = adj.groupBy("node").agg(F.count("*").alias("deg")).localCheckpoint(
         eager=True
     )
-    rounds_run = 0
     pending = None
-    for _ in range(max_rounds):
-        rounds_run += 1
+    for rounds_run in range(1, max_rounds + 1):
         if pending is not None:
             dec = (
                 adj.join(pending, "node")

@@ -325,20 +325,28 @@ def test_temporal_reach_respects_time_and_matches_twin(spark):
 
 
 def test_kcore_distributed_delta_branch_matches_local(spark, monkeypatch):
-    """r7: kcore/kcore_fixpoint gained an adaptive local fast path and
-    a distributed DELTA-peel branch.  Force the distributed branch
-    (limit=0) and pin that survivors, degrees, and rounds_run equal
-    the local wave simulation on a deep-peel graph (path + triangle +
-    a 4-clique tail)."""
+    """Force the distributed DELTA-peel loop (limit=0) and pin that
+    survivors, degrees, and rounds_run equal the local wave simulation
+    on a deep-peel graph (path + triangle + a 4-clique tail), for the
+    fixpoint and for the bounded peel over k in {1, 2, 3} x rounds in
+    {1..4}."""
     from arabicner_spark.operators import graph
 
     path = [(i, i + 1) for i in range(9)]
     tri = [(100, 101), (101, 102), (100, 102)]
     clique = [(a, b) for a in range(200, 204) for b in range(a + 1, 204)]
     edges = spark.createDataFrame(path + tri + clique, "src bigint, dst bigint")
+    sweep = [(k, rounds) for k in (1, 2, 3) for rounds in range(1, 5)]
+
+    def bounded_sweep():
+        return {
+            (k, rounds): {(r.node, r.deg) for r in graph.kcore(edges, k, rounds).collect()}
+            for k, rounds in sweep
+        }
 
     local_fixed, local_rounds = graph.kcore_fixpoint(edges, k=2)
     local_bounded = {(r.node, r.deg) for r in graph.kcore(edges, k=2, rounds=2).collect()}
+    local_sweep = bounded_sweep()
 
     monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
     dist_fixed, dist_rounds = graph.kcore_fixpoint(edges, k=2)
@@ -349,6 +357,7 @@ def test_kcore_distributed_delta_branch_matches_local(spark, monkeypatch):
     }
     assert dist_rounds == local_rounds
     assert dist_bounded == local_bounded
+    assert bounded_sweep() == local_sweep
 
 
 def test_ppr_local_simulation_matches_distributed(spark, monkeypatch):
@@ -440,7 +449,8 @@ def test_temporal_reach_local_simulation_matches_distributed(spark, monkeypatch)
 def test_ppr_and_treach_null_keys_fall_back_to_distributed(spark):
     """Null src/dst/ts values route to the distributed loop (SQL
     null-join semantics) instead of crashing the object-array local
-    simulation; the null node rides along with zero rank/unreached."""
+    simulation; the null node rides along with zero rank/unreached
+    (personalized) or the base rank (uniform)."""
     from arabicner_spark.operators import graph
 
     e = spark.createDataFrame(
@@ -461,6 +471,15 @@ def test_ppr_and_treach_null_keys_fall_back_to_distributed(spark):
         for r in graph.temporal_reach(te, seeds, rounds=3).collect()
     }
     assert tr["a"] == 0 and tr["b"] == 5 and "c" not in tr
+
+    # pagerank_exact too: the NULL node counts in n (4 here) and, never
+    # joining, keeps the base rank 1e9 * 15 // 400
+    ue = spark.createDataFrame(
+        [("a", "b"), (None, "b"), ("b", "c"), ("c", "a"), ("c", None)],
+        "src string, dst string",
+    )
+    pr = {r.node: r.rank_i for r in graph.pagerank_exact(ue, iterations=3).collect()}
+    assert pr == {None: 37500000, "a": 143750000, "b": 159687500, "c": 173234375}
 
 
 def test_lpa_local_simulation_matches_distributed(spark, monkeypatch):
@@ -522,3 +541,96 @@ def test_temporal_reach_int64_max_time_matches_distributed(spark, monkeypatch):
     monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
     dist = {(r.node, r.first_reach) for r in graph.temporal_reach(e, seeds, rounds=3).collect()}
     assert got == dist == want
+
+
+def test_pagerank_exact_local_replay_matches_distributed(spark, monkeypatch):
+    """pagerank_exact replays on the driver as the personalized loop
+    with every node a seed; force the distributed loop and pin
+    identical ranks on integer and string ids, with a self-loop, a
+    duplicate edge and a dangling source, at the damping boundaries."""
+    from arabicner_spark.operators import graph
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 1), (2, 2), (1, 2)]
+    e = spark.createDataFrame(edges, "src bigint, dst bigint")
+    se = spark.createDataFrame([(f"E{a}", f"E{b}") for a, b in edges], "src string, dst string")
+
+    def ranks():
+        return [
+            {(r.node, r.rank_i) for r in graph.pagerank_exact(g, iterations=4, damping_pct=d).collect()}
+            for g in (e, se)
+            for d in (0, 85, 100)
+        ]
+
+    local = ranks()
+    monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
+    assert ranks() == local
+
+
+def test_struct_ids_local_equals_distributed(spark, monkeypatch):
+    """Struct node ids are neither all integers nor all strings, which
+    np.unique cannot order, so the replay gate sends them to the
+    distributed loop: the default call equals the forced one."""
+    from arabicner_spark.operators import graph
+
+    rows = [((1,), (2,), 10), ((2,), (3,), 20), ((3,), (1,), 30), ((3,), (4,), 40)]
+    e = spark.createDataFrame(
+        rows, "src struct<x: bigint>, dst struct<x: bigint>, ts_epoch bigint"
+    )
+    seeds = spark.createDataFrame([((1,),)], "node struct<x: bigint>")
+
+    def run():
+        fixed, waves = graph.kcore_fixpoint(e, k=2)
+        outs = [
+            graph.kcore(e, k=2, rounds=2),
+            fixed,
+            graph.pagerank_personalized_exact(e, seeds, iterations=3),
+            graph.temporal_reach(e, seeds, rounds=3),
+        ]
+        return [set(map(tuple, df.collect())) for df in outs] + [waves]
+
+    local = run()
+    monkeypatch.setattr(graph, "KCORE_LOCAL_EDGE_LIMIT", 0)
+    assert run() == local
+
+
+# Spark jobs one call takes on a small in-memory graph (the local
+# replay), collecting its result included.  Per-job overhead is what
+# the registry's graph queries cost, so a change must not add jobs.
+# pagerank_exact took 52 before it had a local replay.
+GRAPH_JOB_BUDGET = {
+    "pagerank_exact": 3,
+    "pagerank_personalized_exact": 5,
+    "temporal_reach": 5,
+    "label_propagation": 3,
+    "kcore": 3,
+    "kcore_fixpoint": 3,
+}
+
+
+def test_graph_job_budget(spark):
+    from arabicner_spark.operators import graph
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 1), (4, 6)]
+    e = spark.createDataFrame(edges, "src bigint, dst bigint").localCheckpoint(eager=True)
+    te = spark.createDataFrame(
+        [(a, b, 10 * a + b) for a, b in edges], "src bigint, dst bigint, ts_epoch bigint"
+    ).localCheckpoint(eager=True)
+    seeds = spark.createDataFrame([(1,), (4,)], "node bigint").localCheckpoint(eager=True)
+    calls = {
+        "pagerank_exact": lambda: graph.pagerank_exact(e),
+        "pagerank_personalized_exact": lambda: graph.pagerank_personalized_exact(e, seeds),
+        "temporal_reach": lambda: graph.temporal_reach(te, seeds),
+        "label_propagation": lambda: graph.label_propagation(e),
+        "kcore": lambda: graph.kcore(e),
+        "kcore_fixpoint": lambda: graph.kcore_fixpoint(e)[0],
+    }
+    sc = spark.sparkContext
+    for name, call in calls.items():
+        group = f"graph-job-budget-{name}"
+        sc.setJobGroup(group, "graph job budget")
+        try:
+            call().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < jobs <= GRAPH_JOB_BUDGET[name], (name, jobs)
