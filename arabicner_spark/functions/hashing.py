@@ -4,9 +4,13 @@ Every hash here is built from ``md5`` over UTF-8 bytes so the exact
 same value is computable in Spark SQL (``md5(encode(col,'utf-8'))``),
 DuckDB (``md5(col)``) and Python (``hashlib.md5``) — which is what lets
 MinHash-LSH blocking, SimHash, and fingerprint sketches have *exact*
-SQL oracles instead of weaker rows-only checks.  MinHash uses the
-lexicographic min of seeded md5 hex digests: hex strings order the same
-everywhere, no integer conversion needed.
+SQL oracles instead of weaker rows-only checks.  MinHash is an affine
+family over a 32-bit md5 base: the first 8 hex nibbles of the md5 as a
+BIGINT (``minhash_base``), then the min over
+(A[s] * base + B[s]) mod ``MINHASH_P`` for the constants of
+``minhash_affine_consts`` — integer arithmetic every engine above does
+identically.  Only the text_fingerprint query still takes the
+lexicographic min of seeded md5 hex digests (``seeded_md5``).
 
 xxhash64/crc32 are deliberately avoided in anything oracle-checked
 (engine-specific); they may appear only in internal salting.

@@ -34,7 +34,7 @@ from arabicner_spark.operators.triples import (
     extract_triples,
 )
 from arabicner_spark.plans.lineage import StageRunner
-from arabicner_spark.sources.io import TableIO
+from arabicner_spark.sources.io import TableIO, pin_width
 
 
 @dataclass
@@ -89,17 +89,9 @@ def run_pipeline(
         partition_by=["type"],
         rows_in_of="transcripts",
     )
-    # explicit width pin: keeps the pair-combinatorics stage parallel
-    # when the mentions exchange is bytes-small (AQE coalescing is
-    # byte-based — PLANS.md).  The pin REPLACES the AQE-sized exchange,
-    # so it must never be NARROWER than the configured shuffle width —
-    # pinning to bare defaultParallelism would cap the aggregate at
-    # cluster-core count partitions on arbitrarily large inputs
-    # (oversized partitions, no AQE split on the pinned exchange).
-    pin_width = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    # explicit width pin (sources.io.pin_width): keeps the
+    # pair-combinatorics stage parallel when the mentions exchange is
+    # bytes-small
     triples = runner.run(
         "triples",
         "triples",
@@ -107,7 +99,7 @@ def run_pipeline(
             mentions,
             cfg.predicates,
             cfg.window,
-            width=pin_width,
+            width=pin_width(spark),
         ),
         rows_in_of="mentions",
         count_as_triples=True,

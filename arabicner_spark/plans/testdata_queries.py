@@ -30,6 +30,9 @@ testdata refresh fails with a diagnosis, not a bare hash MISMATCH.
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+import uuid
 
 from typing import Callable, Dict, Tuple
 
@@ -41,7 +44,8 @@ from arabicner_spark.functions import hashing
 from arabicner_spark.operators import ner, triples as triples_op
 from arabicner_spark.operators.components import connected_components_adaptive
 from arabicner_spark.operators.linking import best_alias
-from arabicner_spark.sources.io import local_table
+from arabicner_spark.sources.io import local_table, pin_width
+from arabicner_spark.streaming import ingest
 
 # ------------------------------------------------------------------ fixtures
 
@@ -103,14 +107,12 @@ def table_bytes(sf_dir: str, name: str) -> int:
 
 
 # Vector-verify build side: use the broadcast-matrix Arrow verifier
-# (hashing.cosine_verify_pairs) while the vector table's parquet
+# (hashing.cosine_bucket_verify) while the vector table's parquet
 # footprint is below this (sf1.0 = 5.7 MB -> ~20 MB float64 matrix;
 # production: 64 MB parquet ~ a few hundred MB in executor memory,
 # safely bounded).  Above it the plan falls back to the original
 # width-pinned shuffle-join verify.
-EMB_BROADCAST_MAX_BYTES = int(
-    os.environ.get("ARABICNER_EMB_BROADCAST_MAX_BYTES", str(64 << 20))
-)
+EMB_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def _reclaim(df: DataFrame, *paths: str) -> DataFrame:
@@ -118,26 +120,41 @@ def _reclaim(df: DataFrame, *paths: str) -> DataFrame:
     dirs it was computed from — the q_snapshot_time_travel pattern
     applied everywhere (VERDICT r6 #7: streaming/corpus/compaction
     gate queries leaked a few dozen MB of /tmp per full gate run)."""
-    import shutil
-
     out = df.localCheckpoint(eager=True)
     for p in paths:
         shutil.rmtree(p, ignore_errors=True)
     return out
 
 
-def pin_width(spark: SparkSession) -> int:
-    """Partition count for explicit width pins on compute-bound,
-    bytes-small stages (shingle/minhash, pair-combinatorics — see
-    PLANS.md on AQE byte-based coalescing).  max() of core count and
-    the configured shuffle width: the pin replaces the AQE-sized
-    exchange, so pinning to bare defaultParallelism would CAP those
-    stages at cluster-core-count partitions on arbitrarily large
-    inputs (ADVICE r3)."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+def _drain(spark, src_df, stream_of, result_of, mode="append", sink_of=None):
+    """Run a bounded stream to its end; return its result, materialized.
+
+    ``src_df`` is written as the parquet source of ``stream_of(src)``,
+    which drains with availableNow into a memory sink in output
+    ``mode`` — or, given ``sink_of``, through
+    ``foreachBatch(sink_of(stream, out))`` into a temp directory
+    ``out``.  ``result_of`` shapes the memory sink's table (or reads
+    ``out``).  Once that is checkpointed, or the run fails, the temp
+    dirs and the sink's view, with the rows it holds on the driver, are
+    dropped."""
+    dirs = [tempfile.mkdtemp(prefix=f"arabicner_stream_{d}_") for d in ("src", "ckpt", "out")]
+    src, ckpt, out = dirs
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    try:
+        src_df.write.mode("overwrite").parquet(src)
+        stream = stream_of(src)
+        if sink_of is None:
+            writer = stream.writeStream.format("memory").queryName(name).outputMode(mode)
+        else:
+            writer = stream.writeStream.foreachBatch(sink_of(stream, out))
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        q.awaitTermination()
+        rows = spark.table(name) if sink_of is None else out
+        return result_of(rows).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -174,6 +191,46 @@ def alias_df_td(spark: SparkSession) -> DataFrame:
     return local_table(
         spark, ALIAS_TD, "alias string, entity_id string, entity_type string, weight double"
     )
+
+
+def kg_prefix(spark: SparkSession, sf_dir: str, stage: str, ts: bool = False) -> DataFrame:
+    """The KG pipeline prefix every kg_* query starts from, built one way:
+    ``mentions`` (the real NER stage over the testdata gazetteer),
+    ``linked`` (mentions LEFT JOIN the best alias on the surface),
+    ``triples`` (width-pinned windowed triples) or ``edges`` (triples
+    whose subject and object both have an alias, as src/dst entity
+    ids: one row per supporting triple).  ``ts`` adds the turn's
+    ``ts_epoch`` to triples or edges."""
+    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
+    if stage == "mentions":
+        return m
+    if stage == "linked":
+        ab = F.broadcast(best_alias(spark, ALIAS_TD))
+        return m.join(ab, m["text"] == ab["alias"], "left")
+    out = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
+    if stage == "edges":
+        ab = F.broadcast(best_alias(spark, ALIAS_TD))
+        out = out.join(
+            ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj"
+        ).join(
+            ab.select(F.col("alias").alias("obj"), F.col("entity_id").alias("dst")), "obj"
+        )
+    if ts:
+        turns = transcripts(spark, sf_dir).select(
+            "conv_id", "turn_idx", F.unix_timestamp("ts").cast("long").alias("ts_epoch")
+        )
+        out = out.join(turns, ["conv_id", "turn_idx"])
+    return out
+
+
+def _seed_nodes(edges: DataFrame, k: int) -> DataFrame:
+    """The ``k`` smallest node ids of an edge table."""
+    nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionByName(edges.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return nodes.orderBy("node").limit(k)
 
 
 # ------------------------------------------------------------ SQL fragments
@@ -333,8 +390,7 @@ SELECT conv_id, turn_idx, level, type, start_tok, end_tok, text FROM men"""
 def q_kg_mentions_bio(spark, sf_dir):
     """The REAL NER stage (mapInPandas BxTxLxC argmax decode) — its
     output provably equals the n-gram scan on this gazetteer."""
-    t = transcripts(spark, sf_dir)
-    return ner.extract_mentions(t, gazetteer_dict_td(), salt_partitions=None)
+    return kg_prefix(spark, sf_dir, "mentions")
 
 
 SQL_KG_MENTIONS_BIO = SQL_KG_MENTIONS
@@ -433,10 +489,7 @@ SELECT conv_id, turn_idx, level, type, start_tok, end_tok, text FROM menf"""
 
 
 def q_kg_triples(spark, sf_dir):
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    return triples_op.extract_triples(
-        m, PREDS_TD, WINDOW_TD, width=pin_width(spark)
-    )
+    return kg_prefix(spark, sf_dir, "triples")
 
 
 SQL_KG_TRIPLES = f"""WITH {_SQL_T}, {_SQL_MEN}, {_SQL_TRI}
@@ -455,46 +508,39 @@ def q_stream_kg_triples(spark, sf_dir):
     — proving the micro-batch decomposition and the replay-safe sink
     change nothing about the KG the pipeline builds."""
     import glob
-    import tempfile
 
     from arabicner_spark import schemas
-    from arabicner_spark.streaming import ingest
 
-    src = tempfile.mkdtemp(prefix="arabicner_skg_src_")
-    out = tempfile.mkdtemp(prefix="arabicner_skg_out_")
-    ckpt = tempfile.mkdtemp(prefix="arabicner_skg_ckpt_")
-    transcripts(spark, sf_dir).repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(schemas.TRANSCRIPTS)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
     gaz = gazetteer_dict_td()
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "subj_type", "obj_type"]
 
-    def process(batch_df, epoch_id):
-        m = ner.extract_mentions(batch_df, gaz)
-        t = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD)
-        t.select(*cols).write.mode("overwrite").parquet(f"{out}/__epoch={epoch_id}")
+    def sink_of(stream, out):
+        write = ingest.idempotent_parquet_sink(stream, out, cols)
+        return lambda batch_df, epoch_id: write(
+            triples_op.extract_triples(
+                ner.extract_mentions(batch_df, gaz), PREDS_TD, WINDOW_TD
+            ),
+            epoch_id,
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert glob.glob(f"{out}/__epoch=*"), "no epochs written"
-    return _reclaim(
-        spark.read.parquet(f"{out}/__epoch=*").select(*cols), src, out, ckpt
+    def result_of(out):
+        assert glob.glob(f"{out}/__epoch=*"), "no epochs written"
+        return spark.read.parquet(f"{out}/__epoch=*").select(*cols)
+
+    return _drain(
+        spark,
+        transcripts(spark, sf_dir).repartition(4),
+        lambda src: spark.readStream.schema(schemas.TRANSCRIPTS)
+        .option("maxFilesPerTrigger", 2)
+        .parquet(src),
+        result_of,
+        sink_of=sink_of,
     )
 
 
 def q_kg_linked(spark, sf_dir):
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    ab = best_alias(spark, ALIAS_TD)
     return (
-        m.join(F.broadcast(ab), m["text"] == ab["alias"], "left")
+        kg_prefix(spark, sf_dir, "linked")
         .groupBy(
             F.col("text").alias("surface"),
             F.coalesce("entity_id", F.concat(F.lit("S:"), "text")).alias("canonical_id"),
@@ -516,10 +562,9 @@ GROUP BY 1, 2"""
 
 
 def q_kg_nodes(spark, sf_dir):
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    ab = best_alias(spark, ALIAS_TD)
     return (
-        m.join(F.broadcast(ab), m["text"] == ab["alias"])
+        kg_prefix(spark, sf_dir, "linked")
+        .where(F.col("alias").isNotNull())
         .groupBy(F.col("entity_id").alias("node_id"), F.col("type"))
         .agg(F.count("*").alias("n_mentions"))
     )
@@ -532,17 +577,11 @@ GROUP BY 1, 2"""
 
 
 def q_kg_edges(spark, sf_dir):
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    t = triples_op.extract_triples(
-        m, PREDS_TD, WINDOW_TD, width=pin_width(spark)
+    return (
+        kg_prefix(spark, sf_dir, "edges")
+        .select("src", "pred", "dst", "conv_id", "turn_idx")
+        .distinct()
     )
-    ab = F.broadcast(best_alias(spark, ALIAS_TD))
-    t = t.join(
-        ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj"
-    ).join(
-        ab.select(F.col("alias").alias("obj"), F.col("entity_id").alias("dst")), "obj"
-    )
-    return t.select("src", "pred", "dst", "conv_id", "turn_idx").distinct()
 
 
 SQL_KG_EDGES = f"""WITH {_SQL_T}, {_SQL_MEN}, {_SQL_TRI}, {_SQL_ALIAS}
@@ -671,14 +710,9 @@ FROM ends GROUP BY node"""
 def q_kg_temporal_edges(spark, sf_dir):
     """Temporal KG rollup: edge counts per (pred, hour bucket) — the
     partition-pruning-friendly shape a time-sliced consumer reads."""
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    t = triples_op.extract_triples(
-        m, PREDS_TD, WINDOW_TD, width=pin_width(spark)
-    )
-    ts = transcripts(spark, sf_dir).select("conv_id", "turn_idx", "ts")
-    hour = (F.floor(F.unix_timestamp("ts") / 3600) * 3600).cast("bigint")
+    hour = (F.floor(F.col("ts_epoch") / 3600) * 3600).cast("bigint")
     return (
-        t.join(ts, ["conv_id", "turn_idx"])
+        kg_prefix(spark, sf_dir, "triples", ts=True)
         .groupBy("pred", hour.alias("hour_epoch"))
         .agg(
             F.count("*").alias("n_edges"),
@@ -855,7 +889,7 @@ def q_kg_nested_mentions(spark, sf_dir):
     """Nested-mention containment: inner mention strictly inside an
     outer mention on a DIFFERENT level (the cross-level nesting the
     multi-head BIO scheme exists for)."""
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
+    m = kg_prefix(spark, sf_dir, "mentions")
     o = m.select(
         "conv_id", "turn_idx",
         F.col("level").alias("outer_level"), F.col("type").alias("outer_type"),
@@ -2300,8 +2334,6 @@ def q_corpus_pipeline(spark, sf_dir):
     six stages into one statement, so the value hash pins the WHOLE
     composition — stage boundaries, parquet round-trips, resume
     machinery included — not just each operator in isolation."""
-    import tempfile
-
     from arabicner_spark.plans.corpus import CorpusConfig, run_corpus_pipeline
 
     d = load(spark, sf_dir, "documents")
@@ -2389,8 +2421,6 @@ def q_compact_roundtrip(spark, sf_dir):
     file crossing the gate keeps the file assignment deterministic
     only where it is — so the gate output drops file_idx and pins the
     row SET, which is the compaction contract)."""
-    import tempfile
-
     from arabicner_spark.operators.compact import compact_by_range
 
     ev = load(spark, sf_dir, "events").select(
@@ -2845,9 +2875,6 @@ def q_conll_roundtrip(spark, sf_dir):
     The collect below is FIXTURE SYNTHESIS (bounded: the documents
     table), not part of the operator under test; the parse itself is
     fully distributed."""
-    import os
-    import tempfile
-
     from arabicner_spark.sources.conll_spark import read_conll
 
     rows = (
@@ -2902,9 +2929,6 @@ def q_tsv_process(spark, sf_dir):
     the junk).
 
     The collect is fixture synthesis (bounded), not the operator."""
-    import os
-    import tempfile
-
     from arabicner_spark.sources.process import clean_rows, read_wojood_tsv, to_segments
 
     rows = (
@@ -3416,34 +3440,16 @@ def q_stream_conv_totals(spark, sf_dir):
     Bounded run: availableNow drains the source and terminates, so the
     driver's collect sees a complete, deterministic result.
     """
-    import tempfile
-    import uuid
-
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_stream_src_")
-    ckpt = tempfile.mkdtemp(prefix="arabicner_stream_ckpt_")
-    transcripts(spark, sf_dir).write.mode("overwrite").parquet(src)
-    stream = ingest.stream_transcripts(spark, src)
-    totals = ingest.streaming_conv_totals(
-        ingest.streaming_mentions(stream, gazetteer_dict_td())
-    )
-    qname = f"stream_totals_{uuid.uuid4().hex[:8]}"
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reclaim(
-        spark.table(qname)
-        .groupBy("conv_id")
-        .agg(F.max("total_mentions").alias("total_mentions")),
-        src,
-        ckpt,
+    return _drain(
+        spark,
+        transcripts(spark, sf_dir),
+        lambda src: ingest.streaming_conv_totals(
+            ingest.streaming_mentions(ingest.stream_transcripts(spark, src), gazetteer_dict_td())
+        ),
+        lambda rows: rows.groupBy("conv_id").agg(
+            F.max("total_mentions").alias("total_mentions")
+        ),
+        mode="update",
     )
 
 
@@ -3464,33 +3470,16 @@ def q_stream_mention_rate(spark, sf_dir):
     ordered micro-batch: the watermark (which only advances BETWEEN
     batches) can then never drop events, making the streaming result
     exactly the batch result — the property this gate pins."""
-    import tempfile
-    import uuid
-
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_stream_rate_src_")
-    ckpt = tempfile.mkdtemp(prefix="arabicner_stream_rate_ckpt_")
-    transcripts(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(src)
-    rate = ingest.mention_rate(
-        ingest.streaming_mentions(ingest.stream_transcripts(spark, src), gazetteer_dict_td())
-    )
-    qname = f"stream_rate_{uuid.uuid4().hex[:8]}"
-    q = (
-        rate.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reclaim(
-        spark.table(qname)
-        .groupBy(F.unix_timestamp("window_start").alias("window_epoch"), "type")
-        .agg(F.max("n_mentions").cast("bigint").alias("n_mentions")),
-        src,
-        ckpt,
+    return _drain(
+        spark,
+        transcripts(spark, sf_dir).coalesce(1),
+        lambda src: ingest.mention_rate(
+            ingest.streaming_mentions(ingest.stream_transcripts(spark, src), gazetteer_dict_td())
+        ),
+        lambda rows: rows.groupBy(
+            F.unix_timestamp("window_start").alias("window_epoch"), "type"
+        ).agg(F.max("n_mentions").cast("bigint").alias("n_mentions")),
+        mode="update",
     )
 
 
@@ -4291,49 +4280,25 @@ def q_stream_sessions(spark, sf_dir):
     sessionization oracle (the SAME SQL that gates rel_session_window,
     proving batch session_window, streaming session_window, and the
     manual lag+cumsum composition all agree)."""
-    import tempfile
-    import uuid
-
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_stream_sess_src_")
-    _sess_ckpt = tempfile.mkdtemp(prefix="arabicner_stream_sess_ckpt_")
-    (
-        load(spark, sf_dir, "events")
-        .select(
-            "user_id",
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.expr("CAST(round(value * 100, 0) AS BIGINT)").alias("cents"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(src)
+    events = load(spark, sf_dir, "events").select(
+        "user_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.expr("CAST(round(value * 100, 0) AS BIGINT)").alias("cents"),
     )
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp, cents bigint")
-        .parquet(src)
-    )
-    sessions = ingest.user_session_aggregates(stream)
-    qname = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")  # session windows forbid update mode
-        .option("checkpointLocation", _sess_ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reclaim(
-        spark.table(qname).select(
+    return _drain(
+        spark,
+        events.coalesce(1),
+        lambda src: ingest.user_session_aggregates(
+            spark.readStream.schema("user_id bigint, ts timestamp, cents bigint").parquet(src)
+        ),
+        lambda rows: rows.select(
             "user_id",
             F.unix_micros("session_start").alias("start_us"),
             F.unix_micros("session_end").alias("end_us"),
             "n_events",
             "sum_cents",
         ),
-        src,
-        _sess_ckpt,
+        mode="append",  # session windows forbid update mode
     )
 
 
@@ -4411,35 +4376,19 @@ def q_stream_join_enrich(spark, sf_dir):
     so the watermark can never drop rows), drain with availableNow into
     an append memory sink, and the joined rows must equal the BATCH
     mentions ⋈ turns join (the DuckDB oracle)."""
-    import tempfile
-    import uuid
+    def stream_of(src):
+        mentions = ingest.streaming_mentions(
+            ingest.stream_transcripts(spark, src), gazetteer_dict_td()
+        )
+        return ingest.join_turn_metadata(mentions, ingest.stream_transcripts(spark, src))
 
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_stream_join_src_")
-    _join_ckpt = tempfile.mkdtemp(prefix="arabicner_stream_join_ckpt_")
-    transcripts(spark, sf_dir).coalesce(1).write.mode("overwrite").parquet(src)
-    mentions = ingest.streaming_mentions(
-        ingest.stream_transcripts(spark, src), gazetteer_dict_td()
-    )
-    turns = ingest.stream_transcripts(spark, src)
-    joined = ingest.join_turn_metadata(mentions, turns)
-    qname = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _join_ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reclaim(
-        spark.table(qname).select(
+    return _drain(
+        spark,
+        transcripts(spark, sf_dir).coalesce(1),
+        stream_of,
+        lambda rows: rows.select(
             "conv_id", "turn_idx", "role", "level", "type", "start_tok", "end_tok", "text"
         ),
-        src,
-        _join_ckpt,
     )
 
 
@@ -4458,13 +4407,6 @@ def q_stream_dedup(spark, sf_dir):
     an append memory sink.  The surviving rows must equal the batch
     DISTINCT over events (the DuckDB oracle).  Cents fixed-point keeps
     the payload integer for the value hash."""
-    import tempfile
-    import uuid
-
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_stream_dedup_src_")
-    _dedup_ckpt = tempfile.mkdtemp(prefix="arabicner_stream_dedup_ckpt_")
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         F.col("ts").cast("timestamp").alias("ts"),
@@ -4472,27 +4414,20 @@ def q_stream_dedup(spark, sf_dir):
         "event_type",
         F.expr("CAST(round(value * 100, 0) AS BIGINT)").alias("cents"),
     )
-    ev.unionAll(ev).coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, cents bigint"
-    ).parquet(src)
-    deduped = ingest.dedup_within_watermark(stream, ["event_id"], "ts", "10 minutes")
-    qname = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", _dedup_ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _reclaim(
-        spark.table(qname).select(
+    return _drain(
+        spark,
+        ev.unionAll(ev).coalesce(1),
+        lambda src: ingest.dedup_within_watermark(
+            spark.readStream.schema(
+                "event_id bigint, ts timestamp, user_id bigint, event_type string, cents bigint"
+            ).parquet(src),
+            ["event_id"],
+            "ts",
+            "10 minutes",
+        ),
+        lambda rows: rows.select(
             "event_id", F.unix_micros("ts").alias("ts_us"), "user_id", "event_type", "cents"
         ),
-        src,
-        _dedup_ckpt,
     )
 
 
@@ -4514,47 +4449,38 @@ def q_stream_idempotent_sink(spark, sf_dir):
     equal the batch table exactly (the DuckDB oracle).  An append-mode
     sink would hold a second copy of the replayed batch here."""
     import glob
-    import tempfile
-    import uuid
 
-    from arabicner_spark.streaming import ingest
-
-    src = tempfile.mkdtemp(prefix="arabicner_sink_src_")
-    out = tempfile.mkdtemp(prefix="arabicner_sink_out_")
-    _sink_ckpt = tempfile.mkdtemp(prefix="arabicner_sink_ckpt_")
+    cols = ["event_id", "user_id", "event_type", "cents"]
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
         F.expr("CAST(round(value * 100, 0) AS BIGINT)").alias("cents"),
     )
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema(
+
+    def result_of(out):
+        # simulate the replay: re-run the writer for an existing epoch with
+        # the same rows — overwrite semantics must leave the table unchanged
+        epochs = sorted(glob.glob(f"{out}/__epoch=*"))
+        # localCheckpoint decouples the replay rows from the files the
+        # writer is about to overwrite (lazy read + overwrite of the same
+        # path would otherwise race itself)
+        replay_df = spark.read.parquet(epochs[0]).localCheckpoint(eager=True)
+        sink = ingest.idempotent_parquet_sink(replay_df, out, cols)
+        sink(replay_df, int(epochs[0].rsplit("=", 1)[1]))
+        return spark.read.parquet(f"{out}/__epoch=*")
+
+    return _drain(
+        spark,
+        ev.repartition(4),
+        lambda src: spark.readStream.schema(
             "event_id bigint, user_id bigint, event_type string, cents bigint"
         )
         .option("maxFilesPerTrigger", 2)
-        .parquet(src)
+        .parquet(src),
+        result_of,
+        sink_of=lambda stream, out: ingest.idempotent_parquet_sink(stream, out, cols),
     )
-    sink = ingest.idempotent_parquet_sink(
-        stream, out, ["event_id", "user_id", "event_type", "cents"]
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", _sink_ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # simulate the replay: re-run the writer for an existing epoch with
-    # the same rows — overwrite semantics must leave the table unchanged
-    epochs = sorted(glob.glob(f"{out}/__epoch=*"))
-    # localCheckpoint decouples the replay rows from the files the
-    # writer is about to overwrite (lazy read + overwrite of the same
-    # path would otherwise race itself)
-    replay_df = spark.read.parquet(epochs[0]).localCheckpoint(eager=True)
-    sink(replay_df, int(epochs[0].rsplit("=", 1)[1]))
-    return _reclaim(spark.read.parquet(f"{out}/__epoch=*"), src, out, _sink_ckpt)
 
 
 SQL_STREAM_IDEMPOTENT_SINK = """
@@ -4877,8 +4803,6 @@ def q_snapshot_time_travel(spark, sf_dir):
     configured).  Output: per (version, lang) doc counts + total text
     chars from the time-travel reads; oracle derives both versions
     straight from the source table."""
-    import tempfile
-
     from arabicner_spark.sources.io import TableIO
 
     root = tempfile.mkdtemp(prefix="arabicner_tt_")
@@ -5098,12 +5022,7 @@ def q_kg_pagerank_personalized(spark, sf_dir):
     # each replay the whole upstream chain (r7; DataFrame DAGs have no
     # common-subexpression reuse — the triangle_count precedent)
     edges = q_kg_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(PPR_SEEDS)
+    seeds = _seed_nodes(edges, PPR_SEEDS)
     pr = pagerank_personalized_exact(edges, seeds, iterations=5, damping_pct=85)
     return pr.select(
         "node", (F.col("rank_i").cast("double") / F.lit(float(PR_SCALE))).alias("rank")
@@ -5157,28 +5076,14 @@ def q_kg_temporal_reach(spark, sf_dir):
     reached node."""
     from arabicner_spark.operators.graph import temporal_reach
 
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    t = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
-    ab = F.broadcast(best_alias(spark, ALIAS_TD))
-    ts = transcripts(spark, sf_dir).select(
-        "conv_id", "turn_idx", F.unix_timestamp("ts").cast("long").alias("ts_epoch")
-    )
     edges = (
-        t.join(ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj")
-        .join(ab.select(F.col("alias").alias("obj"), F.col("entity_id").alias("dst")), "obj")
-        .join(ts, ["conv_id", "turn_idx"])
+        kg_prefix(spark, sf_dir, "edges", ts=True)
         .select("src", "dst", "ts_epoch")
         # materialized once: seeds AND the operator's edge checkpoint
-        # both consume it — without this the NER chain replays twice (r7)
+        # both consume it — without this the NER chain replays twice
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    seeds = nodes.orderBy("node").limit(TREACH_SEEDS)
-    return temporal_reach(edges, seeds, rounds=TREACH_ROUNDS)
+    return temporal_reach(edges, _seed_nodes(edges, TREACH_SEEDS), rounds=TREACH_ROUNDS)
 
 
 def _sql_treach_iter(prev: str, cur: str) -> str:
@@ -5218,15 +5123,7 @@ _SQL_EDGE_OCC = """occ AS (
 def _kg_edge_occurrences(spark, sf_dir):
     """Canonical edges, one row PER SUPPORTING OCCURRENCE (q_kg_edges
     without the final distinct — occurrences are fusion's votes)."""
-    m = ner.extract_mentions(transcripts(spark, sf_dir), gazetteer_dict_td())
-    t = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
-    ab = F.broadcast(best_alias(spark, ALIAS_TD))
-    t = t.join(
-        ab.select(F.col("alias").alias("subj"), F.col("entity_id").alias("src")), "subj"
-    ).join(
-        ab.select(F.col("alias").alias("obj"), F.col("entity_id").alias("dst")), "obj"
-    )
-    return t.select("src", "pred", "dst")
+    return kg_prefix(spark, sf_dir, "edges").select("src", "pred", "dst")
 
 
 def q_kg_fact_fusion(spark, sf_dir):

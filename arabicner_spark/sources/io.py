@@ -67,6 +67,21 @@ def local_table(spark: SparkSession, rows, schema) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def pin_width(spark: SparkSession) -> int:
+    """Partition count for explicit width pins on compute-bound,
+    bytes-small stages (shingle/minhash, pair-combinatorics — see
+    PLANS.md on AQE byte-based coalescing).  max() of core count and
+    the configured shuffle width: the pin replaces the AQE-sized
+    exchange, so pinning to bare defaultParallelism would CAP those
+    stages at cluster-core-count partitions on arbitrarily large
+    inputs (oversized partitions, no AQE split on the pinned
+    exchange)."""
+    return max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+
+
 def parquet_fingerprint(path: str) -> str:
     """md5 over the sorted (relative path, size) listing of a parquet
     directory — the parquet facade's snapshot id.  Part files carry

@@ -58,9 +58,14 @@ def test_lsh_recall_is_one_on_testdata(embeddings):
     assert missed == [], f"LSH blocking dropped true pairs: {missed}"
 
 
-def test_spark_result_equals_brute_force(spark, embeddings):
+@pytest.mark.parametrize("broadcast_max_bytes", [64 << 20, 0], ids=["broadcast", "shuffle"])
+def test_spark_result_equals_brute_force(spark, embeddings, monkeypatch, broadcast_max_bytes):
+    """Both sides of EMB_BROADCAST_MAX_BYTES: the broadcast Arrow bucket
+    verify, and (limit 0) the shuffle-join verify."""
+    from arabicner_spark.plans import testdata_queries
     from arabicner_spark.plans.testdata_queries import q_dedup_embedding
 
+    monkeypatch.setattr(testdata_queries, "EMB_BROADCAST_MAX_BYTES", broadcast_max_bytes)
     ids, X = embeddings
     expected = {
         (int(ids[a]), int(ids[b])) for a, b in _brute_force_pairs(X)

@@ -1,0 +1,84 @@
+"""Guards for the query registry's shared plumbing: the oracle SQL texts,
+the Spark job counts of the KG queries the benchmark runs, and the
+streaming drain's cleanup."""
+
+import hashlib
+import tempfile
+
+import pytest
+
+SF_DIR = "/root/testdata/sf0.001"
+
+# sha256 of every (name, oracle SQL) pair of the registry, sorted by name
+ORACLE_SQL_SHA256 = "b25bd544e2a18b890ff488892da7c73b10e910dc17a585ec8aa312ab36c874da"
+
+# Spark jobs one query takes at sf0.001 on the test session, collecting
+# its result included.  These queries are the KG half of the
+# registry_sf0.01 benchmark workload, whose cost is per-job overhead,
+# so a change to the KG prefix or the seed code must not add jobs.
+KG_JOB_BUDGET = {
+    "kg_edges": 5,
+    "kg_pagerank_personalized": 10,
+    "kg_temporal_reach": 12,
+}
+
+
+def test_oracle_sql_texts_are_pinned():
+    from arabicner_spark.plans.testdata_queries import QUERIES
+
+    pairs = sorted((name, sql) for name, (_fn, sql) in QUERIES.items())
+    digest = hashlib.sha256(repr(pairs).encode()).hexdigest()
+    assert digest == ORACLE_SQL_SHA256, (
+        "an oracle SQL text changed. Oracle text changes only with a "
+        "deliberate semantic change that the change states in CHANGES.md "
+        "(ROADMAP aim 3); update ORACLE_SQL_SHA256 in that same change"
+    )
+
+
+def test_kg_query_job_budget(spark):
+    from arabicner_spark.plans.testdata_queries import QUERIES
+
+    sc = spark.sparkContext
+    for name, budget in KG_JOB_BUDGET.items():
+        group = f"kg-job-budget-{name}"
+        sc.setJobGroup(group, "kg job budget")
+        try:
+            QUERIES[name][0](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < jobs <= budget, (name, jobs)
+
+
+def _tables(spark):
+    return {t.name for t in spark.catalog.listTables()}
+
+
+def test_stream_drain_drops_its_memory_sink_view(spark, tmp_path, monkeypatch):
+    """A memory sink keeps its rows on the driver under a temp view for
+    the session's life unless the view is dropped."""
+    from arabicner_spark.plans.testdata_queries import q_stream_dedup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = _tables(spark)
+    assert q_stream_dedup(spark, SF_DIR).count() > 0
+    assert _tables(spark) == before
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_stream_drain_cleans_up_after_a_failed_stream(spark, tmp_path, monkeypatch):
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    from arabicner_spark.plans.testdata_queries import _drain
+
+    def failing(src):
+        rows = spark.readStream.schema("id bigint").parquet(src)
+        return rows.select(F.assert_true(F.col("id") < 0).alias("ok"))
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    before = _tables(spark)
+    with pytest.raises(StreamingQueryException):
+        _drain(spark, spark.range(3), failing, lambda rows: rows)
+    assert _tables(spark) == before
+    assert list(tmp_path.iterdir()) == []
