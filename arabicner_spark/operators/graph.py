@@ -47,8 +47,8 @@ from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 from arabicner_spark.sources.io import local_table
 
 # Rows per input up to which the iterative operators replay on the
-# driver: 8M edges ~ 128 MB of Arrow, the class of components.py's
-# driver union-find.
+# driver: 8M edges ~ 128 MB of Arrow, 40x components.py's driver
+# union-find limit (DRIVER_LIMIT, 200,000 edges collected as rows).
 KCORE_LOCAL_EDGE_LIMIT = 8_000_000
 
 PR_SCALE = 10**9  # fixed-point unit of the exact PageRanks: 1 rank = 1e9

@@ -3,6 +3,11 @@ existing dedup state without re-shingling or re-hashing the old corpus
 — the operational shape of dedup at 100 TB, where the corpus grows
 daily and "recompute everything" is a non-starter.
 
+The document near-dup chain itself is written once here: exact_groups,
+near_bands and keep_decision, composed without state by dedup_decision
+(the registry's dedup queries, the corpus pipeline) and with
+checkpointed state by dedup_state / dedup_incremental.
+
 State kept from the previous run (all compact relative to the corpus):
   * hashes(h, rep)        — exact-text md5 -> group-min rep id
   * bands(id, band, sig)  — LSH band table of the exact-group REPS
@@ -31,7 +36,7 @@ so band tables built from either group representative agree.
 
 from __future__ import annotations
 
-from typing import Dict
+from typing import Dict, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,35 +45,82 @@ from arabicner_spark.functions import hashing
 from arabicner_spark.operators.components import connected_components_adaptive
 
 
-def dedup_state(docs: DataFrame, width: int | None = None) -> Dict[str, DataFrame]:
-    """Full run over ``docs`` (id string, text) -> state dict
-    {hashes, bands, comp} + the keep/drop table under 'decision'."""
+def exact_groups(docs: DataFrame) -> Tuple[DataFrame, DataFrame]:
+    """(groups, star) for exact-text dedup-before-LSH over ``docs``
+    (id string, text).
+
+    groups: (h, rep, text, ids), one row per DISTINCT text: its md5,
+    the group-min id, the text and the member ids.  star: rep->member
+    edges (a, b) within each exact group.  Identical texts always share
+    every band cell, so collapsing them to one rep before shingling
+    preserves connectivity EXACTLY while removing the LSH blowup a
+    mass-duplicated document causes (a 1M-copy boilerplate doc would
+    otherwise put 10^12 candidate pairs in one bucket; as star edges it
+    costs 1M rows).  Component ids are unchanged too: each group's min
+    IS its rep, so min-over-reps = min-over-members.
+    """
     g = docs.groupBy(hashing.md5_utf8(F.col("text")).alias("h")).agg(
         F.min("id").alias("rep"),
         F.min("text").alias("text"),
         F.collect_set("id").alias("ids"),
     )
-    hashes = g.select("h", "rep").localCheckpoint(eager=True)
     star = g.select(
         F.col("rep").alias("a"), F.explode("ids").alias("b")
     ).where(F.col("a") != F.col("b"))
-    reps = g.select(F.col("rep").alias("id"), "text")
-    # distinct=False + width=None: minhash's min is duplicate-
-    # insensitive, so the shingle distinct exchange is skipped and the
-    # explode feeds the map-side partial min directly (r7, guide 2.3)
-    sh = hashing.word_shingles(reps, ["id"], "text", n=3, width=width, distinct=False)
+    return g, star
+
+
+def _reps(groups: DataFrame) -> DataFrame:
+    return groups.select(F.col("rep").alias("id"), "text")
+
+
+def near_bands(docs: DataFrame, width: int | None = None) -> DataFrame:
+    """LSH band table (id, band, sig) of ``docs`` (id, text): word
+    3-gram shingles -> 16 affine minhashes -> 8 bands of 2, the one
+    document near-dup signature policy (its SQL mirror is
+    testdata_queries._sql_minhash_cte).
+
+    distinct=False: minhash is a min, so the shingle distinct is
+    redundant — the explode feeds the min's map-side partial agg in one
+    stage and the shuffle carries one row of longs per id (r7, guide
+    section 2.3).  ``width`` pins the shingle stage's partition count
+    (see hashing.word_shingles)."""
+    sh = hashing.word_shingles(docs, ["id"], "text", n=3, width=width, distinct=False)
     sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
-    bands = hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2).localCheckpoint(
-        eager=True
+    return hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2)
+
+
+def keep_decision(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """(node, keep): connected components over ``edges`` (a, b), then
+    every row of ``nodes`` (node) keeps its component's min id, or
+    itself when no edge touches it (singletons)."""
+    cc = connected_components_adaptive(edges)
+    return nodes.join(cc, "node", "left").select(
+        "node", F.coalesce("component", "node").alias("keep")
     )
+
+
+def dedup_decision(docs: DataFrame, width: int | None = None) -> DataFrame:
+    """docs (id string, text) -> (node, keep): exact-group star edges
+    UNION near-dup LSH pairs of the reps -> components -> min id kept.
+    Nothing is checkpointed beyond what the pair join and CC do
+    themselves, so a caller that reads only the decision pays for no
+    state tables."""
+    g, star = exact_groups(docs)
+    near = hashing.lsh_candidate_pairs(near_bands(_reps(g), width), "id")
+    return keep_decision(docs.select(F.col("id").alias("node")), star.unionByName(near))
+
+
+def dedup_state(docs: DataFrame, width: int | None = None) -> Dict[str, DataFrame]:
+    """Full run over ``docs`` (id string, text) -> state dict
+    {hashes, bands, comp} + the keep/drop table under 'decision'."""
+    g, star = exact_groups(docs)
+    hashes = g.select("h", "rep").localCheckpoint(eager=True)
+    bands = near_bands(_reps(g), width).localCheckpoint(eager=True)
     near = hashing.lsh_candidate_pairs(bands, "id")
-    cc = connected_components_adaptive(star.unionByName(near))
-    decision = (
-        docs.select(F.col("id").alias("node"))
-        .join(cc, "node", "left")
-        .select("node", F.coalesce("component", "node").alias("keep"))
-        .localCheckpoint(eager=True)
-    )
+    decision = keep_decision(
+        docs.select(F.col("id").alias("node")), star.unionByName(near)
+    ).localCheckpoint(eager=True)
     return {"hashes": hashes, "bands": bands, "comp": decision, "decision": decision}
 
 
@@ -128,23 +180,8 @@ def dedup_incremental(
     seen_edges = seen.select(F.col("rep").alias("a"), F.col("id").alias("b"))
 
     unseen = nh.join(state["hashes"], "h", "left_anti")
-    g = unseen.groupBy("h").agg(
-        F.min("id").alias("rep"),
-        F.min("text").alias("text"),
-        F.collect_set("id").alias("ids"),
-    )
-    new_star = g.select(
-        F.col("rep").alias("a"), F.explode("ids").alias("b")
-    ).where(F.col("a") != F.col("b"))
-    new_reps = g.select(F.col("rep").alias("id"), "text")
-
-    sh = hashing.word_shingles(
-        new_reps, ["id"], "text", n=3, width=width, distinct=False
-    )
-    sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
-    new_bands = hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2).localCheckpoint(
-        eager=True
-    )
+    g, new_star = exact_groups(unseen.select("id", "text"))
+    new_bands = near_bands(_reps(g), width).localCheckpoint(eager=True)
     # new x old candidates: one equi-join on the band key
     cross = (
         new_bands.select("band", "sig", F.col("id").alias("b"))
@@ -164,15 +201,10 @@ def dedup_incremental(
     edges = old_star.unionByName(seen_edges).unionByName(new_star).unionByName(
         cross
     ).unionByName(nn)
-    cc = connected_components_adaptive(edges)
     all_nodes = state["comp"].select("node").unionByName(
         new_docs.select(F.col("id").alias("node"))
     )
-    decision = (
-        all_nodes.join(cc, "node", "left")
-        .select("node", F.coalesce("component", "node").alias("keep"))
-        .localCheckpoint(eager=True)
-    )
+    decision = keep_decision(all_nodes, edges).localCheckpoint(eager=True)
     return {
         "hashes": state["hashes"].unionByName(g.select("h", "rep")),
         "bands": state["bands"].unionByName(new_bands),

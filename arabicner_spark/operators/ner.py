@@ -20,17 +20,16 @@ Scale design:
     skew, only join/agg skew);
   * the gazetteer/weights are broadcast once per executor, not shipped
     per task closure;
-  * batched argmax over the padded (B, T, L, C) tensor — the Arrow batch
-    is the vectorization unit, mirroring the reference's collate
-    (arabiner/data/datasets.py:128-150) with pad-to-batch-max
-    (dynamic padding, not global max).
+  * a batched ``score_fn`` gets one forward per collate chunk of the
+    Arrow batch, mirroring the reference's collate
+    (arabiner/data/datasets.py:128-150); each turn's logits are then
+    decoded by the serial oracle's own ``tagcore.decode_turn`` call.
 """
 
 from __future__ import annotations
 
 from typing import Dict, Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -68,7 +67,6 @@ def make_score_batches(bc, score_fn=None, encoder=None, passthrough: tuple = ())
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         gaz, typs, msl = bc.value
         pg = tagcore.prepare(gaz)  # first-token index, built once per task
-        n_levels = len(typs)
         # normalize is pure; corpora repeat tokens heavily, so a
         # per-task memo turns most calls into one dict hit.  Bounded:
         # a long-lived worker sees an open vocabulary at scale, so the
@@ -88,10 +86,10 @@ def make_score_batches(bc, score_fn=None, encoder=None, passthrough: tuple = ())
             out = {k: [] for k in schemas.MENTIONS.fieldNames()}
             for c in passthrough:
                 out[c] = []
-            # collate in sub-batches with pad-to-SUB-batch-max (the
-            # reference's dynamic padding, datasets.py:139-148): one
-            # 600-token turn must not blow the padded tensor up to
-            # B_arrow x T_max — Arrow batches can be 10^4 rows.
+            # collate in sub-batches: a batched score_fn's forward
+            # (and whatever it pads to, datasets.py:139-148) is bounded
+            # by COLLATE turns, not the Arrow batch — Arrow batches can
+            # be 10^4 rows.
             for lo in range(0, len(texts), COLLATE):
                 chunk = texts[lo : lo + COLLATE]
                 toks = [t.split() for t in chunk]
@@ -108,22 +106,9 @@ def make_score_batches(bc, score_fn=None, encoder=None, passthrough: tuple = ())
                         score_fn(n, pg, typs, msl, enc=e)
                         for n, e in zip(norm, enc)
                     ]
-                T = max((lg.shape[0] for lg in logits), default=0)
-                batch = np.zeros(
-                    (len(logits), T, n_levels, tagcore.N_LABELS), np.float32
-                )
-                batch[:, :, :, tagcore.O_ID] = 1.0
-                for i, lg in enumerate(logits):
-                    batch[i, : lg.shape[0]] = lg
-                ids = np.argmax(batch, axis=-1)  # (B, T, L)
-                for i, e in enumerate(enc):
-                    first_idx, n_tag = e[0], e[2]
-                    spans = tagcore.decode_turn(
-                        # decode_turn argmaxes again; hand it the
-                        # one-turn slice as a one-hot rebuild to keep
-                        # decode single-sourced with the oracle.
-                        _onehot(ids[i]), first_idx, n_tag, typs
-                    )
+                for i, (lg, e) in enumerate(zip(logits, enc)):
+                    # the serial oracle's own decode call, per turn
+                    spans = tagcore.decode_turn(lg, e[0], e[2], typs)
                     gi = lo + i
                     for lvl, typ, s, en in spans:
                         out["conv_id"].append(convs[gi])
@@ -202,10 +187,3 @@ def extract_mentions(
     score_batches = make_score_batches(bc, score_fn=score_fn, encoder=encoder)
     return pruned.mapInPandas(score_batches, schema=schemas.MENTIONS)
 
-
-def _onehot(ids: np.ndarray) -> np.ndarray:
-    """(T, L) label ids -> (T, L, C) one-hot so decode_turn's argmax
-    recovers exactly these ids (keeps decode single-sourced)."""
-    out = np.zeros(ids.shape + (tagcore.N_LABELS,), np.float32)
-    np.put_along_axis(out, ids[..., None], 1.0, axis=-1)
-    return out

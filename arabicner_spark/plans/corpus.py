@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from arabicner_spark.functions.pii import scrub_pii
 from arabicner_spark.functions.sampling import weighted_sample
-from arabicner_spark.operators.incremental import dedup_state
+from arabicner_spark.operators.incremental import dedup_decision
 from arabicner_spark.operators.pack import pack_sequences
 from arabicner_spark.operators.tokencount import subword_counts_expr
 from arabicner_spark.plans.lineage import StageRunner
@@ -58,13 +58,13 @@ class CorpusConfig:
 
 
 def _dedup_keep(docs: DataFrame, width) -> DataFrame:
-    """(doc_id, keep_doc) via the SHARED full-run dedup chain
-    (operators/incremental.py::dedup_state) — one definition of the
-    exact-star + MinHash-LSH + CC survivors composition serves both the
-    corpus pipeline and the incremental-state path."""
+    """(doc_id, keep_doc) via the SHARED dedup chain
+    (operators/incremental.py::dedup_decision) — one definition of the
+    exact-star + MinHash-LSH + CC survivors composition serves the
+    corpus pipeline, the registry and the incremental-state path.  Only
+    the decision is read, so no hashes/bands state is materialized."""
     d = docs.select(F.col("doc_id").cast("string").alias("id"), "text")
-    decision = dedup_state(d, width=width)["decision"]
-    return decision.select(
+    return dedup_decision(d, width=width).select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("keep").cast("bigint").alias("keep_doc"),
     )

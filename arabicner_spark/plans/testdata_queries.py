@@ -29,6 +29,7 @@ testdata refresh fails with a diagnosis, not a bare hash MISMATCH.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -42,7 +43,7 @@ from pyspark.sql.window import Window
 
 from arabicner_spark.functions import hashing
 from arabicner_spark.operators import ner, triples as triples_op
-from arabicner_spark.operators.components import connected_components_adaptive
+from arabicner_spark.operators.incremental import dedup_decision, near_bands
 from arabicner_spark.operators.linking import best_alias
 from arabicner_spark.sources.io import local_table, pin_width
 from arabicner_spark.streaming import ingest
@@ -115,15 +116,22 @@ def table_bytes(sf_dir: str, name: str) -> int:
 EMB_BROADCAST_MAX_BYTES = 64 << 20
 
 
-def _reclaim(df: DataFrame, *paths: str) -> DataFrame:
-    """Materialize a (small) gate-query result, then delete the temp
-    dirs it was computed from — the q_snapshot_time_travel pattern
-    applied everywhere (VERDICT r6 #7: streaming/corpus/compaction
-    gate queries leaked a few dozen MB of /tmp per full gate run)."""
-    out = df.localCheckpoint(eager=True)
-    for p in paths:
-        shutil.rmtree(p, ignore_errors=True)
-    return out
+@contextlib.contextmanager
+def _temp_dirs(*names: str):
+    """Yield one fresh temp dir per name (prefix ``arabicner_<name>_``)
+    and delete them all on exit, whether the body returned or raised.
+    A gate query materializes its (small) result inside the block, so
+    nothing it returns reads these dirs (VERDICT r6 #7: streaming,
+    corpus and compaction gate queries leaked a few dozen MB of /tmp
+    per full gate run; a failed query must not leak them either)."""
+    dirs = []
+    try:
+        for n in names:
+            dirs.append(tempfile.mkdtemp(prefix=f"arabicner_{n}_"))
+        yield dirs
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def _drain(spark, src_df, stream_of, result_of, mode="append", sink_of=None):
@@ -132,29 +140,26 @@ def _drain(spark, src_df, stream_of, result_of, mode="append", sink_of=None):
     ``src_df`` is written as the parquet source of ``stream_of(src)``,
     which drains with availableNow into a memory sink in output
     ``mode`` — or, given ``sink_of``, through
-    ``foreachBatch(sink_of(stream, out))`` into a temp directory
+    ``foreachBatch(sink_of(out))`` into a temp directory
     ``out``.  ``result_of`` shapes the memory sink's table (or reads
     ``out``).  Once that is checkpointed, or the run fails, the temp
     dirs and the sink's view, with the rows it holds on the driver, are
     dropped."""
-    dirs = [tempfile.mkdtemp(prefix=f"arabicner_stream_{d}_") for d in ("src", "ckpt", "out")]
-    src, ckpt, out = dirs
     name = f"stream_{uuid.uuid4().hex[:8]}"
-    try:
-        src_df.write.mode("overwrite").parquet(src)
-        stream = stream_of(src)
-        if sink_of is None:
-            writer = stream.writeStream.format("memory").queryName(name).outputMode(mode)
-        else:
-            writer = stream.writeStream.foreachBatch(sink_of(stream, out))
-        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-        q.awaitTermination()
-        rows = spark.table(name) if sink_of is None else out
-        return result_of(rows).localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView(name)
-        for d in dirs:
-            shutil.rmtree(d, ignore_errors=True)
+    with _temp_dirs("stream_src", "stream_ckpt", "stream_out") as (src, ckpt, out):
+        try:
+            src_df.write.mode("overwrite").parquet(src)
+            stream = stream_of(src)
+            if sink_of is None:
+                writer = stream.writeStream.format("memory").queryName(name).outputMode(mode)
+            else:
+                writer = stream.writeStream.foreachBatch(sink_of(out))
+            q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+            q.awaitTermination()
+            rows = spark.table(name) if sink_of is None else out
+            return result_of(rows).localCheckpoint(eager=True)
+        finally:
+            spark.catalog.dropTempView(name)
 
 
 def transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,8 +519,8 @@ def q_stream_kg_triples(spark, sf_dir):
     gaz = gazetteer_dict_td()
     cols = ["subj", "pred", "obj", "conv_id", "turn_idx", "subj_type", "obj_type"]
 
-    def sink_of(stream, out):
-        write = ingest.idempotent_parquet_sink(stream, out, cols)
+    def sink_of(out):
+        write = ingest.idempotent_parquet_sink(out, cols)
         return lambda batch_df, epoch_id: write(
             triples_op.extract_triples(
                 ner.extract_mentions(batch_df, gaz), PREDS_TD, WINDOW_TD
@@ -780,51 +785,17 @@ SELECT t.conv_id,
 FROM t GROUP BY t.conv_id"""
 
 
-def _exact_group_reps(d):
-    """(reps, star) for exact-text dedup-before-LSH.
-
-    reps: one representative row (id = group min, text) per DISTINCT
-    text; star: rep->member edges within each exact group.  Identical
-    texts always share every band cell, so collapsing them to one rep
-    before shingling preserves connectivity EXACTLY while removing the
-    LSH blowup a mass-duplicated document causes (a 1M-copy boilerplate
-    doc would otherwise put 10^12 candidate pairs in one bucket; as
-    star edges it costs 1M rows).  Component ids are unchanged too:
-    each group's min IS its rep, so min-over-reps = min-over-members.
-    """
-    g = d.groupBy(hashing.md5_utf8(F.col("text")).alias("h")).agg(
-        F.min("id").alias("a"),
-        F.min("text").alias("text"),
-        F.collect_set("id").alias("ids"),
-    )
-    reps = g.select(F.col("a").alias("id"), "text")
-    star = g.select("a", F.explode("ids").alias("b")).where(F.col("a") != F.col("b"))
-    return reps, star
-
-
 def q_kg_components(spark, sf_dir):
     """MinHash-LSH blocking over documents + connected components
-    (the REAL large-star/small-star operator), singletons included.
-    LSH runs on exact-text representatives only (see _exact_group_reps)
+    (the REAL large-star/small-star operator), singletons included:
+    the shared dedup chain (incremental.dedup_decision), whose LSH runs
+    on exact-text representatives only (see incremental.exact_groups)
     — identical output, mass-duplication-proof plan."""
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
-    reps, star = _exact_group_reps(d)
-    # distinct=False + width=None: minhash is a min, so the shingle
-    # distinct is redundant — the explode feeds the min's map-side
-    # partial agg in one stage and the shuffle carries one row of
-    # longs per id (r7, guide section 2.3)
-    sh = hashing.word_shingles(
-        reps, ["id"], "text", n=3, width=pin_width(spark), distinct=False
-    )
-    sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
-    pairs = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2), "id"
-    )
-    comp = connected_components_adaptive(pairs.unionByName(star))
-    return d.select(F.col("id").alias("node")).join(comp, "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component")
+    return dedup_decision(d, pin_width(spark)).select(
+        "node", F.col("keep").alias("component")
     )
 
 
@@ -1085,15 +1056,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
-    # distinct=False + width=None: the min-fold makes the shingle
-    # distinct redundant (r7, guide section 2.3 — see word_shingles)
-    sh = hashing.word_shingles(
-        d, ["id"], "text", n=3, width=pin_width(spark), distinct=False
-    )
-    sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
-    pairs = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2), "id"
-    )
+    pairs = hashing.lsh_candidate_pairs(near_bands(d, pin_width(spark)), "id")
     return pairs.select(
         F.col("a").cast("bigint").alias("a"), F.col("b").cast("bigint").alias("b")
     )
@@ -2275,24 +2238,14 @@ def q_dedup_survivors(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
-    # exact groups give both the star edges AND the LSH input (reps
-    # only — see _exact_group_reps for why this is output-identical)
-    reps, exact = _exact_group_reps(d)
-    # distinct=False + width=None: min-fold, see word_shingles (r7)
-    sh = hashing.word_shingles(
-        reps, ["id"], "text", n=3, width=pin_width(spark), distinct=False
-    )
-    sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
-    near = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2), "id"
-    )
-    comp = connected_components_adaptive(exact.unionByName(near))
+    # the shared chain: exact groups give both the star edges AND the
+    # LSH input (reps only — see incremental.exact_groups for why this
+    # is output-identical)
     return (
-        d.select(F.col("id").alias("node"))
-        .join(comp, "node", "left")
+        dedup_decision(d, pin_width(spark))
         .select(
             F.col("node").cast("bigint").alias("doc_id"),
-            F.coalesce("component", "node").cast("bigint").alias("keep_doc"),
+            F.col("keep").cast("bigint").alias("keep_doc"),
         )
         .withColumn("is_survivor", F.col("doc_id") == F.col("keep_doc"))
     )
@@ -2338,9 +2291,9 @@ def q_corpus_pipeline(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")
     cfg = CorpusConfig(sample_k=200, chunk=512, min_tokens=3, lsh_width=pin_width(spark))
-    root = tempfile.mkdtemp(prefix="arabicner_corpus_")
-    out = run_corpus_pipeline(spark, d, cfg, root, run_id="gate")
-    return _reclaim(out["packed"], root)
+    with _temp_dirs("corpus") as (root,):
+        out = run_corpus_pipeline(spark, d, cfg, root, run_id="gate")
+        return out["packed"].localCheckpoint(eager=True)
 
 
 def _sql_corpus_pipeline() -> str:
@@ -2430,12 +2383,11 @@ def q_compact_roundtrip(spark, sf_dir):
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
         F.expr("CAST(round(value * 100, 0) AS BIGINT)").alias("cents"),
     )
-    frag = tempfile.mkdtemp(prefix="arabicner_frag_")
-    out = tempfile.mkdtemp(prefix="arabicner_compact_")
-    ev.repartition(64).write.mode("overwrite").parquet(frag)  # the small-file mess
-    small = spark.read.parquet(frag)
-    compact_by_range(small, out, ["user_id", "ts_us"], n_files=4)
-    return _reclaim(spark.read.parquet(out), frag, out)
+    with _temp_dirs("frag", "compact") as (frag, out):
+        ev.repartition(64).write.mode("overwrite").parquet(frag)  # the small-file mess
+        small = spark.read.parquet(frag)
+        compact_by_range(small, out, ["user_id", "ts_us"], n_files=4)
+        return spark.read.parquet(out).localCheckpoint(eager=True)
 
 
 SQL_COMPACT_ROUNDTRIP = """
@@ -2885,20 +2837,16 @@ def q_conll_roundtrip(spark, sf_dir):
         for w in r.text.split(" "):
             lines.append(f"{w} O MISC" if len(w) % 2 == 0 else f"{w} O")
         lines.append("")
-    tmpd = tempfile.mkdtemp(prefix="arabicner_conll_rt_")
-    path = os.path.join(tmpd, "docs.conll")
-    with open(path, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    df = read_conll(spark, path)
-    return _reclaim(
-        df.select(
+    with _temp_dirs("conll_rt") as (tmpd,):
+        path = os.path.join(tmpd, "docs.conll")
+        with open(path, "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        return read_conll(spark, path).select(
             F.col("seg_id").cast("bigint").alias("seg_id"),
             "pos",
             "token",
             F.array_join("tags", "|").alias("tags"),
-        ),
-        tmpd,
-    )
+        ).localCheckpoint(eager=True)
 
 
 SQL_CONLL_ROUNDTRIP = """
@@ -2942,13 +2890,12 @@ def q_tsv_process(spark, sf_dir):
         lines.append(f"0\t{r.doc_id}\tx\tbad token\tO")  # multi-word -> drop
         lines.append(f"0\t{r.doc_id}\tx\tjunk\tBAD")  # label w/o '-' -> drop
         lines.append(f"0\t{r.doc_id}\tx\t\tO")  # empty token -> drop
-    tmpd = tempfile.mkdtemp(prefix="arabicner_tsv_")
-    path = os.path.join(tmpd, "export.tsv")
-    with open(path, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    seg = to_segments(clean_rows(read_wojood_tsv(spark, path)))
-    return _reclaim(
-        seg.select(
+    with _temp_dirs("tsv") as (tmpd,):
+        path = os.path.join(tmpd, "export.tsv")
+        with open(path, "w") as fh:
+            fh.write("\n".join(lines) + "\n")
+        seg = to_segments(clean_rows(read_wojood_tsv(spark, path)))
+        return seg.select(
             F.col("seg_id").cast("bigint").alias("seg_id"),
             F.posexplode("tokens").alias("pos", "t"),
         ).select(
@@ -2956,9 +2903,7 @@ def q_tsv_process(spark, sf_dir):
             "pos",
             F.col("t.token").alias("token"),
             F.array_join("t.labels", "|").alias("labels"),
-        ),
-        tmpd,
-    )
+        ).localCheckpoint(eager=True)
 
 
 SQL_TSV_PROCESS = """
@@ -4466,7 +4411,7 @@ def q_stream_idempotent_sink(spark, sf_dir):
         # writer is about to overwrite (lazy read + overwrite of the same
         # path would otherwise race itself)
         replay_df = spark.read.parquet(epochs[0]).localCheckpoint(eager=True)
-        sink = ingest.idempotent_parquet_sink(replay_df, out, cols)
+        sink = ingest.idempotent_parquet_sink(out, cols)
         sink(replay_df, int(epochs[0].rsplit("=", 1)[1]))
         return spark.read.parquet(f"{out}/__epoch=*")
 
@@ -4479,7 +4424,7 @@ def q_stream_idempotent_sink(spark, sf_dir):
         .option("maxFilesPerTrigger", 2)
         .parquet(src),
         result_of,
-        sink_of=lambda stream, out: ingest.idempotent_parquet_sink(stream, out, cols),
+        sink_of=lambda out: ingest.idempotent_parquet_sink(out, cols),
     )
 
 
@@ -4805,11 +4750,7 @@ def q_snapshot_time_travel(spark, sf_dir):
     straight from the source table."""
     from arabicner_spark.sources.io import TableIO
 
-    root = tempfile.mkdtemp(prefix="arabicner_tt_")
-    io = TableIO(spark, root, "parquet")
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    v1 = io.write_snapshot(d.where(F.col("doc_id") % 2 == 0), "docs")
-    io.write_snapshot(d, "docs")
 
     def agg(df, version):
         return (
@@ -4826,16 +4767,16 @@ def q_snapshot_time_travel(spark, sf_dir):
             )
         )
 
-    old = agg(io.read_snapshot("docs", version=v1), 1)
-    latest = agg(io.read_snapshot("docs"), 2)
-    # materialize the (tiny) aggregates, then reclaim the snapshot root
-    # — returning a lazy df over the tempdir would leak two copies of
-    # the documents table per gate/bench invocation
-    out = old.unionByName(latest).localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+    # materialize the (tiny) aggregates before the snapshot root goes —
+    # a lazy df over the tempdir would leak two copies of the documents
+    # table per gate/bench invocation
+    with _temp_dirs("tt") as (root,):
+        io = TableIO(spark, root, "parquet")
+        v1 = io.write_snapshot(d.where(F.col("doc_id") % 2 == 0), "docs")
+        io.write_snapshot(d, "docs")
+        old = agg(io.read_snapshot("docs", version=v1), 1)
+        latest = agg(io.read_snapshot("docs"), 2)
+        return old.unionByName(latest).localCheckpoint(eager=True)
 
 
 SQL_SNAPSHOT_TIME_TRAVEL = """

@@ -176,9 +176,7 @@ def dedup_within_watermark(
     )
 
 
-def idempotent_parquet_sink(
-    stream: DataFrame, out_dir: str, key_cols
-) -> "callable":
+def idempotent_parquet_sink(out_dir: str, key_cols) -> "callable":
     """foreachBatch writer with EXACTLY-ONCE table semantics on top of
     Structured Streaming's at-least-once batch replay: each micro-batch
     lands in a partition directory keyed by its epoch id

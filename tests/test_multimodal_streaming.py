@@ -222,7 +222,7 @@ def test_idempotent_sink_replay_safe(spark, tmp_path):
 
     df = spark.range(100).selectExpr("id AS event_id", "id % 7 AS user_id")
     out = str(tmp_path / "idem")
-    sink = idempotent_parquet_sink(df, out, ["event_id", "user_id"])
+    sink = idempotent_parquet_sink(out, ["event_id", "user_id"])
     sink(df, 0)
     sink(df.where("event_id >= 50"), 1)
     assert spark.read.parquet(f"{out}/__epoch=*").count() == 150

@@ -1,6 +1,7 @@
 """Guards for the query registry's shared plumbing: the oracle SQL texts,
-the Spark job counts of the KG queries the benchmark runs, and the
-streaming drain's cleanup."""
+the Spark job counts of the KG queries the benchmark runs and of the
+document dedup family, and the temp-dir cleanup of the streaming drain
+and the file-backed gate queries."""
 
 import hashlib
 import tempfile
@@ -22,6 +23,19 @@ KG_JOB_BUDGET = {
     "kg_temporal_reach": 12,
 }
 
+# The same count for the document near-dup family, which shares one
+# chain (operators/incremental.py).  bench.py's headline runs
+# kg_components, dedup_minhash_lsh and dedup_jaccard; corpus_pipeline
+# reads only the keep decision, so it materializes no dedup state.
+DEDUP_JOB_BUDGET = {
+    "kg_components": 11,
+    "dedup_survivors": 11,
+    "dedup_minhash_lsh": 6,
+    "dedup_jaccard": 12,
+    "dedup_incremental": 31,
+    "corpus_pipeline": 27,
+}
+
 
 def test_oracle_sql_texts_are_pinned():
     from arabicner_spark.plans.testdata_queries import QUERIES
@@ -35,19 +49,27 @@ def test_oracle_sql_texts_are_pinned():
     )
 
 
-def test_kg_query_job_budget(spark):
+def _assert_job_budget(spark, budgets):
     from arabicner_spark.plans.testdata_queries import QUERIES
 
     sc = spark.sparkContext
-    for name, budget in KG_JOB_BUDGET.items():
-        group = f"kg-job-budget-{name}"
-        sc.setJobGroup(group, "kg job budget")
+    for name, budget in budgets.items():
+        group = f"job-budget-{name}"
+        sc.setJobGroup(group, "job budget")
         try:
             QUERIES[name][0](spark, SF_DIR).collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         assert 0 < jobs <= budget, (name, jobs)
+
+
+def test_kg_query_job_budget(spark):
+    _assert_job_budget(spark, KG_JOB_BUDGET)
+
+
+def test_dedup_query_job_budget(spark):
+    _assert_job_budget(spark, DEDUP_JOB_BUDGET)
 
 
 def _tables(spark):
@@ -81,4 +103,20 @@ def test_stream_drain_cleans_up_after_a_failed_stream(spark, tmp_path, monkeypat
     with pytest.raises(StreamingQueryException):
         _drain(spark, spark.range(3), failing, lambda rows: rows)
     assert _tables(spark) == before
+    assert list(tmp_path.iterdir()) == []
+
+
+def test_failed_gate_query_removes_its_temp_dirs(spark, tmp_path, monkeypatch):
+    """A file-backed gate query deletes its temp dirs when it raises
+    half-way, not only after a successful checkpoint."""
+    from arabicner_spark.plans.testdata_queries import q_conll_roundtrip
+    from arabicner_spark.sources import conll_spark
+
+    def broken_read_conll(spark, path):
+        raise RuntimeError("read failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(conll_spark, "read_conll", broken_read_conll)
+    with pytest.raises(RuntimeError, match="read failed"):
+        q_conll_roundtrip(spark, SF_DIR)
     assert list(tmp_path.iterdir()) == []

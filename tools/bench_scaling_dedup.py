@@ -105,10 +105,8 @@ def generate(docs_path: str, edges_path: str, n_docs: int, n_edges: int) -> None
 def worker(cores: int, docs_path: str, edges_path: str) -> None:
     from pyspark.sql import functions as F
 
-    from arabicner_spark.functions import hashing
-    from arabicner_spark.operators.components import connected_components_adaptive
     from arabicner_spark.operators.graph import triangle_count
-    from arabicner_spark.plans.testdata_queries import _exact_group_reps
+    from arabicner_spark.operators.incremental import dedup_decision
 
     spark = _session(cores, f"nonkg-scaling-{cores}")
     # fixed shuffle width (64) at BOTH levels: production posture is
@@ -133,14 +131,9 @@ def worker(cores: int, docs_path: str, edges_path: str) -> None:
     n_docs = docs.count()  # force scan before the clock
 
     t0 = time.time()
-    reps, exact = _exact_group_reps(docs)
-    sh = hashing.word_shingles(reps, ["id"], "text", n=3, width=width)
-    sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16, width=width)
-    near = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2), "id"
-    )
-    comp = connected_components_adaptive(exact.unionByName(near))
-    n_dropped = comp.where(F.col("node") != F.col("component")).count()
+    # the shared chain every dedup caller runs (incremental.dedup_decision)
+    decision = dedup_decision(docs, width=width)
+    n_dropped = decision.where(F.col("node") != F.col("keep")).count()
     dedup_wall = time.time() - t0
 
     edges = spark.read.parquet(edges_path)
