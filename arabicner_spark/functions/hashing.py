@@ -270,6 +270,16 @@ def lsh_bands(
     ).select(*id_cols, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
+def _checkpointed(df: DataFrame) -> DataFrame:
+    """``df`` materialized once: a frame that already is an eager
+    checkpoint (a caller keeping its band table as state) is returned
+    as it is instead of being copied by a second checkpoint job."""
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD" and plan.rdd().isCheckpointed():
+        return df
+    return df.localCheckpoint(eager=True)
+
+
 def lsh_candidate_pairs(
     bands_df: DataFrame,
     id_col: str,
@@ -280,10 +290,10 @@ def lsh_candidate_pairs(
     The shuffle key (band, sig) is high-cardinality; genuinely hot
     buckets (many near-identical texts) are exactly the pairs we want,
     and AQE skew-join splitting handles pathological buckets.  The band
-    table is checkpointed first: both join sides reference the same
-    upstream (shingle -> minhash) pipeline, and without materialization
-    Spark executes it twice (exchange reuse dies as soon as AQE
-    broadcasts one side).
+    table is checkpointed first, unless it already is a checkpoint:
+    both join sides reference the same upstream (shingle -> minhash)
+    pipeline, and without materialization Spark executes it twice
+    (exchange reuse dies as soon as AQE broadcasts one side).
 
     ``width``: explicit partition count for the pair join + distinct.
     The band table is BYTES-small (AQE coalesces its exchange to ~1
@@ -293,7 +303,7 @@ def lsh_candidate_pairs(
     stage (PLANS.md): pin the width when candidates >> bands.
     """
     keys = ["band", "sig"]
-    bands_df = bands_df.localCheckpoint(eager=True)
+    bands_df = _checkpointed(bands_df)
     if width:
         bands_df = bands_df.repartition(width, *[F.col(c) for c in keys])
     a = bands_df.select(F.col(id_col).alias("a"), *keys)

@@ -13,11 +13,13 @@ verbatim with the serial oracle.
 Scale design:
   * column pruning BEFORE the Python stage — only (conv_id, turn_idx,
     text) crosses the Arrow boundary;
-  * skew: a hot conversation must not land in a single Arrow batch, so
-    the stage input is repartitioned on the full (conv_id, turn_idx)
-    turn key — per-turn scoring needs no conversation locality, and the
-    full key is uniform under any conv skew (AQE cannot fix UDF-stage
-    skew, only join/agg skew);
+  * width by input bytes: the Python stage gets one task per
+    ``PY_TASK_BYTES`` of estimated input, up to the cluster's
+    parallelism.  Extra scan splits are coalesced (narrow, no job); a
+    wider need than the input's split count repartitions on the full
+    (conv_id, turn_idx) turn key, which is uniform under any
+    conversation skew (AQE cannot fix UDF-stage skew, only join/agg
+    skew); ``salt_partitions`` always forces that repartition;
   * the gazetteer/weights are broadcast once per executor, not shipped
     per task closure;
   * a batched ``score_fn`` gets one forward per collate chunk of the
@@ -37,6 +39,18 @@ from pyspark.sql import functions as F
 from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.functions.normalize import normalize_py
+
+# Estimated input bytes per Python task of extract_mentions (the
+# optimizer's sizeInBytes of the pruned (conv_id, turn_idx, text)
+# input, which reads ~180 KB for 350 KB of transcript parquet).  Every
+# Python task pays ~0.25-0.35 CPU-s of worker set-up (pyspark's
+# setup_spark_files re-scans pyspark.zip's directory for each
+# zipimporter) and holds its own ~127 MB worker process, while the
+# scoring closure takes ~0.5 CPU-s for those 350 KB.  So a 350 KB
+# corpus split over 4 tasks paid more set-up than scoring; at 8 MB a
+# task scores ~20 CPU-s and the set-up stays ~1-2% of it.  The price is
+# wall time on mid-sized inputs, which run on fewer cores.
+PY_TASK_BYTES = 8 << 20
 
 
 def make_score_batches(bc, score_fn=None, encoder=None, passthrough: tuple = ()):
@@ -147,8 +161,9 @@ def extract_mentions(
     """transcripts -> mentions (schemas.MENTIONS).
 
     ``gazetteer`` is the normalized {type: {phrase tuples}} dict (small;
-    broadcast).  ``salt_partitions`` sets the width of the full-turn-key
-    repartition that breaks conversation skew before the Python stage.
+    broadcast).  ``salt_partitions`` forces a full-turn-key repartition
+    of that width before the Python stage; by default the width follows
+    the input's estimated bytes (``PY_TASK_BYTES``).
 
     ``score_fn`` / ``encoder`` plug in a real model + tokenizer (see
     make_score_batches and functions.bert_scorer.attach); defaults are
@@ -159,30 +174,33 @@ def extract_mentions(
     bc = spark.sparkContext.broadcast((gazetteer, types, max_seq_len))
 
     pruned = transcripts.select("conv_id", "turn_idx", "text")
-    # Always salt-repartition the Python stage input: (a) a hot conv_id
-    # must not land in one Arrow batch (skew), (b) a single-split scan
-    # (one parquet file) must not serialize the whole NER stage onto one
-    # core.  Default width = cluster parallelism.
-    n_parts = salt_partitions or spark.sparkContext.defaultParallelism
-    # Balance policy for the Python stage, in preference order:
-    #   1. If the input already has >= n_parts partitions (a parquet
-    #      scan with enough splits), use them as-is: scan splits are
-    #      BYTE-balanced regardless of key skew — a hot conversation is
-    #      just bytes spread across byte ranges — and per-turn scoring
-    #      needs no locality, so a repartition would only add a
-    #      full-corpus shuffle (measured: the shuffle was ~15% of the
-    #      mentions-stage wall on a 20.7M-turn corpus).
-    #   2. Otherwise (few files, giant row groups, narrow upstream)
-    #      repartition on the FULL turn key — hashing (conv_id,
-    #      turn_idx) is uniform under ANY conversation skew.  Coarser
-    #      salts (turn_idx % K) were measured worse on a 25%-hot
-    #      corpus: K=16 -> +37% wall, K=4N -> +25% (balls-in-bins
-    #      lumps); the full key erases the conv from the balance
-    #      question.
-    # ``salt_partitions`` forces policy 2 at the given width (callers
-    # passing a key-skew-partitioned upstream should force it).
-    if salt_partitions or pruned.rdd.getNumPartitions() < n_parts:
-        pruned = pruned.repartition(n_parts, "conv_id", "turn_idx")
+    # Balance policy for the Python stage: one task per PY_TASK_BYTES
+    # of the optimizer's size estimate (no Spark job), between 1 and
+    # the cluster's parallelism.  An unknown estimate reads as
+    # spark.sql.defaultSizeInBytes and so asks for full parallelism.
+    #   * More input partitions than that: coalesce them (narrow, no
+    #     shuffle).  Scan splits are BYTE-balanced regardless of key
+    #     skew, and per-turn scoring needs no locality, so a shuffle
+    #     would buy nothing (it was ~15% of the mentions-stage wall on
+    #     a 20.7M-turn corpus).
+    #   * Fewer (few files, giant row groups, narrow upstream):
+    #     repartition on the FULL turn key — hashing (conv_id,
+    #     turn_idx) is uniform under ANY conversation skew.  Coarser
+    #     salts (turn_idx % K) were measured worse on a 25%-hot corpus:
+    #     K=16 -> +37% wall, K=4N -> +25% (balls-in-bins lumps).
+    # ``salt_partitions`` forces the full-key repartition at that
+    # width (callers passing a key-skew-partitioned upstream should
+    # force it).
+    if salt_partitions:
+        pruned = pruned.repartition(salt_partitions, "conv_id", "turn_idx")
+    else:
+        est = int(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        want = min(max(-(-est // PY_TASK_BYTES), 1), spark.sparkContext.defaultParallelism)
+        have = pruned.rdd.getNumPartitions()
+        if have > want:
+            pruned = pruned.coalesce(want)
+        elif have < want:
+            pruned = pruned.repartition(want, "conv_id", "turn_idx")
 
     score_batches = make_score_batches(bc, score_fn=score_fn, encoder=encoder)
     return pruned.mapInPandas(score_batches, schema=schemas.MENTIONS)

@@ -89,6 +89,65 @@ def test_hot_conversation_spreads_across_partitions(spark):
     assert max(r["count"] for r in per_part) < 8000 * 0.5  # no single-task pileup
 
 
+def _parquet_turns(spark, rows, path, n_files):
+    from arabicner_spark import schemas
+
+    spark.createDataFrame(rows, schemas.TRANSCRIPTS).repartition(n_files).write.parquet(path)
+    src = spark.read.parquet(path)
+    assert src.rdd.getNumPartitions() == n_files  # one split per small file
+    return src
+
+
+def _mention_rows(m):
+    return sorted(tuple(r) for r in m.collect())
+
+
+def test_ner_width_follows_input_bytes(spark, tmp_path, monkeypatch):
+    """The Python stage's width gate on both sides: a small input under
+    PY_TASK_BYTES runs one coalesced task with no shuffle; past it, a
+    many-file input runs defaultParallelism tasks and a one-file input
+    takes the full-key repartition; an input without a size estimate
+    keeps its width; every case emits the oracle's mentions."""
+    from arabicner_spark import oracle, schemas
+    from arabicner_spark.operators import ner
+    from arabicner_spark.sources import synth
+
+    ner_turns = synth.make_transcript_rows(n_convs=30, seed=42)
+    gaz = synth.gazetteer_dict()
+    dp = spark.sparkContext.defaultParallelism
+    want = oracle.oracle_mentions(ner_turns, gaz)
+    four = _parquet_turns(spark, ner_turns, str(tmp_path / "four"), 4)
+    one = _parquet_turns(spark, ner_turns, str(tmp_path / "one"), 1)
+
+    def exchanges(m):
+        return [n for n in nodes_of(plan_of(m)) if n.endswith("Exchange")]
+
+    small = ner.extract_mentions(four, gaz)
+    assert small.rdd.getNumPartitions() == 1
+    assert "MapInPandas" in nodes_of(plan_of(small)) and exchanges(small) == []
+    assert _mention_rows(small) == want
+
+    monkeypatch.setattr(ner, "PY_TASK_BYTES", 1)
+    wide = ner.extract_mentions(four, gaz)
+    assert wide.rdd.getNumPartitions() == dp
+    assert _mention_rows(wide) == want
+    spread = ner.extract_mentions(one, gaz)
+    assert exchanges(spread) == ["Exchange"]
+    assert spread.rdd.getNumPartitions() == dp
+    assert _mention_rows(spread) == want
+
+    monkeypatch.undo()
+    no_estimate = spark.createDataFrame(spark.sparkContext.parallelize(ner_turns), schemas.TRANSCRIPTS)
+    unknown = ner.extract_mentions(no_estimate, gaz)
+    assert unknown.rdd.getNumPartitions() == no_estimate.rdd.getNumPartitions() == dp
+    assert exchanges(unknown) == []
+    assert _mention_rows(unknown) == want
+
+    salted = ner.extract_mentions(four, gaz, salt_partitions=8)
+    assert salted.rdd.getNumPartitions() == 8
+    assert _mention_rows(salted) == want
+
+
 def test_r4_text_queries_are_python_free(spark, sf_dir):
     """text_repetition / text_urls / text_pii_scrub / text_subword_counts
     must stay whole-stage-codegen expression pipelines — no Python

@@ -18,9 +18,9 @@ ORACLE_SQL_SHA256 = "b25bd544e2a18b890ff488892da7c73b10e910dc17a585ec8aa312ab36c
 # registry_sf0.01 benchmark workload, whose cost is per-job overhead,
 # so a change to the KG prefix or the seed code must not add jobs.
 KG_JOB_BUDGET = {
-    "kg_edges": 5,
-    "kg_pagerank_personalized": 10,
-    "kg_temporal_reach": 12,
+    "kg_edges": 4,
+    "kg_pagerank_personalized": 9,
+    "kg_temporal_reach": 11,
 }
 
 # The same count for the document near-dup family, which shares one
@@ -32,7 +32,7 @@ DEDUP_JOB_BUDGET = {
     "dedup_survivors": 11,
     "dedup_minhash_lsh": 6,
     "dedup_jaccard": 12,
-    "dedup_incremental": 31,
+    "dedup_incremental": 29,
     "corpus_pipeline": 27,
 }
 

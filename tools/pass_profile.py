@@ -10,9 +10,12 @@ per stage the tool prints the Spark jobs of the group
 (``statusTracker().getJobIdsForGroup``) and the codegen compilations
 it caused (the count delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``,
 which moves only on a codegen cache miss), plus its CPU seconds: the
-process tree's (this process, the JVM, the Python workers; the
-``perfbench.benv.tree_cpu_s`` delta) and the JVM's JIT compiler
-threads' (``C1/C2 CompilerThre`` tasks under ``/proc/<jvm>/task``).
+process tree's, split by pid into this driver process, the JVM and the
+Python side (every other process of the tree: the pyspark daemon and
+its workers, whose reaped CPU lands in the daemon's), and the JVM's JIT
+compiler threads' (``C1/C2 CompilerThre`` tasks under
+``/proc/<jvm>/task``).  The split reads only ``/proc`` and costs no
+Spark job.
 The JIT figure is a lower bound: HotSpot retires idle compiler
 threads, and a retired thread's CPU is no longer readable.  The last
 warm pass is the steady state: what it still compiles is what the
@@ -50,19 +53,28 @@ def jit_ticks(jvm_pid: int) -> Dict[int, int]:
     return out
 
 
+def cpu_split(jvm_pid: int) -> Tuple[float, float, float]:
+    """CPU seconds so far of (this process, the JVM, the rest of the
+    process tree), reaped children included."""
+    from perfbench import benv
+
+    ticks = {pid: benv._cpu_ticks(pid) for pid in benv._tree()}
+    driver, jvm = ticks.pop(os.getpid(), 0), ticks.pop(jvm_pid, 0)
+    hz = os.sysconf("SC_CLK_TCK")
+    return driver / hz, jvm / hz, sum(ticks.values()) / hz
+
+
 class Profiler:
-    """Per (pass, stage): jobs, compilations, wall seconds, tree CPU
-    seconds, JIT CPU seconds."""
+    """Per (pass, stage): jobs, compilations, wall seconds, CPU seconds
+    of the tree and of its driver, JVM and Python parts, JIT CPU
+    seconds."""
 
     def __init__(self, spark):
-        from perfbench import benv
-
         self.sc = spark.sparkContext
         self.codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         self.jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
-        self.tree_cpu_s = benv.tree_cpu_s
         self.pass_id = ""
-        self.rows: Dict[str, List[Tuple[str, int, int, float, float, float]]] = {}
+        self.rows: Dict[str, List[Tuple]] = {}
 
     def compilations(self) -> int:
         return int(self.codegen.METRIC_COMPILATION_TIME().getCount())
@@ -75,14 +87,15 @@ class Profiler:
     def stage(self, name: str, fn):
         group = f"{self.pass_id}:{name}"
         self.sc.setJobGroup(group, group)
-        c0, j0, cpu0, t0 = self.compilations(), jit_ticks(self.jvm_pid), self.tree_cpu_s(), time.perf_counter()
+        c0, j0, cpu0, t0 = self.compilations(), jit_ticks(self.jvm_pid), cpu_split(self.jvm_pid), time.perf_counter()
         try:
             return fn()
         finally:
-            wall, cpu, jit = time.perf_counter() - t0, self.tree_cpu_s() - cpu0, self.jit_s(j0)
+            wall, jit = time.perf_counter() - t0, self.jit_s(j0)
+            parts = [b - a for a, b in zip(cpu0, cpu_split(self.jvm_pid))]
             jobs = len(self.sc.statusTracker().getJobIdsForGroup(group))
             self.rows.setdefault(self.pass_id, []).append(
-                (name, jobs, self.compilations() - c0, wall, cpu, jit)
+                (name, jobs, self.compilations() - c0, wall, sum(parts), *parts, jit)
             )
             self.sc.setJobGroup(f"{self.pass_id}:-", "")
 
@@ -136,7 +149,7 @@ def main() -> int:
         print(f"{args.workload} seed={args.seed} cores={benv.cores()}")
         passes = list(prof.rows)
         last = passes[-1]
-        secs = ("wall_s", "cpu_s", "jit_cpu_s>=")
+        secs = ("wall_s", "cpu_s", "driver_s", "jvm_s", "python_s", "jit_cpu_s>=")
         print(f"{'stage':<28}{'jobs':>6}" + "".join(f"{'compiled:' + p:>18}" for p in passes)
               + "".join(f"{h:>12}" for h in secs))
         totals = [0] * (len(passes) + 1 + len(secs))
@@ -148,6 +161,8 @@ def main() -> int:
         n = len(passes) + 1
         print(f"{'total':<28}{totals[0]:>6}" + "".join(f"{c:>18}" for c in totals[1:n])
               + "".join(f"{x:>12.2f}" for x in totals[n:]))
+        py_procs = len(benv._tree()) - 2  # all but this process and the JVM
+        print(f"python processes after the last pass: {py_procs} (daemon + workers)")
         print("correct" if not problems else "INCORRECT:\n" + "\n".join(problems))
         return 0 if not problems else 1
     finally:
