@@ -13,13 +13,16 @@ verbatim with the serial oracle.
 Scale design:
   * column pruning BEFORE the Python stage — only (conv_id, turn_idx,
     text) crosses the Arrow boundary;
-  * width by input bytes: the Python stage gets one task per
-    ``PY_TASK_BYTES`` of estimated input, up to the cluster's
-    parallelism.  Extra scan splits are coalesced (narrow, no job); a
-    wider need than the input's split count repartitions on the full
-    (conv_id, turn_idx) turn key, which is uniform under any
-    conversation skew (AQE cannot fix UDF-stage skew, only join/agg
-    skew); ``salt_partitions`` always forces that repartition;
+  * width by input bytes: with the default gazetteer scorer, an input
+    estimated under ``PY_TASK_BYTES`` times the cluster's parallelism
+    runs one Python task per ``PY_TASK_BYTES``, its extra scan splits
+    coalesced (narrow, no job).  Larger inputs, and any caller's
+    ``score_fn``, keep their scan splits when there are at least as
+    many as the cluster's parallelism.  Too few splits are
+    repartitioned on the full (conv_id, turn_idx) turn key, which is
+    uniform under any conversation skew (AQE cannot fix UDF-stage skew,
+    only join/agg skew); ``salt_partitions`` always forces that
+    repartition;
   * the gazetteer/weights are broadcast once per executor, not shipped
     per task closure;
   * a batched ``score_fn`` gets one forward per collate chunk of the
@@ -40,16 +43,18 @@ from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.functions.normalize import normalize_py
 
-# Estimated input bytes per Python task of extract_mentions (the
-# optimizer's sizeInBytes of the pruned (conv_id, turn_idx, text)
-# input, which reads ~180 KB for 350 KB of transcript parquet).  Every
-# Python task pays ~0.25-0.35 CPU-s of worker set-up (pyspark's
-# setup_spark_files re-scans pyspark.zip's directory for each
-# zipimporter) and holds its own ~127 MB worker process, while the
-# scoring closure takes ~0.5 CPU-s for those 350 KB.  So a 350 KB
-# corpus split over 4 tasks paid more set-up than scoring; at 8 MB a
-# task scores ~20 CPU-s and the set-up stays ~1-2% of it.  The price is
-# wall time on mid-sized inputs, which run on fewer cores.
+# Estimated input bytes per Python task of extract_mentions with the
+# default gazetteer scorer (the optimizer's sizeInBytes of the pruned
+# (conv_id, turn_idx, text) input, which reads ~180 KB for 350 KB of
+# transcript parquet).  Every Python task pays ~0.25-0.35 CPU-s of
+# worker set-up (pyspark's setup_spark_files re-scans pyspark.zip's
+# directory for each zipimporter) and holds its own ~127 MB worker
+# process, while the gazetteer closure takes ~0.5 CPU-s for those
+# 350 KB.  So a 350 KB corpus split over 4 tasks paid more set-up than
+# scoring; at 8 MB a task scores ~20 CPU-s and the set-up stays ~1-2%
+# of it.  The price is wall time on mid-sized inputs, which run on
+# fewer cores.  A caller's score_fn (a real model) costs far more per
+# byte than the closure this was measured on, so it keeps full width.
 PY_TASK_BYTES = 8 << 20
 
 
@@ -162,8 +167,9 @@ def extract_mentions(
 
     ``gazetteer`` is the normalized {type: {phrase tuples}} dict (small;
     broadcast).  ``salt_partitions`` forces a full-turn-key repartition
-    of that width before the Python stage; by default the width follows
-    the input's estimated bytes (``PY_TASK_BYTES``).
+    of that width before the Python stage; otherwise, with the default
+    scorer, a small input's width follows its estimated bytes
+    (``PY_TASK_BYTES``).
 
     ``score_fn`` / ``encoder`` plug in a real model + tokenizer (see
     make_score_batches and functions.bert_scorer.attach); defaults are
@@ -174,15 +180,18 @@ def extract_mentions(
     bc = spark.sparkContext.broadcast((gazetteer, types, max_seq_len))
 
     pruned = transcripts.select("conv_id", "turn_idx", "text")
-    # Balance policy for the Python stage: one task per PY_TASK_BYTES
-    # of the optimizer's size estimate (no Spark job), between 1 and
-    # the cluster's parallelism.  An unknown estimate reads as
+    # Balance policy for the Python stage.  ``want`` tasks: the
+    # cluster's parallelism, or with the default scorer one task per
+    # PY_TASK_BYTES of the optimizer's size estimate (no Spark job) when
+    # that is fewer.  An unknown estimate reads as
     # spark.sql.defaultSizeInBytes and so asks for full parallelism.
-    #   * More input partitions than that: coalesce them (narrow, no
-    #     shuffle).  Scan splits are BYTE-balanced regardless of key
-    #     skew, and per-turn scoring needs no locality, so a shuffle
-    #     would buy nothing (it was ~15% of the mentions-stage wall on
-    #     a 20.7M-turn corpus).
+    #   * More input partitions than a below-parallelism ``want``:
+    #     coalesce them (narrow, no shuffle).  At full width the scan
+    #     splits are kept however many: they are BYTE-balanced
+    #     regardless of key skew, per-turn scoring needs no locality,
+    #     and a failed task reruns one split, so a shuffle would buy
+    #     nothing (it was ~15% of the mentions-stage wall on a
+    #     20.7M-turn corpus).
     #   * Fewer (few files, giant row groups, narrow upstream):
     #     repartition on the FULL turn key — hashing (conv_id,
     #     turn_idx) is uniform under ANY conversation skew.  Coarser
@@ -194,10 +203,12 @@ def extract_mentions(
     if salt_partitions:
         pruned = pruned.repartition(salt_partitions, "conv_id", "turn_idx")
     else:
-        est = int(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        want = min(max(-(-est // PY_TASK_BYTES), 1), spark.sparkContext.defaultParallelism)
+        dp = want = spark.sparkContext.defaultParallelism
+        if score_fn is None:
+            est = int(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            want = min(max(-(-est // PY_TASK_BYTES), 1), dp)
         have = pruned.rdd.getNumPartitions()
-        if have > want:
+        if want < dp and have > want:
             pruned = pruned.coalesce(want)
         elif have < want:
             pruned = pruned.repartition(want, "conv_id", "turn_idx")

@@ -104,11 +104,13 @@ def _mention_rows(m):
 
 def test_ner_width_follows_input_bytes(spark, tmp_path, monkeypatch):
     """The Python stage's width gate on both sides: a small input under
-    PY_TASK_BYTES runs one coalesced task with no shuffle; past it, a
-    many-file input runs defaultParallelism tasks and a one-file input
-    takes the full-key repartition; an input without a size estimate
-    keeps its width; every case emits the oracle's mentions."""
+    PY_TASK_BYTES runs one coalesced task with no shuffle; past it, an
+    input with defaultParallelism files or more keeps its scan splits
+    and a one-file input takes the full-key repartition; a caller's
+    score_fn and an input without a size estimate keep full width; every
+    case emits the oracle's mentions."""
     from arabicner_spark import oracle, schemas
+    from arabicner_spark.functions import tagcore
     from arabicner_spark.operators import ner
     from arabicner_spark.sources import synth
 
@@ -116,21 +118,35 @@ def test_ner_width_follows_input_bytes(spark, tmp_path, monkeypatch):
     gaz = synth.gazetteer_dict()
     dp = spark.sparkContext.defaultParallelism
     want = oracle.oracle_mentions(ner_turns, gaz)
-    four = _parquet_turns(spark, ner_turns, str(tmp_path / "four"), 4)
+    split = _parquet_turns(spark, ner_turns, str(tmp_path / "split"), dp)
     one = _parquet_turns(spark, ner_turns, str(tmp_path / "one"), 1)
 
     def exchanges(m):
         return [n for n in nodes_of(plan_of(m)) if n.endswith("Exchange")]
 
-    small = ner.extract_mentions(four, gaz)
+    small = ner.extract_mentions(split, gaz)
     assert small.rdd.getNumPartitions() == 1
     assert "MapInPandas" in nodes_of(plan_of(small)) and exchanges(small) == []
     assert _mention_rows(small) == want
 
+    model = ner.extract_mentions(split, gaz, score_fn=tagcore.score_turn)
+    assert model.rdd.getNumPartitions() == dp and exchanges(model) == []
+    assert _mention_rows(model) == want
+
     monkeypatch.setattr(ner, "PY_TASK_BYTES", 1)
-    wide = ner.extract_mentions(four, gaz)
+    wide = ner.extract_mentions(split, gaz)
     assert wide.rdd.getNumPartitions() == dp
     assert _mention_rows(wide) == want
+    # Spark packs small files into defaultParallelism splits unless told
+    # to aim for more.
+    spark.conf.set("spark.sql.files.minPartitionNum", dp + 2)
+    try:
+        many = _parquet_turns(spark, ner_turns, str(tmp_path / "many"), dp + 2)
+        kept = ner.extract_mentions(many, gaz)
+        assert kept.rdd.getNumPartitions() == dp + 2 and exchanges(kept) == []
+        assert _mention_rows(kept) == want
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
     spread = ner.extract_mentions(one, gaz)
     assert exchanges(spread) == ["Exchange"]
     assert spread.rdd.getNumPartitions() == dp
@@ -143,7 +159,7 @@ def test_ner_width_follows_input_bytes(spark, tmp_path, monkeypatch):
     assert exchanges(unknown) == []
     assert _mention_rows(unknown) == want
 
-    salted = ner.extract_mentions(four, gaz, salt_partitions=8)
+    salted = ner.extract_mentions(split, gaz, salt_partitions=8)
     assert salted.rdd.getNumPartitions() == 8
     assert _mention_rows(salted) == want
 

@@ -10,12 +10,12 @@ per stage the tool prints the Spark jobs of the group
 (``statusTracker().getJobIdsForGroup``) and the codegen compilations
 it caused (the count delta of ``CodegenMetrics.METRIC_COMPILATION_TIME``,
 which moves only on a codegen cache miss), plus its CPU seconds: the
-process tree's, split by pid into this driver process, the JVM and the
-Python side (every other process of the tree: the pyspark daemon and
-its workers, whose reaped CPU lands in the daemon's), and the JVM's JIT
-compiler threads' (``C1/C2 CompilerThre`` tasks under
-``/proc/<jvm>/task``).  The split reads only ``/proc`` and costs no
-Spark job.
+process tree's (the ``perfbench.benv.tree_cpu_s`` delta), split into
+this driver process, the JVM and the Python side (the rest of the tree:
+the pyspark daemon and its workers, whose reaped CPU lands in the
+daemon's), and the JVM's JIT compiler threads' (``C1/C2 CompilerThre``
+tasks under ``/proc/<jvm>/task``).  The split reads only ``/proc`` and
+costs no Spark job.
 The JIT figure is a lower bound: HotSpot retires idle compiler
 threads, and a retired thread's CPU is no longer readable.  The last
 warm pass is the steady state: what it still compiles is what the
@@ -54,14 +54,17 @@ def jit_ticks(jvm_pid: int) -> Dict[int, int]:
 
 
 def cpu_split(jvm_pid: int) -> Tuple[float, float, float]:
-    """CPU seconds so far of (this process, the JVM, the rest of the
-    process tree), reaped children included."""
+    """CPU seconds so far, reaped children included, of this process,
+    of the JVM and of the Python side: the rest of the benchmark's
+    process tree (``benv.tree_cpu_s``).  The reads are taken one after
+    another, so a stage's Python delta can be off by a clock tick and
+    read -0.01 s."""
     from perfbench import benv
 
-    ticks = {pid: benv._cpu_ticks(pid) for pid in benv._tree()}
-    driver, jvm = ticks.pop(os.getpid(), 0), ticks.pop(jvm_pid, 0)
-    hz = os.sysconf("SC_CLK_TCK")
-    return driver / hz, jvm / hz, sum(ticks.values()) / hz
+    with open(f"/proc/{jvm_pid}/stat") as f:
+        jvm = sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[11:15]) / os.sysconf("SC_CLK_TCK")
+    driver = sum(os.times()[:4])
+    return driver, jvm, benv.tree_cpu_s() - driver - jvm
 
 
 class Profiler:
@@ -161,8 +164,6 @@ def main() -> int:
         n = len(passes) + 1
         print(f"{'total':<28}{totals[0]:>6}" + "".join(f"{c:>18}" for c in totals[1:n])
               + "".join(f"{x:>12.2f}" for x in totals[n:]))
-        py_procs = len(benv._tree()) - 2  # all but this process and the JVM
-        print(f"python processes after the last pass: {py_procs} (daemon + workers)")
         print("correct" if not problems else "INCORRECT:\n" + "\n".join(problems))
         return 0 if not problems else 1
     finally:
