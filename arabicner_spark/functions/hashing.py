@@ -466,37 +466,36 @@ def sign_lsh_bands(
     )
 
 
-def _vector_matrix(vectors: DataFrame, id_col: str, vec_col: str):
-    """Collect (id, vector) into (sorted ids, float64 matrix, norms) —
-    the broadcast build side of the Arrow cosine verifier.  Norms use
-    the sequential per-dim fold + IEEE sqrt, bit-identical to
-    sqrt(aggregate(v, 0.0, acc + x*x))."""
-    import numpy as np
+# The verify kernel reads the vectors from a broadcast matrix while the
+# optimizer's size estimate of the vector table is at most this: 64 MB of
+# parquet is a few hundred MB of float64 matrix per executor.  Past it,
+# every band row carries its own vector through the bucket shuffle.
+COSINE_BROADCAST_MAX_BYTES = 64 << 20
+
+
+def _list_matrix(lists) -> np.ndarray:
+    """An Arrow list<double> array of equal-length vectors as an
+    (n, dim) float64 matrix."""
     import pyarrow.compute as pc
 
+    n = len(lists)
+    if not n:
+        return np.zeros((0, 1))
+    dims = np.unique(pc.list_value_length(lists).to_numpy(zero_copy_only=False))
+    if len(dims) != 1:
+        raise ValueError(f"cosine verifier needs uniform dims, got {dims}")
+    flat = lists.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64, copy=False).reshape(n, int(dims[0]))
+
+
+def _vector_matrix(vectors: DataFrame, id_col: str, vec_col: str):
+    """Collect (id, vector) into (sorted ids, float64 matrix) — the
+    broadcast build side of the Arrow cosine verifier."""
     tbl = vectors.select(id_col, vec_col).toArrow()
     ids = np.asarray(tbl.column(id_col).to_pylist(), dtype=np.int64)
-    combined = tbl.column(vec_col).combine_chunks()
-    n = len(ids)
-    if n:
-        lens = pc.list_value_length(combined).to_numpy(zero_copy_only=False)
-        dims = np.unique(lens)
-        if len(dims) != 1:
-            raise ValueError(f"cosine verifier needs uniform dims, got {dims}")
-        dim = int(dims[0])
-        V = combined.flatten().to_numpy(zero_copy_only=False).astype(
-            np.float64, copy=False
-        ).reshape(n, dim)
-    else:
-        V = np.zeros((0, 1))
+    V = _list_matrix(tbl.column(vec_col).combine_chunks())
     order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    V = np.ascontiguousarray(V[order])
-    nacc = V[:, 0] * V[:, 0]
-    for i in range(1, V.shape[1]):
-        nacc = nacc + V[:, i] * V[:, i]
-    norms = np.sqrt(nacc)
-    return ids, V, norms
+    return ids[order], np.ascontiguousarray(V[order])
 
 
 def cosine_bucket_verify(
@@ -515,11 +514,18 @@ def cosine_bucket_verify(
 
     Replaces "self-join on the bucket key -> O(candidates) pair rows
     -> verify" with the guide section 4.2 / section 8 shape: only the
-    BAND table (n_vectors x n_bands small rows) crosses the Python
-    boundary, partitioned by bucket; inside each partition numpy
-    enumerates each bucket's pairs and verifies them against the
-    broadcast vector matrix — the O(candidates) intermediate never
-    exists as rows anywhere.
+    BAND table (n_vectors x n_bands rows) crosses the Python boundary,
+    partitioned by bucket; inside each partition numpy enumerates each
+    bucket's pairs and verifies them, so the O(candidates)
+    intermediate never exists as rows anywhere.
+
+    Where the vectors come from depends on the optimizer's size
+    estimate of ``vectors`` (no Spark job): up to
+    ``COSINE_BROADCAST_MAX_BYTES`` they are collected once into a
+    broadcast matrix the kernel looks band rows up in; past it each
+    band row is joined with its vector before the bucket shuffle, so
+    every partition carries its own buckets' vectors.  Both sides run
+    the same kernel from there on, so their rows are identical.
 
     Two-phase exactness (the gate-safe fast path):
       1. SCREEN: per bucket, a blocked matmul G = M_blk @ M^T gives
@@ -533,26 +539,33 @@ def cosine_bucket_verify(
          are recomputed with the sequential per-dim fold
          acc = acc + A[:,i]*B[:,i] — each step one IEEE multiply then
          one IEEE add, bit-identical to the aggregate/zip_with fold —
-         and the exact division dot/(na*nb).  The JVM then applies the
-         exact round-half-up + threshold, so the kept rows and their
-         cos values are bit-identical to the all-JVM formulation.
+         and the exact division dot/(na*nb), the norms folded the same
+         way.  The JVM then applies the exact round-half-up +
+         threshold, so the kept rows and their cos values are
+         bit-identical to the all-JVM formulation.
 
     Bucket members are processed in ascending id order, so emitted
     pairs satisfy a < b; a pair colliding in several buckets is
     emitted once per bucket and deduped by the final (tiny) distinct.
     """
-    import numpy as np
-
     spark = bands_packed.sparkSession
-    ids, V, norms = _vector_matrix(vectors, id_col, "v")
-    bc = spark.sparkContext.broadcast((ids, V, norms))
+    narrow = bands_packed.select(
+        F.col(id_col).cast("long").alias("vid"), F.col(bucket_col).alias("bkey")
+    )
+    est = int(vectors._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if est <= COSINE_BROADCAST_MAX_BYTES:
+        bc = spark.sparkContext.broadcast(_vector_matrix(vectors, id_col, "v"))
+    else:
+        bc = None
+        narrow = narrow.join(
+            vectors.select(F.col(id_col).cast("long").alias("vid"), "v"), "vid"
+        )
     lowbound = threshold - 10.0 ** (-round_to)
     screen_margin = 1e-9
 
     def gen_verify(batches):
         import pyarrow as pa
 
-        b_ids, b_V, b_norms = bc.value
         empty = pa.RecordBatch.from_arrays(
             [
                 pa.array([], type=pa.int64()),
@@ -566,15 +579,22 @@ def cosine_bucket_verify(
             yield empty
             return
         part = pa.Table.from_batches(chunks)
-        vec = part.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-        key = part.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
+        vec = part.column("vid").to_numpy(zero_copy_only=False).astype(np.int64)
+        key = part.column("bkey").to_numpy(zero_copy_only=False).astype(np.int64)
         order = np.lexsort((vec, key))
         vec, key = vec[order], key[order]
-        idx = np.searchsorted(b_ids, np.minimum(vec, b_ids[-1]))
-        if (b_ids[idx] != vec).any():
-            raise ValueError("band row id missing from vector table")
-        rows_v = b_V[idx]
-        rows_n = b_norms[idx]
+        if bc is None:
+            rows_v = _list_matrix(part.column("v").combine_chunks())[order]
+        else:
+            b_ids, b_V = bc.value
+            idx = np.searchsorted(b_ids, np.minimum(vec, b_ids[-1]))
+            if (b_ids[idx] != vec).any():
+                raise ValueError("band row id missing from vector table")
+            rows_v = b_V[idx]
+        nacc = rows_v[:, 0] * rows_v[:, 0]
+        for i in range(1, rows_v.shape[1]):
+            nacc = nacc + rows_v[:, i] * rows_v[:, i]
+        rows_n = np.sqrt(nacc)
         bounds = np.flatnonzero(np.r_[True, key[1:] != key[:-1], True])
         out_a, out_b, out_raw = [], [], []
         for s, e in zip(bounds[:-1], bounds[1:]):
@@ -622,9 +642,6 @@ def cosine_bucket_verify(
             ["a", "b", "raw"],
         )
 
-    narrow = bands_packed.select(
-        F.col(id_col).cast("long").alias("vid"), F.col(bucket_col).alias("bkey")
-    )
     # every bucket must land whole in ONE partition — hash-partition on
     # the bucket key (also pins the width of the verify stage; the band
     # table is bytes-small, so AQE would otherwise fold it to a few

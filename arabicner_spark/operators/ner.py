@@ -21,8 +21,9 @@ Scale design:
     many as the cluster's parallelism.  Too few splits are
     repartitioned on the full (conv_id, turn_idx) turn key, which is
     uniform under any conversation skew (AQE cannot fix UDF-stage skew,
-    only join/agg skew); ``salt_partitions`` always forces that
-    repartition;
+    only join/agg skew), and so is an adaptive (shuffled) input, whose
+    split count only running its query stages would tell;
+    ``salt_partitions`` always forces that repartition;
   * the gazetteer/weights are broadcast once per executor, not shipped
     per task closure;
   * a batched ``score_fn`` gets one forward per collate chunk of the
@@ -197,6 +198,9 @@ def extract_mentions(
     #     turn_idx) is uniform under ANY conversation skew.  Coarser
     #     salts (turn_idx % K) were measured worse on a 25%-hot corpus:
     #     K=16 -> +37% wall, K=4N -> +25% (balls-in-bins lumps).
+    #   * An adaptive (shuffled) input takes the same repartition to
+    #     ``want``: its partition count is only known after AQE runs
+    #     its query stages, so reading it would run Spark jobs.
     # ``salt_partitions`` forces the full-key repartition at that
     # width (callers passing a key-skew-partitioned upstream should
     # force it).
@@ -204,10 +208,12 @@ def extract_mentions(
         pruned = pruned.repartition(salt_partitions, "conv_id", "turn_idx")
     else:
         dp = want = spark.sparkContext.defaultParallelism
+        qe = pruned._jdf.queryExecution()
         if score_fn is None:
-            est = int(pruned._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+            est = int(qe.optimizedPlan().stats().sizeInBytes())
             want = min(max(-(-est // PY_TASK_BYTES), 1), dp)
-        have = pruned.rdd.getNumPartitions()
+        adaptive = qe.executedPlan().getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+        have = 0 if adaptive else pruned.rdd.getNumPartitions()
         if want < dp and have > want:
             pruned = pruned.coalesce(want)
         elif have < want:

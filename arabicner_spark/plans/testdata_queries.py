@@ -37,7 +37,7 @@ import uuid
 
 from typing import Callable, Dict, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -90,30 +90,35 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk parquet size of a testdata table — a zero-job cardinality
-    proxy for size-adaptive plan choices (the linking.py broadcast-limit
-    pattern, but without even a count job)."""
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _d, fs in os.walk(path)
-            for f in fs
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 1 << 60  # unknown -> assume big (never broadcast blindly)
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the embeddings table with its vectors as doubles."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
 
 
-# Vector-verify build side: use the broadcast-matrix Arrow verifier
-# (hashing.cosine_bucket_verify) while the vector table's parquet
-# footprint is below this (sf1.0 = 5.7 MB -> ~20 MB float64 matrix;
-# production: 64 MB parquet ~ a few hundred MB in executor memory,
-# safely bounded).  Above it the plan falls back to the original
-# width-pinned shuffle-join verify.
-EMB_BROADCAST_MAX_BYTES = 64 << 20
+def _cos(x: str, y: str) -> Column:
+    """round(cos(x, y), 4) of two double-array columns.  Dot and norms
+    are sequential folds (one IEEE multiply, then one add, per dim),
+    so the value is bit-identical to the Arrow verifier's
+    (hashing.cosine_bucket_verify)."""
+    dot = F.aggregate(F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, t: acc + t)
+    nx = F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, t: acc + t * t))
+    ny = F.sqrt(F.aggregate(y, F.lit(0.0), lambda acc, t: acc + t * t))
+    return F.round(dot / (nx * ny), 4)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (q, neighbor, cos) rows per q, ranked by cos desc
+    then neighbor asc -> (q, neighbor, cos, rank).  The rank filter
+    sits right on row_number, so Spark plans a WindowGroupLimit and
+    never materializes a query's full score set."""
+    w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("neighbor").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q", "neighbor", "cos", "rank")
+    )
 
 
 @contextlib.contextmanager
@@ -1169,81 +1174,34 @@ def q_dedup_embedding(spark, sf_dir):
 
     Candidate generation is banded random-hyperplane LSH (exact int64
     fixed-point projections — see hashing.sign_lsh_bands), then exact
-    cosine verification only within candidate buckets.  No cross join,
-    no unbounded broadcast: the candidate join shuffles on (band, sig)
-    and the verify joins shuffle on vec_id, all bounded and spillable.
-    The oracle computes the identical bucketing (md5-derived weights),
-    so parity is by construction.  GATE SEMANTICS (ADVICE r2): because
-    oracle and query share the bucketing, this CORRECTNESS row pins
-    BUCKETING PARITY, not the exact near-dup pair set — recall against
-    the brute-force all-pairs truth is pinned separately by
+    cosine verification only within candidate buckets
+    (hashing.cosine_bucket_verify): no cross join, and the candidate
+    pairs never exist as rows.  The oracle computes the identical
+    bucketing (md5-derived weights), so parity is by construction.
+    GATE SEMANTICS: because oracle and query share the bucketing, this
+    CORRECTNESS row pins BUCKETING PARITY, not the exact near-dup pair
+    set — recall against the brute-force all-pairs truth is pinned
+    separately by
     tests/test_dedup_embedding.py::test_lsh_recall_is_one_on_testdata,
     which runs at every sf refresh (measured 1.0 at every testdata sf
     with (5, 48); expected per-pair miss rate at the cos 0.45
     threshold is ~0.3%, so threshold-boundary pairs on NEW data may
     drop — by design, see PLANS.md)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    width = pin_width(spark)
+    e = _embeddings(spark, sf_dir)
     bands = hashing.sign_lsh_bands(
         e, "vec_id", "v", bits_per_band=EMB_LSH_BITS, n_bands=EMB_LSH_BANDS
     )
-    # r7 restructure (guide sections 1.2/2.3/4.2/8): candidates are
-    # ~0.78 x ALL pairs at this recall-1.0 parameterization — O(n^2)
-    # rows — so the old plan's "distinct pairs, then attach vectors by
-    # shuffle join, then CodegenFallback HOF dot" shuffled ~1.5e8 pair
-    # rows three times and verified them with interpreted per-element
-    # folds.  While the vector table is broadcastable, the O(n^2) pair
-    # stream now never exists as rows at all: band+sig packs into one
-    # long bucket key (sig is 5 '0'/'1' chars -> injective int), the
-    # band table alone (n x 48 small rows) crosses the Python
-    # boundary partitioned by bucket, and
-    # hashing.cosine_bucket_verify enumerates + verifies each bucket's
-    # pairs in numpy against the broadcast matrix (blocked-matmul
-    # screen with a proven error bound, then the bit-exact sequential
-    # fold for survivors; the final distinct sees only the ~1e4
-    # survivors instead of the ~1.5e8 candidates).  Above the
-    # broadcast threshold the original distinct-first shuffle-join
-    # plan is kept: with non-broadcastable vectors the verify joins
-    # shuffle the pair stream anyway, and the early distinct is what
-    # bounds them.
-    if table_bytes(sf_dir, "embeddings") <= EMB_BROADCAST_MAX_BYTES:
-        packed = bands.select(
-            "vec_id",
-            (
-                F.col("band").cast("long") * (1 << EMB_LSH_BITS)
-                + F.conv("sig", 2, 10).cast("long")
-            ).alias("bkey"),
-        )
-        return hashing.cosine_bucket_verify(
-            packed,
-            e,
-            id_col="vec_id",
-            bucket_col="bkey",
-            threshold=0.45,
-            round_to=4,
-            width=width,
-        )
-    pairs = hashing.lsh_candidate_pairs(bands, "vec_id", width=width).repartition(
-        width, F.col("a")
+    # sig is EMB_LSH_BITS '0'/'1' chars, so (band, sig) packs
+    # injectively into one long bucket key
+    packed = bands.select(
+        "vec_id",
+        (
+            F.col("band").cast("long") * (1 << EMB_LSH_BITS)
+            + F.conv("sig", 2, 10).cast("long")
+        ).alias("bkey"),
     )
-    norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, v: acc + v * v))
-    en = e.withColumn("nrm", norm)
-    a = en.select(
-        F.col("vec_id").alias("a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = en.select(
-        F.col("vec_id").alias("b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    return (
-        pairs.join(a, "a")
-        .join(b, "b")
-        .select("a", "b", F.round(dot / (F.col("na") * F.col("nb")), 4).alias("cos"))
-        .where(F.col("cos") >= 0.45)
+    return hashing.cosine_bucket_verify(
+        packed, e, threshold=0.45, round_to=4, width=pin_width(spark)
     )
 
 
@@ -1291,35 +1249,29 @@ WHERE round(list_dot_product(x.v, y.v) /
 
 # ------------------------------------------------------- similarity search
 
+def _brute_topk(e: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Exact cosine top-k of every vector with vec_id < n_queries
+    against all the others: the broadcast query set crossed with the
+    table, never a shuffled cartesian product."""
+    q = e.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q"), F.col("v").alias("vq")
+    )
+    scored = (
+        F.broadcast(q)
+        .crossJoin(e)
+        .where(F.col("q") != F.col("vec_id"))
+        .select("q", F.col("vec_id").alias("neighbor"), _cos("vq", "v").alias("cos"))
+    )
+    return _top_k(scored, k)
+
+
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-10 for query vectors vec_id < 5.
 
     Ranking on the ROUNDED score with vec_id tie-break keeps the order
     deterministic and engine-portable.
     """
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    q = e.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q"), F.col("v").alias("vq")
-    )
-    dot = F.aggregate(
-        F.zip_with("vq", "v", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    nq = F.sqrt(F.aggregate("vq", F.lit(0.0), lambda acc, v: acc + v * v))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, v: acc + v * v))
-    scored = (
-        F.broadcast(q)
-        .crossJoin(e)
-        .where(F.col("q") != F.col("vec_id"))
-        .select("q", F.col("vec_id").alias("neighbor"), F.round(dot / (nq * nv), 4).alias("cos"))
-    )
-    w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("neighbor").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 10)
-        .select("q", "neighbor", "cos", "rank")
-    )
+    return _brute_topk(_embeddings(spark, sf_dir), 5, 10)
 
 
 SQL_ANN_TOPK = """
@@ -1341,32 +1293,19 @@ SELECT q, neighbor, cos, CAST(rank AS INTEGER) AS rank FROM (
 def q_ann_lsh_bucketed(spark, sf_dir):
     """Sign-LSH bucketed ANN: bucket = sign bits of the first 8 dims
     (exact, portable); top-3 per query within its bucket."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
     bucket = F.concat_ws(
         "", *[F.when(F.element_at("v", i + 1) >= 0, "1").otherwise("0") for i in range(8)]
     )
-    eb = e.withColumn("bucket", bucket)
+    eb = _embeddings(spark, sf_dir).withColumn("bucket", bucket)
     q = eb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q"), F.col("v").alias("vq"), "bucket"
     )
-    dot = F.aggregate(
-        F.zip_with("vq", "v", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    nq = F.sqrt(F.aggregate("vq", F.lit(0.0), lambda acc, v: acc + v * v))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, v: acc + v * v))
     scored = (
         q.join(eb, "bucket")
         .where(F.col("q") != F.col("vec_id"))
-        .select("q", F.col("vec_id").alias("neighbor"), F.round(dot / (nq * nv), 4).alias("cos"))
+        .select("q", F.col("vec_id").alias("neighbor"), _cos("vq", "v").alias("cos"))
     )
-    w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("neighbor").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("q", "neighbor", "cos", "rank")
-    )
+    return _top_k(scored, 3)
 
 
 SQL_ANN_LSH = """
@@ -1481,25 +1420,45 @@ def ivf_ranked(e: DataFrame) -> DataFrame:
 
 
 def ivf_ranked_raw(e: DataFrame) -> DataFrame:
-    """The pre-r6 UNREFINED index (centroids = raw id<IVF_CELLS
-    vectors, cosine ranking): kept for the refined-vs-raw recall
-    comparison receipt (tests/test_ann_quality.py) — not searched by
-    any gated query anymore."""
+    """The UNREFINED index (centroids = the raw id<IVF_CELLS vectors,
+    cosine ranking) -> (vec_id, cid, cr) for the probed cells: kept
+    for the refined-vs-raw recall comparison in
+    tests/test_ann_quality.py, searched by no gated query."""
     cents = e.where(F.col("vec_id") < IVF_CELLS).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("vc")
+        F.col("vec_id").alias("neighbor"), F.col("v").alias("vc")
     )
-    dot_c = F.aggregate(
-        F.zip_with("v", "vc", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+    scored = e.crossJoin(F.broadcast(cents)).select(
+        F.col("vec_id").alias("q"), "neighbor", _cos("v", "vc").alias("cos")
     )
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    nc = F.sqrt(F.aggregate("vc", F.lit(0.0), lambda a, x: a + x * x))
-    scored_c = e.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cid", F.round(dot_c / (nv * nc), 4).alias("sim")
+    return _top_k(scored, IVF_NPROBE).select(
+        F.col("q").alias("vec_id"), F.col("neighbor").alias("cid"), F.col("rank").alias("cr")
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("sim").desc(), F.col("cid").asc()
+
+
+def _ivf_search(e: DataFrame, ranked: DataFrame, k: int) -> DataFrame:
+    """Top-k IVF search for the query vectors vec_id < 20 over an index
+    ``ranked`` (vec_id, cid, cr): each vector lives in its cr=1 cell,
+    each query probes its IVF_NPROBE nearest cells, and exact cosine
+    runs only within the probed cells.  Vectors are re-joined after
+    the cr filters, so the long-format ranking never carries arrays;
+    the cell id is the shuffle key of the search join."""
+    assigned = (
+        ranked.where(F.col("cr") == 1)
+        .join(e, "vec_id")
+        .select("vec_id", "v", F.col("cid").alias("cell"))
     )
-    return scored_c.withColumn("cr", F.row_number().over(w_assign))
+    probes = (
+        ranked.where((F.col("cr") <= IVF_NPROBE) & (F.col("vec_id") < 20))
+        .join(e, "vec_id")
+        .select(F.col("vec_id").alias("q"), F.col("v").alias("vq"), F.col("cid").alias("cell"))
+    )
+    scored = (
+        probes.join(assigned, "cell")
+        .where(F.col("q") != F.col("vec_id"))
+        .select("q", F.col("vec_id").alias("neighbor"), _cos("vq", "v").alias("cos"))
+        .distinct()  # a neighbor reachable via both probed cells counts once
+    )
+    return _top_k(scored, k)
 
 
 ANN_EVAL_K = 10
@@ -1521,53 +1480,9 @@ def _ann_recall_df(spark, sf_dir, ranker) -> DataFrame:
     the centroid-ranking function so tests/test_ann_quality.py can
     compare the refined index (ivf_ranked) against the unrefined one
     (ivf_ranked_raw) on identical metric plumbing."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    dot = F.aggregate(
-        F.zip_with("vq", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    nq = F.sqrt(F.aggregate("vq", F.lit(0.0), lambda a, x: a + x * x))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("neighbor").asc())
-
-    # ground truth: brute-force top-K for the 20 query vectors
-    qv = e.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q"), F.col("v").alias("vq")
-    )
-    truth = (
-        F.broadcast(qv)
-        .crossJoin(e)
-        .where(F.col("q") != F.col("vec_id"))
-        .select("q", F.col("vec_id").alias("neighbor"), F.round(dot / (nq * nv), 4).alias("cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_EVAL_K)
-        .localCheckpoint(eager=True)
-    )
-
-    # approx: the IVF search (same structure as q_ann_ivf), top-K;
-    # vectors re-joined after the cr filters so the long-format
-    # ranking never carries arrays
-    ranked = ranker(e).select("vec_id", "cid", "cr")
-    assigned = (
-        ranked.where(F.col("cr") == 1)
-        .join(e, "vec_id")
-        .select("vec_id", "v", F.col("cid").alias("cell"))
-    )
-    probes = (
-        ranked.where((F.col("cr") <= IVF_NPROBE) & (F.col("vec_id") < 20))
-        .join(e, "vec_id")
-        .select(F.col("vec_id").alias("q"), F.col("v").alias("vq"), F.col("cid").alias("cell"))
-    )
-    approx = (
-        probes.join(assigned, "cell")
-        .where(F.col("q") != F.col("vec_id"))
-        .select("q", F.col("vec_id").alias("neighbor"), F.round(dot / (nq * nv), 4).alias("cos"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_EVAL_K)
-        .localCheckpoint(eager=True)
-    )
+    e = _embeddings(spark, sf_dir)
+    truth = _brute_topk(e, 20, ANN_EVAL_K).localCheckpoint(eager=True)
+    approx = _ivf_search(e, ranker(e), ANN_EVAL_K).localCheckpoint(eager=True)
 
     # left join + conditional count, NOT a semi join: a query with ZERO
     # overlap must still appear with recall 0.0 — dropping it would
@@ -1646,48 +1561,14 @@ SELECT CAST(-1 AS BIGINT), round(avg(recall_at_k), 4), round(avg(rr), 4) FROM pe
 
 
 def q_ann_ivf(spark, sf_dir):
-    """IVF-style ANN over the REFINED index: the id<IVF_CELLS seed
-    centroids are refined by one fixed-point Lloyd update (the r6 wire
-    of ann_kmeans_refine into the index build), every vector assigned
-    to its nearest refined centroid by exact int64 L2² (broadcast
-    k*dims centroid table — no shuffle), queries probe their
-    IVF_NPROBE nearest cells, exact cosine only within the probed
-    cells.  The cell id is the shuffle key of the search join — the
-    canonical IVF plan shape, scale-bounded by cell fan-in.
-
-    Assignment/probing rank on int64 distance with centroid-id
+    """IVF-style ANN top-3 over the REFINED index (ivf_ranked): the
+    id<IVF_CELLS seed centroids refined by one fixed-point Lloyd
+    update, every vector assigned to its nearest refined centroid by
+    exact int64 L2² (broadcast k*dims centroid table — no shuffle).
+    Assignment and probing rank on int64 distance with centroid-id
     tie-break, making the cell structure engine-portable and exact."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    ranked = ivf_ranked(e)
-    assigned = (
-        ranked.where(F.col("cr") == 1)
-        .join(e, "vec_id")
-        .select("vec_id", "v", F.col("cid").alias("cell"))
-    )
-    probes = (
-        ranked.where((F.col("cr") <= IVF_NPROBE) & (F.col("vec_id") < 20))
-        .join(e, "vec_id")
-        .select(F.col("vec_id").alias("q"), F.col("v").alias("vq"), F.col("cid").alias("cell"))
-    )
-
-    dot_q = F.aggregate(
-        F.zip_with("vq", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-    )
-    nq = F.sqrt(F.aggregate("vq", F.lit(0.0), lambda a, x: a + x * x))
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
-    scored = (
-        probes.join(assigned, "cell")
-        .where(F.col("q") != F.col("vec_id"))
-        .select("q", F.col("vec_id").alias("neighbor"), F.round(dot_q / (nq * nv), 4).alias("cos"))
-        .distinct()  # a neighbor reachable via both probed cells counts once
-    )
-    w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("neighbor").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= 3)
-    )
+    e = _embeddings(spark, sf_dir)
+    return _ivf_search(e, ivf_ranked(e), 3)
 
 
 SQL_ANN_IVF = f"""
@@ -4799,9 +4680,7 @@ def q_ann_kmeans(spark, sf_dir):
     rebuilds, broadcast centroid join, map-side-combinable aggs."""
     from arabicner_spark.operators.kmeans import kmeans_fp
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = _embeddings(spark, sf_dir)
     return kmeans_fp(e, "vec_id", "v", k=8, rounds=2)
 
 
@@ -4874,9 +4753,7 @@ def q_ann_pq(spark, sf_dir):
     SQL oracle matches by value hash."""
     from arabicner_spark.operators.pq import pq_index_and_search
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = _embeddings(spark, sf_dir)
     return pq_index_and_search(
         e, m=PQ_M, k=PQ_K, updates=1, query_ids=range(PQ_NQ), topk=PQ_TOPK
     )

@@ -48,9 +48,7 @@ def test_refined_assignment_matches_kmeans_fp_final_round(spark):
 
     from arabicner_spark.operators.kmeans import kmeans_fp
 
-    e = tq.load(spark, SF_DIR, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    e = tq._embeddings(spark, SF_DIR)
     km = kmeans_fp(e, "vec_id", "v", k=tq.IVF_CELLS, rounds=2).select(
         "vec_id", F.col("cluster").cast("int").alias("cl_km")
     )

@@ -2,11 +2,15 @@
 
 The operator (plans/testdata_queries.q_dedup_embedding) generates
 candidates via banded random-hyperplane LSH and verifies exact cosine
-only within buckets.  These tests pin down the two claims PLANS.md
-makes about it: (a) with the default (5 bits, 48 bands) parameters the
-candidate set loses ZERO true pairs on the testdata (recall 1.0 vs the
-all-pairs brute force), and (b) the physical plan contains no cartesian
-product / unbounded broadcast — the round-1 scale-killer shape.
+only within buckets, with one Arrow kernel
+(hashing.cosine_bucket_verify) whether the vectors come from a
+broadcast matrix or travel with their band rows.  These tests pin down
+the claims PLANS.md makes about it: (a) with the default (5 bits, 48
+bands) parameters the candidate set loses ZERO true pairs on the
+testdata (recall 1.0 vs the all-pairs brute force), (b) both sides of
+the kernel's broadcast gate return exactly the brute-force pairs, and
+(c) the physical plan contains no cartesian product / unbounded
+broadcast — the round-1 scale-killer shape.
 """
 
 import os
@@ -58,21 +62,31 @@ def test_lsh_recall_is_one_on_testdata(embeddings):
     assert missed == [], f"LSH blocking dropped true pairs: {missed}"
 
 
-@pytest.mark.parametrize("broadcast_max_bytes", [64 << 20, 0], ids=["broadcast", "shuffle"])
+@pytest.mark.parametrize("broadcast_max_bytes", [64 << 20, 0], ids=["broadcast", "colocated"])
 def test_spark_result_equals_brute_force(spark, embeddings, monkeypatch, broadcast_max_bytes):
-    """Both sides of EMB_BROADCAST_MAX_BYTES: the broadcast Arrow bucket
-    verify, and (limit 0) the shuffle-join verify."""
-    from arabicner_spark.plans import testdata_queries
+    """Both sides of COSINE_BROADCAST_MAX_BYTES: vectors from the
+    broadcast matrix, and (limit 0) vectors joined onto their band rows
+    ahead of the bucket shuffle; one kernel verifies both."""
+    from arabicner_spark.functions import hashing
     from arabicner_spark.plans.testdata_queries import q_dedup_embedding
 
-    monkeypatch.setattr(testdata_queries, "EMB_BROADCAST_MAX_BYTES", broadcast_max_bytes)
+    monkeypatch.setattr(hashing, "COSINE_BROADCAST_MAX_BYTES", broadcast_max_bytes)
     ids, X = embeddings
     expected = {
         (int(ids[a]), int(ids[b])) for a, b in _brute_force_pairs(X)
     }
-    df = q_dedup_embedding(spark, SF_DIR)
-    got = {(int(r.a), int(r.b)) for r in df.collect()}
+    sc = spark.sparkContext
+    group = f"dedup-embedding-{broadcast_max_bytes}"
+    sc.setJobGroup(group, "dedup_embedding")
+    try:
+        df = q_dedup_embedding(spark, SF_DIR)
+        got = {(int(r.a), int(r.b)) for r in df.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert got == expected  # recall AND precision 1.0 vs exact all-pairs
+    if broadcast_max_bytes == 0:
+        assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
 
 
 def test_plan_has_no_cross_join(spark):

@@ -164,6 +164,28 @@ def test_ner_width_follows_input_bytes(spark, tmp_path, monkeypatch):
     assert _mention_rows(salted) == want
 
 
+def test_ner_frame_over_shuffled_input_runs_no_job(spark, tmp_path):
+    """Building the NER frame over an adaptive (shuffled) input reads
+    no split count, so it runs no Spark job; the Python stage then
+    takes the full-key repartition and emits the oracle's mentions."""
+    from arabicner_spark import oracle
+    from arabicner_spark.operators import ner
+    from arabicner_spark.sources import synth
+
+    ner_turns = synth.make_transcript_rows(n_convs=30, seed=42)
+    gaz = synth.gazetteer_dict()
+    turns = _parquet_turns(spark, ner_turns, str(tmp_path / "turns"), 2)
+    shuffled = turns.join(turns.groupBy("conv_id").count(), "conv_id")
+    sc = spark.sparkContext
+    sc.setJobGroup("ner-shuffled-build", "build the NER frame")
+    try:
+        m = ner.extract_mentions(shuffled, gaz)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("ner-shuffled-build") == []
+    assert _mention_rows(m) == oracle.oracle_mentions(ner_turns, gaz)
+
+
 def test_r4_text_queries_are_python_free(spark, sf_dir):
     """text_repetition / text_urls / text_pii_scrub / text_subword_counts
     must stay whole-stage-codegen expression pipelines — no Python

@@ -130,17 +130,13 @@ def test_pq_arrow_fast_path_matches_join_dataflow(spark):
     """r7: pq_index_and_search was rewritten as two Arrow passes with
     driver-side codebook algebra.  Same exact int64 fixed-point math ->
     output must be row-identical to the original join dataflow."""
-    from pyspark.sql import functions as F
-
     from arabicner_spark.operators.pq import (
         pq_index_and_search,
         pq_index_and_search_joins,
     )
+    from arabicner_spark.plans.testdata_queries import _embeddings
 
-    e = (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        .select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    )
+    e = _embeddings(spark, "/root/testdata/sf0.01")
     fast = {tuple(r) for r in pq_index_and_search(e, m=4, k=8, updates=1,
                                                   query_ids=range(10), topk=3).collect()}
     ref = {tuple(r) for r in pq_index_and_search_joins(e, m=4, k=8, updates=1,

@@ -1,7 +1,7 @@
 """Guards for the query registry's shared plumbing: the oracle SQL texts,
-the Spark job counts of the KG queries the benchmark runs and of the
-document dedup family, and the temp-dir cleanup of the streaming drain
-and the file-backed gate queries."""
+the Spark job counts of the KG queries the benchmark runs, of the
+document dedup family and of the embedding family, and the temp-dir
+cleanup of the streaming drain and the file-backed gate queries."""
 
 import hashlib
 import tempfile
@@ -34,6 +34,18 @@ DEDUP_JOB_BUDGET = {
     "dedup_jaccard": 12,
     "dedup_incremental": 29,
     "corpus_pipeline": 27,
+}
+
+
+# The same count for the embedding family: the ANN queries share one
+# cosine, top-k and IVF search, and dedup_embedding verifies with one
+# Arrow kernel.
+VECTOR_JOB_BUDGET = {
+    "ann_topk": 4,
+    "ann_lsh_bucketed": 4,
+    "ann_ivf": 21,
+    "ann_recall": 34,
+    "dedup_embedding": 5,
 }
 
 
@@ -70,6 +82,10 @@ def test_kg_query_job_budget(spark):
 
 def test_dedup_query_job_budget(spark):
     _assert_job_budget(spark, DEDUP_JOB_BUDGET)
+
+
+def test_vector_query_job_budget(spark):
+    _assert_job_budget(spark, VECTOR_JOB_BUDGET)
 
 
 def _tables(spark):

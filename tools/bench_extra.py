@@ -13,7 +13,8 @@ Usage:
   python tools/bench_extra.py count <query> [query...]   # bench.py-style count timing
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_EXTRA_REPEATS (default 1), BENCH_EXTRA_TAG (plan
+(default: the cores this process may run on), SPARK_GRAFT_DRIVER_MEM
+(default 4g), BENCH_EXTRA_REPEATS (default 1), BENCH_EXTRA_TAG (plan
 file suffix, default "before").
 """
 
@@ -29,14 +30,14 @@ from pyspark.sql import SparkSession
 
 
 def session():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("arabicner-spark-bench-extra")
         .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
