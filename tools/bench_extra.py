@@ -13,9 +13,8 @@ Usage:
   python tools/bench_extra.py count <query> [query...]   # bench.py-style count timing
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default: the cores this process may run on), SPARK_GRAFT_DRIVER_MEM
-(default 4g), BENCH_EXTRA_REPEATS (default 1), BENCH_EXTRA_TAG (plan
-file suffix, default "before").
+(default: the cores this process may run on), BENCH_EXTRA_REPEATS
+(default 1), BENCH_EXTRA_TAG (plan file suffix, default "before").
 """
 
 from __future__ import annotations
@@ -37,7 +36,7 @@ def session():
         .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
