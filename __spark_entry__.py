@@ -19,73 +19,21 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession
 
 from arabicner_spark.plans.testdata_queries import QUERIES
-
-
-def _tuned(spark: SparkSession) -> SparkSession:
-    # timestamps must mean the same instant in Spark and DuckDB
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Python WORKERS inherit the driver process's CWD, not its
-    # sys.path — a session driven from outside the repo root can
-    # deserialize module-level closures (mapInPandas scorers, the
-    # foreachBatch sink) only if the package is shipped to executors.
-    # Same mechanism as spark-submit --py-files; re-adding the same
-    # file is a harmless no-op, hence the broad guard.  The zip is
-    # rebuilt first when any package source is newer than it, so
-    # workers can never silently run stale code.
-    here = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(here, "arabicner_spark.zip")
-    try:
-        import zipfile
-
-        pkg = os.path.join(here, "arabicner_spark")
-        sources = sorted(
-            os.path.join(r, f)
-            for r, _d, fs in os.walk(pkg)
-            for f in fs
-            if f.endswith(".py")
-        )
-        expected = [os.path.relpath(p, here) for p in sources]
-        src_mtime = max(os.path.getmtime(p) for p in sources)
-
-        def _stale() -> bool:
-            if not os.path.exists(zip_path):
-                return True
-            if os.path.getmtime(zip_path) < src_mtime:
-                return True
-            # name-set check: a DELETED source never bumps max-mtime, and
-            # a truncated zip (interrupted build) has a short namelist
-            try:
-                with zipfile.ZipFile(zip_path) as z:
-                    return sorted(z.namelist()) != expected
-            except Exception:
-                return True  # unreadable/corrupt zip => rebuild
-
-        if _stale():
-            # build to a temp sibling and os.replace() — atomic on POSIX,
-            # so an interrupted build can never leave a truncated zip
-            # with a fresh mtime masquerading as current
-            tmp = zip_path + ".tmp"
-            with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-                for p in sources:
-                    z.write(p, os.path.relpath(p, here))
-            os.replace(tmp, zip_path)
-        spark.sparkContext.addPyFile(zip_path)
-    except Exception:
-        pass
-    return spark
+# an outside harness builds the session: tune() adds what every session
+# needs, the package shipped to the Python workers among it
+from arabicner_spark.session import tune
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: transcripts -> NER -> triples -> linked canonical edges
     on /root/testdata/sf0.001."""
     fn, _ = QUERIES["kg_edges"]
-    return fn(_tuned(spark), "/root/testdata/sf0.001")
+    return fn(tune(spark), "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def wrap(fn):
-        return lambda spark, sf_dir: fn(_tuned(spark), sf_dir)
+        return lambda spark, sf_dir: fn(tune(spark), sf_dir)
 
     return {name: wrap(fn) for name, (fn, _sql) in QUERIES.items()}
 

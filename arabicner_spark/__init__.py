@@ -24,6 +24,10 @@ Subpackages:
                 CoNLL fixture reader
     plans/      end-to-end pipeline driver, lineage/resume, materialization
     streaming/  structured-streaming ingest variant (optional surface)
+
+Modules:
+    session     the one SparkSession builder (entry points, tools, tests)
+                and the package zip it ships to the Python workers
 """
 
 __version__ = "0.1.0"

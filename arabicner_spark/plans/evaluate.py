@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.operators import metrics, ner
+from arabicner_spark.session import session
 from arabicner_spark.sources import conll, predictions
 from arabicner_spark.sources.io import local_table
 
@@ -117,15 +118,9 @@ def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--data-paths", nargs="+", required=True)
     p.add_argument("--output-path", required=True)
-    p.add_argument("--master", default="local[8]")
+    p.add_argument("--master", default=None)
     args = p.parse_args()
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("arabicner-spark-eval")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(args.master)
     os.makedirs(args.output_path, exist_ok=True)
     for path in args.data_paths:
         evaluate_file(spark, path, args.output_path)

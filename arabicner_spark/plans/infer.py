@@ -1,6 +1,6 @@
 """Inference entry point — the reference's bin/infer.py surface.
 
-    python -m arabicner_spark.plans.infer --text "..." [--master local[4]]
+    python -m arabicner_spark.plans.infer --text "..." [--master <url>]
 
 Mirrors infer.py's flow (text2segments: ONE whitespace-split segment,
 arabiner/utils/data.py:96-105; decode; print "token (TAG|TAG|...)"
@@ -20,6 +20,7 @@ from pyspark.sql import SparkSession
 from arabicner_spark import schemas
 from arabicner_spark.functions import tagcore
 from arabicner_spark.operators import ner
+from arabicner_spark.session import session
 from arabicner_spark.sources import synth
 from arabicner_spark.sources.io import local_table
 
@@ -67,7 +68,7 @@ def tag_text(
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument("--text", required=True)
-    p.add_argument("--master", default="local[4]")
+    p.add_argument("--master", default=None)
     p.add_argument(
         "--model_path",
         default=None,
@@ -75,13 +76,7 @@ def main() -> None:
         "+ checkpoints/checkpoint_*.pt); requires transformers/torch",
     )
     args = p.parse_args()
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("arabicner-spark-infer")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(args.master)
     tagged = tag_text(spark, args.text, synth.gazetteer_dict(), args.model_path)
     print(" ".join(f"{tok} ({'|'.join(tags)})" for tok, tags in tagged))
     spark.stop()

@@ -1,23 +1,22 @@
 """spark-submit entry point.
 
-    spark-submit --py-files arabicner_spark.zip \
-        -m arabicner_spark.plans.run  (or python -m arabicner_spark.plans.run)
+    spark-submit --py-files arabicner_spark.zip arabicner_spark/plans/run.py \
+        (or python -m arabicner_spark.plans.run)
         --input /path/to/transcripts  --output /path/to/kg_out
         [--synth-convs 200] [--salt-partitions 64] [--run-id r1]
 
 With --input absent, generates the deterministic synthetic corpus
 (handy for smoke runs and the bench harness).  The package is
-pure-Python, so `zip -r arabicner_spark.zip arabicner_spark` is the
-whole --py-files story.
+pure-Python, so the zip `python tools/make_pyfiles_zip.py` writes is
+the whole --py-files story.
 """
 
 from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import SparkSession
-
 from arabicner_spark.plans.pipeline import PipelineConfig, run_pipeline
+from arabicner_spark.session import session
 from arabicner_spark.sources import synth
 
 
@@ -33,14 +32,7 @@ def main() -> None:
     p.add_argument("--master", default=None)
     args = p.parse_args()
 
-    b = SparkSession.builder.appName("arabicner-spark-kg")
-    if args.master:
-        b = b.master(args.master)
-    spark = (
-        b.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = session(args.master)
 
     if args.input:
         from arabicner_spark.sources.io import parquet_fingerprint

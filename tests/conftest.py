@@ -1,20 +1,13 @@
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from arabicner_spark.session import session
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master(os.environ.get("SPARK_TEST_MASTER", "local[4]"))
-        .appName("arabicner-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    yield session
-    session.stop()
+    # the pinned job budgets were measured at 8 shuffle partitions
+    s = session(os.environ.get("SPARK_TEST_MASTER", "local[4]"), shuffle_partitions=8)
+    yield s
+    s.stop()

@@ -1,10 +1,12 @@
-"""The driver contract must not depend on the process working
-directory: Python workers inherit the driver's CWD (not sys.path), so
-module-level closures (mapInPandas scorers, the foreachBatch sink)
-deserialize on workers only because __spark_entry__._tuned ships the
-package zip via addPyFile.  Round-5 regression: the streaming gate
-query failed with ModuleNotFoundError when driven from outside the
-repo root."""
+"""Sessions must not depend on the process working directory: Python
+workers inherit the driver's CWD (not sys.path), so module-level
+closures (mapInPandas scorers, the foreachBatch sink) deserialize on
+workers only because the package zip is shipped to them
+(arabicner_spark.session.ship).  Two ways in: an outside harness's
+session handed to the driver contract, and a session the factory
+builds.  Regressions: the streaming gate query (driver contract) and
+tools/bench_extra.py (its own builder) failed with ModuleNotFoundError
+when driven from outside the repo root."""
 
 import os
 import subprocess
@@ -28,10 +30,21 @@ assert n > 0, n
 print("OK", n)
 """
 
+# the factory's session, no driver contract in between
+_FACTORY_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from arabicner_spark.plans.testdata_queries import QUERIES
+from arabicner_spark.session import session
+n = QUERIES["kg_mentions_bio"][0](session(), "/root/testdata/sf0.001").count()
+assert n > 0, n
+print("OK", n)
+"""
 
-def test_worker_closures_resolve_from_foreign_cwd(tmp_path):
+
+def _run_from(tmp_path, script):
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT.format(repo=REPO)],
+        [sys.executable, "-c", script.format(repo=REPO)],
         cwd=str(tmp_path),  # NOT the repo root
         capture_output=True,
         text=True,
@@ -39,3 +52,11 @@ def test_worker_closures_resolve_from_foreign_cwd(tmp_path):
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "OK" in proc.stdout
+
+
+def test_worker_closures_resolve_from_foreign_cwd(tmp_path):
+    _run_from(tmp_path, _SCRIPT)
+
+
+def test_factory_session_resolves_from_foreign_cwd(tmp_path):
+    _run_from(tmp_path, _FACTORY_SCRIPT)

@@ -10,21 +10,14 @@ edge-case fixes that rode along this round (short-doc repetition
 chunking, id-dtype-preserving subword counts).
 """
 
-import importlib.util
-import os
-
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-_spec = importlib.util.spec_from_file_location(
-    "check_correctness",
-    os.path.join(os.path.dirname(__file__), "..", "tools", "check_correctness.py"),
-)
-cc = importlib.util.module_from_spec(_spec)
-_spec.loader.exec_module(cc)
+# imported the way perfbench/checks.py imports it
+from tools import check_correctness as cc
 
 
 def test_seeded_hugeint_regression_is_caught(spark):

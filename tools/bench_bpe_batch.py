@@ -28,10 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from arabicner_spark.operators import bpe
+from arabicner_spark.session import session
 
 SYLLABLES = [
     "ba", "be", "bi", "bo", "bu", "da", "de", "di", "do", "du",
@@ -106,14 +106,8 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cores}]")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # shuffles as wide as the vocabulary's repartition below
+    spark = session(f"local[{args.cores}]", shuffle_partitions=args.cores)
 
     words = synth_words(spark, args.words).repartition(args.cores).localCheckpoint(
         eager=True

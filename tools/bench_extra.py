@@ -25,23 +25,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
-
-
-def session():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("arabicner-spark-bench-extra")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+from arabicner_spark.session import session
 
 
 def main() -> None:
@@ -50,7 +34,14 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeats = int(os.environ.get("BENCH_EXTRA_REPEATS", "1"))
     tag = os.environ.get("BENCH_EXTRA_TAG", "before")
-    spark = session()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    # bench.py's session (partitions, memory), so a query timed here
+    # compares with its bench.py timing
+    spark = session(
+        f"local[{cpus}]",
+        driver_mem=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        shuffle_partitions=max(cpus, 16),
+    )
     from arabicner_spark.plans.testdata_queries import QUERIES
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

@@ -17,10 +17,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arabicner_spark.functions.sketches import heavy_hitters_mg
+from arabicner_spark.session import session
 
 
 def heavy_hitters_mg_rdd(df: DataFrame, col: str, k: int = 8) -> DataFrame:
@@ -75,14 +76,8 @@ def main() -> None:
     ap.add_argument("--cpus", type=int, default=16)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", str(args.cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # shuffles as wide as the stream's repartition below
+    spark = session(f"local[{args.cpus}]", shuffle_partitions=args.cpus)
 
     # skewed token stream: ~12% one hot value, Zipf-ish tail over 10k ids
     base = spark.range(args.rows).repartition(args.cpus)

@@ -1,6 +1,6 @@
 """Scaling-efficiency evidence (north rule: >=0.8 from N to 4N
-executors; sandbox substitute per driver instruction = same job, same
-input, local[8] vs local[32]).
+executors; sandbox substitute = same job, same input, local[N/4] vs
+local[N], N the CPUs this process may run on).
 
 Parent mode: generates one deterministic synthetic transcript corpus,
 writes it to parquet, then runs the FULL KG pipeline (NER -> triples ->
@@ -9,7 +9,7 @@ rewrites BENCH/BASELINE.md with throughput at both levels + efficiency.
 
 Worker mode (--worker): one timed pipeline run; prints one JSON line.
 
-Usage: python tools/bench_scaling.py [--convs 1200] [--levels 8,32]
+Usage: python tools/bench_scaling.py [--convs 1200] [--levels N/4,N]
 """
 
 from __future__ import annotations
@@ -24,23 +24,20 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arabicner_spark.session import session  # noqa: E402
+
+# N/4 and N cores, N the CPUs this process may run on: a level past N
+# oversubscribes, because taskset masks to the CPUs that exist
+_CPUS = len(os.sched_getaffinity(0))
+LEVELS = f"{max(_CPUS // 4, 1)},{_CPUS}"
+
 
 def worker(cores: int, input_path: str, out_root: str) -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"kg-scaling-{cores}")
-        .config("spark.sql.shuffle.partitions", str(2 * cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     from arabicner_spark.plans.pipeline import PipelineConfig, run_pipeline
     from arabicner_spark.sources import synth
+
+    # shuffle width follows the leg's cores, like the salt width below
+    spark = session(f"local[{cores}]", shuffle_partitions=2 * cores)
 
     transcripts = spark.read.parquet(input_path)
     n_turns = transcripts.count()  # force the scan before the clock
@@ -73,7 +70,7 @@ def main() -> None:
     p.add_argument("--input")
     p.add_argument("--out")
     p.add_argument("--convs", type=int, default=1200)
-    p.add_argument("--levels", default="4,16")
+    p.add_argument("--levels", default=LEVELS)
     args = p.parse_args()
 
     if args.worker:
@@ -88,21 +85,12 @@ def main() -> None:
         _run_levels(args, work, input_path)
         return
     # generate once (deterministic), write parquet shared by both runs
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     import pandas as pd
 
     from arabicner_spark import schemas
     from arabicner_spark.sources import synth
 
+    spark = session()
     rows = synth.make_transcript_rows(n_convs=args.convs, seed=42)
     pdf = pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -113,12 +101,12 @@ def main() -> None:
     _run_levels(args, work, input_path)
 
 
-def _run_levels(args, work: str, input_path: str) -> None:
+def pinned_runs(script: str, levels: str, leg_args) -> list:
+    """One ``script --worker --cores N *leg_args(N)`` process per level;
+    the JSON line each prints."""
     results = []
-    for cores in [int(x) for x in args.levels.split(",")]:
-        out = os.path.join(work, f"out_{cores}")
-        cmd = [sys.executable, os.path.abspath(__file__), "--worker",
-               "--cores", str(cores), "--input", input_path, "--out", out]
+    for cores in [int(x) for x in levels.split(",")]:
+        cmd = [sys.executable, script, "--worker", "--cores", str(cores), *leg_args(cores)]
         # Pin the whole worker (JVM task threads, GC, parquet writers,
         # Python workers) to exactly `cores` CPUs — a real N-core
         # executor is capped like this, while an unpinned local[N] JVM
@@ -135,6 +123,14 @@ def _run_levels(args, work: str, input_path: str) -> None:
             sys.exit(1)
         results.append(json.loads(line[-1]))
         print(results[-1])
+    return results
+
+
+def _run_levels(args, work: str, input_path: str) -> None:
+    results = pinned_runs(
+        os.path.abspath(__file__), args.levels,
+        lambda c: ["--input", input_path, "--out", os.path.join(work, f"out_{c}")],
+    )
 
     lo, hi = results[0], results[-1]
     ratio = hi["cores"] / lo["cores"]

@@ -4,8 +4,8 @@ MinHash-LSH candidates -> distributed connected components ->
 survivor decision) and graph triangle counting, each run at two pinned
 parallelism levels on the same synthetic input — the sandbox
 substitute for the north rule's two-cluster-size criterion (no real
-cluster here; same job, same input, taskset-pinned local[N] vs
-local[4N]).
+cluster here; same job, same input, taskset-pinned local[N/4] vs
+local[N], N the CPUs this process may run on).
 
 Parent mode: generates the corpus ONCE with pure codegen expressions
 (no driver-side row building), writes parquet, then times each job in
@@ -15,7 +15,7 @@ scaling" section of BENCH/BASELINE.md.
 Worker mode (--worker): one timed run of both jobs; one JSON line.
 
 Usage: python tools/bench_scaling_dedup.py [--docs 3000000]
-       [--edges 8000000] [--levels 4,16]
+       [--edges 8000000] [--levels N/4,N]
 """
 
 from __future__ import annotations
@@ -23,32 +23,17 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arabicner_spark.session import session  # noqa: E402
+from tools.bench_scaling import LEVELS, pinned_runs  # noqa: E402
+
 DOC_VOCAB = 50_000  # shared word vocabulary -> realistic shingle overlap
 DOC_WORDS = 18
-
-
-def _session(cores: int, name: str):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(name)
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", "24g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def generate(docs_path: str, edges_path: str, n_docs: int, n_edges: int) -> None:
@@ -60,7 +45,7 @@ def generate(docs_path: str, edges_path: str, n_docs: int, n_edges: int) -> None
     nodes (avg degree ~16 undirected)."""
     from pyspark.sql import functions as F
 
-    spark = _session(8, "nonkg-gen")
+    spark = session()
     base = spark.range(n_docs)
     src = (
         F.when(F.col("id") % 10 == 7, F.col("id") - 7)
@@ -108,11 +93,11 @@ def worker(cores: int, docs_path: str, edges_path: str) -> None:
     from arabicner_spark.operators.graph import triangle_count
     from arabicner_spark.operators.incremental import dedup_decision
 
-    spark = _session(cores, f"nonkg-scaling-{cores}")
     # fixed shuffle width (64) at BOTH levels: production posture is
     # partitions >> cores, and an identical work decomposition leaves
     # core count as the only variable between the two legs
     width = 64
+    spark = session(f"local[{cores}]", shuffle_partitions=width)
 
     # environment-ceiling CONTROL: a bare 3-line md5 scan (no joins, no
     # aggregation, nothing of this repo's plans) — whatever efficiency
@@ -169,7 +154,7 @@ def main() -> None:
     p.add_argument("--edges-path")
     p.add_argument("--docs", type=int, default=3_000_000)
     p.add_argument("--edges", type=int, default=8_000_000)
-    p.add_argument("--levels", default="4,16")
+    p.add_argument("--levels", default=LEVELS)
     args = p.parse_args()
 
     if args.worker:
@@ -183,26 +168,10 @@ def main() -> None:
     edges_path = os.path.join(work, "edges")
     generate(docs_path, edges_path, args.docs, args.edges)
 
-    results = []
-    for cores in [int(x) for x in args.levels.split(",")]:
-        cmd = [
-            sys.executable, os.path.abspath(__file__), "--worker",
-            "--cores", str(cores),
-            "--docs-path", docs_path, "--edges-path", edges_path,
-        ]
-        # same pinning rationale as tools/bench_scaling.py: cap the
-        # whole worker at exactly N CPUs like a real N-core executor
-        if os.path.exists("/usr/bin/taskset"):
-            cmd = ["/usr/bin/taskset", "-c", f"0-{cores - 1}"] + cmd
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, cwd=REPO, timeout=3600
-        )
-        line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-        if not line:
-            print("WORKER FAILED:", proc.stdout[-2000:], proc.stderr[-2000:])
-            sys.exit(1)
-        results.append(json.loads(line[-1]))
-        print(results[-1])
+    results = pinned_runs(
+        os.path.abspath(__file__), args.levels,
+        lambda c: ["--docs-path", docs_path, "--edges-path", edges_path],
+    )
 
     lo, hi = results[0], results[-1]
     ratio = hi["cores"] / lo["cores"]

@@ -17,7 +17,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
+
+from arabicner_spark.session import session
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -128,15 +129,10 @@ def main():
     only = set(sys.argv[2:])
     import __spark_entry__ as entrymod
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # the suite's width: at Spark's 200 the pins on compute-bound stages
+    # (io.pin_width) spend the run on tiny tasks (sf0.01, 4 cores: 152 s
+    # at 8, 183 s at 16, 291 s at 200)
+    spark = session(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")

@@ -6,26 +6,19 @@ The package is pure Python, so deployment is:
     spark-submit --py-files arabicner_spark.zip \
         --master <cluster> arabicner_spark/plans/run.py \
         --input <iceberg-or-parquet transcripts> --output <kg root>
+
+The zip is the one the package ships to interactive sessions
+(``arabicner_spark.session.package_zip``): rebuilt only when stale.
 """
 
 from __future__ import annotations
 
 import os
-import zipfile
+import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def main() -> None:
-    out = os.path.join(REPO, "arabicner_spark.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(os.path.join(REPO, "arabicner_spark")):
-            for f in sorted(files):
-                if f.endswith(".py"):
-                    p = os.path.join(root, f)
-                    z.write(p, os.path.relpath(p, REPO))
-    print(out)
-
+from arabicner_spark.session import package_zip
 
 if __name__ == "__main__":
-    main()
+    print(package_zip())
