@@ -10,7 +10,8 @@ expressed Spark-first:
          see SURVEY.md section 2)
       -> per-turn triple extraction (Catalyst-planned self-join + type-pair
          pattern predicates)
-      -> entity linking (broadcast/salted alias hash-join)
+      -> entity linking (driver-resolved alias table, then MinHash-LSH
+         over the surfaces it misses)
       -> canonicalization (MinHash-LSH blocking + large-star/small-star
          connected components)
       -> partitioned nodes/edges tables + per-partition lineage metrics.

@@ -119,101 +119,3 @@ def heavy_hitters_exact(df: DataFrame, col: str, s: int = 20) -> DataFrame:
         .where(F.col("cnt") * s > F.col("n"))
         .select("val", "cnt", F.round(F.col("cnt") / F.col("n"), 4).alias("share"))
     )
-
-
-def heavy_hitters_mg(df: DataFrame, col: str, k: int = 8) -> DataFrame:
-    """Misra-Gries summary, distributed and Arrow-vectorized: each
-    partition folds its Arrow batches into a k-counter MG summary
-    (``mapInArrow`` iterator form — per-batch C++ ``value_counts``
-    concatenated into the running summary table, group-summed, then
-    trimmed by the (k+1)-th largest counter; output is summary-sized,
-    at most k rows per partition, never data-sized).  Partition
-    summaries merge by summing per-value estimates, lowered by the
-    (k+1)-th largest to restore the MG underestimate invariant.
-
-    The batch-fold is the mergeable-summaries formulation of MG
-    (Agarwal et al.): subtracting the (k+1)-th largest counter from
-    all counters removes >= (k+1) x that amount of total weight, so
-    the per-value underestimate stays <= n/(k+1) exactly as in the
-    per-row decrement form — but the hot path is pyarrow.compute
-    end to end (value_counts, group_by sum, sort, subtract): no
-    per-row Python, and no Python string is ever materialized for a
-    data row (a mapInPandas draft paid Arrow->pandas OBJECT
-    conversion for every row — 30M PyObject strings — and measured
-    only 1.7x over the rdd.mapPartitions form it replaced; the
-    all-Arrow fold is where the vectorization win actually lives,
-    receipt in COVERAGE.md).
-
-    Guarantee (property-tested): for every value,
-    ``true - n/(k+1) <= est <= true`` — so any value with frequency
-    above n/(k+1) is guaranteed present.  Estimates depend on
-    partition layout (inherent to MG), so this is the
-    streaming/constant-memory path; exact two-pass above is the gate.
-    """
-
-    def mg_fold(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        state = None  # pa.Table (val, est), <= k rows between batches
-        for rb in batches:
-            # nulls are COUNTED as a value (the pre-Arrow rdd fold's
-            # semantics, and the exact gate's: groupBy keeps a null
-            # group) — a null-heavy column must not silently lose its
-            # summary entry (ADVICE r6)
-            vc = pc.value_counts(rb.column(0))
-            tbl = pa.table(
-                {
-                    "val": vc.field("values"),
-                    "est": pc.cast(vc.field("counts"), pa.int64()),
-                }
-            )
-            if state is None:
-                state = tbl
-            else:
-                state = (
-                    pa.concat_tables([state, tbl])
-                    .group_by("val")
-                    .aggregate([("est", "sum")])
-                    .rename_columns(["val", "est"])
-                )
-            if state.num_rows > k:
-                state = state.take(
-                    pc.sort_indices(state, sort_keys=[("est", "descending")])
-                )
-                cut = state.column("est")[k].as_py()  # (k+1)-th largest
-                state = state.slice(0, k)  # ranks k+1.. are <= cut: drop
-                est = pc.subtract(state.column("est"), pa.scalar(cut, pa.int64()))
-                state = pa.table({"val": state.column("val"), "est": est}).filter(
-                    pc.greater(est, 0)
-                )
-        if state is not None and state.num_rows:
-            yield from state.combine_chunks().to_batches()
-
-    parts = df.select(F.col(col).cast("string").alias("val")).mapInArrow(
-        mg_fold, "val string, est long"
-    )
-    merged = parts.groupBy("val").agg(F.sum("est").cast("bigint").alias("est"))
-    # subtract the (k+1)-th largest merged estimate — but only when
-    # more than k values survived the merge (otherwise nothing to trim)
-    kth = (
-        merged.orderBy(F.desc("est"), "val")
-        .limit(k + 1)
-        .agg(
-            F.when(F.count("*") > k, F.min("est"))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("kth")
-        )
-    )
-    over = merged.crossJoin(F.broadcast(kth))
-    return (
-        over.select(
-            "val",
-            F.when(F.col("est") > F.col("kth"), F.col("est") - F.col("kth"))
-            .otherwise(F.lit(0))
-            .cast("bigint")
-            .alias("est"),
-        )
-        .where(F.col("est") > 0)
-    )

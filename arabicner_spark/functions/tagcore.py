@@ -165,43 +165,20 @@ def encode_tokens(
     return encode_from_lengths(subword_lengths(tokens), max_seq_len)
 
 
-def greedy_match(
-    norm_tokens: Sequence[str], by_first: Dict[str, list]
-) -> List[Tuple[int, int]]:
-    """Greedy left-to-right longest-match of gazetteer phrases.
-
-    ``by_first``: {first_token: [(len, phrase_tuple)] longest-first}
-    (PreparedGazetteer.index[type]).  Within one type head, matched
-    spans never overlap (the head can only express one BIO
-    segmentation), mirroring the reference's "we do not have
-    overlapping of same type" rule (arabiner/data/transforms.py:91-95).
-    Nesting arises across heads.
-    """
-    spans: List[Tuple[int, int]] = []
-    n = len(norm_tokens)
-    i = 0
-    while i < n:
-        cands = by_first.get(norm_tokens[i])
-        hit = 0
-        if cands:
-            for k, phrase in cands:  # longest-first
-                if i + k <= n and tuple(norm_tokens[i : i + k]) == phrase:
-                    spans.append((i, i + k))
-                    hit = k
-                    break
-        i += hit or 1
-    return spans
-
-
 def match_all_spans(
     norm_tokens: Sequence[str], pg: PreparedGazetteer, n_taggable: int
 ) -> List[Tuple[int, int, int]]:
     """All-level greedy matching in ONE scan: [(level, start, end)].
 
-    Exactly equivalent to running greedy_match per level (candidates in
-    ``pg.merged`` are grouped by level, longest-first within a level;
-    per-level cursors reproduce the consume-and-advance rule) but with
-    a single dict lookup per position instead of L scans.
+    Exactly equivalent to a greedy left-to-right longest match of
+    gazetteer phrases run per level (candidates in ``pg.merged`` are
+    grouped by level, longest-first within a level; per-level cursors
+    reproduce the consume-and-advance rule) but with a single dict
+    lookup per position instead of L scans.  Within one level matched
+    spans never overlap (a head can only express one BIO segmentation),
+    mirroring the reference's "we do not have overlapping of same type"
+    rule (arabiner/data/transforms.py:91-95); nesting arises across
+    levels.
 
     Truncation rule, reference-faithful: the reference SLICES the tag
     lists at the subword budget (arabiner/data/transforms.py:101-107),

@@ -22,17 +22,11 @@ Plan shape — why union+window instead of join+rank:
 
 Scale note: per-key data sorts within one task; a pathologically hot
 key concentrates its sort (AQE cannot split window skew).
-``asof_join_bucketed`` is the implemented mitigation: time pre-sliced
-into coarse buckets, the same window run per (key, bucket) — bounded
-partitions under ANY key skew — and bucket boundaries stitched with a
-carry table of per-(key, bucket) last values whose own as-of pass runs
-over DISTINCT BUCKETS (rows bounded by time-range / bucket_width, not
-by data volume).  Equivalence to the plain operator is property-tested.
 """
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -92,89 +86,3 @@ def asof_join(
         .select(*keep, *[F.col("__match")[c].alias(c) for c in value_cols])
         .drop("__ts", "__side")
     )
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    keys: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-    bucket_width: int,
-) -> DataFrame:
-    """asof_join for HOT keys: identical output, skew-proof plan.
-
-    Pass 1 (the data-sized pass) windows per (key, time-bucket) — a key
-    holding half the corpus still splits into time-range/bucket_width
-    partitions.  Pass 2 stitches boundaries: the latest right row per
-    (key, bucket) forms a carry table; each DISTINCT left (key, bucket)
-    as-of joins against it over earlier buckets (rows = buckets, not
-    events), and the carried value fills left rows whose bucket holds
-    no in-bucket predecessor.  Timestamps must be integers in the same
-    unit as ``bucket_width``.
-    """
-    keys = list(keys)
-    lb = left.withColumn("__kb", F.floor(F.col(left_ts) / bucket_width).cast("long"))
-    rb = right.withColumn("__kb", F.floor(F.col(right_ts) / bucket_width).cast("long"))
-    # pass 1: in-bucket as-of — bounded windows under any key skew.
-    # __hit marks "an in-bucket predecessor EXISTS" (fills atomically
-    # with the payload), so the boundary stitch below can distinguish a
-    # matched-but-NULL payload (keep the NULL — ASOF semantics) from
-    # "no in-bucket match" (take the carried value).
-    rb_hit = rb.withColumn("__hit", F.lit(1))
-    infill = asof_join(
-        lb, rb_hit, keys + ["__kb"], left_ts, right_ts, list(value_cols) + ["__hit"]
-    )
-
-    # carry table: the latest right ROW per (key, bucket) — max_by over
-    # one struct so a NULL payload column cannot be skipped per-column
-    # (max_by(c, ts) ignores rows where c is NULL, which would mix rows)
-    summaries = (
-        rb.groupBy(*keys, "__kb")
-        .agg(
-            F.max_by(
-                F.struct(*[F.col(c) for c in value_cols]), F.col(right_ts)
-            ).alias("__row")
-        )
-        .select(
-            *keys,
-            "__kb",
-            *[F.col("__row")[c].alias(f"__prev_{c}") for c in value_cols],
-        )
-    )
-
-    # distinct left buckets as-of the latest summary in an EARLIER
-    # bucket — this union+window runs over bucket-granular rows only
-    lbuckets = lb.select(*keys, "__kb").distinct().withColumn(
-        "__pb", F.col("__kb") - 1
-    )
-    carried = asof_join(
-        lbuckets,
-        summaries.select(
-            *keys,
-            F.col("__kb").alias("__sb"),
-            *[F.col(f"__prev_{c}") for c in value_cols],
-        ),
-        keys,
-        "__pb",
-        "__sb",
-        [f"__prev_{c}" for c in value_cols],
-    ).select(*keys, "__kb", *[F.col(f"__prev_{c}") for c in value_cols])
-
-    out = infill.join(carried, keys + ["__kb"], "left")
-    # stitch on the EXISTENCE flag, not value-NULLness: an in-bucket
-    # match whose payload is NULL keeps its NULL (the matched row wins
-    # whole); only rows with no in-bucket predecessor take the carry
-    final = [
-        F.when(F.col("__hit").isNotNull(), F.col(c))
-        .otherwise(F.col(f"__prev_{c}"))
-        .alias(c)
-        for c in value_cols
-    ]
-    keep = [
-        c
-        for c in infill.columns
-        if c not in value_cols and c not in ("__kb", "__hit")
-    ]
-    return out.select(*keep, *final)

@@ -1,37 +1,24 @@
-"""BPE tokenizer training on Spark — the tokenizer-side operator of a
-training-data pipeline (the reference consumes a pretrained WordPiece
-vocab via transformers, arabiner/utils/helpers.py; building the vocab
-from the corpus is the upstream step a 100-TB pipeline owns).
+"""BPE tokenizer training on Spark, the counting step — the
+tokenizer-side operator of a training-data pipeline (the reference
+consumes a pretrained WordPiece vocab via transformers,
+arabiner/utils/helpers.py; building the vocab from the corpus is the
+upstream step a 100-TB pipeline owns).
 
-Scale shape (the classic two-tier BPE formulation):
-  1. ONE corpus scan builds the word-frequency table — explode + one
-     map-side-combinable count agg.  At 100 TB this is the only pass
-     over the data; everything after runs on the VOCABULARY table
-     (millions of rows, not billions).
-  2. The merge loop iterates over the vocab table: count adjacent
-     symbol pairs weighted by word frequency (explode + sum agg —
-     partial-aggregated, so the shuffle carries distinct pairs, not
-     occurrences), take the arg-max pair (orderBy+limit(1) =
-     TakeOrderedAndProject, one row to the driver), and apply the
-     merge with a PURE-EXPRESSION array fold (no Python, no UDF):
-     greedy left-to-right, exactly the textbook BPE apply.
-     localCheckpoint per round cuts the lineage like the other
-     iterative operators (components, pagerank).
+Scale shape (the classic two-tier BPE formulation): ONE corpus scan
+builds the word-frequency table — explode + one map-side-combinable
+count agg.  At 100 TB this is the only pass over the data; pair
+counting runs on the VOCABULARY table (millions of rows, not billions),
+weighted by word frequency, so the shuffle carries distinct pairs, not
+occurrences.
 
-Determinism: the arg-max tie-break is (count desc, pair asc) — a total
-order — so the merge sequence is a pure function of the corpus.
+Determinism: the top-k order is (count desc, pair asc) — a total
+order — so the result is a pure function of the corpus.
 """
 
 from __future__ import annotations
 
-from typing import List, Tuple
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# separator used in the pair label; word symbols can never contain a
-# space because words come from splitting text on spaces
-PAIR_SEP = " "
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -44,23 +31,13 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def char_symbols(word_col: Column) -> Column:
-    """Initial BPE state: the word as its character sequence.  Guarded
-    for the empty word: Spark's sequence(1, 0) is DESCENDING ([1, 0]),
-    which would turn "" into two empty symbols and let a ('', '')
-    merge win the first round (observed on a synthetic vocab before
-    the guard) — same bug class as the text_repetition chunk fix."""
-    idx = F.when(
-        F.length(word_col) >= 1, F.sequence(F.lit(1), F.length(word_col))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(idx, lambda i: word_col.substr(i, F.lit(1)))
-
-
 def char_pair_counts(words: DataFrame, k: int = 20) -> DataFrame:
     """One BPE counting step over the initial (character) state as
     2-char substrings: top-k adjacent character pairs weighted by word
     frequency, (count desc, pair asc).  Pure expressions; the global
     top-k is a TakeOrderedAndProject."""
+    # guarded: Spark's sequence(1, 0) is DESCENDING ([1, 0]), which
+    # would give a one-character word the pairs "a" and ""
     n = (F.length("word") - 1).cast("int")
     idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
         F.array().cast("array<int>")
@@ -70,474 +47,3 @@ def char_pair_counts(words: DataFrame, k: int = 20) -> DataFrame:
     )
     agg = pairs.groupBy("pair").agg(F.sum("freq").cast("long").alias("n"))
     return agg.orderBy(F.desc("n"), "pair").limit(k)
-
-
-def symbol_pair_counts(syms_df: DataFrame) -> DataFrame:
-    """(pair, n) over the current symbol state: adjacent symbol pairs
-    joined with PAIR_SEP, weighted by word freq."""
-    n = (F.size("syms") - 1).cast("int")
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    pair = F.transform(
-        idx,
-        lambda i: F.concat(
-            F.element_at(F.col("syms"), i), F.lit(PAIR_SEP), F.element_at(F.col("syms"), i + 1)
-        ),
-    )
-    return (
-        syms_df.select("freq", F.explode(pair).alias("pair"))
-        .groupBy("pair")
-        .agg(F.sum("freq").cast("long").alias("n"))
-    )
-
-
-def apply_merge(sym_col: Column, x: str, y: str) -> Column:
-    """Greedy left-to-right application of merge (x, y) -> x+y to a
-    symbol array, as one expression fold: append each symbol unless the
-    accumulator ends with ``x`` and the symbol is ``y``, in which case
-    replace the tail with the merged symbol.  Because the merged
-    symbol differs from ``x`` (strictly longer), overlapping runs
-    resolve exactly like the textbook sequential scan:
-    [a,a,a] -> [aa,a] and [a,a,a,a] -> [aa,aa]."""
-    merged = x + y
-    return F.aggregate(
-        sym_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(x))
-            & (s == F.lit(y)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def apply_merges_batch(sym_col: Column, merges: List[Tuple[str, str]]) -> Column:
-    """Apply an INTERACTION-FREE batch of merges in one expression
-    fold.  Valid when no two batch members interleave anywhere in the
-    data (pairwise ``dmat`` bounds all zero — they may still share a
-    first or last symbol) and no member contains another's x+y concat:
-    then no position ever offers two merges a choice, so one
-    simultaneous left-to-right scan equals applying the merges
-    sequentially in any order — each step looks the (tail, symbol) key
-    up in a literal map instead of testing one pair.  Interacting
-    batches must chain :func:`apply_merge` folds in priority order
-    instead."""
-    m = F.create_map(
-        *[
-            F.lit(v)
-            for (x, y) in merges
-            for v in (x + PAIR_SEP + y, x + y)
-        ]
-    )
-    return F.aggregate(
-        sym_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & F.element_at(
-                m, F.concat(F.element_at(acc, -1), F.lit(PAIR_SEP), s)
-            ).isNotNull(),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(
-                    F.element_at(
-                        m, F.concat(F.element_at(acc, -1), F.lit(PAIR_SEP), s)
-                    )
-                ),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def pair_interactions(
-    syms_df: DataFrame, cand_pairs: List[str]
-) -> Tuple[dict, dict]:
-    """One bounded triple scan -> the two tables the greedy-safe batch
-    selection needs, for candidate pair strings "x y":
-
-    - ``tmax[pair]``: max count of any adjacent symbol TRIPLE containing
-      (x, y) as its prefix or suffix pair.  Bounds every pair a merge of
-      (x, y) can CREATE: a new pair (t, xy) has one occurrence per
-      "t x y" adjacency, (xy, u) per "x y u", and (xy, xy) per
-      "x y x y" <= both of its triples.
-    - ``dmat[(p, q)]``: summed count of triples whose prefix pair is p
-      and suffix pair is q (both candidates).  Bounds how many
-      occurrences of q a merge of p can DESTROY: a destroyed q=(u,v)
-      occurrence has u or v consumed by a p=(x,y) merge event, which
-      forces the adjacency x,y(=u),v or u,v(=x),y — i.e. an
-      interleaving triple (shared middle symbol).  Pairs sharing only
-      their first or only their last symbol never interleave: D = 0.
-
-    Both bounds are computed on the round-start state and stay valid at
-    every intra-batch step: batch merges only coarsen words (adjacent
-    symbols in a later state were adjacent at round start), so every
-    later-event triple maps to a round-start triple already counted.
-    """
-    if not cand_pairs:
-        return {}, {}
-    # a qualifying triple's pre or suf pair IS a candidate, so its word
-    # must hold a candidate ADJACENCY — an exact arrays_overlap
-    # prefilter on the word's adjacent-pair strings.  (A component-set
-    # prefilter is useless past the early rounds: candidate components
-    # are frequent symbols that appear in ~100% of words, while exact
-    # pair membership measured 32% at depth 150 on the 2M-word receipt
-    # corpus.  A contains-OR over the ~128 candidate strings measured
-    # 2x SLOWER per round than the single set-overlap; the HOF form is
-    # safe here — one expression, unlike the two-column `touched`
-    # projection, see _contains_any_pair.)  The overlap fuses into the
-    # same scan stage, so the triple explode + groupBy only pays for
-    # matching words.
-    syms_df = syms_df.where(
-        F.arrays_overlap(
-            _adj_pairs("syms"), F.array(*[F.lit(p) for p in cand_pairs])
-        )
-    )
-    n = (F.size("syms") - 2).cast("int")
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    s = lambda i: F.element_at(F.col("syms"), i)  # noqa: E731
-    trip = F.transform(
-        idx,
-        lambda i: F.struct(
-            F.concat_ws(PAIR_SEP, s(i), s(i + 1), s(i + 2)).alias("t"),
-            F.concat_ws(PAIR_SEP, s(i), s(i + 1)).alias("pre"),
-            F.concat_ws(PAIR_SEP, s(i + 1), s(i + 2)).alias("suf"),
-        ),
-    )
-    per_triple = (
-        syms_df.select("freq", F.explode(trip).alias("tr"))
-        .select("freq", "tr.t", "tr.pre", "tr.suf")
-        .where(F.col("pre").isin(cand_pairs) | F.col("suf").isin(cand_pairs))
-        .groupBy("t", "pre", "suf")
-        .agg(F.sum("freq").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
-    t_rows = (
-        per_triple.select(
-            F.explode(
-                F.array_distinct(F.array("pre", "suf"))
-            ).alias("pair"),
-            "cnt",
-        )
-        .where(F.col("pair").isin(cand_pairs))
-        .groupBy("pair")
-        .agg(F.max("cnt").alias("v"))
-        .select(F.lit("T").alias("k"), "pair", F.lit("").alias("pair2"), "v")
-    )
-    d_rows = (
-        per_triple.where(
-            F.col("pre").isin(cand_pairs) & F.col("suf").isin(cand_pairs)
-        )
-        .groupBy("pre", "suf")
-        .agg(F.sum("cnt").alias("v"))
-        .select(
-            F.lit("D").alias("k"),
-            F.col("pre").alias("pair"),
-            F.col("suf").alias("pair2"),
-            "v",
-        )
-    )
-    tmax: dict = {}
-    dmat: dict = {}
-    for r in t_rows.unionByName(d_rows).collect():
-        if r["k"] == "T":
-            tmax[r["pair"]] = r["v"]
-        else:
-            dmat[(r["pair"], r["pair2"])] = r["v"]
-    return tmax, dmat
-
-
-def _greedy_safe_batch(
-    cands: List[Tuple[str, int]],
-    tmax: dict,
-    dmat: dict,
-    batch: int,
-    min_count: int,
-    vocab: frozenset = frozenset(),
-) -> Tuple[List[Tuple[str, str]], bool]:
-    """Maximal PREFIX of the (count desc, pair asc) candidate order
-    that provably reproduces the serial greedy sequence, and whether
-    the accepted set is pairwise interaction-free (so a simultaneous
-    shared-map fold may apply it instead of sequential chained folds).
-
-    A candidate q with round-start count n joins the batch iff, at its
-    serial step, it is STILL the strict argmax no matter how the
-    accepted merges played out:
-
-    - q contains no accepted x+y concat (such a pair's count can GROW
-      with the merge — unbounded above, stop);
-    - low = n - sum of interleave bounds dmat vs every accepted p is
-      q's worst-case serial count (old pairs never increase);
-    - low >= min_count (serial must not have stopped first);
-    - low > t_cap = max tmax over accepted (strictly beats every pair
-      the accepted merges can CREATE — ties lose: serial tie-break is
-      by pair string, which a new pair could win);
-    - low > next candidate's count, or the decrement is provably zero
-      and n >= next (equal counts resolve by pair asc = list order).
-      The final candidate uses its own n as "next": pairs beyond the
-      truncated top-4*batch list rank below it at round start, which
-      only suffices when q's count provably did not move.
-
-    Stops at the first violation — pairs ranked between accepted
-    members must themselves be accepted, or the serial order beyond
-    them is unknown without a recount.
-
-    ``vocab``: the CURRENT symbol vocabulary (initial alphabet + every
-    concat merged so far).  If an accepted concat x+y equals an
-    already-existing symbol (or one created earlier in this batch),
-    the batch CLOSES right after that acceptance (ADVICE r6): a
-    pre-existing pair like (t, x+y) then GAINS the merge's created
-    occurrences on top of its round-start count — the t_cap bound only
-    covers brand-new pairs and the decrement bounds assume old pairs
-    never increase, so no later acceptance is provably serial-safe.
-    The colliding merge itself is safe (at its serial step the merge
-    has not applied yet, so nothing has gained)."""
-    accepted: List[Tuple[str, str]] = []
-    acc_strs: List[str] = []
-    concats: set = set()
-    t_cap = 0
-    clean = True
-    for j, (pair, cnt) in enumerate(cands):
-        if cnt < min_count or len(accepted) >= batch:
-            break
-        x, y = pair.split(PAIR_SEP, 1)
-        if accepted:
-            if x in concats or y in concats:
-                break
-            d = sum(
-                dmat.get((p, pair), 0) + dmat.get((pair, p), 0)
-                for p in acc_strs
-            )
-            low = cnt - d
-            nxt = cands[j + 1][1] if j + 1 < len(cands) else cnt
-            if low < min_count or low <= t_cap:
-                break
-            if not (low > nxt or (d == 0 and cnt >= nxt)):
-                break
-            if d > 0:
-                clean = False
-        accepted.append((x, y))
-        acc_strs.append(pair)
-        t_cap = max(t_cap, tmax.get(pair, 0))
-        if x + y in vocab or x + y in concats:
-            # concat collides with an existing (or batch-created)
-            # symbol: old pairs can now GAIN occurrences — close the
-            # batch after this provably-safe acceptance (ADVICE r6)
-            break
-        concats.add(x + y)
-    return accepted, clean
-
-
-def _contains_any_pair(col_name: str, pairs: List[str]) -> Column:
-    """EXACT adjacency membership without a higher-order function: the
-    pair (x, y) is adjacent in ``syms`` iff " x y " is a substring of
-    " s1 s2 ... sn " (symbols never contain PAIR_SEP — words come from
-    splitting text on it), so the test is an OR of plain `contains`
-    over the space-joined symbol string.  Pure codegen, and it dodges
-    a Spark 4 codegen mis-binding observed when TWO projection columns
-    each carry higher-order lambdas (an arrays_overlap(_adj_pairs)
-    predicate duplicated across output columns indexed a transformed
-    array with the pre-transform index range)."""
-    joined = F.concat(
-        F.lit(PAIR_SEP), F.concat_ws(PAIR_SEP, F.col(col_name)), F.lit(PAIR_SEP)
-    )
-    cond = F.lit(False)
-    for p in pairs:
-        cond = cond | joined.contains(PAIR_SEP + p + PAIR_SEP)
-    return cond
-
-
-def _adj_pairs(col_name: str) -> Column:
-    """Adjacent-pair strings of a symbol-array column (the
-    symbol_pair_counts projection, reusable on any column name)."""
-    n = (F.size(col_name) - 1).cast("int")
-    idx = F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(
-        idx,
-        lambda i: F.concat(
-            F.element_at(F.col(col_name), i),
-            F.lit(PAIR_SEP),
-            F.element_at(F.col(col_name), i + 1),
-        ),
-    )
-
-
-def train_bpe_batched(
-    words: DataFrame,
-    n_merges: int,
-    min_count: int = 2,
-    batch: int = 16,
-    on_round=None,
-) -> Tuple[List[Tuple[str, str]], DataFrame]:
-    """Batched BPE training: IDENTICAL merge sequence to
-    :func:`train_bpe` (property-tested on interacting corpora), but up
-    to ``batch`` greedy-safe merges are selected and applied per Spark
-    round, amortizing the per-round job latency that makes the serial
-    loop one full job per merge (~4 s/merge at 2M words — a real
-    30k-merge tokenizer would need ~36 h of round-trips).
-
-    The scalable structure is INCREMENTAL pair-count maintenance (the
-    same idea fast single-node BPE trainers use, expressed as
-    dataflow): a (pair, n) state table survives across rounds, so no
-    round ever recounts the corpus.  Per round:
-
-    1. top-``4*batch`` candidates — a tiny sort-limit on the
-       checkpointed counts STATE (distinct-pair-sized, not
-       corpus-sized);
-    2. one interaction scan (:func:`pair_interactions`) prefiltered by
-       EXACT candidate-adjacency membership (arrays_overlap on the
-       word's adjacent-pair strings) — in the merge tail that is a
-       minority of the vocabulary;
-    3. the greedy-safe batch (:func:`_greedy_safe_batch`) is applied
-       ONLY to touched words (exact accepted-pair adjacency;
-       untouched rows copy through), checkpointed together
-       with the pre-merge arrays;
-    4. the counts state is folded forward with the ±freq pair delta of
-       the touched words — a summary-sized merge, exact in integers.
-
-    Interaction-free batches apply as one simultaneous shared-map
-    fold, interacting-but-still-safe ones as sequential chained folds
-    (serial order) in the same projection.  Worst case (every top
-    candidate truly interacts) degenerates to the serial loop; the
-    Zipfian receipt corpus measures the per-round batch fill in
-    COVERAGE.md.
-
-    ``on_round``: optional ``fn(fill, seconds)`` receipt hook called
-    after each round (tools/bench_bpe_batch.py) — keeps the benched
-    loop THE production loop instead of an unrolled copy."""
-    import time as _time
-
-    syms = words.select(
-        "word", "freq", char_symbols(F.col("word")).alias("syms")
-    ).localCheckpoint(eager=True)
-    counts = symbol_pair_counts(syms).localCheckpoint(eager=True)
-    # symbol vocabulary for the concat-collision guard (ADVICE r6):
-    # initial alphabet (one collect, alphabet-sized) + every merged
-    # concat, maintained incrementally in the driver
-    vocab = {
-        r["s"] for r in syms.select(F.explode("syms").alias("s")).distinct().collect()
-    }
-    merges: List[Tuple[str, str]] = []
-    while len(merges) < n_merges:
-        _r0 = _time.time()
-        cands = [
-            (r["pair"], r["n"])
-            for r in counts.orderBy(F.desc("n"), "pair").limit(4 * batch).collect()
-        ]
-        if not cands or cands[0][1] < min_count:
-            break
-        room = min(batch, n_merges - len(merges))
-        if room <= 1:
-            tmax, dmat = {}, {}
-        else:
-            tmax, dmat = pair_interactions(syms, [p for p, _ in cands])
-        step, clean = _greedy_safe_batch(
-            cands, tmax, dmat, room, min_count, vocab=frozenset(vocab)
-        )
-        if not step:
-            break
-        merges.extend(step)
-        vocab.update(x + y for x, y in step)
-        if clean:
-            col = apply_merges_batch(F.col("syms"), step)
-        else:
-            col = F.col("syms")
-            for x, y in step:
-                col = apply_merge(col, x, y)
-        # a word changes under merge (x, y) iff it holds the ADJACENT
-        # pair "x y"; accepted batches never create an accepted pair's
-        # adjacency (no candidate contains an accepted concat, and a
-        # merge only creates adjacencies involving its new symbol), so
-        # pre-batch adjacent-pair membership is EXACT for the whole
-        # batch — measured ~5x tighter than component membership in
-        # the merge tail (components are frequent symbols)
-        touched = _contains_any_pair(
-            "syms", [x + PAIR_SEP + y for x, y in step]
-        )
-        full = syms.select(
-            "word",
-            "freq",
-            F.when(touched, col).otherwise(F.col("syms")).alias("syms"),
-            F.when(touched, F.col("syms")).alias("old_syms"),
-        ).localCheckpoint(eager=True)
-        delta = (
-            full.where(F.col("old_syms").isNotNull())
-            .select(
-                "freq",
-                F.explode(
-                    F.concat(
-                        F.transform(
-                            _adj_pairs("old_syms"),
-                            lambda p: F.struct(p.alias("pair"), F.lit(-1).alias("sg")),
-                        ),
-                        F.transform(
-                            _adj_pairs("syms"),
-                            lambda p: F.struct(p.alias("pair"), F.lit(1).alias("sg")),
-                        ),
-                    )
-                ).alias("d"),
-            )
-            .select("d.pair", (F.col("d.sg") * F.col("freq")).alias("n"))
-        )
-        counts = (
-            counts.unionByName(delta)
-            .groupBy("pair")
-            .agg(F.sum("n").cast("long").alias("n"))
-            .where(F.col("n") != 0)
-            .localCheckpoint(eager=True)
-        )
-        syms = full.select("word", "freq", "syms")
-        if on_round is not None:
-            on_round(len(step), _time.time() - _r0)
-    return merges, syms
-
-
-def train_bpe(
-    words: DataFrame, n_merges: int, min_count: int = 2
-) -> Tuple[List[Tuple[str, str]], DataFrame]:
-    """-> (merge list in order learned, final symbolized vocab
-    (word, freq, syms)).  ``words`` is the (word, freq) table from
-    :func:`word_freqs`.  Stops early when no pair reaches
-    ``min_count``.  Only ONE row crosses to the driver per merge."""
-    syms = words.select(
-        "word", "freq", char_symbols(F.col("word")).alias("syms")
-    ).localCheckpoint(eager=True)
-    merges: List[Tuple[str, str]] = []
-    for _ in range(n_merges):
-        top = (
-            symbol_pair_counts(syms)
-            .orderBy(F.desc("n"), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_count:
-            break
-        x, y = top[0]["pair"].split(PAIR_SEP, 1)
-        merges.append((x, y))
-        syms = syms.withColumn("syms", apply_merge(F.col("syms"), x, y)).localCheckpoint(
-            eager=True
-        )
-    return merges, syms
-
-
-def encode_word(word: str, merges: List[Tuple[str, str]]) -> List[str]:
-    """Driver-side reference encoder (tests + tokenizer export): apply
-    the learned merges in order to one word.  Mirrors apply_merge's
-    greedy fold exactly."""
-    syms = list(word)
-    for x, y in merges:
-        out: List[str] = []
-        for s in syms:
-            if out and out[-1] == x and s == y:
-                out[-1] = x + y
-            else:
-                out.append(s)
-        syms = out
-    return syms

@@ -8,7 +8,7 @@ north-star KG (nodes/edges tables) naturally wants them.  Two families:
   belongs to: a driver loop of joins/aggregations with
   ``localCheckpoint`` per round to cut lineage (SURVEY.md section 4:
   iterative fixpoints are orchestration, not planning — no custom
-  Catalyst rule needed).  ``pagerank`` (float), ``pagerank_exact`` and
+  Catalyst rule needed).  ``pagerank_exact`` and
   ``pagerank_personalized_exact`` (fixed-point integer),
   ``temporal_reach``, ``label_propagation``, ``kcore`` /
   ``kcore_fixpoint`` and the BFS frontier loop ``bfs_depths``.
@@ -29,9 +29,11 @@ the limit, or on NULLs or keys that are not all integers or all
 strings, the distributed loop runs and its state stays in Spark (one
 row per node).  Each operator pins local == distributed in the tests.
 
-PageRank semantics (classic power iteration):
-  pr_0(v)   = 1/N
-  pr_t+1(v) = (1-d)/N + d * sum_{(u,v) in E} pr_t(u) / out_degree(u)
+PageRank semantics (classic power iteration in units of 1/PR_SCALE,
+damping d in percent, every division a floor):
+  pr_0(v)   = PR_SCALE // N
+  pr_t+1(v) = PR_SCALE*(100-d) // (100*N)
+              + (d * sum_{(u,v) in E} pr_t(u) // out_degree(u)) // 100
 over the DISTINCT edge set; dangling mass (nodes with no out-edges) is
 dropped, matching the unrolled SQL oracle exactly.
 """
@@ -115,46 +117,6 @@ def _adjacency(und: DataFrame) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 5,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """-> (node, rank) after ``iterations`` power steps.
-
-    ``edges`` may carry duplicates (multi-edges collapse to the
-    distinct (src, dst) set).  Node set = union of endpoints.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.localCheckpoint(eager=True)  # reused every iteration
-    nodes = _node_set(e)
-    n = nodes.count()
-    out_deg = e.groupBy("src").agg(F.count("*").alias("out"))
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(e, ranks["node"] == e["src"])
-            .join(out_deg, "src")
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("out")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=True)  # cut lineage per round
-        )
-    return ranks
-
-
 def pagerank_exact(
     edges: DataFrame,
     iterations: int = 5,
@@ -165,16 +127,15 @@ def pagerank_exact(
     """PageRank in FIXED-POINT integer arithmetic: (node, rank_i) with
     rank_i in units of 1/PR_SCALE.
 
-    Same power iteration as ``pagerank``, but every quantity is a
-    BIGINT and every division is integral (``div``), so the result is
-    bit-identical regardless of partitioning, engine, or accumulation
-    order — float ``sum(double)`` depends on reduction order and can
-    land on a rounding boundary, flipping a value-hash gate (the exact
-    drift mode the suite elsewhere avoids via integer cents).  The
-    per-step floor loses < 1e-9 of mass per edge — far below any
-    ranking-relevant signal — and buys cross-engine exactness, which is
-    what a correctness GATE needs; production ranking keeps the float
-    ``pagerank`` above.
+    Classic power iteration, but every quantity is a BIGINT and every
+    division is integral (``div``), so the result is bit-identical
+    regardless of partitioning, engine, or accumulation order — float
+    ``sum(double)`` depends on reduction order and can land on a
+    rounding boundary, flipping a value-hash gate (the exact drift mode
+    the suite elsewhere avoids via integer cents).  The per-step floor
+    loses < 1e-9 of mass per edge — far below any ranking-relevant
+    signal — and buys cross-engine exactness, which is what a
+    correctness GATE needs.
 
     ``damping_pct`` is the damping factor in percent (85 = 0.85) so the
     damping multiply stays integral: inflow*85 div 100.  This is

@@ -124,48 +124,6 @@ def dedup_state(docs: DataFrame, width: int | None = None) -> Dict[str, DataFram
     return {"hashes": hashes, "bands": bands, "comp": decision, "decision": decision}
 
 
-def save_state(state: Dict[str, DataFrame], prefix: str, buckets: int = 8) -> None:
-    """Persist the dedup state as BUCKETED tables (``<prefix>_hashes``
-    / ``_bands`` / ``_comp``), bucketed on each table's probe key —
-    ``bands`` on (band, sig), ``hashes`` on h, ``comp`` on node.
-
-    Bucketing is the durability + scale lever together: the daily
-    incremental fold probes the stored band table with the new batch's
-    band keys, and a bucketed stored side makes that join exchange-free
-    on the (large) stored side — only the small new batch shuffles
-    (write-time pre-shuffle, same mechanism test_storage_layout.py pins
-    for the warehouse tables).  This is the parquet-facade equivalent
-    of an Iceberg bucket-partitioned state table (sources/io.py)."""
-    spark = state["bands"].sparkSession
-    # Hadoop FileSystem API, not a local rmtree: the warehouse dir may
-    # be any scheme (file:, hdfs:, s3a:) and Path.getFileSystem picks
-    # the right implementation for each — a parsed-local-path delete
-    # silently no-ops on an object-store warehouse.
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    for name, keys in (("hashes", ["h"]), ("bands", ["band", "sig"]), ("comp", ["node"])):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{name}")
-        # a previously-aborted write can leave the managed location
-        # behind after the metadata drop; saveAsTable then refuses
-        loc = jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{prefix}_{name}")
-        loc.getFileSystem(hconf).delete(loc, True)
-        (
-            state[name]
-            .write.bucketBy(buckets, *keys)
-            .sortBy(*keys)
-            .mode("overwrite")
-            .saveAsTable(f"{prefix}_{name}")
-        )
-
-
-def load_state(spark, prefix: str) -> Dict[str, DataFrame]:
-    """Reload a persisted dedup state; ``decision`` aliases ``comp``."""
-    st = {name: spark.table(f"{prefix}_{name}") for name in ("hashes", "bands", "comp")}
-    st["decision"] = st["comp"]
-    return st
-
-
 def dedup_incremental(
     state: Dict[str, DataFrame], new_docs: DataFrame, width: int | None = None
 ) -> Dict[str, DataFrame]:
@@ -211,32 +169,3 @@ def dedup_incremental(
         "comp": decision,
         "decision": decision,
     }
-
-
-def decision_delta(old_comp: DataFrame, new_decision: DataFrame) -> DataFrame:
-    """The rows a MERGE INTO the stored decision table would touch:
-    nodes absent from the old state (the new batch) plus old nodes
-    whose ``keep`` changed (a bridging new document merging two old
-    clusters re-keys every member of the losing cluster).
-
-    This is the daily-write shape at 100 TB: the full ``decision`` is
-    corpus-sized, but the day's churn is delta-sized — persist via
-    ``MERGE INTO comp USING delta ON comp.node = delta.node WHEN
-    MATCHED THEN UPDATE WHEN NOT MATCHED THEN INSERT`` once the Iceberg
-    runtime lands (sources/io.py blocker note); on the parquet facade,
-    apply with :func:`apply_decision_delta`.  One left join on the
-    bucketed ``node`` key — exchange-free on the stored side."""
-    old = old_comp.select("node", F.col("keep").alias("old_keep"))
-    return (
-        new_decision.join(old, "node", "left")
-        .where(F.col("old_keep").isNull() | (F.col("old_keep") != F.col("keep")))
-        .select("node", "keep")
-    )
-
-
-def apply_decision_delta(old_comp: DataFrame, delta: DataFrame) -> DataFrame:
-    """Parquet-facade MERGE: old rows not in the delta + the delta.
-    ``apply_decision_delta(old, decision_delta(old, new)) == new`` —
-    pinned by tests/test_incremental_delta.py."""
-    untouched = old_comp.join(delta.select("node"), "node", "left_anti")
-    return untouched.select("node", "keep").unionByName(delta)

@@ -1,11 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
-payloads with typed metadata, processed through iterator-style
+payloads with typed metadata, resized through iterator-style
 ``mapInPandas`` (the same Arrow-batch execution shape as the NER
 stage).
 
 The container has no image/audio codecs, so the actual decode is
 STUBBED: ``decode_stub=True`` (default) derives deterministic fake
-features from the payload bytes; ``decode_stub=False`` raises
+dimensions from the payload bytes; ``decode_stub=False`` raises
 NotImplementedError at the decode call site — the Spark-side plumbing
 (schema, batch iteration, partitioning, UDF signature) is real and
 tested either way, and a real decoder drops into ``_decode_one``.
@@ -16,23 +16,16 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-FEATURE_SCHEMA = (
-    "asset_id string, modality string, n_bytes bigint, payload_md5 string, "
-    "feat_mean double, feat_std double, width int, height int"
-)
 
 
 def _decode_one(payload: bytes, modality: str, stub: bool):
-    """Decode an asset into a feature array + (width, height).
+    """Decode an asset -> (width, height).
 
     Real implementation would dispatch to PIL/librosa/ffmpeg by
-    modality; the deterministic stub derives features from the bytes so
-    tests are stable without codecs.
+    modality; the deterministic stub derives the dimensions from the
+    bytes so tests are stable without codecs.
     """
     if not stub:
         raise NotImplementedError(
@@ -40,42 +33,7 @@ def _decode_one(payload: bytes, modality: str, stub: bool):
             "container; run with decode_stub=True or install codecs"
         )
     digest = hashlib.md5(payload or b"").digest()
-    arr = np.frombuffer((payload or b"\x00") * (1 + 64 // max(len(payload or b"\x00"), 1)), dtype=np.uint8)[:64]
-    w = 16 + digest[0] % 64
-    h = 16 + digest[1] % 64
-    return arr.astype(np.float64), w, h
-
-
-def extract_features(assets: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """assets (schemas.ASSETS-like) -> per-asset feature rows.
-
-    Column-pruned before the Arrow boundary; batches stream through the
-    iterator (no per-row Python UDF, no collect).
-    """
-    pruned = assets.select("asset_id", "modality", "payload")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "asset_id", "modality", "n_bytes", "payload_md5",
-                "feat_mean", "feat_std", "width", "height",
-            )}
-            for aid, mod, payload in zip(
-                pdf["asset_id"], pdf["modality"], pdf["payload"]
-            ):
-                payload = bytes(payload) if payload is not None else b""
-                feats, w, h = _decode_one(payload, mod, decode_stub)
-                rows["asset_id"].append(aid)
-                rows["modality"].append(mod)
-                rows["n_bytes"].append(len(payload))
-                rows["payload_md5"].append(hashlib.md5(payload).hexdigest())
-                rows["feat_mean"].append(float(feats.mean()))
-                rows["feat_std"].append(float(feats.std()))
-                rows["width"].append(w)
-                rows["height"].append(h)
-            yield pd.DataFrame(rows).astype({"width": "int32", "height": "int32"})
-
-    return pruned.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return 16 + digest[0] % 64, 16 + digest[1] % 64
 
 
 RESIZE_SCHEMA = (
@@ -108,7 +66,7 @@ def resize_assets(
                 pdf["asset_id"], pdf["modality"], pdf["payload"]
             ):
                 payload = bytes(payload) if payload is not None else b""
-                _feats, w, h = _decode_one(payload, mod, decode_stub)
+                w, h = _decode_one(payload, mod, decode_stub)
                 scale = min(1.0, max_side / max(w, h))
                 dw, dh = max(1, int(w * scale)), max(1, int(h * scale))
                 stride = max(1, len(payload) // max(dw * dh, 1)) if payload else 1
@@ -125,22 +83,3 @@ def resize_assets(
             )
 
     return pruned.mapInPandas(batches, schema=RESIZE_SCHEMA)
-
-
-def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame to extract,
-    computed declaratively from metadata (no decode needed) — the
-    decode of each frame is the stubbed part."""
-    return (
-        assets.where(F.col("modality") == "video")
-        .select(
-            "asset_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("meta_duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ms"),
-        )
-    )

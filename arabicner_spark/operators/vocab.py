@@ -1,4 +1,4 @@
-"""Vocabulary construction — SURVEY.md section 2.A operators #5/#6.
+"""Vocabulary construction — SURVEY.md section 2.A operator #5.
 
 The reference's tag/token ids are FIRST-APPEARANCE ordered
 (``Vocab.itos = list(Counter(...).keys())``, insertion order of a
@@ -6,14 +6,10 @@ Counter over the concatenated corpus stream —
 arabiner/utils/data.py:12-25, 66-78).  That is corpus-order-dependent,
 so reproducing it in Spark requires an ordered scan, NOT
 ``groupBy().count()`` (unordered): we take min(first_position) per
-item, then rank.  Per-type tag vocabs follow arabiner/utils/data.py:
-82-93 — types sorted, tags per type in first-appearance order, "O"
-appended last.
+item, then rank.
 """
 
 from __future__ import annotations
-
-from typing import Dict, List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,28 +33,3 @@ def first_appearance_vocab(
     return agg.withColumn("id", F.row_number().over(w) - 1).select(
         "item", "id", "count"
     )
-
-
-def token_vocab(conll_tokens: DataFrame) -> DataFrame:
-    """From sources.conll_spark.read_conll output."""
-    pos = (F.col("seg_id") * F.lit(1_000_000) + F.col("pos")).alias("gpos")
-    return first_appearance_vocab(
-        conll_tokens.select("token", pos), "token", "gpos"
-    )
-
-
-def tag_vocab_by_type(all_tags: List[str]) -> Dict[str, List[str]]:
-    """Driver-side per-type vocab family (vocab-sized input).
-
-    {type: [tags in first-appearance order] + ["O"]}, types sorted —
-    mirrors tag_vocab_by_type (arabiner/utils/data.py:82-93).
-    """
-    types = sorted({t.split("-", 1)[1] for t in all_tags if "-" in t})
-    out: Dict[str, List[str]] = {}
-    for typ in types:
-        seen: List[str] = []
-        for t in all_tags:
-            if (t == f"B-{typ}" or t == f"I-{typ}") and t not in seen:
-                seen.append(t)
-        out[typ] = seen + ["O"]
-    return out

@@ -3919,7 +3919,7 @@ WINDOW w AS (PARTITION BY o_orderpriority
 def q_link_fuzzy(spark, sf_dir):
     """Fuzzy entity linking: edit-distance <= 1 match of corpus tokens
     against the alias dictionary (typo-tolerant complement of the exact
-    salted-hash linker in operators/linking.py).  The quadratic term is
+    alias linker in operators/linking.py).  The quadratic term is
     DISTINCT-TOKEN-VOCAB x dictionary — never corpus x dictionary: the
     distinct() collapses the 100-TB fact side to its vocabulary before
     the bounded broadcast, the same scan-reduction that makes ann_topk's
@@ -4497,12 +4497,9 @@ def q_bpe_pair_counts(spark, sf_dir):
     """BPE tokenizer training, the counting step (operators/bpe.py):
     top-20 adjacent character pairs over the word-frequency table,
     weighted by word frequency, ties (count desc, pair asc).  The
-    corpus is scanned ONCE to build the vocab table; pair counting and
-    the merge loop run on that vocab-sized table — the two-tier shape
-    that makes BPE training feasible at 100 TB.  The iterative
-    merge-application loop (expression-fold apply, driver sees one row
-    per merge) is pinned against a pure-Python reference in
-    tests/test_bpe.py; this gate pins the data-sized stage exactly."""
+    corpus is scanned ONCE to build the vocab table; pair counting runs
+    on that vocab-sized table — the two-tier shape that makes BPE
+    training feasible at 100 TB."""
     from arabicner_spark.operators import bpe
 
     d = load(spark, sf_dir, "documents")
@@ -5276,9 +5273,7 @@ def q_sketch_heavy_hitters(spark, sf_dir):
     over a skew-planted key: ~30% of events collapse onto 'HOT', the
     rest stay per-user (~0.7% each), so s=20 keeps exactly the planted
     hitter and filters the long tail — non-vacuous at every sf.  Two
-    map-side-combinable aggregates + a one-row broadcast; the
-    constant-memory Misra-Gries variant (partition-layout-dependent by
-    nature) is bound-property-tested instead of oracle-gated."""
+    map-side-combinable aggregates + a one-row broadcast."""
     from arabicner_spark.functions.sketches import heavy_hitters_exact
 
     e = load(spark, sf_dir, "events").select(
@@ -5345,7 +5340,7 @@ FROM c, t WHERE c.cnt * 20 > t.n"""
 # dedup_exact, pack_sequences, split_three_way, sample_mixture,
 # text_arabic_normalize, rel_gap_fill, text_subword_counts, mm_resize,
 # sketch_kmv_distinct, sketch_kmv_by_flag, sketch_hist_quantile
-# (kmv/histogram functions untouched; heavy_hitters_mg's own query IS
+# (kmv/histogram functions untouched; the heavy-hitters query IS
 # seated), ann_ivf, ann_recall, ann_kmeans_refine.
 QUERIES: Dict[str, Tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
     "dedup_embedding": (q_dedup_embedding, SQL_DEDUP_EMBEDDING),

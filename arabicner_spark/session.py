@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 
 _PACKAGE = os.path.dirname(os.path.abspath(__file__))
 _ROOT = os.path.dirname(_PACKAGE)  # a directory, or the zip it was imported from
+_SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def package_zip() -> str:
@@ -76,7 +77,10 @@ def session(
     one slot per CPU in this process's affinity mask.  ``driver_mem``
     sizes the one JVM of a local run (the test suite and its job budgets
     were measured at 4g; a JVM spark-submit started is sized already).
-    No ``shuffle_partitions`` keeps Spark's default."""
+    A shuffle width set by the caller, ``--conf`` or spark-defaults
+    wins; otherwise a local master runs one shuffle partition per slot
+    (Spark's default 200 would pin a 4-core run's stages 200 wide) and a
+    cluster master keeps Spark's default."""
     b = (
         SparkSession.builder.appName("arabicner-spark")
         .config("spark.ui.enabled", "false")
@@ -85,7 +89,10 @@ def session(
     if master:
         b = b.master(master)
     if shuffle_partitions:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        b = b.config(_SHUFFLE, str(shuffle_partitions))
     spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    if sc.master.startswith("local") and spark.conf.get(_SHUFFLE, None) is None:
+        spark.conf.set(_SHUFFLE, str(sc.defaultParallelism))
     return tune(spark)

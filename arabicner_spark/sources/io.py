@@ -266,7 +266,7 @@ class TableIO:
             return sorted(out)
         # Hadoop FileSystem listing, not os.listdir: the facade path may
         # carry any scheme (file:, hdfs:, s3a:) — same rule as the
-        # expire/delete paths and incremental.save_state's cleanup.
+        # expire/delete paths.
         jvm = self.spark._jvm
         hconf = self.spark._jsc.hadoopConfiguration()
         base = jvm.org.apache.hadoop.fs.Path(self._path(name))
@@ -287,11 +287,11 @@ class TableIO:
         with time travel): drop all but the newest ``keep_last``
         versions and return the expired version numbers.  Deletion goes
         through the Hadoop FileSystem API so the facade works on any
-        scheme, same rule as incremental.save_state.  iceberg mode
-        drops the expired v<N> TAGS (so the facade's version list
-        shrinks identically on both backends) — the data/metadata
-        files themselves are the engine's to reclaim via the catalog's
-        expire_snapshots procedure, which must run separately."""
+        scheme.  iceberg mode drops the expired v<N> TAGS (so the
+        facade's version list shrinks identically on both backends) —
+        the data/metadata files themselves are the engine's to reclaim
+        via the catalog's expire_snapshots procedure, which must run
+        separately."""
         if self.mode == "iceberg":
             versions = self.snapshot_versions(name)
             drop = versions[:-keep_last] if keep_last > 0 else versions

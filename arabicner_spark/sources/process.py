@@ -6,14 +6,12 @@ Reference filters (arabiner/bin/process.py:24-43), reproduced exactly:
   * every label contains '-' or equals 'O' (else drop row)
   * labels non-empty, token non-empty, token is a single word
 Segment boundary = sent_id change between consecutive rows
-(process.py:45-46); the split is randomSplit with a fixed seed
+(process.py:45-46); the split is a seeded-md5 cut on the row id
 (np.random.shuffle + np.split in the reference, process.py:66-84 —
 same contract: disjoint, ratio-sized, seed-reproducible).
 """
 
 from __future__ import annotations
-
-from typing import List, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,14 +65,6 @@ def to_segments(df: DataFrame) -> DataFrame:
             ).alias("tokens"),
         )
     )
-
-
-def train_dev_test_split(
-    segments: DataFrame, train_ratio: float = 0.7, dev_ratio: float = 0.1, seed: int = 1
-) -> Tuple[DataFrame, DataFrame, DataFrame]:
-    test_ratio = 1.0 - train_ratio - dev_ratio
-    train, dev, test = segments.randomSplit([train_ratio, dev_ratio, test_ratio], seed)
-    return train, dev, test
 
 
 def split_by_hash(

@@ -10,7 +10,7 @@ The corpus plants gazetteer entities into Arabic-ish filler text:
     "مجلس الأمن ضد الأسد" where الأسد is I-ORG *and* B-PERS,
     /root/reference/data/train.txt:11-13);
   * hot entities (a few aliases planted 50x more often) to exercise
-    salted joins;
+    hot-key skew in linking;
   * hot conversations (>=50x median turn count) to exercise skew
     repartitioning;
   * a few turns longer than 510 stand-in subwords to exercise the

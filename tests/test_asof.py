@@ -51,33 +51,6 @@ def test_asof_null_payload_attaches_atomically(spark):
     assert row.score == 20.0
 
 
-def test_asof_bucketed_null_payload_atomic(spark):
-    """Same atomicity through the bucketed variant, including across a
-    bucket boundary: the carried row is the latest whole row, and an
-    in-bucket match with a NULL column keeps its NULL."""
-    from arabicner_spark.operators.asof import asof_join_bucketed
-
-    left = _df(
-        spark, [("k", 13, "in"), ("k", 25, "carry")], "k string, lts int, tag string"
-    )
-    right = _df(
-        spark,
-        [("k", 5, "A", 1.0), ("k", 12, None, 2.0)],
-        "k string, rts int, val string, score double",
-    )
-    out = {
-        r.tag: (r.val, r.score)
-        for r in asof_join_bucketed(
-            left, right, ["k"], "lts", "rts", ["val", "score"], bucket_width=10
-        ).collect()
-    }
-    # lts=13 (bucket 1): in-bucket match rts=12 -> (NULL, 2.0) atomically
-    assert out["in"] == (None, 2.0)
-    # lts=25 (bucket 2, empty): carry = latest ROW of bucket 1 = rts=12,
-    # whose val is NULL — not "A" mixed in from rts=5
-    assert out["carry"] == (None, 2.0)
-
-
 def test_asof_collision_guard(spark):
     left = _df(spark, [("u1", 5, 1.0)], "k string, lts int, val double")
     right = _df(spark, [("u1", 3, 2.0)], "k string, rts int, val double")

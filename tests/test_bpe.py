@@ -1,92 +1,7 @@
-"""operators/bpe: the distributed trainer must equal a pure-Python
-textbook BPE on the same word-frequency table — merge sequence AND
-final symbolization — and the expression-fold merge apply must handle
-the overlapping-run edge cases exactly like the sequential scan."""
-
-from collections import Counter
-
-from pyspark.sql import functions as F
+"""operators/bpe: the counting step of BPE training, top-k adjacent
+character pairs over the word-frequency table."""
 
 from arabicner_spark.operators import bpe
-
-
-def _python_bpe(word_freqs, n_merges, min_count=2):
-    """Textbook reference: count adjacent pairs weighted by freq, merge
-    the (count desc, pair asc) argmax greedily left-to-right."""
-    syms = {w: list(w) for w in word_freqs}
-    merges = []
-    for _ in range(n_merges):
-        counts = Counter()
-        for w, f in word_freqs.items():
-            s = syms[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] += f
-        if not counts:
-            break
-        top_n = max(counts.values())
-        cands = sorted(p for p, n in counts.items() if n == top_n)
-        x, y = cands[0]
-        if top_n < min_count:
-            break
-        merges.append((x, y))
-        for w in syms:
-            out = []
-            for s in syms[w]:
-                if out and out[-1] == x and s == y:
-                    out[-1] = x + y
-                else:
-                    out.append(s)
-            syms[w] = out
-    return merges, syms
-
-
-CORPUS = (
-    "low low low low low lower lower newest newest newest newest newest "
-    "newest widest widest widest"
-)
-
-
-def test_train_bpe_matches_python_reference(spark):
-    docs = spark.createDataFrame([(1, CORPUS)], "doc_id bigint, text string")
-    words = bpe.word_freqs(docs)
-    wf = {r.word: r.freq for r in words.collect()}
-    want_merges, want_syms = _python_bpe(wf, n_merges=6)
-    got_merges, got_df = bpe.train_bpe(words, n_merges=6)
-    assert got_merges == want_merges
-    got_syms = {r.word: list(r.syms) for r in got_df.collect()}
-    assert got_syms == want_syms
-    # the classic toy run actually learns multi-char symbols
-    assert any(len(x + y) > 2 for x, y in got_merges)
-
-
-def test_apply_merge_overlapping_runs(spark):
-    df = spark.createDataFrame(
-        [(["a", "a", "a"],), (["a", "a", "a", "a"],), (["b", "a", "a"],)],
-        "syms array<string>",
-    )
-    out = [
-        list(r.m)
-        for r in df.select(bpe.apply_merge(F.col("syms"), "a", "a").alias("m")).collect()
-    ]
-    assert out == [["aa", "a"], ["aa", "aa"], ["b", "aa"]]
-
-
-def test_apply_merge_does_not_cross_symbol_boundaries(spark):
-    # merge (a, b) must not fire on symbol 'ab' already merged, nor on
-    # a symbol that merely ends with 'a' followed by one starting 'b'
-    df = spark.createDataFrame([(["ab", "c"],), (["xa", "b"],)], "syms array<string>")
-    out = [
-        list(r.m)
-        for r in df.select(bpe.apply_merge(F.col("syms"), "a", "b").alias("m")).collect()
-    ]
-    assert out == [["ab", "c"], ["xa", "b"]]
-
-
-def test_encode_word_mirrors_distributed_apply(spark):
-    docs = spark.createDataFrame([(1, CORPUS)], "doc_id bigint, text string")
-    merges, got_df = bpe.train_bpe(bpe.word_freqs(docs), n_merges=4)
-    for r in got_df.collect():
-        assert bpe.encode_word(r.word, merges) == list(r.syms)
 
 
 def test_char_pair_counts_tiebreak_and_weighting(spark):
@@ -98,158 +13,8 @@ def test_char_pair_counts_tiebreak_and_weighting(spark):
     assert [(r.pair, r.n) for r in top] == [("ab", 3), ("cd", 3)]
 
 
-def test_empty_word_yields_no_symbols_and_no_merges(spark):
-    # sequence(1, 0) is descending in Spark; an unguarded char split
-    # turns "" into ["", ""] and a ('', '') merge wins round one
-    df = spark.createDataFrame([("", 100), ("ab", 3)], "word string, freq long")
-    merges, syms = bpe.train_bpe(df, n_merges=1)
-    assert merges == [("a", "b")]
-    out = {r.word: list(r.syms) for r in syms.collect()}
-    assert out[""] == []
-    assert out["ab"] == ["ab"]
-
-def test_batched_equals_serial_on_classic_corpus(spark):
-    docs = spark.createDataFrame([(1, CORPUS)], "doc_id bigint, text string")
-    words = bpe.word_freqs(docs)
-    want_merges, want_df = bpe.train_bpe(words, n_merges=6)
-    got_merges, got_df = bpe.train_bpe_batched(words, n_merges=6, batch=4)
-    assert got_merges == want_merges
-    assert {r.word: list(r.syms) for r in got_df.collect()} == {
-        r.word: list(r.syms) for r in want_df.collect()
-    }
-
-
-def test_batched_rejects_created_pair_overtake(spark):
-    """The canonical naive-batching failure: merging the top pair
-    (a,b) CREATES (ab,c) with count 100, which serially outranks the
-    disjoint candidate (d,e)=60 — a disjointness-only batch would
-    merge (d,e) second and diverge.  The triple bound (a,b,c)=100 must
-    force a batch of exactly one here."""
-    rows = [("%d" % i, "abc") for i in range(100)] + [
-        ("x%d" % i, "de") for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, text string")
-    words = bpe.word_freqs(docs)
-    want, _ = _python_bpe({r.word: r.freq for r in words.collect()}, n_merges=3)
-    assert want[:2] == [("a", "b"), ("ab", "c")]  # the trap is real
-    got, _ = bpe.train_bpe_batched(words, n_merges=3, batch=8)
-    assert got == want
-
-
-def test_batched_concat_collision_not_treated_disjoint(spark):
-    """(a,b) and (ab,c) share no symbol STRING, but merging (a,b)
-    mints new 'ab' symbols that (ab,c) would consume — the accepted
-    x+y concat must count as used so they never share a batch."""
-    rows = [(1, " ".join(["zabc"] * 50) + " " + " ".join(["qab"] * 49))]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    words = bpe.word_freqs(docs)
-    wf = {r.word: r.freq for r in words.collect()}
-    want, want_syms = _python_bpe(wf, n_merges=4)
-    got, got_df = bpe.train_bpe_batched(words, n_merges=4, batch=8)
-    assert got == want
-    assert {r.word: list(r.syms) for r in got_df.collect()} == want_syms
-
-
-def test_apply_merges_batch_disjoint_simultaneous(spark):
-    df = spark.createDataFrame(
-        [(["a", "b", "d", "e"],), (["a", "a", "b", "b"],), (["d", "a", "b", "e"],)],
-        "syms array<string>",
-    )
-    out = [
-        list(r.m)
-        for r in df.select(
-            bpe.apply_merges_batch(F.col("syms"), [("a", "b"), ("d", "e")]).alias("m")
-        ).collect()
-    ]
-    assert out == [["ab", "de"], ["a", "ab", "b"], ["d", "ab", "e"]]
-
-
-def test_batched_property_random_corpora(spark):
-    """Randomized interacting corpora from a 4-letter alphabet (dense
-    pair collisions): the batched trainer must reproduce the serial
-    python twin's merge sequence exactly, for several batch widths."""
-    import random
-
-    rng = random.Random(20260817)
-    for trial in range(6):
-        alphabet = "ab" if trial % 3 == 0 else "abcd"  # 2 letters: max chaining
-        n_words = rng.randint(8, 20)
-        rows = []
-        for i in range(n_words):
-            w = "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 6)))
-            rows.append((w, rng.randint(1, 30)))
-        # aggregate duplicate words like word_freqs would
-        wf = {}
-        for w, f in rows:
-            wf[w] = wf.get(w, 0) + f
-        words = spark.createDataFrame(list(wf.items()), "word string, freq long")
-        want, want_syms = _python_bpe(wf, n_merges=8)
-        for batch in (3, 8):
-            got, got_df = bpe.train_bpe_batched(words, n_merges=8, batch=batch)
-            assert got == want, (trial, batch, got, want)
-        assert {r.word: list(r.syms) for r in got_df.collect()} == want_syms
-
-
-def test_batched_property_wide_alphabet(spark):
-    """Wide-alphabet corpora whose distinct-pair count exceeds the
-    4*batch candidate window at batch=2: most counts-state churn per
-    round happens OUTSIDE the collected candidate list, so the
-    incremental ±freq delta maintenance must keep the uncollected
-    tail exact across rounds.  Parity with the serial twin."""
-    import random
-
-    rng = random.Random(20260818)
-    for trial in range(4):
-        alphabet = "abcdefgh"
-        rows = {}
-        for i in range(40):
-            w = "".join(rng.choice(alphabet) for _ in range(rng.randint(3, 10)))
-            rows[w] = rows.get(w, 0) + rng.randint(1, 20)
-        words = spark.createDataFrame(list(rows.items()), "word string, freq long")
-        n_pairs = len(
-            {(w[i], w[i + 1]) for w in rows for i in range(len(w) - 1)}
-        )
-        assert n_pairs > 16, "fixture must overflow the batch=2 pred window"
-        want, _ = _python_bpe(rows, n_merges=10)
-        got, _df = bpe.train_bpe_batched(words, n_merges=10, batch=2)
-        assert got == want, (trial, got, want)
-
-
-def test_greedy_safe_batch_closes_on_vocab_concat_collision():
-    """r7 (ADVICE r6): an accepted concat that equals an EXISTING
-    symbol closes the batch right after that acceptance — a
-    pre-existing pair (t, concat) gains the merge's created
-    occurrences, so no later candidate is provably serial-safe."""
-    from arabicner_spark.operators import bpe
-
-    cands = [("ab c", 50), ("d e", 40), ("f g", 30)]
-    tmax = {p: 0 for p, _ in cands}
-    dmat = {}
-    # without a colliding vocab all three are accepted
-    step, _ = bpe._greedy_safe_batch(cands, tmax, dmat, 8, 2)
-    assert step == [("ab", "c"), ("d", "e"), ("f", "g")]
-    # 'abc' already exists as a symbol -> accept (ab, c), then close
-    step, _ = bpe._greedy_safe_batch(
-        cands, tmax, dmat, 8, 2, vocab=frozenset({"abc"})
-    )
-    assert step == [("ab", "c")]
-
-
-def test_batched_equals_serial_under_concat_collision(spark):
-    """End-to-end: a corpus where a later round's merge (ab, c)
-    recreates the symbol 'abc' that an earlier round built via
-    (a, bc) — the batched sequence must still equal the serial one."""
-    from arabicner_spark.operators import bpe
-
-    rows = []
-    # drive early merges: 'b c' -> 'bc', then 'a bc' -> 'abc'
-    rows += [(i, "abc abc abc") for i in range(30)]
-    # then make 'a b' and 'ab'+'c' attractive in later rounds, with a
-    # pre-existing neighbor pair (t, abc) that gains from the collision
-    rows += [(100 + i, "ab cx t abc t abc") for i in range(12)]
-    rows += [(200 + i, "abq cq") for i in range(6)]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    words = bpe.word_freqs(docs)
-    want, _ = bpe.train_bpe(words, n_merges=8)
-    got, _ = bpe.train_bpe_batched(words, n_merges=8, batch=8)
-    assert got == want
+def test_char_pair_counts_empty_and_one_char_words_yield_no_pairs(spark):
+    # sequence(1, 0) is descending in Spark; an unguarded split would
+    # give "a" the pairs "a" and "", and "" the pairs "" and ""
+    df = spark.createDataFrame([("", 100), ("a", 50), ("ab", 3)], "word string, freq long")
+    assert [(r.pair, r.n) for r in bpe.char_pair_counts(df, k=5).collect()] == [("ab", 3)]

@@ -36,7 +36,10 @@ import sys
 sys.path.insert(0, {repo!r})
 from arabicner_spark.plans.testdata_queries import QUERIES
 from arabicner_spark.session import session
-n = QUERIES["kg_mentions_bio"][0](session(), "/root/testdata/sf0.001").count()
+spark = session()
+width = spark.conf.get("spark.sql.shuffle.partitions")
+assert width == str(spark.sparkContext.defaultParallelism), width
+n = QUERIES["kg_mentions_bio"][0](spark, "/root/testdata/sf0.001").count()
 assert n > 0, n
 print("OK", n)
 """

@@ -1,49 +1,48 @@
-"""operators/graph.pagerank vs a hand-computed power-iteration fixture.
+"""operators/graph.pagerank_exact vs a hand-computed power-iteration fixture.
 
 Graph: A->B, A->C, B->C, C->A (3 nodes, no dangling nodes).
-N = 3, damping 0.85, base (1-d)/N = 0.05, out: A=2, B=1, C=1.
+Units of 1/PR_SCALE (1e9), every division a floor, damping 85/100:
+base = 1e9 * 15 // 300 = 50_000_000, pr0 = 1e9 // 3 = 333_333_333 each,
+out: A=2, B=1, C=1.
 
-One step from pr0 = 1/3 each:
-  inflow(A) = pr(C)/1         = 1/3   -> 0.05 + 0.85/3        = 0.333333...
-  inflow(B) = pr(A)/2         = 1/6   -> 0.05 + 0.85/6        = 0.191666...
-  inflow(C) = pr(A)/2 + pr(B) = 1/2   -> 0.05 + 0.85*0.5      = 0.475
+One step:
+  inflow(A) = pr(C)//1           = 333_333_333 -> base + inflow*85//100 = 333_333_333
+  inflow(B) = pr(A)//2           = 166_666_666 ->                        191_666_666
+  inflow(C) = pr(A)//2 + pr(B)//1 = 499_999_999 ->                       474_999_999
 """
 
 import pytest
 
 EDGES = [("A", "B"), ("A", "C"), ("B", "C"), ("C", "A")]
+ONE_STEP = {"A": 333_333_333, "B": 191_666_666, "C": 474_999_999}
 
 
-def _ranks(spark, iterations):
-    from arabicner_spark.operators.graph import pagerank
+def _ranks(spark, edges, iterations):
+    from arabicner_spark.operators.graph import pagerank_exact
 
-    edges = spark.createDataFrame(EDGES, "src string, dst string")
-    return {r.node: r.rank for r in pagerank(edges, iterations=iterations).collect()}
+    df = spark.createDataFrame(edges, "src string, dst string")
+    return {r.node: r.rank_i for r in pagerank_exact(df, iterations=iterations).collect()}
 
 
 def test_pagerank_one_step_hand_fixture(spark):
-    pr = _ranks(spark, 1)
-    assert pr["A"] == pytest.approx(0.05 + 0.85 / 3)
-    assert pr["B"] == pytest.approx(0.05 + 0.85 / 6)
-    assert pr["C"] == pytest.approx(0.475)
+    assert _ranks(spark, EDGES, 1) == ONE_STEP
 
 
 def test_pagerank_mass_conserved_without_dangling(spark):
-    # no dangling nodes -> total rank mass stays exactly 1 every step
+    # no dangling nodes: the mass stays PR_SCALE but for the floors, which
+    # lose < N at the start and < |E| + 2N per step (edge shares, base,
+    # damping), and never gain
+    from arabicner_spark.operators.graph import PR_SCALE
+
+    n, m = 3, len(EDGES)
     for it in (1, 5):
-        pr = _ranks(spark, it)
-        assert sum(pr.values()) == pytest.approx(1.0)
+        total = sum(_ranks(spark, EDGES, it).values())
+        assert PR_SCALE - n - it * (m + 2 * n) <= total <= PR_SCALE
 
 
 def test_pagerank_multi_edges_collapse(spark):
     """Duplicate (src, dst) rows must not double inflow (distinct set)."""
-    from arabicner_spark.operators.graph import pagerank
-
-    spark_edges = spark.createDataFrame(
-        EDGES + EDGES, "src string, dst string"
-    )
-    pr = {r.node: r.rank for r in pagerank(spark_edges, iterations=1).collect()}
-    assert pr["C"] == pytest.approx(0.475)
+    assert _ranks(spark, EDGES + EDGES, 1) == ONE_STEP
 
 
 # ---------------------------------------------------------------- triangles

@@ -66,37 +66,3 @@ def test_heavy_hitters_exact_threshold(spark):
     df = spark.createDataFrame(rows, "v string")
     out = {r.val: (r.cnt, r.share) for r in heavy_hitters_exact(df, "v", s=4).collect()}
     assert out == {"hot": (50, 0.5)}  # 50/100 > 1/4; every u_i is 1/100
-
-
-def test_misra_gries_bounds_and_guaranteed_presence(spark):
-    """MG invariant after the distributed merge: true - n/(k+1) <= est
-    <= true for every value, and any value above the n/(k+1) frequency
-    threshold is guaranteed present — across partition layouts."""
-    from collections import Counter
-
-    from arabicner_spark.functions.sketches import heavy_hitters_mg
-
-    vals = (["alpha"] * 400 + ["beta"] * 250 + ["gamma"] * 120
-            + [f"noise{i % 97}" for i in range(700)])
-    truth = Counter(vals)
-    n, k = len(vals), 8
-    for parts in (1, 7, 32):
-        df = spark.createDataFrame([(v,) for v in vals], "v string").repartition(parts)
-        est = {r.val: r.est for r in heavy_hitters_mg(df, "v", k=k).collect()}
-        for v, e in est.items():
-            assert e <= truth[v], (v, e, truth[v])
-            assert e >= truth[v] - n / (k + 1) - 1e-9
-        for v, c in truth.items():
-            if c > n / (k + 1):
-                assert v in est, (v, c)
-
-
-def test_misra_gries_empty_input_yields_empty_summary(spark):
-    """Empty input must produce an empty, correctly-typed summary —
-    the rdd.mapPartitions form crashed on schema inference here."""
-    from arabicner_spark.functions.sketches import heavy_hitters_mg
-
-    df = spark.createDataFrame([], "v string")
-    out = heavy_hitters_mg(df, "v", k=4)
-    assert out.collect() == []
-    assert dict(out.dtypes) == {"val": "string", "est": "bigint"}

@@ -73,40 +73,3 @@ def test_incremental_new_id_can_become_canonical(spark):
     incr = _incr(spark, old, new)
     assert incr == batch
     assert incr["9"] == "10" and incr["10"] == "10"
-
-
-def test_state_survives_save_load_and_probe_is_exchange_free(spark):
-    """State round-trips through bucketed tables; the incremental fold
-    off the LOADED state equals the in-memory fold; and the stored band
-    table's side of the probe join carries no Exchange (bucketed scan)."""
-    from arabicner_spark.operators.incremental import load_state, save_state
-
-    old = [("a1", BASE_A), ("a2", BASE_A + " extra"), ("b1", BASE_B)]
-    new = [("n1", BASE_A), ("n2", "fresh unrelated words entirely")]
-    st = dedup_state(spark.createDataFrame(old, "id string, text string"))
-    save_state(st, "t_dedupstate")
-    loaded = load_state(spark, "t_dedupstate")
-    newdf = spark.createDataFrame(new, "id string, text string")
-    got = _decisions(dedup_incremental(loaded, newdf)["decision"])
-    want = _decisions(dedup_incremental(st, newdf)["decision"])
-    assert got == want == _batch(spark, old + new)
-
-    # plan pin: bucketed probe — the stored band table feeds the
-    # band-key join from its bucketed layout with NO exchange on the
-    # stored side (broadcast disabled to force the join shape the
-    # production-sized state would take; only the new-batch side may
-    # shuffle)
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        probe = spark.table("t_dedupstate_bands").join(
-            spark.createDataFrame(
-                [(0, "x", "q1")], "band int, sig string, id string"
-            ),
-            ["band", "sig"],
-        )
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-    assert "Bucketed: true" in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan  # probe side only

@@ -6,7 +6,7 @@ shapes: duplicate timestamps, empty sides, point-width intervals."""
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from arabicner_spark.operators.asof import asof_join, asof_join_bucketed
+from arabicner_spark.operators.asof import asof_join
 from arabicner_spark.operators.ranges import range_join
 
 KEYS = ["u1", "u2", "u3"]
@@ -46,35 +46,6 @@ def test_asof_matches_bruteforce(spark, lrows, rmap):
         cands = [(rt, v) for (rk, rt), v in rmap.items() if rk == k and rt <= t]
         want = max(cands)[1] if cands else None
         assert got.get(i) == want, (i, k, t, cands)
-
-
-@settings(
-    max_examples=15, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(lrows=left_rows, rmap=right_maps, width=st.sampled_from([1, 3, 8, 100]))
-def test_asof_bucketed_equals_plain(spark, lrows, rmap, width):
-    """The skew-proof bucketed variant must be OUTPUT-IDENTICAL to the
-    plain operator for every bucket width."""
-    left = spark.createDataFrame(
-        [(k, t, i) for i, (k, t) in enumerate(lrows)] or [("zz", 0, -1)],
-        "k string, lts int, rid int",
-    )
-    right = spark.createDataFrame(
-        [(k, t, v) for (k, t), v in rmap.items()] or [("zz", 99, 0.0)],
-        "k string, rts int, val double",
-    )
-    plain = {
-        r.rid: r.val
-        for r in asof_join(left, right, ["k"], "lts", "rts", ["val"]).collect()
-    }
-    bucketed = {
-        r.rid: r.val
-        for r in asof_join_bucketed(
-            left, right, ["k"], "lts", "rts", ["val"], bucket_width=width
-        ).collect()
-    }
-    assert bucketed == plain
 
 
 @settings(

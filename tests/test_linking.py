@@ -6,7 +6,6 @@ import pyspark.sql.functions as F
 import pytest
 
 from arabicner_spark import oracle, schemas
-from arabicner_spark.functions.joins import salted_join
 from arabicner_spark.operators import linking, ner, triples
 from arabicner_spark.sources import synth
 
@@ -83,18 +82,6 @@ def test_canonicalize_triples_rewrites_ids(spark, linked):
     assert bad == 0
     # gazetteer surfaces must all resolve to E-ids (they are aliases)
     assert edges.where(F.col("src").startswith("S:")).count() == 0
-
-
-def test_salted_join_matches_plain_join(spark):
-    fact = spark.range(0, 1000).select(
-        (F.col("id") % 7).cast("string").alias("k"), F.col("id").alias("v")
-    )
-    dim = spark.createDataFrame(
-        [(str(i), f"d{i}") for i in range(7)], "k string, name string"
-    )
-    plain = {(r.v, r.name) for r in fact.join(dim, "k").collect()}
-    salted = {(r.v, r.name) for r in salted_join(fact, dim, "k", salt=4, how="inner").collect()}
-    assert plain == salted and len(plain) == 1000
 
 
 def _mention_tuples(m):
@@ -305,19 +292,6 @@ def test_custom_score_fn_injection(spark):
     assert {(r.conv_id, r.turn_idx, r.level, r.start_tok) for r in custom} == {
         (r.conv_id, r.turn_idx, r.level, r.start_tok) for r in base if r.type != "GPE"
     }
-
-
-def test_salted_join_rejects_key_only_salt(spark):
-    """A salt that is a pure function of the join key gives zero skew
-    relief while paying S-fold dim replication — reject loudly."""
-    fact = spark.createDataFrame([("a",), ("a",)], "k string")
-    dim = spark.createDataFrame([("a", "d")], "k string, name string")
-    with pytest.raises(ValueError, match="pure function"):
-        salted_join(fact, dim, "k")
-    with pytest.raises(ValueError, match="pure function"):
-        salted_join(
-            fact.withColumn("v", F.lit(1)), dim, "k", salt_by=["k"]
-        )
 
 
 def _window_best_alias(alias_df):

@@ -20,28 +20,10 @@ def assets(spark):
     return spark.createDataFrame(rows, schemas.ASSETS)
 
 
-def test_feature_extraction_stub(spark, assets):
-    got = {r.asset_id: r for r in multimodal.extract_features(assets).collect()}
-    assert set(got) == {"a1", "a2", "a3", "a4"}
-    assert got["a1"].n_bytes == 15 and got["a4"].n_bytes == 0
-    # deterministic: same payload -> same features
-    again = {r.asset_id: r for r in multimodal.extract_features(assets).collect()}
-    assert all(got[k].feat_mean == again[k].feat_mean for k in got)
-    assert all(16 <= got[k].width < 80 for k in got)
-
-
 def test_real_decode_path_raises(spark, assets):
-    import pytest as _pytest
-
-    with _pytest.raises(Exception) as exc:
-        multimodal.extract_features(assets, decode_stub=False).collect()
+    with pytest.raises(Exception) as exc:
+        multimodal.resize_assets(assets, decode_stub=False).collect()
     assert "NotImplementedError" in str(exc.value) or "not available" in str(exc.value)
-
-
-def test_frame_sample_plan(spark, assets):
-    frames = multimodal.frame_sample_plan(assets, every_ms=1000).collect()
-    got = {(r.asset_id, r.frame_ms) for r in frames}
-    assert got == {("a3", 0), ("a3", 1000), ("a3", 2000), ("a3", 3000)}
 
 
 def test_streaming_mentions_micro_batch(spark, tmp_path):

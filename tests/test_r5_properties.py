@@ -1,4 +1,4 @@
-"""Property tests for the round-5 operators.
+"""Property test for the round-5 fixed-point k-means.
 
 Spark sessions are too slow for per-example use, so each property
 collects many generated cases into ONE DataFrame and checks all rows
@@ -9,45 +9,6 @@ batching trick as tests/test_properties.py.
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
-
-from arabicner_spark.operators import bpe
-
-syms_lists = st.lists(
-    st.text(alphabet="abc", min_size=1, max_size=2), min_size=0, max_size=10
-)
-merge_pairs = st.tuples(
-    st.text(alphabet="abc", min_size=1, max_size=2),
-    st.text(alphabet="abc", min_size=1, max_size=2),
-)
-
-
-def _py_apply(syms, x, y):
-    out = []
-    for s in syms:
-        if out and out[-1] == x and s == y:
-            out[-1] = x + y
-        else:
-            out.append(s)
-    return out
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    pair=merge_pairs,
-    lists=st.lists(syms_lists, min_size=1, max_size=30),
-)
-def test_apply_merge_equals_python_fold(spark, pair, lists):
-    x, y = pair
-    df = spark.createDataFrame(
-        [(i, syms) for i, syms in enumerate(lists)], "i int, syms array<string>"
-    )
-    got = {
-        r.i: list(r.m)
-        for r in df.select("i", bpe.apply_merge(F.col("syms"), x, y).alias("m")).collect()
-    }
-    for i, syms in enumerate(lists):
-        assert got[i] == _py_apply(syms, x, y), (syms, x, y)
 
 
 @settings(max_examples=15, deadline=None)

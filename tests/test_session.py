@@ -68,3 +68,16 @@ def test_only_the_factory_builds_a_session():
         if "SparkSession" + ".builder" in p.read_text(encoding="utf-8")
     }
     assert sorted(p for p in found - allowed if not p.startswith(("perfbench/", "."))) == []
+
+
+def test_local_session_runs_one_shuffle_partition_per_slot(spark):
+    """A set width (the fixture's 8, as a caller's or --conf's would be)
+    wins; with none set, a local session takes one per slot."""
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    assert factory.session().conf.get(key) == width == "8"
+    spark.conf.unset(key)
+    try:
+        assert factory.session().conf.get(key) == str(spark.sparkContext.defaultParallelism)
+    finally:
+        spark.conf.set(key, width)
