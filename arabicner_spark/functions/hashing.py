@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from arabicner_spark.sources.io import pin_width
+
 
 def md5_utf8(col: Column) -> Column:
     """md5 hex of the UTF-8 bytes — equals DuckDB's md5(varchar)."""
@@ -42,37 +44,23 @@ def word_shingles(
     id_cols: List[str],
     text_col: str,
     n: int = 3,
-    width: int | None = None,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Distinct word n-gram shingles per id.
-
-    ``distinct=False`` skips the final distinct and returns the raw
-    shingle stream (duplicates per id possible).  Callers whose
-    downstream aggregate is DUPLICATE-INSENSITIVE — minhash is a MIN
-    over hashes, so the min over the multiset equals the min over the
-    set — should pass False: the explode then feeds the min's map-side
-    partial aggregation in the same stage and the shuffle carries one
-    row of longs per id instead of the full shingle stream (r7, guide
-    section 2.3 "aggregate before you shuffle").  Jaccard-style
-    consumers that COUNT shingles must keep the distinct.
+    """Word n-gram shingles per id, as the raw shingle stream
+    (duplicates per id possible).  Its consumers' aggregate is
+    DUPLICATE-INSENSITIVE — minhash is a MIN over hashes, so the min
+    over the multiset equals the min over the set — so the explode
+    feeds the min's map-side partial aggregation in the same stage and
+    the shuffle carries one row of longs per id instead of the full
+    shingle stream (r7, guide section 2.3 "aggregate before you
+    shuffle").  A consumer that COUNTS shingles uses
+    shingle_hash_table.
 
     Pure array expressions (split -> transform over an index sequence ->
-    explode): shingling is per-row work, so it must not shuffle — the
-    only shuffle is the final distinct, keyed (id, shingle).  An earlier
-    window-based version shuffled the full token stream; this one stays
-    inside whole-stage codegen until the distinct.
-
-    ``width``: explicit partition count for the shingle stage.  The
-    explode + distinct partial aggregate is the compute-heavy part
-    (shingle construction + hashing of every shingle occurrence), but
-    its width is whatever the upstream doc frame has — a single parquet
-    split or an AQE-coalesced exchange leaves it at 1 and the stage
-    runs single-threaded.  Repartitioning the DOC rows (cheap — one row
-    per document) by id first makes the per-shingle work data-parallel.
+    explode): shingling is per-row work, so it must not shuffle.  The
+    DOC rows (one per document) are first pinned to ``pin_width`` by id,
+    which makes the per-shingle work data-parallel.
     """
-    if width:
-        df = df.repartition(width, *[F.col(c) for c in id_cols])
+    df = df.repartition(pin_width(df.sparkSession), *[F.col(c) for c in id_cols])
     arr = F.split(F.col(text_col), " ")
     idx = F.when(
         F.size(arr) >= n, F.sequence(F.lit(0), F.size(arr) - n)
@@ -83,8 +71,7 @@ def word_shingles(
             " ", *[F.element_at(arr, (i + j + 1).cast("int")) for j in range(n)]
         ),
     )
-    out = df.select(*id_cols, F.explode(shingle).alias("shingle"))
-    return out.distinct() if distinct else out
+    return df.select(*id_cols, F.explode(shingle).alias("shingle"))
 
 
 def shingle_hash_table(
@@ -92,7 +79,6 @@ def shingle_hash_table(
     id_col: str = "id",
     text_col: str = "text",
     n: int = 3,
-    width: int | None = None,
 ) -> DataFrame:
     """Per-document DISTINCT word n-gram shingles as md5 identities:
     (id, h32, hi, lo) — h32 = the minhash base (first 8 md5 hex chars
@@ -109,12 +95,12 @@ def shingle_hash_table(
     by their full md5 is the repo's standing convention (exact dedup
     groups documents by md5(text) the same way); distinct shingles
     with colliding md5s are the one divergence mode, as everywhere
-    else md5 identity is used.
+    else md5 identity is used.  The doc rows are pinned to
+    ``pin_width`` by id first.
     """
     import hashlib
 
-    if width:
-        docs = docs.repartition(width, F.col(id_col))
+    docs = docs.repartition(pin_width(docs.sparkSession), F.col(id_col))
     narrow = docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
 
     def hash_shingles(batches):
@@ -200,7 +186,6 @@ def minhash_signatures(
     shingles: DataFrame,
     id_cols: List[str],
     n_hashes: int = 16,
-    width: int | None = None,
     base_col: str | None = None,
 ) -> DataFrame:
     """id -> [h0..h{n-1}] BIGINT minhash columns, ONE aggregation pass.
@@ -208,18 +193,7 @@ def minhash_signatures(
     min over (A[s]*md5_32(shingle)+B[s]) mod P per s — a single
     hash-aggregate with map-side partial mins, so the shuffle carries
     one row per id (and 8-byte longs, not 32-char hex strings).
-
-    ``width``: explicit partition count for the hashing stage.  The
-    hash work is COMPUTE-bound, but AQE coalesces the upstream
-    distinct's output by BYTES — a few MB of shingles folds to one
-    partition and the whole hashing stage runs single-threaded
-    (measured 5.4s -> sub-second at sf0.1 with width=32).  An explicit
-    repartition(width, id_cols) pins the stage width; the groupBy
-    reuses that clustering (ClusteredDistribution is number-agnostic),
-    so it costs no extra exchange beyond the small re-spread itself.
     """
-    if width:
-        shingles = shingles.repartition(width, *[F.col(c) for c in id_cols])
     consts = minhash_affine_consts(n_hashes)
     # ``base_col``: a caller that already carries the 32-bit md5 base
     # as a long column (e.g. shingle_hash_table) skips the in-plan
@@ -280,11 +254,7 @@ def _checkpointed(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def lsh_candidate_pairs(
-    bands_df: DataFrame,
-    id_col: str,
-    width: int | None = None,
-) -> DataFrame:
+def lsh_candidate_pairs(bands_df: DataFrame, id_col: str) -> DataFrame:
     """Self-join on (band, sig): distinct (a, b) with a < b.
 
     The shuffle key (band, sig) is high-cardinality; genuinely hot
@@ -294,18 +264,9 @@ def lsh_candidate_pairs(
     both join sides reference the same upstream (shingle -> minhash)
     pipeline, and without materialization Spark executes it twice
     (exchange reuse dies as soon as AQE broadcasts one side).
-
-    ``width``: explicit partition count for the pair join + distinct.
-    The band table is BYTES-small (AQE coalesces its exchange to ~1
-    partition) but the join OUTPUT is quadratic per bucket — at a
-    low-selectivity threshold millions of pairs emerge from a few MB of
-    bands, all on one thread.  Same starvation mode as the shingle
-    stage (PLANS.md): pin the width when candidates >> bands.
     """
     keys = ["band", "sig"]
     bands_df = _checkpointed(bands_df)
-    if width:
-        bands_df = bands_df.repartition(width, *[F.col(c) for c in keys])
     a = bands_df.select(F.col(id_col).alias("a"), *keys)
     b = bands_df.select(F.col(id_col).alias("b"), *keys)
     return a.join(b, keys).where(F.col("a") < F.col("b")).select("a", "b").distinct()
@@ -476,6 +437,8 @@ def sign_lsh_bands(
 # 1.3-1.8x the estimate, so the driver collects, and every Python
 # worker holds, at most ~80-115 MB.
 COSINE_BROADCAST_MAX_BYTES = 64 << 20
+# rows per blocked matmul in the verify kernel's screen
+VERIFY_BLOCK_ROWS = 512
 
 
 def _list_matrix(lists) -> np.ndarray:
@@ -493,12 +456,12 @@ def _list_matrix(lists) -> np.ndarray:
     return flat.astype(np.float64, copy=False).reshape(n, int(dims[0]))
 
 
-def _vector_matrix(vectors: DataFrame, id_col: str, vec_col: str):
-    """Collect (id, vector) into (sorted ids, float64 matrix) — the
+def _vector_matrix(vectors: DataFrame):
+    """Collect (vec_id, v) into (sorted ids, float64 matrix) — the
     broadcast build side of the Arrow cosine verifier."""
-    tbl = vectors.select(id_col, vec_col).toArrow()
-    ids = np.asarray(tbl.column(id_col).to_pylist(), dtype=np.int64)
-    V = _list_matrix(tbl.column(vec_col).combine_chunks())
+    tbl = vectors.select("vec_id", "v").toArrow()
+    ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+    V = _list_matrix(tbl.column("v").combine_chunks())
     order = np.argsort(ids, kind="stable")
     return ids[order], np.ascontiguousarray(V[order])
 
@@ -506,16 +469,13 @@ def _vector_matrix(vectors: DataFrame, id_col: str, vec_col: str):
 def cosine_bucket_verify(
     bands_packed: DataFrame,
     vectors: DataFrame,
-    id_col: str = "vec_id",
-    bucket_col: str = "bkey",
     threshold: float = 0.45,
     round_to: int = 4,
-    block_rows: int = 512,
-    width: int | None = None,
 ) -> DataFrame:
     """Per-bucket candidate generation + exact cosine verification in
     one vectorized Arrow pass -> (a, b, cos) with a < b,
     round(cos, round_to) >= threshold, deduped across buckets.
+    ``bands_packed`` is (vec_id, bkey) and ``vectors`` is (vec_id, v).
 
     Replaces "self-join on the bucket key -> O(candidates) pair rows
     -> verify" with the guide section 4.2 / section 8 shape: only the
@@ -554,16 +514,14 @@ def cosine_bucket_verify(
     emitted once per bucket and deduped by the final (tiny) distinct.
     """
     spark = bands_packed.sparkSession
-    narrow = bands_packed.select(
-        F.col(id_col).cast("long").alias("vid"), F.col(bucket_col).alias("bkey")
-    )
+    narrow = bands_packed.select(F.col("vec_id").cast("long").alias("vid"), "bkey")
     est = int(vectors._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     if est <= COSINE_BROADCAST_MAX_BYTES:
-        bc = spark.sparkContext.broadcast(_vector_matrix(vectors, id_col, "v"))
+        bc = spark.sparkContext.broadcast(_vector_matrix(vectors))
     else:
         bc = None
         narrow = narrow.join(
-            vectors.select(F.col(id_col).cast("long").alias("vid"), "v"), "vid"
+            vectors.select(F.col("vec_id").cast("long").alias("vid"), "v"), "vid"
         )
     lowbound = threshold - 10.0 ** (-round_to)
     screen_margin = 1e-9
@@ -609,8 +567,8 @@ def cosine_bucket_verify(
             M = rows_v[s:e]
             nb_ = rows_n[s:e]
             mids = vec[s:e]
-            for b0 in range(0, d, block_rows):
-                b1 = min(b0 + block_rows, d)
+            for b0 in range(0, d, VERIFY_BLOCK_ROWS):
+                b1 = min(b0 + VERIFY_BLOCK_ROWS, d)
                 G = M[b0:b1] @ M.T
                 thr = (lowbound - screen_margin) * np.outer(nb_[b0:b1], nb_)
                 with np.errstate(invalid="ignore"):
@@ -648,10 +606,8 @@ def cosine_bucket_verify(
         )
 
     # every bucket must land whole in ONE partition — hash-partition on
-    # the bucket key (also pins the width of the verify stage; the band
-    # table is bytes-small, so AQE would otherwise fold it to a few
-    # partitions and serialize the numpy work)
-    narrow = narrow.repartition(width or 32, F.col("bkey"))
+    # the bucket key, ``pin_width`` wide
+    narrow = narrow.repartition(pin_width(spark), F.col("bkey"))
     survivors = narrow.mapInArrow(gen_verify, "a long, b long, raw double")
     return (
         survivors.select("a", "b", F.round(F.col("raw"), round_to).alias("cos"))

@@ -24,14 +24,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _frac(hex_col: Column, nibbles: int = 15) -> Column:
-    """First ``nibbles`` hex digits of an md5 as a fraction in (0, 1].
+def _frac(hex_col: Column) -> Column:
+    """First 15 hex digits of an md5 as a fraction in (0, 1].
 
     15 nibbles = 60 bits — exact in a double (no 64-bit rounding trap),
     and DuckDB computes the identical value from the same md5 string.
     """
-    return (F.conv(F.substring(hex_col, 1, nibbles), 16, 10).cast("double") + 1) / F.lit(
-        float(16**nibbles)
+    return (F.conv(F.substring(hex_col, 1, 15), 16, 10).cast("double") + 1) / F.lit(
+        float(16**15)
     )
 
 

@@ -21,10 +21,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus scan -> (word, freq).  The single pass over the data."""
+def word_freqs(docs: DataFrame) -> DataFrame:
+    """Corpus scan of ``docs.text`` -> (word, freq).  The single pass
+    over the data."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count("*").cast("long").alias("freq"))

@@ -25,12 +25,11 @@ def apply_changelog(
     base: DataFrame,
     log: DataFrame,
     key: str,
-    seq: str = "seq",
-    op: str = "op",
     payload: Sequence[str] = (),
 ) -> DataFrame:
     """-> the merged snapshot: base columns, with ``payload`` columns
-    overwritten by the latest non-delete op per key, keys whose latest
+    overwritten by the latest (highest ``seq``) non-delete ``op`` per
+    key of ``log``, keys whose latest
     op is 'D' removed, and keys present only in the log inserted (their
     non-payload base columns NULL — callers coalesce defaults).
 
@@ -38,15 +37,15 @@ def apply_changelog(
     Ties on ``seq`` are broken deterministically is the caller's
     responsibility (pass a unique sequence — e.g. a changelog offset).
     """
-    w = Window.partitionBy(key).orderBy(F.col(seq).desc())
+    w = Window.partitionBy(key).orderBy(F.col("seq").desc())
     latest = (
         log.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .drop("_rn", seq)
+        .drop("_rn", "seq")
     )
     lat = latest.select(
         F.col(key),
-        F.col(op).alias("_op"),
+        F.col("op").alias("_op"),
         *[F.col(c).alias(f"_new_{c}") for c in payload],
     )
     merged = base.join(lat, key, "full_outer")

@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 from arabicner_spark.sources.io import local_table
 
+# large-star/small-star rounds before the loop stops unconverged
+MAX_ITER = 25
+
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Undirected canonical form: (u < v), deduped, no self-loops."""
@@ -121,16 +124,14 @@ def connected_components_adaptive(
     return local_table(edges.sparkSession, out, "node string, component string")
 
 
-def connected_components(
-    edges: DataFrame, src: str = "a", dst: str = "b", max_iter: int = 25
-) -> DataFrame:
+def connected_components(edges: DataFrame, src: str = "a", dst: str = "b") -> DataFrame:
     """edge list -> (node, component) where component = min node id of
     the component.  Nodes absent from ``edges`` are the caller's to add
     back as singletons (component = self)."""
     e = _canon(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
     e = e.localCheckpoint(eager=True)
     prev = _checksum(e)
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         e = _canon(_small_star(_large_star(e))).localCheckpoint(eager=True)
         cur = _checksum(e)
         if cur == prev:

@@ -74,18 +74,12 @@ def _reps(groups: DataFrame) -> DataFrame:
     return groups.select(F.col("rep").alias("id"), "text")
 
 
-def near_bands(docs: DataFrame, width: int | None = None) -> DataFrame:
+def near_bands(docs: DataFrame) -> DataFrame:
     """LSH band table (id, band, sig) of ``docs`` (id, text): word
     3-gram shingles -> 16 affine minhashes -> 8 bands of 2, the one
     document near-dup signature policy (its SQL mirror is
-    testdata_queries._sql_minhash_cte).
-
-    distinct=False: minhash is a min, so the shingle distinct is
-    redundant — the explode feeds the min's map-side partial agg in one
-    stage and the shuffle carries one row of longs per id (r7, guide
-    section 2.3).  ``width`` pins the shingle stage's partition count
-    (see hashing.word_shingles)."""
-    sh = hashing.word_shingles(docs, ["id"], "text", n=3, width=width, distinct=False)
+    testdata_queries._sql_minhash_cte)."""
+    sh = hashing.word_shingles(docs, ["id"], "text", n=3)
     sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16)
     return hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2)
 
@@ -100,23 +94,23 @@ def keep_decision(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def dedup_decision(docs: DataFrame, width: int | None = None) -> DataFrame:
+def dedup_decision(docs: DataFrame) -> DataFrame:
     """docs (id string, text) -> (node, keep): exact-group star edges
     UNION near-dup LSH pairs of the reps -> components -> min id kept.
     Nothing is checkpointed beyond what the pair join and CC do
     themselves, so a caller that reads only the decision pays for no
     state tables."""
     g, star = exact_groups(docs)
-    near = hashing.lsh_candidate_pairs(near_bands(_reps(g), width), "id")
+    near = hashing.lsh_candidate_pairs(near_bands(_reps(g)), "id")
     return keep_decision(docs.select(F.col("id").alias("node")), star.unionByName(near))
 
 
-def dedup_state(docs: DataFrame, width: int | None = None) -> Dict[str, DataFrame]:
+def dedup_state(docs: DataFrame) -> Dict[str, DataFrame]:
     """Full run over ``docs`` (id string, text) -> state dict
     {hashes, bands, comp} + the keep/drop table under 'decision'."""
     g, star = exact_groups(docs)
     hashes = g.select("h", "rep").localCheckpoint(eager=True)
-    bands = near_bands(_reps(g), width).localCheckpoint(eager=True)
+    bands = near_bands(_reps(g)).localCheckpoint(eager=True)
     near = hashing.lsh_candidate_pairs(bands, "id")
     decision = keep_decision(
         docs.select(F.col("id").alias("node")), star.unionByName(near)
@@ -124,9 +118,7 @@ def dedup_state(docs: DataFrame, width: int | None = None) -> Dict[str, DataFram
     return {"hashes": hashes, "bands": bands, "comp": decision, "decision": decision}
 
 
-def dedup_incremental(
-    state: Dict[str, DataFrame], new_docs: DataFrame, width: int | None = None
-) -> Dict[str, DataFrame]:
+def dedup_incremental(state: Dict[str, DataFrame], new_docs: DataFrame) -> Dict[str, DataFrame]:
     """Fold ``new_docs`` (id string, text; ids sort after the state's)
     into ``state``; returns the updated state (same keys) whose
     'decision' covers old + new documents exactly as a full recompute
@@ -139,7 +131,7 @@ def dedup_incremental(
 
     unseen = nh.join(state["hashes"], "h", "left_anti")
     g, new_star = exact_groups(unseen.select("id", "text"))
-    new_bands = near_bands(_reps(g), width).localCheckpoint(eager=True)
+    new_bands = near_bands(_reps(g)).localCheckpoint(eager=True)
     # new x old candidates: one equi-join on the band key
     cross = (
         new_bands.select("band", "sig", F.col("id").alias("b"))

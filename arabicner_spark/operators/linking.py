@@ -58,6 +58,10 @@ from arabicner_spark.operators.components import connected_components_adaptive
 from arabicner_spark.sources.io import local_table
 
 DEFAULT_JACCARD = 0.5
+# MinHash-LSH blocking over char 3-grams: N_HASHES minhashes in BANDS
+# bands of N_HASHES // BANDS rows (the serial oracle's defaults)
+N_HASHES = 16
+BANDS = 8
 # ends the entity id in an alias node's id; sorts before every
 # character an entity id may hold (best_alias rejects ids holding it)
 SEP = "\x00"
@@ -110,8 +114,6 @@ def link_surfaces(
     mentions: DataFrame,
     alias_best: DataFrame,
     jaccard_threshold: float = DEFAULT_JACCARD,
-    n_hashes: int = 16,
-    bands: int = 8,
 ) -> DataFrame:
     """mentions -> (surface, canonical_id, link_kind) map.
 
@@ -140,8 +142,6 @@ def link_surfaces(
             head.column("entity_id").to_pylist(),
             alias_best.select("alias", "entity_id").collect(),
             jaccard_threshold,
-            n_hashes,
-            bands,
         )
         if rows is not None:
             return local_table(mentions.sparkSession, rows, MAP_SCHEMA)
@@ -156,14 +156,14 @@ def link_surfaces(
         )
     )
     sigs = hashing.minhash_columns(
-        nodes.select("id", hashing.char_grams(F.col("t"), 3).alias("g")), "g", n_hashes
+        nodes.select("id", hashing.char_grams(F.col("t"), 3).alias("g")), "g", N_HASHES
     )
     # the node key carries its gram array through the pair self-join,
     # so verification needs no join back; ids are unique, so struct
     # order is id order
     sigs = sigs.withColumn("node", F.struct("id", "g"))
     pairs = hashing.lsh_candidate_pairs(
-        hashing.lsh_bands(sigs, ["node"], bands=bands, rows_per_band=n_hashes // bands),
+        hashing.lsh_bands(sigs, ["node"], bands=BANDS, rows_per_band=N_HASHES // BANDS),
         "node",
     )
     # exact Jaccard on candidate pairs only; a pair sharing no gram
@@ -201,7 +201,7 @@ VERIFY_SLOTS = 1 << 22
 
 
 def _local_pairs(
-    texts: Sequence[str], jaccard_threshold: float, n_hashes: int, bands: int
+    texts: Sequence[str], jaccard_threshold: float
 ) -> Optional[Tuple[np.ndarray, np.ndarray, np.ndarray]]:
     """MinHash-LSH over the node texts ``texts`` (listed in node id
     order) on the driver: (a, b, verified), the candidate pairs as node
@@ -211,8 +211,8 @@ def _local_pairs(
     verification keeps its ``inter > 0`` and ``inter >= threshold *
     union``."""
     codes, sizes, grams = hashing.local_char_grams(texts, 3)
-    sig = hashing.local_minhash(codes, sizes, grams, n_hashes)
-    buckets = hashing.local_lsh_buckets(sig, bands, n_hashes // bands)
+    sig = hashing.local_minhash(codes, sizes, grams, N_HASHES)
+    buckets = hashing.local_lsh_buckets(sig, BANDS, N_HASHES // BANDS)
     if hashing.local_bucket_pairs(buckets) > DRIVER_PAIRS:
         return None
     a, b = hashing.local_candidate_pairs(buckets)
@@ -239,8 +239,6 @@ def _local_map(
     entity_ids: Sequence[str],
     aliases: Sequence[Tuple[str, str]],
     jaccard_threshold: float,
-    n_hashes: int,
-    bands: int,
 ) -> Optional[List[Tuple[str, str, str]]]:
     """(surface, canonical_id, link_kind) rows of ``link_surfaces`` from
     the distinct surfaces with their alias hits (``entity_ids``, None
@@ -252,7 +250,7 @@ def _local_map(
         [("S:" + s, s) for s, e in zip(surfaces, entity_ids) if e is None]
         + [("A:" + e + SEP + a, a) for a, e in aliases if a is not None and e is not None]
     )
-    pairs = _local_pairs([t for _id, t in nodes], jaccard_threshold, n_hashes, bands)
+    pairs = _local_pairs([t for _id, t in nodes], jaccard_threshold)
     if pairs is None:
         return None
     a, b, verified = pairs

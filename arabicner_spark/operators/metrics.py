@@ -36,13 +36,12 @@ def span_prf(gold: DataFrame, pred: DataFrame, keys=None) -> SimpleNamespace:
     )
 
 
-def per_type_report(gold: DataFrame, pred: DataFrame, keys=None) -> DataFrame:
+def per_type_report(gold: DataFrame, pred: DataFrame) -> DataFrame:
     """-> (type, n_gold, n_pred, tp, precision, recall, f1) — one row
     per entity type, computed in two aggregations + one join."""
-    keys = keys or SPAN_KEYS
-    g = gold.select(*keys).distinct()
-    p = pred.select(*keys).distinct()
-    tp = g.join(p, keys, "inner").groupBy("type").agg(F.count("*").alias("tp"))
+    g = gold.select(*SPAN_KEYS).distinct()
+    p = pred.select(*SPAN_KEYS).distinct()
+    tp = g.join(p, SPAN_KEYS, "inner").groupBy("type").agg(F.count("*").alias("tp"))
     ng = g.groupBy("type").agg(F.count("*").alias("n_gold"))
     np_ = p.groupBy("type").agg(F.count("*").alias("n_pred"))
     rep = (
@@ -65,15 +64,17 @@ def per_type_report(gold: DataFrame, pred: DataFrame, keys=None) -> DataFrame:
     )
 
 
-def token_tags(spans: DataFrame, keys=("conv_id", "turn_idx", "level")) -> DataFrame:
-    """Span rows -> exploded BIO token tags (*keys, pos, tag).
+def token_tags(spans: DataFrame) -> DataFrame:
+    """Span rows -> exploded BIO token tags (conv_id, turn_idx, level,
+    pos, tag).
 
     Within one level spans never overlap (the BIO head can express only
-    one segmentation), so (*keys, pos) is unique.  Positions covered by
+    one segmentation), so (conv_id, turn_idx, level, pos) is unique.  Positions covered by
     no span carry the implicit "O" and are NOT emitted — consumers
     treat absence as "O".
     """
     pos = F.explode(F.sequence(F.col("start_tok"), F.col("end_tok") - 1)).alias("pos")
+    keys = ("conv_id", "turn_idx", "level")
     return spans.select(*keys, "type", "start_tok", pos).select(
         *keys,
         "pos",

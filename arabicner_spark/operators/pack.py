@@ -27,16 +27,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from arabicner_spark.sources.io import local_table
+from arabicner_spark.sources.io import local_table, pin_width
 
 
-def pack_sequences(
-    df: DataFrame,
-    id_col: str,
-    len_col: str,
-    chunk: int,
-    width: int | None = None,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, id_col: str, len_col: str, chunk: int) -> DataFrame:
     """-> (id, len, tok_start, chunk_start, chunk_end, offset_in_chunk)
 
     ``tok_start``: the document's global token offset under
@@ -44,12 +38,12 @@ def pack_sequences(
     first/last chunk (size ``chunk``) holding any of its tokens;
     ``offset_in_chunk``: position of its first token inside
     chunk_start.  Zero-length docs occupy no tokens; they report the
-    chunk their offset falls in with chunk_end = chunk_start.
+    chunk their offset falls in with chunk_end = chunk_start.  The
+    range repartition is ``pin_width`` wide.
     """
-    w = width or df.sparkSession.sparkContext.defaultParallelism
     part = df.select(
         F.col(id_col).alias("id"), F.col(len_col).cast("long").alias("len")
-    ).repartitionByRange(w, F.col("id"))
+    ).repartitionByRange(pin_width(df.sparkSession), F.col("id"))
     # materialize ONCE: the totals job and the final job must see the
     # SAME sampled range boundaries (re-executing the exchange could
     # re-sample and shift pid assignments between the two passes)

@@ -217,11 +217,10 @@ def pq_index_and_search(
     updates: int = 1,
     query_ids=range(10),
     topk: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
 ) -> DataFrame:
-    """End-to-end PQ: codebook training (seed = ids < k, ``updates``
-    Lloyd steps) -> encode -> ADC top-k for the query ids.
+    """End-to-end PQ over ``vectors`` (vec_id, v): codebook training
+    (seed = ids < k, ``updates`` Lloyd steps) -> encode -> ADC top-k
+    for the query ids.
 
     r7 restructure (guide sections 1.2/4.2): the join dataflow
     exploded every vector into m*sdims rows and pushed ~k x that
@@ -250,13 +249,13 @@ def pq_index_and_search(
     qset = list(query_ids)
 
     def _collect_matrix(df):
-        tbl = df.select(id_col, vec_col).toArrow()
-        ids = np.asarray(tbl.column(id_col).to_pylist(), dtype=np.int64)
-        arrs = tbl.column(vec_col).to_pylist()
+        tbl = df.select("vec_id", "v").toArrow()
+        ids = np.asarray(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+        arrs = tbl.column("v").to_pylist()
         return ids, np.asarray(arrs, dtype=np.float64)
 
     seed_ids, seedV = _collect_matrix(
-        vectors.where(F.col(id_col) < k).orderBy(id_col)
+        vectors.where(F.col("vec_id") < k).orderBy("vec_id")
     )
     if seedV.size == 0:
         raise ValueError("pq needs seed vectors with id < k")
@@ -310,7 +309,7 @@ def pq_index_and_search(
             )
 
         agg = (
-            vectors.select(id_col, vec_col)
+            vectors.select("vec_id", "v")
             .mapInArrow(partial_sums, "sub int, cl int, sdim int, s long, n long")
             .groupBy("sub", "cl", "sdim")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
@@ -338,7 +337,7 @@ def pq_index_and_search(
 
     # driver-side ADC distance table from the final codebook
     q_ids, qV = _collect_matrix(
-        vectors.where(F.col(id_col).isin(qset)).orderBy(id_col)
+        vectors.where(F.col("vec_id").isin(qset)).orderBy("vec_id")
     )
     qXi = (
         _fixed(np, qV).reshape(len(q_ids), m, sdims)
@@ -384,7 +383,7 @@ def pq_index_and_search(
                 ["q", "neighbor", "adc_dist"],
             )
 
-    scored = vectors.select(id_col, vec_col).mapInArrow(
+    scored = vectors.select("vec_id", "v").mapInArrow(
         encode_score, "q long, neighbor long, adc_dist long"
     ).where(F.col("q") != F.col("neighbor"))
     from pyspark.sql import Window

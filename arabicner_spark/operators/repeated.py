@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from arabicner_spark.sources.io import pin_width
+
 GRAM_SEP = ""  # never appears inside whitespace-split tokens
 
 
@@ -47,40 +49,28 @@ def _kgram_hash(toks: Column, i, k: int) -> Column:
     return F.md5(F.encode(F.concat_ws(GRAM_SEP, F.slice(toks, i, k)), "utf-8"))
 
 
-def repeated_substring_cuts(
-    docs: DataFrame,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    width: int | None = None,
-) -> DataFrame:
-    """Maximal cross-document repeated token runs of length >= ``k``
-    as a cut list (doc_id, start_tok 1-based, len_tok).  A span is cut
-    iff every k-window inside it occurs in at least 2 DISTINCT
-    documents — within-doc repetition alone never fires (that
-    modality is text_repetition's).
+def repeated_substring_cuts(docs: DataFrame, k: int = 8) -> DataFrame:
+    """Maximal cross-document repeated token runs of length >= ``k`` in
+    ``docs`` (doc_id, text) as a cut list (doc_id, start_tok 1-based,
+    len_tok).  A span is cut iff every k-window inside it occurs in at
+    least 2 DISTINCT documents — within-doc repetition alone never
+    fires (that modality is text_repetition's).
 
-    ``width``: explicit partition count for the gram explode + hash +
-    partial-agg stage — the compute-heavy part (one md5 per token
-    position), whose width is otherwise whatever the doc scan has.  A
-    few-MB parquet file is one or two splits, so the whole gram stage
-    runs on 1-2 cores (measured: the dominant cost of this operator at
-    sf1.0, r7).  Repartitioning the DOC rows (cheap — one small row
-    per document) by id first makes the per-gram work data-parallel:
-    the word_shingles width pin, same starvation mode (guide sections
-    2.5/6: input split count caps stage parallelism)."""
+    The doc rows are pinned to ``pin_width`` by id first, so the gram
+    explode + hash + partial-agg stage (one md5 per token position) is
+    data-parallel instead of running at the doc scan's 1-2 splits
+    (measured: the dominant cost of this operator at sf1.0, r7)."""
     if k < 1:
         raise ValueError(f"repeated_substring_cuts needs k >= 1, got {k}")
-    if width:
-        docs = docs.repartition(width, F.col(id_col))
-    toks = F.split(F.col(text_col), " ")
+    docs = docs.repartition(pin_width(docs.sparkSession), F.col("doc_id"))
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     # sequence(1, n-k+1) is DESCENDING in Spark when n < k — guard it
     idx = F.when(n - k + 1 >= 1, F.sequence(F.lit(1), n - k + 1)).otherwise(
         F.array().cast("array<int>")
     )
     grams = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.explode(
             F.transform(
                 idx,
@@ -111,19 +101,14 @@ def repeated_substring_cuts(
     )
 
 
-def apply_substring_cuts(
-    docs: DataFrame,
-    cuts: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def apply_substring_cuts(docs: DataFrame, cuts: DataFrame) -> DataFrame:
     """Remove the cut spans from each document's token stream ->
-    (id, text_deduped).  One left join + one array-filter projection:
+    (doc_id, text_deduped).  One left join + one array-filter projection:
     the cut list is grouped to one row per doc (array of [start, end)
     spans) so the probe side joins against a doc-keyed table at most
     corpus-sized, and tokens are kept iff no span covers their
     position.  Docs with no cuts pass through unchanged."""
-    spans = cuts.groupBy(id_col).agg(
+    spans = cuts.groupBy("doc_id").agg(
         F.collect_list(
             F.struct(
                 F.col("start_tok").alias("s"),
@@ -131,16 +116,16 @@ def apply_substring_cuts(
             )
         ).alias("spans")
     )
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     kept = F.filter(
         F.transform(toks, lambda t, i: F.struct(t.alias("t"), (i + 1).alias("p"))),
         lambda x: ~F.exists(
             F.col("spans"), lambda sp: (x["p"] >= sp["s"]) & (x["p"] < sp["e"])
         ),
     )
-    return docs.join(spans, id_col, "left").select(
-        F.col(id_col),
-        F.when(F.col("spans").isNull(), F.col(text_col))
+    return docs.join(spans, "doc_id", "left").select(
+        "doc_id",
+        F.when(F.col("spans").isNull(), F.col("text"))
         .otherwise(F.concat_ws(" ", F.transform(kept, lambda x: x["t"])))
         .alias("text_deduped"),
     )

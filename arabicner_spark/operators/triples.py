@@ -28,6 +28,8 @@ from typing import Dict, List, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arabicner_spark.sources.io import pin_width
+
 # (subj_type, pred, obj_type) for the synthetic/Wojood-typed corpus
 DEFAULT_PREDICATES: List[Tuple[str, str, str]] = [
     ("PERS", "works_for", "ORG"),
@@ -46,7 +48,6 @@ def extract_triples(
     mentions: DataFrame,
     predicates: List[Tuple[str, str, str]] = DEFAULT_PREDICATES,
     window: int = DEFAULT_WINDOW,
-    width: int | None = None,
 ) -> DataFrame:
     """mentions -> triples (schemas.TRIPLES).
 
@@ -58,14 +59,8 @@ def extract_triples(
     Python NER stage — and (b) tempts AQE into broadcasting a mentions
     table that is unbounded at production scale.  Mentions-per-turn is
     bounded by turn length, so per-row pair fan-out is bounded and the
-    type-pair + gap filters run INSIDE the array before explode.
-
-    ``width``: explicit partition count for the per-turn aggregate.
-    The mentions frame is bytes-small when the corpus is, and AQE's
-    byte-based post-shuffle coalescing then folds the groupBy exchange
-    to 1-2 partitions — serializing the compute-heavy pair-combinatorics
-    explode (PLANS.md: compute-bound stages starved by byte coalescing).
-    At production scale the exchange is wide anyway and this is a no-op.
+    type-pair + gap filters run INSIDE the array before explode.  The
+    per-turn aggregate's exchange is pinned to ``pin_width``.
     """
     by_pair: Dict[str, List[str]] = {}
     for st, pred, ot in predicates:
@@ -76,8 +71,9 @@ def extract_triples(
         *[x for k, ps in sorted(by_pair.items()) for x in (F.lit(k), F.array(*map(F.lit, ps)))]
     ).cast("map<string,array<string>>")
     m = F.struct("level", "start_tok", "end_tok", "type", "text")
-    if width:
-        mentions = mentions.repartition(width, F.col("conv_id"), F.col("turn_idx"))
+    mentions = mentions.repartition(
+        pin_width(mentions.sparkSession), F.col("conv_id"), F.col("turn_idx")
+    )
     per_turn = mentions.groupBy("conv_id", "turn_idx").agg(
         F.collect_list(m).alias("ms")
     )

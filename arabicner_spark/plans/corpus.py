@@ -43,7 +43,6 @@ class CorpusConfig:
     split_seed: int = 1
     chunk: int = 512                # packing chunk (tokens)
     min_tokens: int = 3             # quality floor
-    lsh_width: int | None = None
 
     def snapshot(self, extra: str) -> str:
         import hashlib as _h
@@ -57,14 +56,14 @@ class CorpusConfig:
         ).hexdigest()
 
 
-def _dedup_keep(docs: DataFrame, width) -> DataFrame:
+def _dedup_keep(docs: DataFrame) -> DataFrame:
     """(doc_id, keep_doc) via the SHARED dedup chain
     (operators/incremental.py::dedup_decision) — one definition of the
     exact-star + MinHash-LSH + CC survivors composition serves the
     corpus pipeline, the registry and the incremental-state path.  Only
     the decision is read, so no hashes/bands state is materialized."""
     d = docs.select(F.col("doc_id").cast("string").alias("id"), "text")
-    return dedup_decision(d, width=width).select(
+    return dedup_decision(d).select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("keep").cast("bigint").alias("keep_doc"),
     )
@@ -101,7 +100,7 @@ def run_corpus_pipeline(
         "dedup",
         "kept",
         lambda: scored.select("doc_id", F.col("scrubbed").alias("text"))
-        .transform(lambda d: _dedup_keep(d, cfg.lsh_width))
+        .transform(_dedup_keep)
         .where(F.col("doc_id") == F.col("keep_doc"))
         .join(scored, "doc_id")
         .select("doc_id", "scrubbed", "n_subwords"),

@@ -9,7 +9,7 @@ format, and print micro + per-type span P/R/F1 (the seqeval-IOB2-style
 report, computed as DataFrame joins in operators/metrics.py).
 
 The scorer is the gazetteer stand-in (AraBERT weights are LFS-stubbed
-in the reference checkout); by default the gazetteer is built from the
+in the reference checkout); the gazetteer is built from the
 GOLD spans of the supplied files, which makes this an end-to-end decode
 /alignment check on real nested data rather than a model benchmark.
 """
@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import argparse
 import os
-from typing import Dict, Optional
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -31,15 +30,10 @@ from arabicner_spark.sources import conll, predictions
 from arabicner_spark.sources.io import local_table
 
 
-def evaluate_file(
-    spark: SparkSession,
-    path: str,
-    output_path: str,
-    gazetteer: Optional[Dict[str, set]] = None,
-) -> "metrics.SimpleNamespace":
+def evaluate_file(spark: SparkSession, path: str, output_path: str) -> "metrics.SimpleNamespace":
     segments = conll.parse_conll(path)
     types_all = conll.entity_types(segments)
-    gaz = gazetteer or conll.gazetteer_from_gold(segments, types_all)
+    gaz = conll.gazetteer_from_gold(segments, types_all)
     types = tagcore.gazetteer_types(gaz)
 
     rows = conll.segments_to_transcript_rows(segments)

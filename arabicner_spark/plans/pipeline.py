@@ -34,7 +34,7 @@ from arabicner_spark.operators.triples import (
     extract_triples,
 )
 from arabicner_spark.plans.lineage import StageRunner
-from arabicner_spark.sources.io import TableIO, pin_width
+from arabicner_spark.sources.io import TableIO
 
 
 @dataclass
@@ -89,18 +89,10 @@ def run_pipeline(
         partition_by=["type"],
         rows_in_of="transcripts",
     )
-    # explicit width pin (sources.io.pin_width): keeps the
-    # pair-combinatorics stage parallel when the mentions exchange is
-    # bytes-small
     triples = runner.run(
         "triples",
         "triples",
-        lambda: extract_triples(
-            mentions,
-            cfg.predicates,
-            cfg.window,
-            width=pin_width(spark),
-        ),
+        lambda: extract_triples(mentions, cfg.predicates, cfg.window),
         rows_in_of="mentions",
         count_as_triples=True,
     )

@@ -207,7 +207,7 @@ def kg_prefix(spark: SparkSession, sf_dir: str, stage: str, ts: bool = False) ->
     """The KG pipeline prefix every kg_* query starts from, built one way:
     ``mentions`` (the real NER stage over the testdata gazetteer),
     ``linked`` (mentions LEFT JOIN the best alias on the surface),
-    ``triples`` (width-pinned windowed triples) or ``edges`` (triples
+    ``triples`` (windowed triples) or ``edges`` (triples
     whose subject and object both have an alias, as src/dst entity
     ids: one row per supporting triple).  ``ts`` adds the turn's
     ``ts_epoch`` to triples or edges."""
@@ -217,7 +217,7 @@ def kg_prefix(spark: SparkSession, sf_dir: str, stage: str, ts: bool = False) ->
     if stage == "linked":
         ab = F.broadcast(best_alias(spark, ALIAS_TD))
         return m.join(ab, m["text"] == ab["alias"], "left")
-    out = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD, width=pin_width(spark))
+    out = triples_op.extract_triples(m, PREDS_TD, WINDOW_TD)
     if stage == "edges":
         ab = F.broadcast(best_alias(spark, ALIAS_TD))
         out = out.join(
@@ -799,7 +799,7 @@ def q_kg_components(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
-    return dedup_decision(d, pin_width(spark)).select(
+    return dedup_decision(d).select(
         "node", F.col("keep").alias("component")
     )
 
@@ -1001,7 +1001,7 @@ def q_dedup_substring(spark, sf_dir):
     from arabicner_spark.operators.repeated import repeated_substring_cuts
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return repeated_substring_cuts(d, k=SUBSTR_K, width=pin_width(spark))
+    return repeated_substring_cuts(d, k=SUBSTR_K)
 
 
 _SQL_SUBSTR_CUTS = f"""d AS (SELECT doc_id, string_split(text, ' ') AS toks
@@ -1035,9 +1035,7 @@ def q_dedup_substring_apply(spark, sf_dir):
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    cuts = repeated_substring_cuts(
-        d, k=SUBSTR_K, width=pin_width(spark)
-    ).localCheckpoint(eager=True)
+    cuts = repeated_substring_cuts(d, k=SUBSTR_K).localCheckpoint(eager=True)
     return apply_substring_cuts(d, cuts)
 
 
@@ -1061,7 +1059,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("id"), "text"
     )
-    pairs = hashing.lsh_candidate_pairs(near_bands(d, pin_width(spark)), "id")
+    pairs = hashing.lsh_candidate_pairs(near_bands(d), "id")
     return pairs.select(
         F.col("a").cast("bigint").alias("a"), F.col("b").cast("bigint").alias("b")
     )
@@ -1091,9 +1089,7 @@ def q_dedup_jaccard(spark, sf_dir):
     )
     # reused by signatures, both sides of the intersection join, and
     # sizes -> materialize once
-    sh = hashing.shingle_hash_table(
-        d, "id", "text", n=3, width=pin_width(spark)
-    ).localCheckpoint(eager=True)
+    sh = hashing.shingle_hash_table(d, "id", "text", n=3).localCheckpoint(eager=True)
     sig = hashing.minhash_signatures(sh, ["id"], n_hashes=16, base_col="h32")
     pairs = hashing.lsh_candidate_pairs(
         hashing.lsh_bands(sig, ["id"], bands=8, rows_per_band=2), "id"
@@ -1200,9 +1196,7 @@ def q_dedup_embedding(spark, sf_dir):
             + F.conv("sig", 2, 10).cast("long")
         ).alias("bkey"),
     )
-    return hashing.cosine_bucket_verify(
-        packed, e, threshold=0.45, round_to=4, width=pin_width(spark)
-    )
+    return hashing.cosine_bucket_verify(packed, e, threshold=0.45, round_to=4)
 
 
 def _sql_sign_lsh_cte() -> str:
@@ -1873,11 +1867,9 @@ def q_text_fingerprint(spark, sf_dir):
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id"), F.col("text")
     )
-    # distinct=False: min over seeded hashes is duplicate-insensitive,
-    # so the shingle distinct was a wasted exchange (r7, guide 2.3)
-    sh = hashing.word_shingles(
-        d, ["doc_id"], "text", n=3, width=pin_width(spark), distinct=False
-    )
+    # the raw shingle stream: min over seeded hashes is
+    # duplicate-insensitive (r7, guide 2.3)
+    sh = hashing.word_shingles(d, ["doc_id"], "text", n=3)
     return sh.groupBy("doc_id").agg(
         F.min(hashing.seeded_md5(F.col("shingle"), 99)).alias("fingerprint")
     )
@@ -2123,7 +2115,7 @@ def q_dedup_survivors(spark, sf_dir):
     # LSH input (reps only — see incremental.exact_groups for why this
     # is output-identical)
     return (
-        dedup_decision(d, pin_width(spark))
+        dedup_decision(d)
         .select(
             F.col("node").cast("bigint").alias("doc_id"),
             F.col("keep").cast("bigint").alias("keep_doc"),
@@ -2171,7 +2163,7 @@ def q_corpus_pipeline(spark, sf_dir):
     from arabicner_spark.plans.corpus import CorpusConfig, run_corpus_pipeline
 
     d = load(spark, sf_dir, "documents")
-    cfg = CorpusConfig(sample_k=200, chunk=512, min_tokens=3, lsh_width=pin_width(spark))
+    cfg = CorpusConfig(sample_k=200, chunk=512, min_tokens=3)
     with _temp_dirs("corpus") as (root,):
         out = run_corpus_pipeline(spark, d, cfg, root, run_id="gate")
         return out["packed"].localCheckpoint(eager=True)
@@ -2331,8 +2323,7 @@ def q_dedup_incremental(spark, sf_dir):
     )
     old = d.where(F.col("doc_id") % 2 == 0).select("id", "text")
     new = d.where(F.col("doc_id") % 2 == 1).select("id", "text")
-    st = dedup_state(old, width=pin_width(spark))
-    st2 = dedup_incremental(st, new, width=pin_width(spark))
+    st2 = dedup_incremental(dedup_state(old), new)
     return st2["decision"].select(
         F.col("node").cast("bigint").alias("doc_id"),
         F.col("keep").cast("bigint").alias("keep_doc"),
@@ -2360,9 +2351,7 @@ def q_pack_sequences(spark, sf_dir):
 
     d = load(spark, sf_dir, "documents")
     lens = subword_counts_expr(d, "doc_id", "text").select("doc_id", "n_subwords")
-    return pack_sequences(
-        lens, "doc_id", "n_subwords", chunk=PACK_CHUNK, width=pin_width(spark)
-    )
+    return pack_sequences(lens, "doc_id", "n_subwords", chunk=PACK_CHUNK)
 
 
 SQL_PACK_SEQUENCES = f"""

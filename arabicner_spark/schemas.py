@@ -1,4 +1,7 @@
-"""Fixed, explicit StructTypes for every table in the pipeline.
+"""Fixed, explicit StructTypes for the pipeline's tables: its input,
+mentions, triples, alias dictionary, nodes, edges and metrics, and the
+multimodal assets.  tests/test_resume.py pins run_pipeline's triples,
+edges and nodes, read back, to these field names and types.
 
 Schemas are never inferred (the reference's duck-typed implicit schemas
 are a determinism hazard, SURVEY.md section 1.4).  Input shape is fixed
@@ -8,9 +11,7 @@ by BASELINE.json's input_hint.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -100,15 +101,6 @@ METRICS = StructType(
     ]
 )
 
-LINEAGE = StructType(
-    [
-        StructField("stage", StringType(), False),
-        StructField("input_snapshot", StringType(), False),
-        StructField("complete", BooleanType(), False),
-        StructField("run_id", StringType(), False),
-    ]
-)
-
 # multimodal assets: opaque binary payload + typed metadata
 ASSETS = StructType(
     [
@@ -120,13 +112,5 @@ ASSETS = StructType(
         StructField("meta_width", IntegerType(), True),
         StructField("meta_height", IntegerType(), True),
         StructField("meta_duration_ms", LongType(), True),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType(), False),
-        StructField("embedding", ArrayType(DoubleType()), False),
-        StructField("label", IntegerType(), True),
     ]
 )

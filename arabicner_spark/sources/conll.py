@@ -86,15 +86,14 @@ def gold_spans(
     return spans
 
 
-def gazetteer_from_gold(
-    segments: List[Segment], types: List[str], max_phrase_len: int = 8
-) -> Dict[str, set]:
-    """{type: normalized phrase tuples} from every gold span surface."""
+def gazetteer_from_gold(segments: List[Segment], types: List[str]) -> Dict[str, set]:
+    """{type: normalized phrase tuples} from every gold span surface of
+    at most 8 tokens."""
     gaz: Dict[str, set] = {t: set() for t in types}
     for si, seg in enumerate(segments):
         toks = [tok for tok, _tags in seg]
         for (s_idx, lvl, typ, s, e) in gold_spans([seg], types):
-            if e - s <= max_phrase_len:
+            if e - s <= 8:
                 gaz[typ].add(tuple(normalize_py(t) for t in toks[s:e]))
     return {t: ps for t, ps in gaz.items() if ps}
 
@@ -103,13 +102,14 @@ _EPOCH = datetime(2026, 1, 1, tzinfo=timezone.utc)
 
 
 def segments_to_transcript_rows(
-    segments: List[Segment], conv_size: int = 50, conv_prefix: str = "wojood"
+    segments: List[Segment],
 ) -> List[Tuple[str, int, str, str, str, datetime]]:
-    """segment -> turn; groups of ``conv_size`` segments -> conversation."""
+    """segment -> turn; groups of 50 segments -> conversation
+    ``wojood_NNNNN``."""
     rows = []
     for si, seg in enumerate(segments):
-        conv = f"{conv_prefix}_{si // conv_size:05d}"
-        turn = si % conv_size
+        conv = f"wojood_{si // 50:05d}"
+        turn = si % 50
         text = " ".join(tok for tok, _ in seg)
         rows.append(
             (conv, turn, ["user", "assistant", "tool"][turn % 3], text, None,

@@ -68,14 +68,20 @@ def local_table(spark: SparkSession, rows, schema) -> DataFrame:
 
 
 def pin_width(spark: SparkSession) -> int:
-    """Partition count for explicit width pins on compute-bound,
-    bytes-small stages (shingle/minhash, pair-combinatorics — see
-    PLANS.md on AQE byte-based coalescing).  max() of core count and
-    the configured shuffle width: the pin replaces the AQE-sized
-    exchange, so pinning to bare defaultParallelism would CAP those
-    stages at cluster-core-count partitions on arbitrarily large
-    inputs (oversized partitions, no AQE split on the pinned
-    exchange)."""
+    """Partition count of the explicit width pins on compute-bound,
+    bytes-small stages; each such operator reads it from its input's
+    session.  AQE coalesces a shuffle by BYTES, so a few MB of docs,
+    mentions, shingles or bands fold to 1-2 partitions and the
+    compute-heavy work after them (shingle construction and hashing,
+    pair combinatorics, numpy verify) runs single-threaded (measured
+    5.4 s -> sub-second at sf0.1 for the minhash stage; PLANS.md).  An
+    explicit repartition pins the stage width instead.  It is the max()
+    of core count and the configured shuffle width: the pin replaces
+    the AQE-sized exchange, so pinning to bare defaultParallelism would
+    CAP those stages at cluster-core-count partitions on arbitrarily
+    large inputs (oversized partitions, no AQE split on the pinned
+    exchange), and a pin must never be narrower than the shuffle
+    width."""
     return max(
         spark.sparkContext.defaultParallelism,
         int(spark.conf.get("spark.sql.shuffle.partitions", "200")),

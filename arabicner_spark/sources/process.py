@@ -71,10 +71,8 @@ def split_by_hash(
     df: DataFrame,
     id_col: str,
     seed: int = 1,
-    train_pct: int = 80,
-    dev_pct: int = 10,
 ) -> DataFrame:
-    """Deterministic 3-way split: appends a ``split`` column
+    """Deterministic 80/10/10 split: appends a ``split`` column
     ('train'/'dev'/'test') from a seeded-md5 hex cut on ``id_col``.
 
     The engine-independent alternative to randomSplit (reference:
@@ -85,15 +83,16 @@ def split_by_hash(
     resume, partitioning, cluster size, and engines — the property a
     100-TB pipeline needs so a re-run never silently moves a document
     from train to test.  Cut points use the first 4 md5 nibbles
-    (65,536 buckets): bucket < 655.36*train_pct -> train, etc.
+    (65,536 buckets): bucket < 65536*80//100 -> train, < 65536*90//100
+    -> dev, else test.
     """
     bucket = F.conv(
         F.substring(F.md5(F.concat(F.lit(f"{seed}|"), F.col(id_col).cast("string"))), 1, 4),
         16,
         10,
     ).cast("int")
-    t_cut = 65536 * train_pct // 100
-    d_cut = 65536 * (train_pct + dev_pct) // 100
+    t_cut = 65536 * 80 // 100
+    d_cut = 65536 * 90 // 100
     return df.withColumn(
         "split",
         F.when(bucket < t_cut, "train")

@@ -105,10 +105,10 @@ def _plant(rng: random.Random, tokens: List[str], hot_phrases: List[str]) -> Non
 def make_transcript_rows(
     n_convs: int = 40,
     seed: int = 42,
-    hot_conv_every: int = 20,
-    long_turn_every: int = 97,
 ) -> List[Tuple[str, int, str, str, str, datetime]]:
-    """Rows matching schemas.TRANSCRIPTS, deterministic in ``seed``."""
+    """Rows matching schemas.TRANSCRIPTS, deterministic in ``seed``.
+    Every 20th conversation (c % 20 == 5) is hot, with 50x the turns,
+    and every 97th turn overflows the subword budget."""
     rng = random.Random(seed)
     hot_phrases = [GAZETTEER[t][0] for t in sorted(GAZETTEER)]
     rows: List[Tuple[str, int, str, str, str, datetime]] = []
@@ -116,14 +116,14 @@ def make_transcript_rows(
     for c in range(n_convs):
         conv_id = f"conv_{c:06d}"
         base_turns = rng.randint(3, 12)
-        n_turns = base_turns * (50 if c % hot_conv_every == 5 else 1)
+        n_turns = base_turns * (50 if c % 20 == 5 else 1)
         ts = _EPOCH + timedelta(seconds=c * 10_000)
         for t in range(n_turns):
             turn_counter += 1
             n_fill = rng.randint(4, 14)
             tokens = [rng.choice(FILLER) for _ in range(n_fill)]
             _plant(rng, tokens, hot_phrases)
-            if turn_counter % long_turn_every == 0:
+            if turn_counter % 97 == 0:
                 # > 510 stand-in subwords: pad with filler until the
                 # subword budget overflows (~600 tokens is plenty).
                 tokens += [rng.choice(FILLER) for _ in range(650)]

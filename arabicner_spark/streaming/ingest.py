@@ -83,19 +83,17 @@ def streaming_conv_totals(mentions_stream: DataFrame) -> DataFrame:
     )
 
 
-def user_session_aggregates(
-    events_stream: DataFrame, gap: str = "300 seconds"
-) -> DataFrame:
+def user_session_aggregates(events_stream: DataFrame) -> DataFrame:
     """Watermarked SESSION-window aggregation per user: Spark's native
     dynamic-gap session windows under the streaming state store (the
     sessionization physical operator differs from batch — this is the
     streaming-engine counterpart of the batch rel_session_window
-    query).  Sessions merge while consecutive events are <= gap apart;
+    query).  Sessions merge while consecutive events are <= 300 s apart;
     watermark (10 min) bounds how long an open session's state waits
     for late events before it can be finalized."""
     return (
         events_stream.withWatermark("ts", "10 minutes")
-        .groupBy("user_id", F.session_window("ts", gap).alias("session_window"))
+        .groupBy("user_id", F.session_window("ts", "300 seconds").alias("session_window"))
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
             F.sum("cents").cast("bigint").alias("sum_cents"),
@@ -113,21 +111,19 @@ def user_session_aggregates(
 def join_turn_metadata(
     mentions_stream: DataFrame,
     turns_stream: DataFrame,
-    watermark: str = "10 minutes",
-    tolerance_s: int = 300,
 ) -> DataFrame:
     """Watermarked STREAM-STREAM inner join: the extracted-mentions
     stream enriched with per-turn metadata (role) from a second,
     independent stream of the raw turns.
 
-    Both sides carry a watermark and the join condition bounds the
-    event-time distance (|mention.ts - turn.ts| <= tolerance), so the
+    Both sides carry a 10-minute watermark and the join condition bounds
+    the event-time distance (|mention.ts - turn.ts| <= 300 s), so the
     state store can evict buffered rows once the other side's watermark
     passes the tolerance window — without the time bound, stream-stream
     join state grows forever (the production kill at 100 TB/day).
     Append output mode: each joined row is emitted exactly once.
     """
-    m = mentions_stream.withWatermark("ts", watermark).alias("m")
+    m = mentions_stream.withWatermark("ts", "10 minutes").alias("m")
     t = (
         turns_stream.select(
             F.col("conv_id").alias("t_conv_id"),
@@ -135,14 +131,14 @@ def join_turn_metadata(
             "role",
             F.col("ts").alias("turn_ts"),
         )
-        .withWatermark("turn_ts", watermark)
+        .withWatermark("turn_ts", "10 minutes")
         .alias("t")
     )
     cond = (
         (F.col("m.conv_id") == F.col("t.t_conv_id"))
         & (F.col("m.turn_idx") == F.col("t.t_turn_idx"))
-        & (F.col("m.ts") >= F.col("t.turn_ts") - F.expr(f"INTERVAL {tolerance_s} SECONDS"))
-        & (F.col("m.ts") <= F.col("t.turn_ts") + F.expr(f"INTERVAL {tolerance_s} SECONDS"))
+        & (F.col("m.ts") >= F.col("t.turn_ts") - F.expr("INTERVAL 300 SECONDS"))
+        & (F.col("m.ts") <= F.col("t.turn_ts") + F.expr("INTERVAL 300 SECONDS"))
     )
     return m.join(t, cond, "inner").select(
         "m.conv_id",
@@ -201,11 +197,11 @@ def idempotent_parquet_sink(out_dir: str, key_cols) -> "callable":
     return write_batch
 
 
-def mention_rate(mentions_stream: DataFrame, window: str = "1 minute") -> DataFrame:
-    """Watermarked windowed mention counts per type (late data: 2 min)."""
+def mention_rate(mentions_stream: DataFrame) -> DataFrame:
+    """Watermarked 1-minute mention counts per type (late data: 2 min)."""
     return (
         mentions_stream.withWatermark("ts", "2 minutes")
-        .groupBy(F.window("ts", window).alias("w"), "type")
+        .groupBy(F.window("ts", "1 minute").alias("w"), "type")
         .agg(F.count("*").alias("n_mentions"))
         .select(F.col("w.start").alias("window_start"), "type", "n_mentions")
     )

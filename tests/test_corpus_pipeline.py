@@ -22,7 +22,7 @@ def docs(spark):
 
 
 def _run(spark, docs, tmp, run_id="c1", k=60):
-    cfg = CorpusConfig(sample_k=k, chunk=64, lsh_width=4)
+    cfg = CorpusConfig(sample_k=k, chunk=64)
     return run_corpus_pipeline(spark, docs, cfg, str(tmp), run_id=run_id)
 
 

@@ -232,6 +232,67 @@ def test_pin_width_respects_shuffle_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def test_width_pins_follow_the_session(spark):
+    """Every operator with a width pin reads it from its input's
+    session (io.pin_width): with the shuffle width set to 12, each runs
+    a stage of 12 tasks, the tasks of its pinned exchange (no other
+    stage here has 12).  Run under a job group, since dedup_decision
+    and pack_sequences execute their pinned exchange while building."""
+    from pyspark.sql import functions as F
+
+    from arabicner_spark import schemas
+    from arabicner_spark.functions import hashing
+    from arabicner_spark.operators import triples
+    from arabicner_spark.operators.incremental import dedup_decision
+    from arabicner_spark.operators.pack import pack_sequences
+    from arabicner_spark.operators.repeated import repeated_substring_cuts
+    from arabicner_spark.sources.io import local_table
+
+    sc = spark.sparkContext
+    texts = [f"w{i % 7} w{i % 5} w{i % 3} common run of words here" for i in range(40)]
+    docs = local_table(spark, [(str(i), t) for i, t in enumerate(texts)], "id string, text string")
+    mentions = local_table(
+        spark,
+        [(f"c{i}", 0, 0, t, s, s + 1, f"x{i}") for i in range(20) for t, s in (("PERS", 0), ("ORG", 2))],
+        schemas.MENTIONS,
+    )
+    vecs = local_table(spark, [(i, [1.0, float(i % 3)]) for i in range(30)], "vec_id long, v array<double>")
+    built = {
+        # as the stream micro-batch calls it: no width anywhere
+        "extract_triples": lambda: triples.extract_triples(mentions),
+        "dedup_decision": lambda: dedup_decision(docs),
+        "repeated_substring_cuts": lambda: repeated_substring_cuts(
+            docs.withColumnRenamed("id", "doc_id"), k=3
+        ),
+        "shingle_hash_table": lambda: hashing.shingle_hash_table(docs),
+        "cosine_bucket_verify": lambda: hashing.cosine_bucket_verify(
+            vecs.select("vec_id", (F.col("vec_id") % 4).alias("bkey")), vecs
+        ),
+        "pack_sequences": lambda: pack_sequences(
+            docs.select(F.col("id").cast("long").alias("doc_id"), F.length("text").alias("n")),
+            "doc_id", "n", chunk=16,
+        ),
+    }
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "12")
+    try:
+        for name, build in built.items():
+            sc.setJobGroup(f"pin-{name}", name)
+            build().write.format("noop").mode("overwrite").save()
+            tracker = sc.statusTracker()
+            tasks = [
+                tracker.getStageInfo(sid).numTasks
+                for jid in tracker.getJobIdsForGroup(f"pin-{name}")
+                for sid in tracker.getJobInfo(jid).stageIds
+                if tracker.getStageInfo(sid)
+            ]
+            assert 12 in tasks, (name, tasks)
+    finally:
+        sc.setJobGroup("", "")
+        spark.conf.set(key, saved)
+
+
 def test_r5_queries_plan_shapes(spark, sf_dir):
     """Round-5 operators stay on the fast path: BPE pair counting and
     mixture sampling are Python-free (pure codegen + one agg /

@@ -150,3 +150,17 @@ def test_pipeline_job_budget(spark, tmp_path, cfg):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs <= PIPELINE_JOB_BUDGET
+
+
+def test_kg_tables_have_the_declared_schemas(spark, tmp_path, cfg):
+    """run_pipeline's triples, edges and nodes, read back from disk,
+    carry the field names and types schemas.py declares (column order
+    and nullability aside: partition columns read back last, and
+    parquet reads every column as nullable)."""
+    from arabicner_spark import schemas
+
+    root = str(tmp_path / "kg")
+    run_pipeline(spark, synth.transcripts_df(spark, n_convs=4, seed=1), cfg, root)
+    for name, want in (("triples", schemas.TRIPLES), ("edges", schemas.EDGES), ("nodes", schemas.NODES)):
+        got = spark.read.parquet(os.path.join(root, name)).schema
+        assert {f.name: f.dataType for f in got} == {f.name: f.dataType for f in want}, name

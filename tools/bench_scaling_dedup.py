@@ -95,9 +95,9 @@ def worker(cores: int, docs_path: str, edges_path: str) -> None:
 
     # fixed shuffle width (64) at BOTH levels: production posture is
     # partitions >> cores, and an identical work decomposition leaves
-    # core count as the only variable between the two legs
-    width = 64
-    spark = session(f"local[{cores}]", shuffle_partitions=width)
+    # core count as the only variable between the two legs.  The dedup
+    # chain's width pins read io.pin_width, which is this 64 too.
+    spark = session(f"local[{cores}]", shuffle_partitions=64)
 
     # environment-ceiling CONTROL: a bare 3-line md5 scan (no joins, no
     # aggregation, nothing of this repo's plans) — whatever efficiency
@@ -117,7 +117,7 @@ def worker(cores: int, docs_path: str, edges_path: str) -> None:
 
     t0 = time.time()
     # the shared chain every dedup caller runs (incremental.dedup_decision)
-    decision = dedup_decision(docs, width=width)
+    decision = dedup_decision(docs)
     n_dropped = decision.where(F.col("node") != F.col("keep")).count()
     dedup_wall = time.time() - t0
 
